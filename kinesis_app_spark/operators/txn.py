@@ -459,17 +459,12 @@ class VtTransaction:
             raise FileNotFoundError(f"table {table_dir} does not exist")
         manifest = VT._read_manifest(table_dir, latest)
         VT._check_protocol(manifest, table_dir, write=True)
-        if VT.vt_files(table_dir, latest) is None:
-            raise ValueError(
-                "txn append needs a file-level manifest (round-5+ "
-                "table); rewrite it (vt_optimize) first"
-            )
         if VT._table_constraints(manifest):
             raise ValueError(
                 "txn append cannot validate CHECK constraints; stage "
                 "the rows through stage_merge instead"
             )
-        schema = VT._manifest_schema(manifest)
+        schema = VT._manifest_schema(manifest, table_dir)
         mapping = VT._col_mapping(manifest)
         missing = [c for c in df.columns if c not in schema.names]
         if missing:
@@ -484,15 +479,13 @@ class VtTransaction:
             table_dir, new_version, mapping,
         )
 
-        def mk_manifest(parent, carried_now, version):
+        def mk_manifest(carried_now, version):
             out = {
                 "data_dir": data_dir,
                 "n_rows": VT._live_rows(carried_now + new_files),
                 "schema": manifest.get("schema"),
                 "operation": "APPEND",
-                **VT._incremental_or_full(
-                    version, parent, carried_now, new_files, []
-                ),
+                **VT._incremental_or_full(version, carried_now, new_files, []),
             }
             if mapping is not None:
                 out["column_mapping"] = mapping
@@ -651,13 +644,7 @@ class VtTransaction:
             for _spin in range(_MAX_RESERVE_SPINS):
                 latest = VT.vt_latest_version(table_dir)
                 for v in range(validated_to + 1, latest + 1):
-                    delta = VT._commit_delta(table_dir, v)
-                    if delta is None:
-                        raise TxnAbortedError(
-                            f"txn {self.txn_id}: version {v} of "
-                            f"{table_dir} has no file-level metadata"
-                        )
-                    added, removed = delta
+                    added, removed = VT._commit_delta(table_dir, v)
                     hit = removed & s["t_paths"]
                     if hit:
                         raise TxnAbortedError(
@@ -683,9 +670,8 @@ class VtTransaction:
                             f"change on {table_dir}"
                         )
                 validated_to = latest
-                parent_files = VT.vt_files(table_dir, latest)
                 carried = [
-                    f for f in parent_files
+                    f for f in VT.vt_files(table_dir, latest)
                     if f["path"] not in s["t_paths"]
                 ]
                 version = latest + 1
@@ -704,7 +690,7 @@ class VtTransaction:
                     )
                 os.replace(mk_tmp, mk)
                 try:
-                    m = s["mk_manifest"](parent_files, carried, version)
+                    m = s["mk_manifest"](carried, version)
                     m["txn"] = self.txn_id  # audit lineage in HISTORY
                     VT._commit(table_dir, version, m)
                     out[table_dir] = version

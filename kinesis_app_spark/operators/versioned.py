@@ -357,15 +357,23 @@ def _files_cache_put(key, files: list[dict]) -> None:
     _VT_FILES_CACHE[key] = files
 
 
-def vt_files(table_dir: str, version: int) -> list[dict] | None:
+def _malformed(table_dir: str, version, what: str) -> ProtocolError:
+    return ProtocolError(
+        f"version {version} of table {table_dir} has no {what}; every "
+        "manifest must carry a schema and file-level metadata — "
+        "recreate the table"
+    )
+
+
+def vt_files(table_dir: str, version: int) -> list[dict]:
     """The version's complete per-file manifest entries (path, n_rows,
     stats), reconstructed from the nearest full-snapshot checkpoint —
     or the nearest CACHED version (round 7) — plus the incremental
     ``add``/``remove`` actions committed since: at most
     ``_CHECKPOINT_EVERY`` manifest reads, and O(files touched) work
     when an adjacent version was just reconstructed (the CDF-tail /
-    commit-loop shape). Returns None for a pre-round-5 manifest (one
-    opaque data dir, no file list)."""
+    commit-loop shape). Raises ``ProtocolError`` for a manifest without
+    file-level metadata."""
     key = _files_cache_key(table_dir, version)
     cached = _VT_FILES_CACHE.get(key) if key is not None else None
     if cached is not None:
@@ -390,7 +398,7 @@ def vt_files(table_dir: str, version: int) -> list[dict] | None:
             }
             break
         if "add" not in m and "remove" not in m:
-            return None  # pre-round-5 manifest: no file-level metadata
+            raise _malformed(table_dir, v, "file-level metadata")
         chain.append(m)
         v -= 1
         if v < 0:
@@ -410,16 +418,14 @@ def vt_files(table_dir: str, version: int) -> list[dict] | None:
 
 def _incremental_or_full(
     new_version: int,
-    parent_files: list[dict] | None,
     carried: list[dict],
     new_files: list[dict],
     touched_paths: Sequence[str],
 ) -> dict:
-    """The commit's file payload: incremental ``add``/``remove`` actions
-    when the parent is resolvable and this is not a checkpoint version;
-    the complete ``files`` list otherwise. Either form reconstructs to
-    ``carried + new_files``."""
-    if parent_files is None or new_version % _CHECKPOINT_EVERY == 0:
+    """The commit's file payload: incremental ``add``/``remove`` actions,
+    or the complete ``files`` list on a checkpoint version. Either form
+    reconstructs to ``carried + new_files``."""
+    if new_version % _CHECKPOINT_EVERY == 0:
         return {"files": carried + new_files}
     return {
         "add": new_files,
@@ -429,27 +435,21 @@ def _incremental_or_full(
 
 def _commit_delta(
     table_dir: str, version: int
-) -> tuple[list[dict], set[str]] | None:
+) -> tuple[list[dict], set[str]]:
     """One commit's (added file entries, removed paths) — read directly
     from an incremental manifest's actions, or derived by snapshot diff
     for checkpoint/full manifests (paths are immutable once written, so
-    set difference IS the commit's file delta). Returns None when
-    file-level metadata is absent (pre-round-5 manifests): the caller
-    must treat such a commit as conflicting with everything. This is the
-    input to Delta-style conflict detection: a concurrent commit is
-    compatible with a staged merge iff it removed none of the merge's
-    read files and added no file whose key stats admit a merge key."""
+    set difference IS the commit's file delta). This is the input to
+    Delta-style conflict detection: a concurrent commit is compatible
+    with a staged merge iff it removed none of the merge's read files
+    and added no file whose key stats admit a merge key."""
     m = _read_manifest(table_dir, version)
     if "add" in m or "remove" in m:
         return list(m.get("add", [])), set(m.get("remove", []))
-    if "files" not in m and "files_pq" not in m:
-        return None
     cur = vt_files(table_dir, version)
     if version == 0:
         return list(cur), set()
     prev = vt_files(table_dir, version - 1)
-    if prev is None:
-        return None
     # diff by CONTENT signature (path + deletion-vector identity), not
     # bare path: a DELETE_DV commit landing on a checkpoint version
     # keeps every path and changes only the DV — a path-only diff would
@@ -564,11 +564,9 @@ def _collect_file_stats(
 #: Writes whose row count is PROVABLY bounded by manifest metadata at
 #: or under this take the fused single-job path (one file + stats via
 #: an Observation in the write job itself); larger or unbounded writes
-#: keep the parallel write + per-file stats scan. Not a results knob —
-#: both paths produce identical manifest stats values.
-_SMALL_WRITE_ROWS = int(
-    os.environ.get("SPARK_GRAFT_SMALL_WRITE_ROWS", "262144")
-)
+#: keep the parallel write + per-file stats scan. Both paths produce
+#: identical manifest stats values.
+_SMALL_WRITE_ROWS = 262144
 
 
 def _write_small_with_stats(
@@ -836,10 +834,12 @@ def vt_create(df: DataFrame, table_dir: str) -> int:
     return 0
 
 
-def _manifest_schema(manifest: dict) -> StructType | None:
-    if manifest.get("schema") is not None:
-        return StructType.fromJson(manifest["schema"])
-    return None
+def _manifest_schema(manifest: dict, table_dir: str = "?") -> StructType:
+    """The version's stored (logical) schema; ``ProtocolError`` when the
+    manifest carries none."""
+    if manifest.get("schema") is None:
+        raise _malformed(table_dir, manifest.get("version"), "schema")
+    return StructType.fromJson(manifest["schema"])
 
 
 # ---------------------------------------------------------------------
@@ -1021,11 +1021,6 @@ def vt_fast_stats(
             f"version {version} of {table_dir} was vacuumed"
         )
     files = vt_files(table_dir, version)
-    if files is None:
-        raise ValueError(
-            "vt_fast_stats needs a file-level manifest (round-5+ "
-            "table); rewrite it (vt_optimize) first"
-        )
     mapping = _col_mapping(m) or {}
     dv_anywhere = any(f.get("dv") or f.get("n_dv") for f in files)
     out_cols: dict = {}
@@ -1187,14 +1182,10 @@ def vt_read(
             f"version {version} of {table_dir} was vacuumed; earliest "
             "readable version is the oldest non-vacuumed manifest"
         )
-    files = vt_files(table_dir, version)
-    if files is not None:
-        schema = _manifest_schema(manifest)
-        return _read_snapshot_entries(
-            spark, files, schema, _col_mapping(manifest)
-        )
-    # pre-round-5 manifest: one opaque data dir per version
-    return spark.read.parquet(manifest["data_dir"])
+    return _read_snapshot_entries(
+        spark, vt_files(table_dir, version),
+        _manifest_schema(manifest, table_dir), _col_mapping(manifest),
+    )
 
 
 def vt_merge(
@@ -1269,9 +1260,7 @@ def vt_merge(
         )
     manifest = _read_manifest(table_dir, base)
     _check_protocol(manifest, table_dir, write=True)
-    schema = _manifest_schema(manifest)
-    if schema is None:  # pre-round-5 manifest: infer from the data
-        schema = vt_read(spark, table_dir, base).schema
+    schema = _manifest_schema(manifest, table_dir)
 
     reserved = {op_col, seq_col}
     extra = [
@@ -1302,52 +1291,31 @@ def vt_merge(
     # fall back to the interval test (one tiny agg). No data is read
     # for the carried-forward set either way.
     parent_files = vt_files(table_dir, base)
-    key_sets = None
-    pkey_cols = None
-    chg_stats: dict | None = None
-    n_changes = -1
-    if parent_files is not None:
-        # pruning statistics are computed over the (logical) change
-        # batch but tested against PHYSICAL per-file stats — translate
-        # the column names once at this boundary
-        def _p(c):
-            return mapping.get(c, c) if mapping else c
 
-        pkeys = [_p(k) for k in keys]
-        key_sets = _change_key_sets(changes, keys, max_keys=max_prune_keys)
-        pkey_cols = None
-        if key_sets is not None:
-            pkey_cols = {_p(c): v for c, v in key_sets["cols"].items()}
-            if key_sets["n"] == 0:
-                touched = []
-            else:
-                touched = [
-                    f for f in parent_files
-                    if _file_hits_key_set(f, pkey_cols)
-                ]
-        else:  # > max_prune_keys distinct keys: interval fallback
-            n_changes, chg_stats = _change_key_stats(changes, keys)
-            chg_stats = {_p(c): v for c, v in chg_stats.items()}
-            if n_changes == 0:
-                touched = []
-            else:
-                touched = [
-                    f for f in parent_files
-                    if _file_intersects(f, chg_stats, pkeys)
-                ]
-        t_paths = {f["path"] for f in touched}
-        carried = [
-            f for f in parent_files if f["path"] not in t_paths
-        ]
-        snapshot = _read_snapshot_entries(spark, touched, evolved, mapping)
-    else:  # pre-round-5 manifest: no stats, rewrite the full snapshot
-        carried = []
-        t_paths: set[str] = set()
-        snapshot = spark.read.parquet(manifest["data_dir"])
-        for f in extra:
-            snapshot = snapshot.withColumn(
-                f.name, F.lit(None).cast(f.dataType)
-            )
+    # pruning statistics are computed over the (logical) change batch
+    # but tested against PHYSICAL per-file stats — translate the column
+    # names once at this boundary
+    def _p(c):
+        return mapping.get(c, c) if mapping else c
+
+    pkeys = [_p(k) for k in keys]
+    key_sets = _change_key_sets(changes, keys, max_keys=max_prune_keys)
+    if key_sets is not None:
+        pkey_cols = {_p(c): v for c, v in key_sets["cols"].items()}
+        n_changes = int(key_sets["n"])
+        touched = [
+            f for f in parent_files if _file_hits_key_set(f, pkey_cols)
+        ] if n_changes else []
+    else:  # > max_prune_keys distinct keys: interval fallback
+        n_changes, chg_stats = _change_key_stats(changes, keys)
+        chg_stats = {_p(c): v for c, v in chg_stats.items()}
+        touched = [
+            f for f in parent_files
+            if _file_intersects(f, chg_stats, pkeys)
+        ] if n_changes else []
+    t_paths = {f["path"] for f in touched}
+    carried = [f for f in parent_files if f["path"] not in t_paths]
+    snapshot = _read_snapshot_entries(spark, touched, evolved, mapping)
 
     merged = apply_changes(
         snapshot, changes, keys=keys, op_col=op_col, seq_col=seq_col
@@ -1357,16 +1325,7 @@ def vt_merge(
     # files' live rows plus one insert per (distinct) change key — both
     # known WITHOUT reading data, so provably-tiny merges (the per-epoch
     # streaming shape) take the fused single-job write
-    row_bound = None
-    if parent_files is not None:
-        touched_live = sum(
-            int(f.get("n_rows", 0)) - int(f.get("n_dv", 0))
-            for f in touched
-        )
-        if key_sets is not None:
-            row_bound = touched_live + int(key_sets["n"])
-        elif n_changes >= 0:
-            row_bound = touched_live + n_changes
+    row_bound = _live_rows(touched) + n_changes
     data_dir, new_files = _write_files_with_stats(
         merged, table_dir, new_version, mapping, row_bound=row_bound
     )
@@ -1379,16 +1338,14 @@ def vt_merge(
         spark, new_files, evolved, mapping, constraints, check,
         data_dir, "vt_merge",
     )
-    def _mk_manifest(parent: list[dict] | None, carried_now: list[dict],
-                     version: int) -> dict:
+    def _mk_manifest(carried_now: list[dict], version: int) -> dict:
         out = {
             "data_dir": data_dir,
             "n_rows": _live_rows(carried_now + new_files),
             "schema": evolved.jsonValue(),
             "operation": "MERGE",
             **_incremental_or_full(
-                version, parent, carried_now, new_files,
-                sorted(t_paths) if parent is not None else [],
+                version, carried_now, new_files, sorted(t_paths)
             ),
         }
         if mapping is not None:
@@ -1402,33 +1359,15 @@ def vt_merge(
             out["constraints"] = constraints
         return out
 
-    if parent_files is None:
-        if txn is not None:
-            shutil.rmtree(data_dir, ignore_errors=True)
-            raise ValueError(
-                "transactions need a file-level manifest (round-5+ "
-                "table); rewrite it (vt_optimize) first"
-            )
-        # pre-round-5 manifest: no file-level metadata, so no conflict
-        # detection is possible — any race loses outright (old behavior)
-        _commit(
-            table_dir, new_version, _mk_manifest(None, carried, new_version),
-            cleanup_dir=data_dir,
-        )
-        return new_version
-
     def _added_file_hits(fe: dict) -> bool:
         """Could a concurrently ADDED file contain a row matching one of
         this merge's change keys? Uses whichever pruning statistic this
-        merge computed (key set, else interval); no statistic means
-        conservative yes."""
-        if pkey_cols is not None:
-            return key_sets["n"] > 0 and _file_hits_key_set(fe, pkey_cols)
-        if chg_stats is not None:
-            return n_changes != 0 and _file_intersects(
-                fe, chg_stats, pkeys
-            )
-        return True
+        merge computed (key set, else interval)."""
+        if not n_changes:
+            return False
+        if key_sets is not None:
+            return _file_hits_key_set(fe, pkey_cols)
+        return _file_intersects(fe, chg_stats, pkeys)
 
     if txn is not None:
         txn._add_staged({
@@ -1447,7 +1386,7 @@ def vt_merge(
 
     return _commit_optimistic(
         table_dir, base, json.dumps(manifest.get("schema"), sort_keys=True),
-        t_paths, data_dir, parent_files, carried, new_version,
+        t_paths, data_dir, carried, new_version,
         _mk_manifest, _added_file_hits, "vt_merge",
     )
 
@@ -1458,7 +1397,6 @@ def _commit_optimistic(
     base_schema_json: str,
     t_paths: set[str],
     data_dir: str,
-    parent_files: list[dict],
     carried: list[dict],
     new_version: int,
     mk_manifest,
@@ -1479,20 +1417,13 @@ def _commit_optimistic(
     validated_to = base
     for _spin in range(_COMMIT_MAX_SPINS):
         try:
-            _commit(
-                table_dir, new_version,
-                mk_manifest(parent_files, carried, new_version),
-            )
+            _commit(table_dir, new_version, mk_manifest(carried, new_version))
             return new_version
         except VersionConflictError:
             latest = vt_latest_version(table_dir)
             reason = None
             for v in range(validated_to + 1, latest + 1):
-                delta = _commit_delta(table_dir, v)
-                if delta is None:
-                    reason = f"version {v} carries no file-level metadata"
-                    break
-                added, removed = delta
+                added, removed = _commit_delta(table_dir, v)
                 hit = removed & t_paths
                 if hit:
                     reason = (
@@ -1517,9 +1448,9 @@ def _commit_optimistic(
                 raise VersionConflictError(
                     f"{op_name} on {table_dir}: {reason}; rebase and retry"
                 ) from None
-            parent_files = vt_files(table_dir, latest)
             carried = [
-                f for f in parent_files if f["path"] not in t_paths
+                f for f in vt_files(table_dir, latest)
+                if f["path"] not in t_paths
             ]
             validated_to = latest
             new_version = latest + 1
@@ -1578,25 +1509,18 @@ def vt_history(spark: SparkSession, table_dir: str,
     ``metrics=True`` appends Delta's operationMetrics analogues —
     n_files (the version's total file count), n_added_files,
     n_removed_files (the commit's file delta) — all derived from the
-    manifest log, null where a pre-round-5 manifest has no file-level
-    metadata. Layout-dependent, so deliberately NOT part of the gated
-    default schema."""
+    manifest log, null for vacuumed versions. Layout-dependent, so
+    deliberately NOT part of the gated default schema."""
     latest = vt_latest_version(table_dir)
     rows = []
     for v in range(latest + 1):
         m = _read_manifest(table_dir, v)
         base = (m["version"], m["operation"], m["n_rows"])
-        if metrics:
-            files = vt_files(table_dir, v) if not m.get("vacuumed") else None
-            delta = (
-                _commit_delta(table_dir, v) if not m.get("vacuumed")
-                else None
-            )
-            base += (
-                len(files) if files is not None else None,
-                len(delta[0]) if delta is not None else None,
-                len(delta[1]) if delta is not None else None,
-            )
+        if metrics and m.get("vacuumed"):
+            base += (None, None, None)
+        elif metrics:
+            added, removed = _commit_delta(table_dir, v)
+            base += (len(vt_files(table_dir, v)), len(added), len(removed))
         rows.append(base)
     schema = "version int, operation string, n_rows long"
     if metrics:
@@ -1809,16 +1733,9 @@ def vt_optimize(
         # rows would vanish from the rewrite) — the strictest rules in
         # the family; compact/cluster stage with the relaxed layout
         # rules below
-        parent_files = vt_files(table_dir, base)
-        if parent_files is None:
-            shutil.rmtree(data_dir, ignore_errors=True)
-            raise ValueError(
-                "transactions need a file-level manifest (round-5+ "
-                "table); rewrite it (vt_optimize) first"
-            )
-        t_paths = {f["path"] for f in parent_files}
+        t_paths = {f["path"] for f in vt_files(table_dir, base)}
 
-        def _mk_manifest(parent, carried_now, version):
+        def _mk_manifest(carried_now, version):
             out2 = dict(out)
             out2["files"] = carried_now + files
             out2["n_rows"] = _live_rows(carried_now + files)
@@ -1872,10 +1789,6 @@ def vt_cluster_incremental(
     manifest = _read_manifest(table_dir, base)
     _check_protocol(manifest, table_dir, write=True)
     parent_files = vt_files(table_dir, base)
-    if parent_files is None:
-        raise ValueError(
-            "vt_cluster_incremental needs a file-level manifest"
-        )
     mapping = _col_mapping(manifest)
     cols = list(cluster_cols)
     pcols = [(mapping or {}).get(c, c) for c in cols]
@@ -1884,7 +1797,7 @@ def vt_cluster_incremental(
         return latest
     t_paths = {f["path"] for f in debt}
     carried = [f for f in parent_files if f["path"] not in t_paths]
-    schema = _manifest_schema(manifest)
+    schema = _manifest_schema(manifest, table_dir)
     df = _read_snapshot_entries(spark, debt, schema, mapping)
     if len(cols) > 1:
         zdf, rcols = _zorder_key(
@@ -1912,14 +1825,14 @@ def vt_cluster_incremental(
     for f in new_files:
         f["clustered"] = pcols
 
-    def _mk_manifest(parent, carried_now, version):
+    def _mk_manifest(carried_now, version):
         out = {
             "data_dir": data_dir,
             "n_rows": _live_rows(carried_now + new_files),
             "schema": schema.jsonValue(),
             "operation": "CLUSTER",
             **_incremental_or_full(
-                version, parent, carried_now, new_files, sorted(t_paths)
+                version, carried_now, new_files, sorted(t_paths)
             ),
         }
         if mapping is not None:
@@ -1947,7 +1860,7 @@ def vt_cluster_incremental(
         return new_version
     return _commit_optimistic(
         table_dir, base, json.dumps(manifest.get("schema"), sort_keys=True),
-        t_paths, data_dir, parent_files, carried, new_version,
+        t_paths, data_dir, carried, new_version,
         _mk_manifest, lambda fe: False, "vt_cluster_incremental",
     )
 
@@ -1983,17 +1896,13 @@ def vt_compact(
     manifest = _read_manifest(table_dir, base)
     _check_protocol(manifest, table_dir, write=True)
     parent_files = vt_files(table_dir, base)
-    if parent_files is None:
-        raise ValueError(
-            "vt_compact needs a file-level manifest (round-5+ table)"
-        )
     small = [f for f in parent_files if f["n_rows"] < min_rows_per_file]
     if len(small) < 2:
         return latest  # no debt to sweep
     mapping = _col_mapping(manifest)
     t_paths = {f["path"] for f in small}
     carried = [f for f in parent_files if f["path"] not in t_paths]
-    schema = _manifest_schema(manifest)
+    schema = _manifest_schema(manifest, table_dir)
     n_small_rows = sum(f["n_rows"] for f in small)
     target = max(1, min_rows_per_file)
     n_out = max(1, -(-n_small_rows // target))  # ceil
@@ -2011,14 +1920,14 @@ def vt_compact(
     if not new_files:
         shutil.rmtree(data_dir, ignore_errors=True)
 
-    def _mk_manifest(parent, carried_now, version):
+    def _mk_manifest(carried_now, version):
         out = {
             "data_dir": data_dir,
             "n_rows": _live_rows(carried_now + new_files),
             "schema": schema.jsonValue(),
             "operation": "COMPACT",
             **_incremental_or_full(
-                version, parent, carried_now, new_files, sorted(t_paths)
+                version, carried_now, new_files, sorted(t_paths)
             ),
         }
         if mapping is not None:
@@ -2046,7 +1955,7 @@ def vt_compact(
         return new_version
     return _commit_optimistic(
         table_dir, base, json.dumps(manifest.get("schema"), sort_keys=True),
-        t_paths, data_dir, parent_files, carried, new_version,
+        t_paths, data_dir, carried, new_version,
         _mk_manifest, lambda fe: False, "vt_compact",
     )
 
@@ -2089,32 +1998,24 @@ def vt_changes(
     m_b = _read_manifest(table_dir, v_to)
     _check_protocol(m_a, table_dir)
     _check_protocol(m_b, table_dir)
-    schema_a = _manifest_schema(m_a)
-    schema_b = _manifest_schema(m_b)
+    schema_a = _manifest_schema(m_a, table_dir)
+    schema_b = _manifest_schema(m_b, table_dir)
     files_a = vt_files(table_dir, v_from)
     files_b = vt_files(table_dir, v_to)
     map_a = _col_mapping(m_a)
     map_b = _col_mapping(m_b)
-    if files_a is not None and files_b is not None:
-        # exclusivity is by CONTENT signature, not path: a DELETE_DV
-        # commit keeps the path and changes only the deletion vector,
-        # and its soft-deleted rows must surface as CDF deletes
-        sigs_a = {_dv_sig(f) for f in files_a}
-        sigs_b = {_dv_sig(f) for f in files_b}
-        common = sigs_a & sigs_b
-        before = _read_snapshot_entries(
-            spark,
-            [f for f in files_a if _dv_sig(f) not in common],
-            schema_a, map_a,
-        )
-        after = _read_snapshot_entries(
-            spark,
-            [f for f in files_b if _dv_sig(f) not in common],
-            schema_b, map_b,
-        )
-    else:
-        before = vt_read(spark, table_dir, v_from)
-        after = vt_read(spark, table_dir, v_to)
+    # exclusivity is by CONTENT signature, not path: a DELETE_DV commit
+    # keeps the path and changes only the deletion vector, and its
+    # soft-deleted rows must surface as CDF deletes
+    common = {_dv_sig(f) for f in files_a} & {_dv_sig(f) for f in files_b}
+    before = _read_snapshot_entries(
+        spark, [f for f in files_a if _dv_sig(f) not in common],
+        schema_a, map_a,
+    )
+    after = _read_snapshot_entries(
+        spark, [f for f in files_b if _dv_sig(f) not in common],
+        schema_b, map_b,
+    )
     # the diff is presented under the TO version's logical names: a
     # column renamed between the versions is still one (physical)
     # column and must not diff as dropped+added; keys are v_to names
@@ -2293,11 +2194,8 @@ def vt_stream_changes(
     return processed
 
 
-def _version_file_paths(table_dir: str, version: int) -> list[str] | None:
-    files = vt_files(table_dir, version)
-    if files is not None:
-        return [f["path"] for f in files]
-    return None
+def _version_file_paths(table_dir: str, version: int) -> list[str]:
+    return [f["path"] for f in vt_files(table_dir, version)]
 
 
 #: a staged sink file older than this is an orphan from a task attempt
@@ -2391,13 +2289,9 @@ def vt_vacuum(
     referenced_files: set[str] = set()
     referenced_dirs: set[str] = set()
     for v in range(keep_from, latest + 1):
-        m = _read_manifest(table_dir, v)
         fl = _version_file_paths(table_dir, v)
-        if fl is None:
-            referenced_dirs.add(m["data_dir"])
-        else:
-            referenced_files.update(fl)
-            referenced_dirs.update(os.path.dirname(p) for p in fl)
+        referenced_files.update(fl)
+        referenced_dirs.update(os.path.dirname(p) for p in fl)
     vacuumed = []
     for v in range(keep_from):
         m = _read_manifest(table_dir, v)
@@ -2409,37 +2303,29 @@ def vt_vacuum(
             # below would also refuse, but skipping keeps it readable)
             continue
         fl = _version_file_paths(table_dir, v)
-        if fl is None:
-            # pre-round-5 manifest: one opaque dir per version
-            if m["data_dir"] in referenced_dirs:
-                continue  # still backs a retained version (RESTORE)
-            shutil.rmtree(m["data_dir"], ignore_errors=True)
-        else:
-            deletable = [
-                p for p in fl
-                if p not in referenced_files
-                and os.path.abspath(p).startswith(table_root)
-                and os.path.exists(p)
-            ]
-            missing = [p for p in fl if not os.path.exists(p)]
-            if not deletable and not missing:
-                # every file is shared with the retained tail (or
-                # source-owned): the version costs nothing to keep
-                # readable, so keep it readable
-                continue
-            for p in deletable:
-                os.remove(p)
-            # drop shell directories that no longer hold any data file
-            for d in {os.path.dirname(p) for p in deletable}:
-                if (
-                    os.path.abspath(d).startswith(table_root)
-                    and d not in referenced_dirs
-                    and os.path.isdir(d)
-                    and not any(
-                        n.endswith(".parquet") for n in os.listdir(d)
-                    )
-                ):
-                    shutil.rmtree(d, ignore_errors=True)
+        deletable = [
+            p for p in fl
+            if p not in referenced_files
+            and os.path.abspath(p).startswith(table_root)
+            and os.path.exists(p)
+        ]
+        missing = [p for p in fl if not os.path.exists(p)]
+        if not deletable and not missing:
+            # every file is shared with the retained tail (or
+            # source-owned): the version costs nothing to keep readable,
+            # so keep it readable
+            continue
+        for p in deletable:
+            os.remove(p)
+        # drop shell directories that no longer hold any data file
+        for d in {os.path.dirname(p) for p in deletable}:
+            if (
+                os.path.abspath(d).startswith(table_root)
+                and d not in referenced_dirs
+                and os.path.isdir(d)
+                and not any(n.endswith(".parquet") for n in os.listdir(d))
+            ):
+                shutil.rmtree(d, ignore_errors=True)
         m["vacuumed"] = True
         # single-writer metadata update (vacuum is a maintenance job,
         # not a concurrent commit): rewrite in place via temp + rename
@@ -2456,8 +2342,7 @@ def vt_vacuum(
     if os.path.isdir(sc_dir):
         referenced_sc = set()
         for v in range(keep_from, latest + 1):
-            fl = vt_files(table_dir, v) or []
-            for f in fl:
+            for f in vt_files(table_dir, v):
                 for bl in (f.get("bloom") or {}).values():
                     if "sc" in bl:
                         referenced_sc.add(os.path.abspath(bl["sc"]))
@@ -2475,8 +2360,7 @@ def vt_vacuum(
     if os.path.isdir(dvroot):
         referenced_dv = set(txn_protected)
         for v in range(keep_from, latest + 1):
-            fl = vt_files(table_dir, v) or []
-            for f in fl:
+            for f in vt_files(table_dir, v):
                 for d in f.get("dv") or ():
                     referenced_dv.add(os.path.abspath(d))
         for name in os.listdir(dvroot):
@@ -2517,11 +2401,10 @@ def vt_vacuum(
                 ref_dirs.add(os.path.abspath(m["data_dir"]))
             if m.get("vacuumed"):
                 continue
-            fl = _version_file_paths(table_dir, v)
-            if fl:
-                ref_dirs.update(
-                    os.path.abspath(os.path.dirname(p)) for p in fl
-                )
+            ref_dirs.update(
+                os.path.abspath(os.path.dirname(p))
+                for p in _version_file_paths(table_dir, v)
+            )
         cutoff = time.time() - max(0.0, float(stage_ttl_seconds))
         for name in os.listdir(data_root):
             p = os.path.join(data_root, name)
@@ -2582,19 +2465,17 @@ def vt_restore(spark: SparkSession, table_dir: str, version: int) -> int:
         raise FileNotFoundError(
             f"cannot restore to vacuumed version {version}"
         )
+    _manifest_schema(target, table_dir)  # a schema-less target raises
     new_version = latest + 1
     out = {
         "data_dir": target["data_dir"],
         "n_rows": int(target["n_rows"]),
         "operation": f"RESTORE({version})",
-    }
-    target_files = vt_files(table_dir, version)
-    if target_files is not None:
         # a restore is a full snapshot by nature (its file set has no
         # relation to the current latest): commit it as a checkpoint
-        out["files"] = target_files
-    if target.get("schema") is not None:
-        out["schema"] = target["schema"]
+        "files": vt_files(table_dir, version),
+        "schema": target["schema"],
+    }
     if target.get("column_mapping"):
         out["column_mapping"] = target["column_mapping"]
     if target.get("constraints"):
@@ -2816,10 +2697,6 @@ def vt_index_bloom(
     manifest = _read_manifest(table_dir, latest)
     _check_protocol(manifest, table_dir, write=True)
     files = vt_files(table_dir, latest)
-    if files is None:
-        raise ValueError(
-            "vt_index_bloom needs a file-level manifest (round-5+ table)"
-        )
     mapping = _col_mapping(manifest)
     # bloom entries key on PHYSICAL names — the namespace of the files
     cols = [
@@ -2831,7 +2708,7 @@ def vt_index_bloom(
     ]
     if not todo:
         return latest
-    schema = _phys_struct(_manifest_schema(manifest), mapping)
+    schema = _phys_struct(_manifest_schema(manifest, table_dir), mapping)
     aggs = [
         F.sort_array(
             F.collect_set((F.abs(F.xxhash64(F.col(c))) % m).cast("int"))
@@ -2876,7 +2753,7 @@ def vt_index_bloom(
         "schema": manifest.get("schema"),
         "operation": "BLOOM",
         **_incremental_or_full(
-            new_version, files, carried, updated, sorted(t_paths)
+            new_version, carried, updated, sorted(t_paths)
         ),
     }
     if mapping is not None:
@@ -3018,16 +2895,13 @@ def vt_scan(
         )
     filters = list(filters)
     files = vt_files(table_dir, version)
-    if files is not None:
-        schema = _manifest_schema(manifest)
-        mapping = _col_mapping(manifest)
-        survivors = _prune_files(
-            spark, files, _phys_filters(filters, mapping),
-            _phys_struct(schema, mapping),
-        )
-        df = _read_snapshot_entries(spark, survivors, schema, mapping)
-    else:  # pre-round-5 manifest: no stats to prune on
-        df = vt_read(spark, table_dir, version)
+    schema = _manifest_schema(manifest, table_dir)
+    mapping = _col_mapping(manifest)
+    survivors = _prune_files(
+        spark, files, _phys_filters(filters, mapping),
+        _phys_struct(schema, mapping),
+    )
+    df = _read_snapshot_entries(spark, survivors, schema, mapping)
     return df.filter(_filters_to_column(filters))
 
 
@@ -3064,20 +2938,13 @@ def _predicate_rewrite(
     mapping = _col_mapping(manifest)
     pfilters = _phys_filters(filters, mapping)
     parent_files = vt_files(table_dir, base)
-    if parent_files is not None:
-        schema = _manifest_schema(manifest)
-        touched = _prune_files(
-            spark, parent_files, pfilters, _phys_struct(schema, mapping)
-        )
-        t_paths = {f["path"] for f in touched}
-        carried = [f for f in parent_files if f["path"] not in t_paths]
-        snapshot = _read_snapshot_entries(spark, touched, schema, mapping)
-    else:  # pre-round-5 manifest: full rewrite
-        carried = []
-        touched = []
-        t_paths = set()
-        snapshot = vt_read(spark, table_dir, base)
-        schema = snapshot.schema
+    schema = _manifest_schema(manifest, table_dir)
+    touched = _prune_files(
+        spark, parent_files, pfilters, _phys_struct(schema, mapping)
+    )
+    t_paths = {f["path"] for f in touched}
+    carried = [f for f in parent_files if f["path"] not in t_paths]
+    snapshot = _read_snapshot_entries(spark, touched, schema, mapping)
     rewritten = rewrite_fn(snapshot, pred)
     new_version = base + 1
     data_dir, new_files = _write_files_with_stats(
@@ -3092,15 +2959,14 @@ def _predicate_rewrite(
             data_dir, "vt_update",
         )
 
-    def _mk_manifest(parent, carried_now, version):
+    def _mk_manifest(carried_now, version):
         out = {
             "data_dir": data_dir,
             "n_rows": _live_rows(carried_now + new_files),
             "schema": schema.jsonValue(),
             "operation": operation,
             **_incremental_or_full(
-                version, parent, carried_now, new_files,
-                sorted(t_paths) if parent is not None else [],
+                version, carried_now, new_files, sorted(t_paths)
             ),
         }
         if mapping is not None:
@@ -3109,18 +2975,6 @@ def _predicate_rewrite(
             out["constraints"] = constraints
         return out
 
-    if parent_files is None:
-        if txn is not None:
-            shutil.rmtree(data_dir, ignore_errors=True)
-            raise ValueError(
-                "transactions need a file-level manifest (round-5+ "
-                "table); rewrite it (vt_optimize) first"
-            )
-        _commit(
-            table_dir, new_version, _mk_manifest(None, carried, new_version),
-            cleanup_dir=data_dir,
-        )
-        return new_version
     if txn is not None:
         txn._add_staged({
             "table_dir": table_dir,
@@ -3137,7 +2991,7 @@ def _predicate_rewrite(
         return new_version
     return _commit_optimistic(
         table_dir, base, json.dumps(manifest.get("schema"), sort_keys=True),
-        t_paths, data_dir, parent_files, carried, new_version,
+        t_paths, data_dir, carried, new_version,
         _mk_manifest, lambda fe: _filter_may_match(fe, pfilters),
         f"vt_{operation.lower()}",
     )
@@ -3226,11 +3080,9 @@ def _delete_dv_once(
     manifest = _read_manifest(table_dir, latest)
     _check_protocol(manifest, table_dir, write=True)
     parent_files = vt_files(table_dir, latest)
-    if parent_files is None:
-        raise ValueError("vt_delete_dv needs a file-level manifest")
     filters = list(filters)
     pred = _filters_to_column(filters)
-    schema = _manifest_schema(manifest)
+    schema = _manifest_schema(manifest, table_dir)
     mapping = _col_mapping(manifest)
     cand = _prune_files(
         spark, parent_files, _phys_filters(filters, mapping),
@@ -3278,14 +3130,14 @@ def _delete_dv_once(
     carried = [f for f in parent_files if f["path"] not in t_paths]
     new_version = latest + 1
 
-    def _mk_manifest(parent, carried_now, version):
+    def _mk_manifest(carried_now, version):
         out = {
             "data_dir": manifest.get("data_dir"),
             "n_rows": _live_rows(carried_now + updated),
             "schema": manifest.get("schema"),
             "operation": "DELETE_DV",
             **_incremental_or_full(
-                version, parent, carried_now, updated, sorted(t_paths)
+                version, carried_now, updated, sorted(t_paths)
             ),
         }
         if mapping is not None:
@@ -3313,7 +3165,7 @@ def _delete_dv_once(
         return new_version
     try:
         _commit(table_dir, new_version,
-                _mk_manifest(parent_files, carried, new_version))
+                _mk_manifest(carried, new_version))
     except VersionConflictError:
         # the sidecar was written before the commit; on a lost race the
         # retry re-finds the rows and writes a fresh one — remove this
@@ -3407,13 +3259,8 @@ def vt_widen_column(table_dir: str, col: str, new_type: str) -> int:
             raise FileNotFoundError(f"table {table_dir} does not exist")
         manifest = _read_manifest(table_dir, latest)
         _check_protocol(manifest, table_dir, write=True)
-        schema = _manifest_schema(manifest)
+        schema = _manifest_schema(manifest, table_dir)
         parent_files = vt_files(table_dir, latest)
-        if schema is None or parent_files is None:
-            raise ValueError(
-                "vt_widen_column needs a file-level manifest "
-                "(round-5+ table); rewrite it (vt_optimize) first"
-            )
         if col not in schema.names:
             raise ValueError(
                 f"vt_widen_column: no column {col!r} in {schema.names}"
@@ -3467,8 +3314,7 @@ def vt_widen_column(table_dir: str, col: str, new_type: str) -> int:
             "operation": "WIDEN_COLUMN",
             "type_widening": widened,
             **_incremental_or_full(
-                new_version, parent_files, carried, updated,
-                sorted(t_paths),
+                new_version, carried, updated, sorted(t_paths)
             ),
         }
         if mapping is not None:
@@ -3503,18 +3349,8 @@ def _schema_change_commit(
             raise FileNotFoundError(f"table {table_dir} does not exist")
         manifest = _read_manifest(table_dir, latest)
         _check_protocol(manifest, table_dir, write=True)
-        schema = _manifest_schema(manifest)
-        if schema is None:
-            raise ValueError(
-                f"{op_name} needs a manifest-stored schema "
-                "(round-5+ table); rewrite the table (vt_optimize) first"
-            )
+        schema = _manifest_schema(manifest, table_dir)
         parent_files = vt_files(table_dir, latest)
-        if parent_files is None:
-            raise ValueError(
-                f"{op_name} needs a file-level manifest (round-5+ "
-                "table); rewrite the table (vt_optimize) first"
-            )
         constraints = _table_constraints(manifest)
         new_schema, new_mapping = change_fn(schema, _col_mapping(manifest))
         if constraints:
@@ -3541,9 +3377,7 @@ def _schema_change_commit(
             "n_rows": int(manifest["n_rows"]),
             "schema": new_schema.jsonValue(),
             "operation": op_name,
-            **_incremental_or_full(
-                new_version, parent_files, list(parent_files), [], []
-            ),
+            **_incremental_or_full(new_version, parent_files, [], []),
         }
         if new_mapping is not None:
             out["column_mapping"] = new_mapping
@@ -3726,19 +3560,13 @@ def vt_add_constraint(spark: SparkSession, table_dir: str, name: str,
             )
         cons[name] = check
         parent_files = vt_files(table_dir, latest)
-        if parent_files is None:
-            raise ValueError(
-                "vt_add_constraint needs a file-level manifest"
-            )
         out = {
             "data_dir": m.get("data_dir"),
             "n_rows": int(m["n_rows"]),
             "schema": m.get("schema"),
             "constraints": cons,
             "operation": "ADD_CONSTRAINT",
-            **_incremental_or_full(
-                latest + 1, parent_files, list(parent_files), [], []
-            ),
+            **_incremental_or_full(latest + 1, parent_files, [], []),
         }
         if m.get("column_mapping"):
             out["column_mapping"] = m["column_mapping"]
@@ -3769,18 +3597,12 @@ def vt_drop_constraint(table_dir: str, name: str) -> int:
             )
         cons.pop(name)
         parent_files = vt_files(table_dir, latest)
-        if parent_files is None:
-            raise ValueError(
-                "vt_drop_constraint needs a file-level manifest"
-            )
         out = {
             "data_dir": m.get("data_dir"),
             "n_rows": int(m["n_rows"]),
             "schema": m.get("schema"),
             "operation": "DROP_CONSTRAINT",
-            **_incremental_or_full(
-                latest + 1, parent_files, list(parent_files), [], []
-            ),
+            **_incremental_or_full(latest + 1, parent_files, [], []),
         }
         if cons:
             out["constraints"] = cons

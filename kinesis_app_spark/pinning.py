@@ -17,10 +17,6 @@ comes from ``$SPARK_GRAFT_PIN``:
 - ``local`` (default): ``localCheckpoint(eager=...)`` — fastest on one
   box, zero fault tolerance for the pinned blocks. What the local bench
   and the driver's gates run.
-- ``persist_disk``: ``persist(StorageLevel.DISK_ONLY)`` — consumers after
-  the first read the materialized blocks, and a lost block is recomputed
-  from lineage (fault-tolerant). Lineage is NOT truncated, so prefer
-  ``reliable`` for unbounded iteration (plan growth returns otherwise).
 - ``reliable``: ``DataFrame.checkpoint(eager=...)`` — materializes to the
   (reliable, replicated at cluster scale) checkpoint directory and
   truncates lineage; survives executor loss. The 100 TB default posture.
@@ -28,6 +24,9 @@ comes from ``$SPARK_GRAFT_PIN``:
   caller has not configured one.
 - ``none``: no pin at all — full lineage everywhere. Used by plan-audit
   tests that must see through the pin, and as the escape hatch.
+
+Any other value (including the removed ``persist_disk``) falls back to
+``local``.
 
 Semantics: a pin NEVER changes what a query computes — every strategy
 (including ``none``) yields the same rows. Pre-mutation SNAPSHOTS (a
@@ -43,7 +42,7 @@ import os
 
 from pyspark.sql import DataFrame
 
-_VALID = ("local", "persist_disk", "reliable", "none")
+_VALID = ("local", "reliable", "none")
 
 
 def pin_strategy() -> str:
@@ -57,13 +56,6 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     s = pin_strategy()
     if s == "none":
         return df
-    if s == "persist_disk":
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.DISK_ONLY)
-        if eager:
-            out.count()
-        return out
     if s == "reliable":
         sc = df.sparkSession.sparkContext
         if sc._jsc.sc().getCheckpointDir().isEmpty():  # noqa: SLF001

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from kinesis_app_spark.scratch import scratch_base, scratch_dir
+from kinesis_app_spark.scratch import scratch_dir
 from kinesis_app_spark.operators.cdc import apply_changes
 from kinesis_app_spark.registry_util import QuerySpec, table as _t
 

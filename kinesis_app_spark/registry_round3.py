@@ -21,10 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from kinesis_app_spark.streaming.ops import (
-    GATE_STREAM_SHUFFLE,
-    PYSTATE_STREAM_SHUFFLE,
-)
+from kinesis_app_spark.streaming.ops import PYSTATE_STREAM_SHUFFLE
 from kinesis_app_spark.pinning import pin
 
 from kinesis_app_spark.operators.baskets import basket_pairs

@@ -13,11 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from kinesis_app_spark.streaming.ops import (
-    GATE_STREAM_SHUFFLE,
-    PYSTATE_STREAM_SHUFFLE,
-)
-from kinesis_app_spark.scratch import scratch_base, scratch_dir
+from kinesis_app_spark.streaming.ops import PYSTATE_STREAM_SHUFFLE
+from kinesis_app_spark.scratch import scratch_dir
 from kinesis_app_spark.pinning import pin
 
 from kinesis_app_spark.registry_util import QuerySpec, table as _t
@@ -825,8 +822,6 @@ def streaming_dedup_index_ingest(spark, sf_dir):
     Split: corpus u >= 0.3 (the persisted index), batch 1 u < 0.15,
     batch 2 u in [0.15, 0.3)."""
     import os
-    import tempfile
-    import uuid
 
     from kinesis_app_spark.operators import dedupindex as DI
     from kinesis_app_spark.streaming.sources import file_stream
@@ -837,9 +832,7 @@ def streaming_dedup_index_ingest(spark, sf_dir):
     b2 = docs.filter(
         (_md5_u("doc_id") >= F.lit(0.15)) & (_md5_u("doc_id") < F.lit(0.3))
     )
-    idx = os.path.join(
-        scratch_base(), f"dedup_stream_idx_{uuid.uuid4().hex[:12]}"
-    )
+    idx = os.path.join(scratch_dir("dedup_stream_idx_"), "idx")
     DI.dedup_index_build(corpus, idx)
 
     src = scratch_dir("dedup_stream_src_")
@@ -997,8 +990,6 @@ def streaming_versioned_merge(spark, sf_dir):
     commit protocol underneath. Replay idempotence itself is pinned in
     tests/test_round4.py (same batch re-applied, history unchanged)."""
     import os
-    import tempfile
-    import uuid
 
     from kinesis_app_spark.operators import versioned as VT
     from kinesis_app_spark.registry_cdc import _cdc_changes
@@ -1016,9 +1007,7 @@ def streaming_versioned_merge(spark, sf_dir):
     for f in set(os.listdir(src)) - first_files:
         os.utime(os.path.join(src, f), (newest + 5, newest + 5))
 
-    table = os.path.join(
-        scratch_base(), f"vtm_{uuid.uuid4().hex[:12]}"
-    )
+    table = os.path.join(scratch_dir("vtm_"), "table")
     VT.vt_create(o, table)
     ckpt = scratch_dir("vtm_stream_ckpt_")
     stream = file_stream(spark, src, batch1.schema, max_files_per_trigger=1)

@@ -19,7 +19,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from kinesis_app_spark.scratch import scratch_base
+from kinesis_app_spark.scratch import scratch_dir
 from kinesis_app_spark.registry_round4 import _fresh_marker, _table_sig
 from kinesis_app_spark.registry_util import QuerySpec, table as _t
 
@@ -1028,8 +1028,6 @@ def pipeline_kinesis_lakehouse_rollup(spark, sf_dir):
     a double-applied epoch, or a mis-signed delta shifts a count or a
     seq mass and hash-mismatches."""
     import shutil
-    import tempfile
-    import uuid
 
     from kinesis_app_spark.operators import versioned as VT
     from kinesis_app_spark.sources import vt_cdf as CDF
@@ -1037,21 +1035,20 @@ def pipeline_kinesis_lakehouse_rollup(spark, sf_dir):
 
     reg_fk(spark)
     CDF.register(spark)
-    run = uuid.uuid4().hex[:12]
-    # all four dirs are fresh-per-call run state (deleted in the
-    # teardown below): scratch placement, never /tmp-cached
-    up = os.path.join(scratch_base(), f"pkl_up_{run}")
-    down = os.path.join(scratch_base(), f"pkl_down_{run}")
-    ckpt1 = os.path.join(scratch_base(), f"pkl_ck1_{run}")
-    ckpt2 = os.path.join(scratch_base(), f"pkl_ck2_{run}")
+    # all four dirs are fresh-per-call run state under one scratch dir
+    # (deleted in the teardown below): never /tmp-cached
+    run = scratch_dir("pkl_")
+    up = os.path.join(run, "up")
+    down = os.path.join(run, "down")
+    ckpt1 = os.path.join(run, "ck1")
+    ckpt2 = os.path.join(run, "ck2")
 
     def _drain(q, what: str) -> None:
         # a timed-out drain must not leak a live streaming query or the
         # pkl_* temp state (round-6 ADVICE): stop the query, then sweep
         if not q.awaitTermination(300):
             q.stop()
-            for d in (up, down, ckpt1, ckpt2):
-                shutil.rmtree(d, ignore_errors=True)
+            shutil.rmtree(run, ignore_errors=True)
             _timeout(what)
 
     VT.vt_create(
@@ -1112,8 +1109,7 @@ def pipeline_kinesis_lakehouse_rollup(spark, sf_dir):
         .orderBy("usr")
         .localCheckpoint(eager=True)  # materialize before the teardown
     )
-    for d in (up, down, ckpt1, ckpt2):
-        shutil.rmtree(d, ignore_errors=True)
+    shutil.rmtree(run, ignore_errors=True)
     return out
 
 

@@ -13,7 +13,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from kinesis_app_spark.scratch import scratch_base
+from kinesis_app_spark.scratch import scratch_dir
 from kinesis_app_spark.registry_round4 import _fresh_marker, _table_sig
 from kinesis_app_spark.registry_util import QuerySpec, table as _t
 
@@ -486,8 +486,6 @@ def pipeline_txn_fact_rollup(spark, sf_dir):
     hash-mismatches. Exact DECIMAL arithmetic keeps the incremental
     accumulation bit-equal to the oracle's single-pass SUM."""
     import shutil
-    import tempfile
-    import uuid
 
     from kinesis_app_spark.operators import versioned as VT
     from kinesis_app_spark.operators.txn import (
@@ -541,9 +539,9 @@ def pipeline_txn_fact_rollup(spark, sf_dir):
                 .withColumn("op", F.lit("U"))
             )
 
-        run = uuid.uuid4().hex[:8]
-        stage = os.path.join(scratch_base(), f"txnp_in_{run}")
-        ckpt = os.path.join(scratch_base(), f"txnp_ck_{run}")
+        run = scratch_dir("txnp_")
+        stage = os.path.join(run, "in")
+        ckpt = os.path.join(run, "ck")
         for i in range(3):  # three deterministic epochs
             o.filter(F.col("o_orderkey") % 3 == i).coalesce(1) \
                 .write.parquet(os.path.join(stage, f"part{i}"))
@@ -569,8 +567,7 @@ def pipeline_txn_fact_rollup(spark, sf_dir):
                     "txn fact/rollup pipeline did not drain in 300 s"
                 )
         finally:
-            shutil.rmtree(stage, ignore_errors=True)
-            shutil.rmtree(ckpt, ignore_errors=True)
+            shutil.rmtree(run, ignore_errors=True)
         n0 = o.count()
         assert VT.vt_read(spark, fact).count() == n0, (
             "every order must reach the fact table"
@@ -917,8 +914,6 @@ def versioned_table_stream_tail(spark, sf_dir):
     oracle is the plain union — a dropped append, a re-delivered file,
     or a layout commit leaking rows shifts counts and hash-mismatches."""
     import shutil
-    import tempfile
-    import uuid
 
     from kinesis_app_spark.operators import versioned as VT
     from kinesis_app_spark.sources import vt_writer as W
@@ -946,9 +941,9 @@ def versioned_table_stream_tail(spark, sf_dir):
         )
         with open(marker, "w") as fh:
             fh.write(sig)
-    run = uuid.uuid4().hex[:8]
-    out_dir = os.path.join(scratch_base(), f"vtt_out_{run}")
-    ckpt = os.path.join(scratch_base(), f"vtt_ck_{run}")
+    run = scratch_dir("vtt_")
+    out_dir = os.path.join(run, "out")
+    ckpt = os.path.join(run, "ck")
     q = (
         spark.readStream.format("vt_table")
         .option("path", table_dir)
@@ -963,16 +958,14 @@ def versioned_table_stream_tail(spark, sf_dir):
     )
     if not q.awaitTermination(300):
         q.stop()
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(run, ignore_errors=True)
         raise TimeoutError("vt_table stream tail did not finish in 300 s")
     res = (
         spark.read.parquet(out_dir)
         .orderBy("o_orderkey")
         .localCheckpoint(eager=True)
     )
-    shutil.rmtree(out_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    shutil.rmtree(run, ignore_errors=True)
     return res
 
 

@@ -19,13 +19,16 @@ helper is only for run-and-discard gate state, which is why only the
 gate entries call it (the StreamRunner API takes caller-owned
 checkpoint dirs and is unaffected).
 
-No results are cached here: a fresh dir per invocation, removed with
-the normal tempdir lifecycle.
+No results are cached here: a fresh dir per invocation, removed when
+the interpreter that created it exits (``atexit``; a hard kill still
+leaves it behind).
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 
@@ -38,6 +41,16 @@ def scratch_base() -> str:
     return tempfile.gettempdir()
 
 
+def _remove_at_exit(path: str, owner: int) -> None:
+    if os.getpid() == owner:  # never from a forked child's exit
+        shutil.rmtree(path, ignore_errors=True)
+
+
 def scratch_dir(prefix: str) -> str:
-    """A fresh ephemeral dir for one streaming run's checkpoint/state."""
-    return tempfile.mkdtemp(prefix=prefix, dir=scratch_base())
+    """A fresh ephemeral dir for one streaming run's checkpoint/state,
+    registered for ``shutil.rmtree(..., ignore_errors=True)`` at
+    interpreter exit: scratch on the RAM-backed ``/dev/shm`` must not
+    outlive the process."""
+    path = tempfile.mkdtemp(prefix=prefix, dir=scratch_base())
+    atexit.register(_remove_at_exit, path, os.getpid())
+    return path

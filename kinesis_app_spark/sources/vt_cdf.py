@@ -67,8 +67,6 @@ tailed the projected VIEW of the table.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -129,13 +127,7 @@ def _table_schema(table_dir: str) -> StructType:
         )
     m = VT._read_manifest(table_dir, latest)
     VT._check_protocol(m, table_dir)
-    schema = VT._manifest_schema(m)
-    if schema is None:
-        raise ValueError(
-            f"vt_cdf: {table_dir} has a pre-round-5 manifest without a "
-            "stored schema; rewrite the table (vt_optimize) to tail it"
-        )
-    return schema
+    return VT._manifest_schema(m, table_dir)
 
 
 def _cdf_schema(table_dir: str, columns: list[str] | None = None,
@@ -318,9 +310,6 @@ def _plan_version(table_dir: str, version: int, keys: list[str],
     pkey = pkeys[0]
     if version == 0:
         files = VT.vt_files(table_dir, 0)
-        if files is None:  # pre-round-5 manifest: one opaque dir
-            return [_CdfSlice(0, "snapshot_dir", [], [m["data_dir"]],
-                              keys, schema_json, mapping=mapping)]
         if prune:
             # v0 rows are pure inserts: per-file pruning is safe (no
             # pairing to preserve), Spark re-applies the exact filters
@@ -341,9 +330,6 @@ def _plan_version(table_dir: str, version: int, keys: list[str],
         )
     files_a = VT.vt_files(table_dir, version - 1)
     files_b = VT.vt_files(table_dir, version)
-    if files_a is None or files_b is None:
-        return [_CdfSlice(version, "diff_dir", [prev["data_dir"]],
-                          [m["data_dir"]], keys, schema_json)]
     # exclusivity is by CONTENT signature, not path: a DELETE_DV commit
     # keeps the path and changes only the deletion vector (VT._dv_sig)
     sigs_a = {VT._dv_sig(f) for f in files_a}
@@ -386,12 +372,6 @@ def _arrow_target(schema_json: str):
     return to_arrow_schema(StructType.fromJson(__import__("json").loads(
         schema_json
     )))
-
-
-def _list_parquet(d: str) -> list[str]:
-    return sorted(
-        os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
-    )
 
 
 def _dv_mask(t, path: str, dv_dirs: list[str]):
@@ -520,22 +500,16 @@ def _read_slice(partition: _CdfSlice):
 
     target = _arrow_target(partition.schema_json)
     mapping = partition.mapping
-    if partition.kind in ("snapshot", "snapshot_dir"):
-        paths = (partition.after if partition.kind == "snapshot"
-                 else _list_parquet(partition.after[0]))
-        tbl = _read_padded(paths, target, mapping=mapping)
+    if partition.kind == "snapshot":
+        tbl = _read_padded(partition.after, target, mapping=mapping)
         yield from _emit(tbl, target, partition.version, "insert")
         return
-    before_paths = (partition.before if partition.kind == "diff"
-                    else _list_parquet(partition.before[0]))
-    after_paths = (partition.after if partition.kind == "diff"
-                   else _list_parquet(partition.after[0]))
     keys = partition.keys
     pkey = (mapping or {}).get(keys[0], keys[0])
-    before = _read_padded(before_paths, target, pkey,
+    before = _read_padded(partition.before, target, pkey,
                           partition.key_bounds, partition.dv_before,
                           mapping)
-    after = _read_padded(after_paths, target, pkey,
+    after = _read_padded(partition.after, target, pkey,
                          partition.key_bounds, partition.dv_after,
                          mapping)
     vals = [f.name for f in list(target)[2:] if f.name not in keys]

@@ -309,15 +309,7 @@ def _append_staged(conn: dict, messages, batch_id: int | None) -> None:
         new_files.sort(key=lambda f: f["path"])
         _stamp_clustered_run(new_files, conn)
         for _spin in range(_APPEND_MAX_SPINS):
-            parent_files = VT.vt_files(table_dir, latest)
-            if parent_files is None:
-                raise ValueError(
-                    "vt_table sink needs a file-level manifest "
-                    "(round-5+ table); rewrite the table (vt_optimize) "
-                    "first — appending to an opaque-dir manifest would "
-                    "drop its rows from the new version"
-                )
-            carried = list(parent_files)
+            carried = VT.vt_files(table_dir, latest)
             manifest = {
                 "data_dir": data_dir,
                 "n_rows": VT._live_rows(carried + new_files),
@@ -331,7 +323,7 @@ def _append_staged(conn: dict, messages, batch_id: int | None) -> None:
                 ),
                 "operation": "APPEND",
                 **VT._incremental_or_full(
-                    new_version, parent_files, carried, new_files, []
+                    new_version, carried, new_files, []
                 ),
             }
             if conn.get("mapping") is not None:
@@ -741,11 +733,7 @@ def _read_manifest_for_read(path: str, version: int) -> dict:
         raise FileNotFoundError(
             f"vt_table: version {version} of {path} was vacuumed"
         )
-    if VT._manifest_schema(m) is None:
-        raise ValueError(
-            "vt_table: the manifest stores no schema (pre-round-5 "
-            "table); rewrite it (vt_optimize) first"
-        )
+    VT._manifest_schema(m, path)  # a schema-less manifest raises
     return m
 
 
@@ -824,13 +812,7 @@ class VersionedTableBatchReader(DataSourceReader):
         m = _read_manifest_for_read(self.path, self.version)
         self.schema_json = json.dumps(m["schema"])
         self.mapping = VT._col_mapping(m)
-        files = VT.vt_files(self.path, self.version)
-        if files is None:
-            raise ValueError(
-                "vt_table: reading needs a file-level manifest "
-                "(round-5+ table); rewrite it (vt_optimize) first"
-            )
-        self.files = files
+        self.files = VT.vt_files(self.path, self.version)
         # relation-scoped scan restriction: logical triples from the
         # option, resolved to physical names (the stats/bloom namespace)
         self.pushed = VT._phys_filters(
@@ -929,15 +911,15 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         # file entries into ~N-live-row slices so a small-file table
         # does not plan one Python task per tiny file (packing never
         # splits a file, so delivery semantics are unchanged). Round 9:
-        # default derives from the LATEST snapshot's manifest (a stable
-        # per-stream constant — per-version derivation would make a
-        # replayed batch's slicing depend on when it was planned).
+        # default derives from the LATEST snapshot's manifest when the
+        # reader is built. The target is stable within one run only: a
+        # restart derives it again from the then-latest manifest, so a
+        # replayed batch may be sliced differently — same rows, since
+        # packing never splits a file.
         opt = options.get("slicetargetrows")
         self.target_rows = (
             int(opt) if opt is not None
-            else _derived_slice_target(
-                VT.vt_files(self.path, latest) or []
-            )
+            else _derived_slice_target(VT.vt_files(self.path, latest))
         )
         self._planned: int | None = None
 
@@ -971,12 +953,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             ]
 
         if v == self.start:
-            files = VT.vt_files(self.path, v)
-            if files is None:
-                raise ValueError(
-                    "vt_table streaming needs a file-level manifest"
-                )
-            return slices(files)
+            return slices(VT.vt_files(self.path, v))
         op = m.get("operation", "")
         if op in _NON_DATA_OPS or op == "CREATE":
             return []
@@ -1001,12 +978,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                 "restart the query to pick up the new schema — the "
                 "checkpoint resumes at this version"
             )
-        delta = VT._commit_delta(self.path, v)
-        if delta is None:
-            raise ValueError(
-                f"vt_table: version {v} has no file-level metadata"
-            )
-        added, removed = delta
+        added, removed = VT._commit_delta(self.path, v)
         if op in ("DELETE", "DELETE_DV"):
             if not self.ignore_deletes and (removed or added):
                 raise ValueError(
@@ -1057,7 +1029,7 @@ class VersionedTableDataSource(DataSource):
     def schema(self):
         path, version = _resolve_read_version(self.options)
         m = _read_manifest_for_read(path, version)
-        return VT._manifest_schema(m)
+        return VT._manifest_schema(m, path)
 
     def reader(self, schema):
         return VersionedTableBatchReader(self.options)

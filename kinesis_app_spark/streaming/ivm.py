@@ -168,7 +168,7 @@ class TwoStreamJoinCoordinator:
         vs = [b // 2 for b in applied if b % 2 == other_idx]
         if not vs:
             schema = VT._manifest_schema(
-                VT._read_manifest(self.dirs[other], 0)
+                VT._read_manifest(self.dirs[other], 0), self.dirs[other]
             )
             return self.spark.createDataFrame([], schema)
         return VT.vt_read(self.spark, self.dirs[other], max(vs))

@@ -242,11 +242,13 @@ def test_versioned_commit_race_loses_atomically(spark, tmp_path):
     writer's read and its commit, the commit must fail AND the loser's
     orphaned data files must be cleaned up."""
     import glob
+    import json
     import os
 
     import pytest
 
     VT, table = _mk_vt(spark, tmp_path)
+    v0 = VT._read_manifest(table, 0)
     # interpose: another writer commits version 1 while ours is writing
     orig_write = VT._write_data
 
@@ -255,21 +257,24 @@ def test_versioned_commit_race_loses_atomically(spark, tmp_path):
         if version == 1 and not os.path.exists(
             VT._manifest_path(table_dir, 1)
         ):
-            # the winner's commit lands with its OWN (already written)
-            # file set while our writer is still flushing data
+            # the winner's incremental commit lands while our writer is
+            # still flushing data: it rewrote v0's file (into its own,
+            # already written data dir), so our merge read a removed file
             win_dir = os.path.join(table_dir, "data", "v00001_winner")
             os.makedirs(win_dir, exist_ok=True)
             os.makedirs(VT._manifest_dir(table_dir), exist_ok=True)
             with open(VT._manifest_path(table_dir, 1), "w") as fh:
-                fh.write(
-                    '{"version": 1, "data_dir": "%s", "n_rows": 3, '
-                    '"operation": "MERGE"}' % win_dir
-                )
+                json.dump({
+                    "version": 1, "data_dir": win_dir, "n_rows": 0,
+                    "schema": v0["schema"], "operation": "MERGE",
+                    "add": [],
+                    "remove": [f["path"] for f in v0["files"]],
+                }, fh)
         return data_dir
 
     VT._write_data = racing_write
     try:
-        with pytest.raises(VT.VersionConflictError):
+        with pytest.raises(VT.VersionConflictError, match="removed file"):
             VT.vt_merge(
                 spark, table, _changes(spark, [(1, "z", "U")]), keys=["k"]
             )

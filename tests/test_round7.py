@@ -37,41 +37,56 @@ def _edit_manifest(table, version, fn):
 # ---------------------------------------------------------------------
 
 
-def test_unknown_required_feature_raises_everywhere(spark, tmp_path):
+def _unknown_feature(m):
+    m["protocol"] = {
+        "min_reader": 1, "min_writer": 1,
+        "features": ["time_crystals"],
+    }
+
+
+def _no_file_metadata_or_schema(m):
+    for k in ("files", "files_pq", "add", "remove", "schema"):
+        m.pop(k, None)
+
+
+@pytest.mark.parametrize("poison, match", [
+    pytest.param(_unknown_feature, "time_crystals", id="unknown_feature"),
+    pytest.param(_no_file_metadata_or_schema, "recreate the table",
+                 id="no_file_metadata_or_schema"),
+])
+def test_unknown_required_feature_raises_everywhere(spark, tmp_path,
+                                                    poison, match):
     table = str(tmp_path / "t")
     _mk(spark, table)
 
-    def poison(m):
-        m["protocol"] = {
-            "min_reader": 1, "min_writer": 1,
-            "features": ["time_crystals"],
-        }
-
     _edit_manifest(table, 0, poison)
-    with pytest.raises(VT.ProtocolError, match="time_crystals"):
+    with pytest.raises(VT.ProtocolError, match=match):
         VT.vt_read(spark, table)
-    with pytest.raises(VT.ProtocolError, match="time_crystals"):
+    with pytest.raises(VT.ProtocolError, match=match):
         VT.vt_scan(spark, table, [("k", "=", 1)])
-    with pytest.raises(VT.ProtocolError, match="time_crystals"):
+    with pytest.raises(VT.ProtocolError, match=match):
         VT.vt_changes(spark, table, 0, 0, keys=["k"])
-    with pytest.raises(VT.ProtocolError, match="time_crystals"):
+    with pytest.raises(VT.ProtocolError, match=match):
         VT.vt_merge(
             spark, table,
             spark.createDataFrame([(1, 1, 1, "U")],
                                   "k long, v long, grp int, op string"),
             keys=["k"],
         )
-    with pytest.raises(VT.ProtocolError, match="time_crystals"):
+    with pytest.raises(VT.ProtocolError, match=match):
         VT.vt_delete(spark, table, [("k", "=", 1)])
     from kinesis_app_spark.sources import vt_cdf as CDF
 
     CDF.register(spark)
-    with pytest.raises(Exception, match="time_crystals"):
+    # the source runs in a Python worker: the ProtocolError arrives
+    # wrapped in Spark's exception, its type and message in the text
+    with pytest.raises(Exception, match=match) as err:
         (
             spark.read.format("vt_cdf")
             .option("path", table).option("keys", "k")
             .load().collect()
         )
+    assert "ProtocolError" in str(err.value)
 
 
 def test_min_reader_version_guard(spark, tmp_path):
