@@ -87,17 +87,6 @@ def get_spark(
         "spark.sql.shuffle.partitions": str(shuffle_partitions or 32),
         # --- Python boundary: always Arrow, never per-row pickle ---
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # batch size for the Arrow kernels (guide §4.3). Round-9 sweep
-        # verdict: KEEP 10k. Cross-session timings suggested 32k wins
-        # on the PCA/semdedup/knn kernels, but paired same-session
-        # alternating A/Bs (the only storm-proof discipline on this
-        # box) show those are a wash — while the multi-table LSH
-        # kernel REGRESSES ~+1.5 s at 32k (+70% at 64k; its per-row
-        # output fan-out multiplies per-batch memory). Env-tunable for
-        # workloads whose kernels are genuinely batch-starved.
-        "spark.sql.execution.arrow.maxRecordsPerBatch": os.environ.get(
-            "SPARK_GRAFT_ARROW_BATCH", "10000"
-        ),
         # UDTFs too: ArrowEvalPythonUDTF instead of the pickled runner
         # (tests assert no pickled BatchEvalPython node in ANY plan)
         "spark.sql.execution.pythonUDTF.arrow.enabled": "true",

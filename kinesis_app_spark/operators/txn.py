@@ -34,9 +34,10 @@ The commit order is the strict two-phase shape:
 
   1. acquire every table's lock (SORTED paths — no deadlocks)
   2. validate each staged commit against the now-frozen tips
-     (the vt_merge conflict rules: removed-read-file / added-key-hit /
-     schema change), re-deriving carried file sets — any failure here
-     aborts cleanly, nothing was visible
+     (``versioned._first_conflict``, the single-table rules:
+     removed-read-file / added-key-hit / table-metadata change),
+     re-deriving carried file sets — any failure here aborts cleanly,
+     nothing was visible
   3. reserve slots: commit each table's REAL manifest at tip+1 with a
      pending marker (invisible); a writer that slipped in before the
      lock costs a bounded re-validation spin
@@ -449,8 +450,9 @@ class VtTransaction:
 
     def stage_append(self, table_dir: str, df,
                      batch_id: int | None = None) -> int:
-        """Append ``df`` as new files (no join, conflicts with nothing
-        — always lands once the transaction decides). ``batch_id``
+        """Append ``df`` as new files (no join; conflicts only with a
+        concurrent table-metadata change, which aborts the transaction
+        at finalize). ``batch_id``
         lands in the commit's epoch ledger for streaming idempotence
         (the vt_foreach_batch_merger discipline)."""
         self._check_stageable(table_dir)
@@ -479,26 +481,19 @@ class VtTransaction:
             table_dir, new_version, mapping,
         )
 
+        meta = VT._table_meta(manifest)
+
         def mk_manifest(carried_now, version):
-            out = {
-                "data_dir": data_dir,
-                "n_rows": VT._live_rows(carried_now + new_files),
-                "schema": manifest.get("schema"),
-                "operation": "APPEND",
-                **VT._incremental_or_full(version, carried_now, new_files, []),
-            }
-            if mapping is not None:
-                out["column_mapping"] = mapping
-            if batch_id is not None:
-                out["batch_id"] = int(batch_id)
-            return out
+            return VT._next_manifest(
+                meta, "APPEND", version, carried_now, new_files, [],
+                data_dir,
+                batch_id=None if batch_id is None else int(batch_id),
+            )
 
         self._add_staged({
             "table_dir": table_dir,
             "validated_to": latest,
-            "base_schema_json": json.dumps(
-                manifest.get("schema"), sort_keys=True
-            ),
+            "base_meta": meta,
             "t_paths": set(),
             "data_dir": data_dir,
             "mk_manifest": mk_manifest,
@@ -643,32 +638,14 @@ class VtTransaction:
                 )
             for _spin in range(_MAX_RESERVE_SPINS):
                 latest = VT.vt_latest_version(table_dir)
-                for v in range(validated_to + 1, latest + 1):
-                    added, removed = VT._commit_delta(table_dir, v)
-                    hit = removed & s["t_paths"]
-                    if hit:
-                        raise TxnAbortedError(
-                            f"txn {self.txn_id}: version {v} of "
-                            f"{table_dir} removed file(s) this txn "
-                            f"read: {sorted(hit)[:3]}"
-                        )
-                    clash = next(
-                        (fe for fe in added if s["added_hits"](fe)), None
+                reason = VT._first_conflict(
+                    table_dir, validated_to, latest, s["t_paths"],
+                    s["added_hits"], s["base_meta"],
+                )
+                if reason is not None:
+                    raise TxnAbortedError(
+                        f"txn {self.txn_id}: {table_dir}: {reason}"
                     )
-                    if clash is not None:
-                        raise TxnAbortedError(
-                            f"txn {self.txn_id}: version {v} of "
-                            f"{table_dir} added an overlapping file: "
-                            f"{clash['path']}"
-                        )
-                if latest > validated_to:
-                    latest_m = VT._read_manifest(table_dir, latest)
-                    if (json.dumps(latest_m.get("schema"), sort_keys=True)
-                            != s["base_schema_json"]):
-                        raise TxnAbortedError(
-                            f"txn {self.txn_id}: concurrent schema "
-                            f"change on {table_dir}"
-                        )
                 validated_to = latest
                 carried = [
                     f for f in VT.vt_files(table_dir, latest)

@@ -49,6 +49,7 @@ from __future__ import annotations
 import datetime
 import json
 import os
+import re
 import shutil
 import time
 import uuid
@@ -420,17 +421,95 @@ def _incremental_or_full(
     new_version: int,
     carried: list[dict],
     new_files: list[dict],
-    touched_paths: Sequence[str],
+    touched_paths: Sequence[str] | None,
 ) -> dict:
     """The commit's file payload: incremental ``add``/``remove`` actions,
-    or the complete ``files`` list on a checkpoint version. Either form
+    or the complete ``files`` list on a checkpoint version — and always
+    when ``touched_paths`` is None (a RESTORE or full OPTIMIZE, whose
+    file set is a snapshot rather than a delta). Either form
     reconstructs to ``carried + new_files``."""
-    if new_version % _CHECKPOINT_EVERY == 0:
+    if touched_paths is None or new_version % _CHECKPOINT_EVERY == 0:
         return {"files": carried + new_files}
     return {
         "add": new_files,
         "remove": sorted(touched_paths),
     }
+
+
+#: the TABLE METADATA: manifest keys every commit inherits from its
+#: parent unless it changes them on purpose (DDL). A concurrent change
+#: to any of them conflicts with a writer that planned against the old
+#: values (``_first_conflict``) — a merge planned before an ADD
+#: CONSTRAINT must neither skip the new check nor commit it away.
+_META_KEYS = ("schema", "column_mapping", "constraints", "type_widening")
+
+
+def _table_meta(manifest: dict) -> dict:
+    """The version's table metadata: every ``_META_KEYS`` entry it sets
+    (an empty value and an absent key are the same metadata)."""
+    return {k: manifest[k] for k in _META_KEYS if manifest.get(k)}
+
+
+def _next_manifest(
+    meta: dict,
+    operation: str,
+    version: int,
+    carried: list[dict],
+    new_files: list[dict],
+    removed_paths: Sequence[str] | None,
+    data_dir: str | None,
+    **extra,
+) -> dict:
+    """The one manifest builder every commit goes through: table
+    metadata ``meta`` (the parent's ``_table_meta``, or a DDL's changed
+    copy), the file payload (``_incremental_or_full``), the live row
+    count, and the operation's own fields in ``extra`` (None values are
+    left out)."""
+    return {
+        "data_dir": data_dir,
+        "n_rows": _live_rows(carried + new_files),
+        "operation": operation,
+        **_table_meta(meta),
+        **_incremental_or_full(version, carried, new_files, removed_paths),
+        **{k: v for k, v in extra.items() if v is not None},
+    }
+
+
+def _first_conflict(
+    table_dir: str,
+    validated_to: int,
+    latest: int,
+    t_paths: set[str],
+    added_hits,
+    base_meta: dict,
+) -> str | None:
+    """Why the commits ``validated_to + 1 .. latest`` conflict with a
+    writer that read the files ``t_paths`` under table metadata
+    ``base_meta`` (a ``_table_meta``) — a commit removed a file it read,
+    added a file its keys/predicate could match (``added_hits``), or
+    the metadata at ``latest`` differs — or None when it may commit on
+    top of ``latest``. The one check behind single-table optimistic
+    commits and multi-table transaction finalize."""
+    for v in range(validated_to + 1, latest + 1):
+        added, removed = _commit_delta(table_dir, v)
+        hit = removed & t_paths
+        if hit:
+            return (
+                f"version {v} removed file(s) this writer read: "
+                f"{sorted(hit)[:3]}"
+            )
+        clash = next((fe for fe in added if added_hits(fe)), None)
+        if clash is not None:
+            return (
+                f"version {v} added a file overlapping this writer's "
+                f"keys/predicate: {clash['path']}"
+            )
+    if _table_meta(_read_manifest(table_dir, latest)) != base_meta:
+        return (
+            "a concurrent commit changed the table metadata (schema, "
+            "column mapping, constraints or type widening)"
+        )
+    return None
 
 
 def _commit_delta(
@@ -822,13 +901,10 @@ def vt_create(df: DataFrame, table_dir: str) -> int:
     _commit(
         table_dir,
         0,
-        {
-            "data_dir": data_dir,
-            "files": files,
-            "n_rows": sum(f["n_rows"] for f in files),
-            "schema": df.schema.jsonValue(),
-            "operation": "CREATE",
-        },
+        _next_manifest(
+            {"schema": df.schema.jsonValue()}, "CREATE", 0, [], files, [],
+            data_dir,
+        ),
         cleanup_dir=data_dir,
     )
     return 0
@@ -1227,7 +1303,8 @@ def vt_merge(
     commit's file delta (``_commit_delta``) is checked against this
     merge's read set — compatible iff no intervening commit REMOVED a
     file this merge read/rewrote, ADDED a file whose key stats admit
-    one of this merge's change keys, or changed the schema. Disjoint
+    one of this merge's change keys, or changed the table metadata
+    (schema, column mapping, constraints, type widening). Disjoint
     writers (the common multi-writer shape: different key ranges of the
     same table) then BOTH commit, the loser without re-executing its
     join — it re-derives its carried set from the winner's manifest and
@@ -1314,7 +1391,6 @@ def vt_merge(
             if _file_intersects(f, chg_stats, pkeys)
         ] if n_changes else []
     t_paths = {f["path"] for f in touched}
-    carried = [f for f in parent_files if f["path"] not in t_paths]
     snapshot = _read_snapshot_entries(spark, touched, evolved, mapping)
 
     merged = apply_changes(
@@ -1338,26 +1414,19 @@ def vt_merge(
         spark, new_files, evolved, mapping, constraints, check,
         data_dir, "vt_merge",
     )
+    base_meta = _table_meta(manifest)
+    meta = {
+        **base_meta, "schema": evolved.jsonValue(), "column_mapping": mapping,
+    }
+
     def _mk_manifest(carried_now: list[dict], version: int) -> dict:
-        out = {
-            "data_dir": data_dir,
-            "n_rows": _live_rows(carried_now + new_files),
-            "schema": evolved.jsonValue(),
-            "operation": "MERGE",
-            **_incremental_or_full(
-                version, carried_now, new_files, sorted(t_paths)
-            ),
-        }
-        if mapping is not None:
-            out["column_mapping"] = mapping
-        if batch_id is not None:
-            # streaming epoch ledger: foreachBatch idempotence (Delta's
-            # txnAppId/txnVersion discipline) — a replayed epoch finds
-            # its batch_id already committed and skips
-            out["batch_id"] = int(batch_id)
-        if constraints:
-            out["constraints"] = constraints
-        return out
+        # batch_id: the streaming epoch ledger — foreachBatch idempotence
+        # (Delta's txnAppId/txnVersion discipline): a replayed epoch
+        # finds its batch_id already committed and skips
+        return _next_manifest(
+            meta, "MERGE", version, carried_now, new_files, t_paths,
+            data_dir, batch_id=None if batch_id is None else int(batch_id),
+        )
 
     def _added_file_hits(fe: dict) -> bool:
         """Could a concurrently ADDED file contain a row matching one of
@@ -1369,80 +1438,81 @@ def vt_merge(
             return _file_hits_key_set(fe, pkey_cols)
         return _file_intersects(fe, chg_stats, pkeys)
 
+    return _stage_or_commit(
+        txn, table_dir, base, base_meta, t_paths, data_dir, parent_files,
+        _mk_manifest, _added_file_hits, "vt_merge",
+    )
+
+
+def _stage_or_commit(
+    txn,
+    table_dir: str,
+    base: int,
+    base_meta: dict,
+    t_paths: set[str],
+    data_dir: str,
+    parent_files: list[dict],
+    mk_manifest,
+    added_hits,
+    op_name: str,
+) -> int:
+    """The tail of every data-writing operation planned at ``base``:
+    hand the staged pieces to ``txn``'s atomic finalize
+    (operators/txn.py), or commit them now through
+    ``_commit_optimistic``. Returns the version taken (planned, under a
+    transaction)."""
     if txn is not None:
         txn._add_staged({
             "table_dir": table_dir,
             "validated_to": base,
-            "base_schema_json": json.dumps(
-                manifest.get("schema"), sort_keys=True
-            ),
+            "base_meta": base_meta,
             "t_paths": t_paths,
             "data_dir": data_dir,
-            "mk_manifest": _mk_manifest,
-            "added_hits": _added_file_hits,
-            "op_name": "vt_merge",
+            "mk_manifest": mk_manifest,
+            "added_hits": added_hits,
+            "op_name": op_name,
         })
-        return new_version
-
+        return base + 1
+    carried = [f for f in parent_files if f["path"] not in t_paths]
     return _commit_optimistic(
-        table_dir, base, json.dumps(manifest.get("schema"), sort_keys=True),
-        t_paths, data_dir, carried, new_version,
-        _mk_manifest, _added_file_hits, "vt_merge",
+        table_dir, base, base_meta, t_paths, data_dir, carried,
+        mk_manifest, added_hits, op_name,
     )
 
 
 def _commit_optimistic(
     table_dir: str,
     base: int,
-    base_schema_json: str,
+    base_meta: dict,
     t_paths: set[str],
     data_dir: str,
     carried: list[dict],
-    new_version: int,
     mk_manifest,
     added_hits,
     op_name: str,
 ) -> int:
-    """Delta-style optimistic commit, shared by MERGE and predicate DML:
-    try the next version; on losing the race, check every intervening
-    commit's file delta against this writer's read set — no removed file
-    it read (``t_paths``), no added file its predicate/keys could match
-    (``added_hits``), no schema change. Disjoint writers commit without
-    re-executing — carried files are re-derived from the winner's
-    manifest (the winner removed none of OUR files, so they are all
-    still present); overlap cleans up the staged files and raises for
-    the caller's rebase loop. Bounded spins: under a hostile stream of
-    disjoint commits the loop gives up after ``_COMMIT_MAX_SPINS``
-    (cheap metadata retries, but starvation must surface, not hang)."""
+    """Delta-style optimistic commit: try the next version; on losing
+    the race, ``_first_conflict`` checks every intervening commit
+    against this writer's read set and table metadata. Disjoint writers
+    commit without re-executing — carried files are re-derived from the
+    winner's manifest (the winner removed none of OUR files, so they
+    are all still present); a conflict cleans up the staged files and
+    raises for the caller's rebase loop. Bounded spins: under a hostile
+    stream of disjoint commits the loop gives up after
+    ``_COMMIT_MAX_SPINS`` (cheap metadata retries, but starvation must
+    surface, not hang)."""
     validated_to = base
+    new_version = base + 1
     for _spin in range(_COMMIT_MAX_SPINS):
         try:
             _commit(table_dir, new_version, mk_manifest(carried, new_version))
             return new_version
         except VersionConflictError:
             latest = vt_latest_version(table_dir)
-            reason = None
-            for v in range(validated_to + 1, latest + 1):
-                added, removed = _commit_delta(table_dir, v)
-                hit = removed & t_paths
-                if hit:
-                    reason = (
-                        f"version {v} removed file(s) this writer read: "
-                        f"{sorted(hit)[:3]}"
-                    )
-                    break
-                clash = next((fe for fe in added if added_hits(fe)), None)
-                if clash is not None:
-                    reason = (
-                        f"version {v} added a file overlapping this "
-                        f"writer's keys/predicate: {clash['path']}"
-                    )
-                    break
-            if reason is None:
-                latest_m = _read_manifest(table_dir, latest)
-                if (json.dumps(latest_m.get("schema"), sort_keys=True)
-                        != base_schema_json):
-                    reason = "a concurrent commit changed the table schema"
+            reason = _first_conflict(
+                table_dir, validated_to, latest, t_paths, added_hits,
+                base_meta,
+            )
             if reason is not None:
                 shutil.rmtree(data_dir, ignore_errors=True)
                 raise VersionConflictError(
@@ -1716,46 +1786,22 @@ def vt_optimize(
         # renames): lets vt_cluster_incremental recognize already-
         # clustered files and rewrite only the debt
         f["clustered"] = pcols
-    out = {
-        "data_dir": data_dir,
-        "files": files,
-        "n_rows": sum(f["n_rows"] for f in files),
-        "schema": df.schema.jsonValue(),
-        "operation": "OPTIMIZE",
-    }
-    if mapping is not None:
-        out["column_mapping"] = mapping
-    if _table_constraints(manifest):
-        out["constraints"] = _table_constraints(manifest)
-    if txn is not None:
-        # a full rewrite READS everything, so its read set is every
-        # base file and ANY concurrently added file conflicts (its
-        # rows would vanish from the rewrite) — the strictest rules in
-        # the family; compact/cluster stage with the relaxed layout
-        # rules below
-        t_paths = {f["path"] for f in vt_files(table_dir, base)}
-
-        def _mk_manifest(carried_now, version):
-            out2 = dict(out)
-            out2["files"] = carried_now + files
-            out2["n_rows"] = _live_rows(carried_now + files)
-            return out2
-
-        txn._add_staged({
-            "table_dir": table_dir,
-            "validated_to": base,
-            "base_schema_json": json.dumps(
-                manifest.get("schema"), sort_keys=True
-            ),
-            "t_paths": t_paths,
-            "data_dir": data_dir,
-            "mk_manifest": _mk_manifest,
-            "added_hits": lambda fe: True,
-            "op_name": "vt_optimize",
-        })
-        return new_version
-    _commit(table_dir, new_version, out, cleanup_dir=data_dir)
-    return new_version
+    base_meta = _table_meta(manifest)
+    # a full rewrite READS everything, so its read set is every base
+    # file and ANY concurrently added file conflicts (its rows would
+    # vanish from the rewrite) — the strictest rules in the family;
+    # compact/cluster commit with the relaxed layout rules below. The
+    # commit is a full file list: it replaces the whole snapshot.
+    parent_files = vt_files(table_dir, base)
+    return _stage_or_commit(
+        txn, table_dir, base, base_meta,
+        {f["path"] for f in parent_files}, data_dir, parent_files,
+        lambda carried_now, version: _next_manifest(
+            base_meta, "OPTIMIZE", version, carried_now, files, None,
+            data_dir,
+        ),
+        lambda fe: True, "vt_optimize",
+    )
 
 
 def vt_cluster_incremental(
@@ -1796,7 +1842,6 @@ def vt_cluster_incremental(
     if not debt:
         return latest
     t_paths = {f["path"] for f in debt}
-    carried = [f for f in parent_files if f["path"] not in t_paths]
     schema = _manifest_schema(manifest, table_dir)
     df = _read_snapshot_entries(spark, debt, schema, mapping)
     if len(cols) > 1:
@@ -1824,44 +1869,17 @@ def vt_cluster_incremental(
         shutil.rmtree(data_dir, ignore_errors=True)
     for f in new_files:
         f["clustered"] = pcols
-
-    def _mk_manifest(carried_now, version):
-        out = {
-            "data_dir": data_dir,
-            "n_rows": _live_rows(carried_now + new_files),
-            "schema": schema.jsonValue(),
-            "operation": "CLUSTER",
-            **_incremental_or_full(
-                version, carried_now, new_files, sorted(t_paths)
-            ),
-        }
-        if mapping is not None:
-            out["column_mapping"] = mapping
-        if _table_constraints(manifest):
-            out["constraints"] = _table_constraints(manifest)
-        return out
-
-    if txn is not None:
-        txn._add_staged({
-            "table_dir": table_dir,
-            "validated_to": base,
-            "base_schema_json": json.dumps(
-                manifest.get("schema"), sort_keys=True
-            ),
-            "t_paths": t_paths,
-            "data_dir": data_dir,
-            "mk_manifest": _mk_manifest,
-            # layout never conflicts with content: only a commit that
-            # removed one of the debt files (the removed-read-file
-            # check) forces an abort — the r6 co-commit rules
-            "added_hits": lambda fe: False,
-            "op_name": "vt_cluster_incremental",
-        })
-        return new_version
-    return _commit_optimistic(
-        table_dir, base, json.dumps(manifest.get("schema"), sort_keys=True),
-        t_paths, data_dir, carried, new_version,
-        _mk_manifest, lambda fe: False, "vt_cluster_incremental",
+    base_meta = _table_meta(manifest)
+    # layout never conflicts with content: only a commit that removed
+    # one of the debt files (the removed-read-file check) or changed the
+    # table metadata forces a retry — the r6 co-commit rules
+    return _stage_or_commit(
+        txn, table_dir, base, base_meta, t_paths, data_dir, parent_files,
+        lambda carried_now, version: _next_manifest(
+            base_meta, "CLUSTER", version, carried_now, new_files, t_paths,
+            data_dir,
+        ),
+        lambda fe: False, "vt_cluster_incremental",
     )
 
 
@@ -1901,7 +1919,6 @@ def vt_compact(
         return latest  # no debt to sweep
     mapping = _col_mapping(manifest)
     t_paths = {f["path"] for f in small}
-    carried = [f for f in parent_files if f["path"] not in t_paths]
     schema = _manifest_schema(manifest, table_dir)
     n_small_rows = sum(f["n_rows"] for f in small)
     target = max(1, min_rows_per_file)
@@ -1919,44 +1936,17 @@ def vt_compact(
     )
     if not new_files:
         shutil.rmtree(data_dir, ignore_errors=True)
-
-    def _mk_manifest(carried_now, version):
-        out = {
-            "data_dir": data_dir,
-            "n_rows": _live_rows(carried_now + new_files),
-            "schema": schema.jsonValue(),
-            "operation": "COMPACT",
-            **_incremental_or_full(
-                version, carried_now, new_files, sorted(t_paths)
-            ),
-        }
-        if mapping is not None:
-            out["column_mapping"] = mapping
-        if _table_constraints(manifest):
-            out["constraints"] = _table_constraints(manifest)
-        return out
-
-    if txn is not None:
-        txn._add_staged({
-            "table_dir": table_dir,
-            "validated_to": base,
-            "base_schema_json": json.dumps(
-                manifest.get("schema"), sort_keys=True
-            ),
-            "t_paths": t_paths,
-            "data_dir": data_dir,
-            "mk_manifest": _mk_manifest,
-            # compaction reads only the small files: a concurrent
-            # commit ADDING files co-commits (always-false test), one
-            # removing a compacted file aborts (removed-read-file)
-            "added_hits": lambda fe: False,
-            "op_name": "vt_compact",
-        })
-        return new_version
-    return _commit_optimistic(
-        table_dir, base, json.dumps(manifest.get("schema"), sort_keys=True),
-        t_paths, data_dir, carried, new_version,
-        _mk_manifest, lambda fe: False, "vt_compact",
+    base_meta = _table_meta(manifest)
+    # compaction reads only the small files: a concurrent commit ADDING
+    # files co-commits (always-false test), one removing a compacted
+    # file aborts (removed-read-file)
+    return _stage_or_commit(
+        txn, table_dir, base, base_meta, t_paths, data_dir, parent_files,
+        lambda carried_now, version: _next_manifest(
+            base_meta, "COMPACT", version, carried_now, new_files, t_paths,
+            data_dir,
+        ),
+        lambda fe: False, "vt_compact",
     )
 
 
@@ -2467,24 +2457,16 @@ def vt_restore(spark: SparkSession, table_dir: str, version: int) -> int:
         )
     _manifest_schema(target, table_dir)  # a schema-less target raises
     new_version = latest + 1
-    out = {
-        "data_dir": target["data_dir"],
-        "n_rows": int(target["n_rows"]),
-        "operation": f"RESTORE({version})",
-        # a restore is a full snapshot by nature (its file set has no
-        # relation to the current latest): commit it as a checkpoint
-        "files": vt_files(table_dir, version),
-        "schema": target["schema"],
-    }
-    if target.get("column_mapping"):
-        out["column_mapping"] = target["column_mapping"]
-    if target.get("constraints"):
-        out["constraints"] = target["constraints"]
-    if target.get("external"):
-        out["external"] = True
-    # no cleanup_dir: this commit owns no new files — losing the race
-    # must not delete the target version's (shared) data
-    _commit(table_dir, new_version, out)
+    # a restore is a full snapshot by nature (its file set has no
+    # relation to the current latest): commit it as a checkpoint, with
+    # the TARGET's table metadata. No cleanup_dir: this commit owns no
+    # new files — losing the race must not delete the target version's
+    # (shared) data
+    _commit(table_dir, new_version, _next_manifest(
+        _table_meta(target), f"RESTORE({version})", new_version,
+        vt_files(table_dir, version), [], None, target["data_dir"],
+        external=True if target.get("external") else None,
+    ))
     return new_version
 
 
@@ -2747,20 +2729,10 @@ def vt_index_bloom(
     t_paths = {f["path"] for f in todo}
     carried = [f for f in files if f["path"] not in t_paths]
     new_version = latest + 1
-    out = {
-        "data_dir": manifest.get("data_dir"),
-        "n_rows": int(manifest["n_rows"]),
-        "schema": manifest.get("schema"),
-        "operation": "BLOOM",
-        **_incremental_or_full(
-            new_version, carried, updated, sorted(t_paths)
-        ),
-    }
-    if mapping is not None:
-        out["column_mapping"] = mapping
-    if _table_constraints(manifest):
-        out["constraints"] = _table_constraints(manifest)
-    _commit(table_dir, new_version, out)
+    _commit(table_dir, new_version, _next_manifest(
+        _table_meta(manifest), "BLOOM", new_version, carried, updated,
+        t_paths, manifest.get("data_dir"),
+    ))
     return new_version
 
 
@@ -2943,56 +2915,26 @@ def _predicate_rewrite(
         spark, parent_files, pfilters, _phys_struct(schema, mapping)
     )
     t_paths = {f["path"] for f in touched}
-    carried = [f for f in parent_files if f["path"] not in t_paths]
     snapshot = _read_snapshot_entries(spark, touched, schema, mapping)
     rewritten = rewrite_fn(snapshot, pred)
-    new_version = base + 1
     data_dir, new_files = _write_files_with_stats(
-        rewritten, table_dir, new_version, mapping
+        rewritten, table_dir, base + 1, mapping
     )
-    constraints = _table_constraints(manifest)
     if operation == "UPDATE":
         # an UPDATE can push rows outside a stored constraint; DELETE
         # only keeps rows the previous commit already validated
         _validate_written(
-            spark, new_files, schema, mapping, constraints, None,
-            data_dir, "vt_update",
+            spark, new_files, schema, mapping, _table_constraints(manifest),
+            None, data_dir, "vt_update",
         )
-
-    def _mk_manifest(carried_now, version):
-        out = {
-            "data_dir": data_dir,
-            "n_rows": _live_rows(carried_now + new_files),
-            "schema": schema.jsonValue(),
-            "operation": operation,
-            **_incremental_or_full(
-                version, carried_now, new_files, sorted(t_paths)
-            ),
-        }
-        if mapping is not None:
-            out["column_mapping"] = mapping
-        if constraints:
-            out["constraints"] = constraints
-        return out
-
-    if txn is not None:
-        txn._add_staged({
-            "table_dir": table_dir,
-            "validated_to": base,
-            "base_schema_json": json.dumps(
-                manifest.get("schema"), sort_keys=True
-            ),
-            "t_paths": t_paths,
-            "data_dir": data_dir,
-            "mk_manifest": _mk_manifest,
-            "added_hits": lambda fe: _filter_may_match(fe, pfilters),
-            "op_name": f"vt_{operation.lower()}",
-        })
-        return new_version
-    return _commit_optimistic(
-        table_dir, base, json.dumps(manifest.get("schema"), sort_keys=True),
-        t_paths, data_dir, carried, new_version,
-        _mk_manifest, lambda fe: _filter_may_match(fe, pfilters),
+    base_meta = _table_meta(manifest)
+    return _stage_or_commit(
+        txn, table_dir, base, base_meta, t_paths, data_dir, parent_files,
+        lambda carried_now, version: _next_manifest(
+            base_meta, operation, version, carried_now, new_files, t_paths,
+            data_dir,
+        ),
+        lambda fe: _filter_may_match(fe, pfilters),
         f"vt_{operation.lower()}",
     )
 
@@ -3044,12 +2986,13 @@ def vt_delete_dv(
     ``vt_scan`` (``_prune_files`` — including "in" id lists, the GDPR
     shape). Positions already in a file's DV are excluded, so
     re-deleting is a no-op — which also makes the commit-race story
-    simple: on losing a version race the whole operation safely RE-RUNS
-    against the new latest (bounded spins), because re-finding the rows
-    excludes everything an earlier attempt already recorded and a
-    concurrent writer that rewrote a candidate file materialized or
-    carried its DV either way. Returns the new version, or the current
-    latest when nothing matched.
+    simple: a lost race against a disjoint writer co-commits like a
+    merge (``_commit_optimistic``), and on a conflict the whole
+    operation safely RE-RUNS against the new latest (bounded spins),
+    because re-finding the rows excludes everything an earlier attempt
+    already recorded and a concurrent writer that rewrote a candidate
+    file materialized or carried its DV either way. Returns the new
+    version, or the current latest when nothing matched.
 
     ``txn``: stage instead of committing — the CHEAP half of the
     atomic cross-table GDPR purge (the sidecar is written now, the
@@ -3084,9 +3027,9 @@ def _delete_dv_once(
     pred = _filters_to_column(filters)
     schema = _manifest_schema(manifest, table_dir)
     mapping = _col_mapping(manifest)
+    pfilters = _phys_filters(filters, mapping)
     cand = _prune_files(
-        spark, parent_files, _phys_filters(filters, mapping),
-        _phys_struct(schema, mapping),
+        spark, parent_files, pfilters, _phys_struct(schema, mapping),
     )
     if not cand:
         return latest
@@ -3127,52 +3070,18 @@ def _delete_dv_once(
         e["n_dv"] = int(e.get("n_dv", 0)) + counts[f["path"]]
         updated.append(e)
     t_paths = {e["path"] for e in updated}
-    carried = [f for f in parent_files if f["path"] not in t_paths]
-    new_version = latest + 1
-
-    def _mk_manifest(carried_now, version):
-        out = {
-            "data_dir": manifest.get("data_dir"),
-            "n_rows": _live_rows(carried_now + updated),
-            "schema": manifest.get("schema"),
-            "operation": "DELETE_DV",
-            **_incremental_or_full(
-                version, carried_now, updated, sorted(t_paths)
-            ),
-        }
-        if mapping is not None:
-            out["column_mapping"] = mapping
-        if _table_constraints(manifest):
-            out["constraints"] = _table_constraints(manifest)
-        return out
-
-    if txn is not None:
-        pfilters = _phys_filters(filters, mapping)
-        txn._add_staged({
-            "table_dir": table_dir,
-            "validated_to": latest,
-            "base_schema_json": json.dumps(
-                manifest.get("schema"), sort_keys=True
-            ),
-            "t_paths": t_paths,
-            # the sidecar is this staging's only on-disk artifact: an
-            # abort removes it via the shared data_dir cleanup
-            "data_dir": sidecar,
-            "mk_manifest": _mk_manifest,
-            "added_hits": lambda fe: _filter_may_match(fe, pfilters),
-            "op_name": "vt_delete_dv",
-        })
-        return new_version
-    try:
-        _commit(table_dir, new_version,
-                _mk_manifest(carried, new_version))
-    except VersionConflictError:
-        # the sidecar was written before the commit; on a lost race the
-        # retry re-finds the rows and writes a fresh one — remove this
-        # attempt's orphan instead of leaving it for a later vacuum
-        shutil.rmtree(sidecar, ignore_errors=True)
-        raise
-    return new_version
+    base_meta = _table_meta(manifest)
+    # the sidecar is this operation's only on-disk artifact: a conflict
+    # or an aborted transaction removes it as the staged data_dir (a
+    # retry re-finds the rows and writes a fresh one)
+    return _stage_or_commit(
+        txn, table_dir, latest, base_meta, t_paths, sidecar, parent_files,
+        lambda carried_now, version: _next_manifest(
+            base_meta, "DELETE_DV", version, carried_now, updated, t_paths,
+            manifest.get("data_dir"),
+        ),
+        lambda fe: _filter_may_match(fe, pfilters), "vt_delete_dv",
+    )
 
 
 def vt_update(
@@ -3307,22 +3216,16 @@ def vt_widen_column(table_dir: str, col: str, new_type: str) -> int:
             *(widened.get(pcol) or [cur])[:1], tgt,
         ]  # remember the ORIGINAL narrow type and the latest wide one
         new_version = latest + 1
-        out = {
-            "data_dir": manifest.get("data_dir"),
-            "n_rows": int(manifest["n_rows"]),
+        meta = {
+            **_table_meta(manifest),
             "schema": new_schema.jsonValue(),
-            "operation": "WIDEN_COLUMN",
             "type_widening": widened,
-            **_incremental_or_full(
-                new_version, carried, updated, sorted(t_paths)
-            ),
         }
-        if mapping is not None:
-            out["column_mapping"] = mapping
-        if _table_constraints(manifest):
-            out["constraints"] = _table_constraints(manifest)
         try:
-            _commit(table_dir, new_version, out)
+            _commit(table_dir, new_version, _next_manifest(
+                meta, "WIDEN_COLUMN", new_version, carried, updated,
+                t_paths, manifest.get("data_dir"),
+            ))
             return new_version
         except VersionConflictError:
             continue  # re-derive against the new latest
@@ -3335,56 +3238,46 @@ def vt_widen_column(table_dir: str, col: str, new_type: str) -> int:
 def _schema_change_commit(
     table_dir: str, op_name: str, change_fn
 ) -> int:
-    """Shared shape of metadata-only schema DDL (RENAME/DROP COLUMN):
-    derive the new (logical schema, mapping) from the CURRENT latest via
-    ``change_fn(schema, mapping) -> (new_schema, new_mapping)`` and
-    commit a version that carries the SAME files — ``add``/``remove``
-    both empty, so the commit payload is a few hundred bytes whatever
-    the table size. Losing a commit race re-derives from the new latest
-    and retries (the DDL depends only on names, never on data), bounded
-    by ``_COMMIT_MAX_SPINS``."""
+    """Shared shape of metadata-only DDL (ADD/RENAME/DROP COLUMN,
+    ADD/DROP CONSTRAINT): derive the new table metadata from the
+    CURRENT latest's via ``change_fn(meta, latest) -> new_meta``
+    (``_table_meta`` dicts; ``latest`` is the version the commit lands
+    on, for a change that must check its data) and commit a version
+    that carries the SAME files — ``add``/``remove`` both empty, so the
+    commit payload is a few hundred bytes whatever the table size.
+    Losing a commit race re-derives from the new latest and retries,
+    bounded by ``_COMMIT_MAX_SPINS``."""
     for _spin in range(_COMMIT_MAX_SPINS):
         latest = vt_latest_version(table_dir)
         if latest < 0:
             raise FileNotFoundError(f"table {table_dir} does not exist")
         manifest = _read_manifest(table_dir, latest)
         _check_protocol(manifest, table_dir, write=True)
-        schema = _manifest_schema(manifest, table_dir)
-        parent_files = vt_files(table_dir, latest)
-        constraints = _table_constraints(manifest)
-        new_schema, new_mapping = change_fn(schema, _col_mapping(manifest))
-        if constraints:
-            # Delta's guard: a constraint referencing a renamed/dropped
-            # column would silently dangle — refuse until it is dropped.
-            # Word-level match is conservative (may over-refuse, never
-            # under-).
-            import re as _re
-
-            gone = {f.name for f in schema.fields} - {
-                f.name for f in new_schema.fields
-            }
-            for col in gone:
-                for cname, sql in constraints.items():
-                    if _re.search(rf"\b{_re.escape(col)}\b", sql):
-                        raise ValueError(
-                            f"{op_name}: column {col!r} is referenced "
-                            f"by constraint {cname!r} ({sql}); drop the "
-                            "constraint first"
-                        )
-        new_version = latest + 1
-        out = {
-            "data_dir": manifest.get("data_dir"),
-            "n_rows": int(manifest["n_rows"]),
-            "schema": new_schema.jsonValue(),
-            "operation": op_name,
-            **_incremental_or_full(new_version, parent_files, [], []),
+        _manifest_schema(manifest, table_dir)  # a schema-less tip raises
+        meta = _table_meta(manifest)
+        new_meta = change_fn(meta, latest)
+        # Delta's guard: a constraint referencing a renamed/dropped
+        # column would silently dangle — refuse until it is dropped.
+        # Word-level match is conservative (may over-refuse, never
+        # under-).
+        gone = {f["name"] for f in meta["schema"]["fields"]} - {
+            f["name"] for f in new_meta["schema"]["fields"]
         }
-        if new_mapping is not None:
-            out["column_mapping"] = new_mapping
-        if constraints:
-            out["constraints"] = constraints
+        for col in sorted(gone):
+            for cname, sql in (new_meta.get("constraints") or {}).items():
+                if re.search(rf"\b{re.escape(col)}\b", sql):
+                    raise ValueError(
+                        f"{op_name}: column {col!r} is referenced "
+                        f"by constraint {cname!r} ({sql}); drop the "
+                        "constraint first"
+                    )
+        new_version = latest + 1
         try:
-            _commit(table_dir, new_version, out)
+            _commit(table_dir, new_version, _next_manifest(
+                new_meta, op_name, new_version,
+                vt_files(table_dir, latest), [], [],
+                manifest.get("data_dir"),
+            ))
             return new_version
         except VersionConflictError:
             continue  # re-derive against the new latest
@@ -3406,7 +3299,9 @@ def vt_rename_column(table_dir: str, old: str, new: str) -> int:
     use — readers without the feature refuse loudly (_check_protocol)
     instead of surfacing physical names."""
 
-    def change(schema: StructType, mapping: dict | None):
+    def change(meta: dict, _version: int) -> dict:
+        schema = StructType.fromJson(meta["schema"])
+        mapping = _col_mapping(meta)
         if old not in schema.names:
             raise ValueError(
                 f"vt_rename_column: no column {old!r} in "
@@ -3429,7 +3324,8 @@ def vt_rename_column(table_dir: str, old: str, new: str) -> int:
             f.name: f.name for f in schema.fields
         }
         new_mapping[new] = new_mapping.pop(old)
-        return new_schema, new_mapping
+        return {**meta, "schema": new_schema.jsonValue(),
+                "column_mapping": new_mapping}
 
     return _schema_change_commit(table_dir, "RENAME_COLUMN", change)
 
@@ -3444,7 +3340,9 @@ def vt_drop_column(table_dir: str, col: str) -> int:
     merge_schema), so the old data can never resurrect. Old versions
     still show the column (their manifests keep their own schema)."""
 
-    def change(schema: StructType, mapping: dict | None):
+    def change(meta: dict, _version: int) -> dict:
+        schema = StructType.fromJson(meta["schema"])
+        mapping = _col_mapping(meta)
         if col not in schema.names:
             raise ValueError(
                 f"vt_drop_column: no column {col!r} in {schema.names}"
@@ -3460,7 +3358,8 @@ def vt_drop_column(table_dir: str, col: str) -> int:
             f.name: f.name for f in schema.fields
         }
         new_mapping = {l: p for l, p in mapping.items() if l != col}
-        return new_schema, new_mapping
+        return {**meta, "schema": new_schema.jsonValue(),
+                "column_mapping": new_mapping}
 
     return _schema_change_commit(table_dir, "DROP_COLUMN", change)
 
@@ -3478,7 +3377,9 @@ def vt_add_column(table_dir: str, col: str, dtype: str) -> int:
     "array<string>", ...)."""
     from pyspark.sql.types import StructField, _parse_datatype_string
 
-    def change(schema: StructType, mapping: dict | None):
+    def change(meta: dict, _version: int) -> dict:
+        schema = StructType.fromJson(meta["schema"])
+        mapping = _col_mapping(meta)
         if col in schema.names:
             raise ValueError(
                 f"vt_add_column: column {col!r} already exists"
@@ -3489,7 +3390,8 @@ def vt_add_column(table_dir: str, col: str, dtype: str) -> int:
         if mapping is not None:
             new_mapping = dict(mapping)
             new_mapping[col] = f"col_{uuid.uuid4().hex[:8]}"
-        return new_schema, new_mapping
+        return {**meta, "schema": new_schema.jsonValue(),
+                "column_mapping": new_mapping}
 
     return _schema_change_commit(table_dir, "ADD_COLUMN", change)
 
@@ -3532,91 +3434,47 @@ def _validate_written(spark: SparkSession, files: list[dict],
 def vt_add_constraint(spark: SparkSession, table_dir: str, name: str,
                       check: str) -> int:
     """ALTER TABLE ... ADD CONSTRAINT <name> CHECK (<sql>) — validates
-    the constraint against EVERY EXISTING row first (the Delta
-    contract: a committed constraint means the whole table satisfies
-    it), then commits metadata-only. Enforcement from then on is
-    write-time: every merge/UPDATE validates its written rows, so
-    steady-state cost is O(rows written), never O(table)."""
-    latest = vt_latest_version(table_dir)
-    if latest < 0:
-        raise FileNotFoundError(f"table {table_dir} does not exist")
-    manifest = _read_manifest(table_dir, latest)
-    _check_protocol(manifest, table_dir, write=True)
-    n_bad = vt_read(spark, table_dir).filter(f"NOT ({check})").count()
-    if n_bad:
-        raise ValueError(
-            f"vt_add_constraint: existing data violates ({check}) in "
-            f"{n_bad} row(s); constraint not added"
-        )
+    the constraint against EVERY row of the version it commits on (the
+    Delta contract: a committed constraint means the whole table
+    satisfies it; a writer landing first forces a re-validation), then
+    commits metadata-only. Enforcement from then on is write-time:
+    every merge/UPDATE validates its written rows, so steady-state cost
+    is O(rows written), never O(table); a writer that planned before
+    this commit conflicts with it and rebases."""
 
-    for _spin in range(_COMMIT_MAX_SPINS):
-        latest = vt_latest_version(table_dir)
-        m = _read_manifest(table_dir, latest)
-        _check_protocol(m, table_dir, write=True)
-        cons = _table_constraints(m)
+    def change(meta: dict, version: int) -> dict:
+        cons = _table_constraints(meta)
         if name in cons:
             raise ValueError(
                 f"vt_add_constraint: constraint {name!r} already exists"
             )
-        cons[name] = check
-        parent_files = vt_files(table_dir, latest)
-        out = {
-            "data_dir": m.get("data_dir"),
-            "n_rows": int(m["n_rows"]),
-            "schema": m.get("schema"),
-            "constraints": cons,
-            "operation": "ADD_CONSTRAINT",
-            **_incremental_or_full(latest + 1, parent_files, [], []),
-        }
-        if m.get("column_mapping"):
-            out["column_mapping"] = m["column_mapping"]
-        try:
-            _commit(table_dir, latest + 1, out)
-            return latest + 1
-        except VersionConflictError:
-            continue
-    raise VersionConflictError(
-        f"vt_add_constraint on {table_dir}: starved by "
-        f"{_COMMIT_MAX_SPINS} consecutive commit races"
-    )
+        n_bad = vt_read(spark, table_dir, version).filter(
+            f"NOT ({check})"
+        ).count()
+        if n_bad:
+            raise ValueError(
+                f"vt_add_constraint: existing data violates ({check}) in "
+                f"{n_bad} row(s); constraint not added"
+            )
+        return {**meta, "constraints": {**cons, name: check}}
+
+    return _schema_change_commit(table_dir, "ADD_CONSTRAINT", change)
 
 
 def vt_drop_constraint(table_dir: str, name: str) -> int:
     """ALTER TABLE ... DROP CONSTRAINT — metadata-only."""
-    for _spin in range(_COMMIT_MAX_SPINS):
-        latest = vt_latest_version(table_dir)
-        if latest < 0:
-            raise FileNotFoundError(f"table {table_dir} does not exist")
-        m = _read_manifest(table_dir, latest)
-        _check_protocol(m, table_dir, write=True)
-        cons = _table_constraints(m)
+
+    def change(meta: dict, _version: int) -> dict:
+        cons = _table_constraints(meta)
         if name not in cons:
             raise ValueError(
                 f"vt_drop_constraint: no constraint {name!r} "
                 f"(have {sorted(cons)})"
             )
         cons.pop(name)
-        parent_files = vt_files(table_dir, latest)
-        out = {
-            "data_dir": m.get("data_dir"),
-            "n_rows": int(m["n_rows"]),
-            "schema": m.get("schema"),
-            "operation": "DROP_CONSTRAINT",
-            **_incremental_or_full(latest + 1, parent_files, [], []),
-        }
-        if cons:
-            out["constraints"] = cons
-        if m.get("column_mapping"):
-            out["column_mapping"] = m["column_mapping"]
-        try:
-            _commit(table_dir, latest + 1, out)
-            return latest + 1
-        except VersionConflictError:
-            continue
-    raise VersionConflictError(
-        f"vt_drop_constraint on {table_dir}: starved by "
-        f"{_COMMIT_MAX_SPINS} consecutive commit races"
-    )
+        return {**meta, "constraints": cons}
+
+    return _schema_change_commit(table_dir, "DROP_CONSTRAINT", change)
 
 
 def vt_first_version_at_or_after(table_dir: str, ts) -> int:

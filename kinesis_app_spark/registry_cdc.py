@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from kinesis_app_spark.scratch import scratch_dir
 from kinesis_app_spark.operators.cdc import apply_changes
 from kinesis_app_spark.registry_util import QuerySpec, table as _t
+from kinesis_app_spark.streaming.runner import drain
 
 
 def cdc_merge_orders(spark, sf_dir):
@@ -237,12 +238,12 @@ def streaming_cdc_apply(spark, sf_dir):
     stream = file_stream(
         spark, src, batch1.schema, max_files_per_trigger=1
     )
-    (
+    drain(
         stream.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .start(),
+        "cdc foreachBatch merge stream",
     )
     final = spark.read.schema(target_schema).parquet(state["cur"])
     return (

@@ -18,6 +18,7 @@ from kinesis_app_spark.scratch import scratch_dir
 from kinesis_app_spark.pinning import pin
 
 from kinesis_app_spark.registry_util import QuerySpec, table as _t
+from kinesis_app_spark.streaming.runner import drain
 
 # =====================================================================
 # cache discipline for disk-persisted builds
@@ -862,12 +863,12 @@ def streaming_dedup_index_ingest(spark, sf_dir):
 
     ckpt = scratch_dir("dedup_stream_ckpt_")
     stream = file_stream(spark, src, b1.schema, max_files_per_trigger=1)
-    (
+    drain(
         stream.writeStream.foreachBatch(ingest)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .start(),
+        "dedup index ingest stream",
     )
     return (
         spark.read.parquet(out_dir)
@@ -1011,7 +1012,7 @@ def streaming_versioned_merge(spark, sf_dir):
     VT.vt_create(o, table)
     ckpt = scratch_dir("vtm_stream_ckpt_")
     stream = file_stream(spark, src, batch1.schema, max_files_per_trigger=1)
-    (
+    drain(
         stream.writeStream.foreachBatch(
             VT.vt_foreach_batch_merger(
                 spark, table, keys=["o_orderkey"], seq_col="seq"
@@ -1019,8 +1020,8 @@ def streaming_versioned_merge(spark, sf_dir):
         )
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .start(),
+        "versioned merge stream",
     )
     final = VT.vt_read(spark, table)
     return (

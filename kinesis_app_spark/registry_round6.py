@@ -22,12 +22,9 @@ from pyspark.sql import functions as F
 from kinesis_app_spark.scratch import scratch_dir
 from kinesis_app_spark.registry_round4 import _fresh_marker, _table_sig
 from kinesis_app_spark.registry_util import QuerySpec, table as _t
+from kinesis_app_spark.streaming.runner import drain
 
 _VT6_ROOT = "/tmp/kinesis_versioned"
-
-
-def _timeout(what: str):
-    raise TimeoutError(f"{what} did not finish in 300 s")
 
 
 def vt_cdf_rollup_applier(spark, downstream_dir: str, group_col: str,
@@ -323,21 +320,17 @@ def versioned_cdf_readstream_agg(spark, sf_dir):
             VT.vt_merge(spark, down, ops, keys=["o_orderstatus"],
                         batch_id=batch_id)
 
-        q = (
+        # a timed-out drain raises before the marker: no stale cache
+        drain(
             spark.readStream.format("vt_cdf")
             .option("path", up).option("keys", "o_orderkey")
             .load()
             .writeStream.foreachBatch(apply_batch)
             .option("checkpointLocation", os.path.join(down, "_ckpt"))
             .trigger(availableNow=True)
-            .start()
+            .start(),
+            "versioned_cdf_readstream_agg drain",
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "versioned_cdf_readstream_agg: drain did not finish in "
-                "300 s; marker not written (no stale cache)"
-            )
         with open(marker, "w") as fh:
             fh.write(sig)
     return (
@@ -1043,14 +1036,6 @@ def pipeline_kinesis_lakehouse_rollup(spark, sf_dir):
     ckpt1 = os.path.join(run, "ck1")
     ckpt2 = os.path.join(run, "ck2")
 
-    def _drain(q, what: str) -> None:
-        # a timed-out drain must not leak a live streaming query or the
-        # pkl_* temp state (round-6 ADVICE): stop the query, then sweep
-        if not q.awaitTermination(300):
-            q.stop()
-            shutil.rmtree(run, ignore_errors=True)
-            _timeout(what)
-
     VT.vt_create(
         spark.createDataFrame([], "shard int, seq long, usr int"), up
     )
@@ -1075,7 +1060,7 @@ def pipeline_kinesis_lakehouse_rollup(spark, sf_dir):
                 F.lit("U").alias("op"),
             )
         )
-        _drain(
+        drain(
             parsed.writeStream.foreachBatch(merger)
             .option("checkpointLocation", ckpt1)
             .trigger(availableNow=True)
@@ -1083,34 +1068,36 @@ def pipeline_kinesis_lakehouse_rollup(spark, sf_dir):
             "pipeline ingest wave",
         )
 
-    ingest_wave(150)   # upstream v1: seqs 0..149 per shard
-    ingest_wave(250)   # upstream v2: the stream GREW; resume delivers
-    #                    only 150..249 from the shared checkpoint
-    _drain(
-        spark.readStream.format("vt_cdf")
-        .option("path", up).option("keys", "shard,seq")
-        .load()
-        .writeStream.foreachBatch(
-            vt_cdf_rollup_applier(spark, _mk_rollup(spark, down), "usr",
-                                  "seq")
+    # a failed or timed-out drain must not leak the pkl_* temp state
+    try:
+        ingest_wave(150)   # upstream v1: seqs 0..149 per shard
+        ingest_wave(250)   # upstream v2: the stream GREW; resume
+        #                    delivers only 150..249 from the checkpoint
+        drain(
+            spark.readStream.format("vt_cdf")
+            .option("path", up).option("keys", "shard,seq")
+            .load()
+            .writeStream.foreachBatch(
+                vt_cdf_rollup_applier(spark, _mk_rollup(spark, down),
+                                      "usr", "seq")
+            )
+            .option("checkpointLocation", ckpt2)
+            .trigger(availableNow=True)
+            .start(),
+            "pipeline CDF drain",
         )
-        .option("checkpointLocation", ckpt2)
-        .trigger(availableNow=True)
-        .start(),
-        "pipeline CDF drain",
-    )
-    out = (
-        VT.vt_read(spark, down)
-        .select(
-            "usr",
-            F.col("n_orders").cast("long").alias("n_events"),
-            F.col("price_sum").cast("long").alias("seq_sum"),
+        return (
+            VT.vt_read(spark, down)
+            .select(
+                "usr",
+                F.col("n_orders").cast("long").alias("n_events"),
+                F.col("price_sum").cast("long").alias("seq_sum"),
+            )
+            .orderBy("usr")
+            .localCheckpoint(eager=True)  # materialize before teardown
         )
-        .orderBy("usr")
-        .localCheckpoint(eager=True)  # materialize before the teardown
-    )
-    shutil.rmtree(run, ignore_errors=True)
-    return out
+    finally:
+        shutil.rmtree(run, ignore_errors=True)
 
 
 def _mk_rollup(spark, down: str) -> str:

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from kinesis_app_spark.scratch import scratch_dir
 from kinesis_app_spark.registry_round4 import _fresh_marker, _table_sig
 from kinesis_app_spark.registry_util import QuerySpec, table as _t
+from kinesis_app_spark.streaming.runner import drain
 
 _VT7_ROOT = "/tmp/kinesis_versioned7"
 
@@ -561,11 +562,7 @@ def pipeline_txn_fact_rollup(spark, sf_dir):
             .start()
         )
         try:
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "txn fact/rollup pipeline did not drain in 300 s"
-                )
+            drain(q, "txn fact/rollup pipeline")
         finally:
             shutil.rmtree(run, ignore_errors=True)
         n0 = o.count()
@@ -788,11 +785,7 @@ def versioned_two_stream_join_view(spark, sf_dir):
                     .trigger(availableNow=True)
                     .start()
                 )
-                if not q.awaitTermination(300):
-                    q.stop()
-                    raise TimeoutError(
-                        "two-stream join view: drain did not finish"
-                    )
+                drain(q, "two-stream join view")
 
         # wave 1: A0, B0, A1 — then both streams drain
         VT.vt_create(o.filter(F.col("o_orderkey") % 4 != 0), a_dir)
@@ -956,17 +949,15 @@ def versioned_table_stream_tail(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
+    try:
+        drain(q, "vt_table stream tail")
+        return (
+            spark.read.parquet(out_dir)
+            .orderBy("o_orderkey")
+            .localCheckpoint(eager=True)
+        )
+    finally:
         shutil.rmtree(run, ignore_errors=True)
-        raise TimeoutError("vt_table stream tail did not finish in 300 s")
-    res = (
-        spark.read.parquet(out_dir)
-        .orderBy("o_orderkey")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(run, ignore_errors=True)
-    return res
 
 
 VERSIONED_STREAM_TAIL_SQL = """

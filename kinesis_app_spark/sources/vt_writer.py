@@ -73,16 +73,22 @@ because an append is pure file+metadata work:
   sink-written files identically), and commits an incremental APPEND
   manifest carrying ``batch_id=batchId`` — a REPLAYED epoch finds
   itself in the ledger and skips: exactly-once at append granularity.
-  Appends read no existing file, so a commit race needs no conflict
-  analysis: the loser re-derives the carried set and re-commits
-  (bounded spins, like ``_commit_optimistic`` with an always-disjoint
-  writer).
+  The epoch commits under the table metadata (schema, column mapping,
+  constraints, type widening) read at plan time, and every attempt
+  first compares it with the tip's: a change raises
+  ``VersionConflictError`` (a rename or ADD CONSTRAINT mid-stream stops
+  the query instead of slipping files under stale names or unchecked
+  rows past it). Appends read no existing file, so any other lost race
+  is disjoint: the loser re-checks the epoch ledger, re-derives the
+  carried set and re-commits (bounded spins).
 - ``abort`` removes the epoch's staged files; task attempts that died
   before messaging leave orphans under ``_stage/`` — never referenced
   by any manifest, removed with the directory.
 
-The table is created on first use from the stream's schema — also
-sessionless (an empty-file-set CREATE manifest).
+The table is created at plan time from the stream's schema when it
+does not exist yet (an empty-file-set CREATE manifest), and the
+metadata snapshot is taken after that, so a sink-created table is
+guarded like any other.
 
 Reference parity: the reference's Processor write path (records → user
 processor → durable state, /root/reference/src/Kinesis/
@@ -128,38 +134,6 @@ def _conn(options, schema: StructType) -> dict:
     if not path:
         raise ValueError("vt_table: option 'path' (the table dir) is "
                          "required")
-    # column mapping snapshot (plan time, driver side): the stream's
-    # schema speaks LOGICAL names; a mapped table's files carry stable
-    # PHYSICAL names, so the staging tasks must translate. The commit
-    # phase re-verifies the mapping is unchanged (a rename racing a
-    # running stream aborts the epoch loudly instead of writing files
-    # under stale names).
-    mapping = None
-    latest = VT.vt_latest_version(path)
-    if latest >= 0:
-        m = VT._read_manifest(path, latest)
-        VT._check_protocol(m, path, write=True)
-        if VT._table_constraints(m):
-            # the sink's commit phase is SESSIONLESS (no SparkSession to
-            # evaluate SQL CHECK predicates) — writing unvalidated rows
-            # into a constrained table would break the constraint's
-            # whole-table guarantee, so refuse loudly
-            raise ValueError(
-                "vt_table sink cannot enforce this table's CHECK "
-                f"constraints {sorted(VT._table_constraints(m))} "
-                "(sessionless commit phase); append via "
-                "vt_foreach_batch_merger / vt_merge instead"
-            )
-        mapping = VT._col_mapping(m)
-        if mapping is not None:
-            missing = [f.name for f in schema.fields
-                       if f.name not in mapping]
-            if missing:
-                raise ValueError(
-                    f"vt_table: stream columns {missing} are not in the "
-                    "mapped table's schema; evolve the table first "
-                    "(vt_merge merge_schema)"
-                )
     cluster_by = [
         c.strip() for c in (options.get("clusterby") or "").split(",")
         if c.strip()
@@ -170,34 +144,55 @@ def _conn(options, schema: StructType) -> dict:
             f"vt_table clusterBy columns {bad} are not in the stream "
             f"schema {schema.names}"
         )
+    schema_json = json.dumps(schema.jsonValue())
+    if VT.vt_latest_version(path) < 0:
+        # create on first use from the stream's schema — an empty-file-
+        # set CREATE manifest; a concurrent creator winning is fine
+        try:
+            VT._commit(path, 0, VT._next_manifest(
+                {"schema": json.loads(schema_json)}, "CREATE", 0,
+                [], [], [], None,
+            ))
+        except VT.VersionConflictError:
+            pass
+    latest = VT.vt_latest_version(path)
+    # table metadata snapshot (plan time, driver side): every epoch
+    # commits under it and first checks the tip still carries it (a
+    # rename or a new constraint racing a running stream aborts the
+    # epoch loudly instead of writing files under stale names or
+    # unchecked rows). The stream's schema speaks LOGICAL names; a
+    # mapped table's files carry stable PHYSICAL names, so the staging
+    # tasks translate through the mapping.
+    m = VT._read_manifest(path, latest)
+    VT._check_protocol(m, path, write=True)
+    if VT._table_constraints(m):
+        # the sink's commit phase is SESSIONLESS (no SparkSession to
+        # evaluate SQL CHECK predicates) — writing unvalidated rows
+        # into a constrained table would break the constraint's
+        # whole-table guarantee, so refuse loudly
+        raise ValueError(
+            "vt_table sink cannot enforce this table's CHECK "
+            f"constraints {sorted(VT._table_constraints(m))} "
+            "(sessionless commit phase); append via "
+            "vt_foreach_batch_merger / vt_merge instead"
+        )
+    # an append keeps the table's schema: a stream column the table
+    # lacks would be written but never read
+    names = VT._manifest_schema(m, path).names
+    missing = [f.name for f in schema.fields if f.name not in names]
+    if missing:
+        raise ValueError(
+            f"vt_table: stream columns {missing} are not in the "
+            "table's schema; evolve the table first (vt_add_column "
+            "or vt_merge merge_schema)"
+        )
     return {
         "path": path,
-        "schema_json": json.dumps(schema.jsonValue()),
-        "mapping": mapping,
+        "schema_json": schema_json,
+        "mapping": VT._col_mapping(m),
+        "meta": VT._table_meta(m),
         "cluster_by": cluster_by,
     }
-
-
-def _ensure_table(conn: dict) -> None:
-    """Create the table on first use — SESSIONLESS: an empty-file-set
-    CREATE manifest written directly (the writer phases have no
-    SparkSession). A concurrent creator winning the race is fine."""
-    if VT.vt_latest_version(conn["path"]) >= 0:
-        return
-    schema_json = json.loads(conn["schema_json"])
-    try:
-        VT._commit(
-            conn["path"], 0,
-            {
-                "data_dir": None,
-                "files": [],
-                "n_rows": 0,
-                "schema": schema_json,
-                "operation": "CREATE",
-            },
-        )
-    except VT.VersionConflictError:
-        pass  # someone else created it — equally good
 
 
 def _stage_rows(conn: dict, iterator) -> VtStageMsg:
@@ -270,8 +265,9 @@ def _pa_file_stats(path: str, schema: StructType) -> dict:
 def _append_staged(conn: dict, messages, batch_id: int | None) -> None:
     """Driver-phase second half (sessionless): promote staged files
     into data/, stat them, and commit an incremental APPEND manifest —
-    ledger-skipped on epoch replay, spin-retried on commit races
-    (appends read nothing, so any race is disjoint by construction)."""
+    ledger-skipped on epoch replay, refused when the table metadata
+    changed since plan time, spin-retried on any other commit race
+    (appends read nothing, so those are disjoint)."""
     table_dir = conn["path"]
     staged = [m.path for m in messages if m is not None and m.path]
     try:
@@ -286,14 +282,6 @@ def _append_staged(conn: dict, messages, batch_id: int | None) -> None:
             conn.get("mapping"),
         )
         latest = VT.vt_latest_version(table_dir)
-        latest_m = VT._read_manifest(table_dir, latest)
-        VT._check_protocol(latest_m, table_dir, write=True)
-        if VT._col_mapping(latest_m) != conn.get("mapping"):
-            raise VT.VersionConflictError(
-                "vt_table: the table's column mapping changed while "
-                "this write was staged (concurrent RENAME/DROP); "
-                "restart the write against the new schema"
-            )
         new_version = latest + 1
         token = uuid.uuid4().hex[:8]
         data_dir = os.path.join(
@@ -308,28 +296,25 @@ def _append_staged(conn: dict, messages, batch_id: int | None) -> None:
         staged = []  # promoted: the finally-cleanup has nothing to do
         new_files.sort(key=lambda f: f["path"])
         _stamp_clustered_run(new_files, conn)
+        # the epoch commits under the metadata its files were staged
+        # against: the plan-time snapshot, the same for every epoch
+        base_meta = conn["meta"]
         for _spin in range(_APPEND_MAX_SPINS):
-            carried = VT.vt_files(table_dir, latest)
-            manifest = {
-                "data_dir": data_dir,
-                "n_rows": VT._live_rows(carried + new_files),
-                # a mapped table keeps ITS logical schema + mapping (the
-                # stream's columns were verified a subset at plan time);
-                # an unmapped table records the stream's schema as before
-                "schema": (
-                    latest_m.get("schema")
-                    if conn.get("mapping") is not None
-                    else json.loads(conn["schema_json"])
-                ),
-                "operation": "APPEND",
-                **VT._incremental_or_full(
-                    new_version, carried, new_files, []
-                ),
-            }
-            if conn.get("mapping") is not None:
-                manifest["column_mapping"] = conn["mapping"]
-            if batch_id is not None:
-                manifest["batch_id"] = int(batch_id)
+            latest_m = VT._read_manifest(table_dir, latest)
+            VT._check_protocol(latest_m, table_dir, write=True)
+            if VT._table_meta(latest_m) != base_meta:
+                shutil.rmtree(data_dir, ignore_errors=True)
+                raise VT.VersionConflictError(
+                    "vt_table: the table's metadata (schema, column "
+                    "mapping, constraints or type widening) changed "
+                    "while this write was staged; restart the write "
+                    "against the new table"
+                )
+            manifest = VT._next_manifest(
+                base_meta, "APPEND", new_version,
+                VT.vt_files(table_dir, latest), new_files, [], data_dir,
+                batch_id=None if batch_id is None else int(batch_id),
+            )
             try:
                 VT._commit(table_dir, new_version, manifest)
                 return
@@ -348,6 +333,7 @@ def _append_staged(conn: dict, messages, batch_id: int | None) -> None:
                     return
                 latest = VT.vt_latest_version(table_dir)
                 new_version = latest + 1
+        shutil.rmtree(data_dir, ignore_errors=True)
         raise VT.VersionConflictError(
             f"vt_table append on {table_dir}: starved by "
             f"{_APPEND_MAX_SPINS} consecutive commit races"
@@ -406,7 +392,6 @@ class VersionedTableWriter(DataSourceWriter):
 
     def __init__(self, conn: dict):
         self.conn = conn
-        _ensure_table(conn)
 
     def write(self, iterator):
         return _stage_rows(self.conn, iterator)
@@ -429,7 +414,6 @@ class VersionedTableStreamWriter(DataSourceStreamWriter):
 
     def __init__(self, conn: dict):
         self.conn = conn
-        _ensure_table(conn)
 
     def write(self, iterator):
         return _stage_rows(self.conn, iterator)

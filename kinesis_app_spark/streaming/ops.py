@@ -41,7 +41,6 @@ bounded-state answer (idle keys cost nothing after ttl).
 
 from __future__ import annotations
 
-import os
 import uuid
 from collections.abc import Iterator, Sequence
 
@@ -52,7 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from kinesis_app_spark.pinning import pin
+from kinesis_app_spark.streaming.runner import drain
 
 #: State-store shard count for the bounded GATE/bench streams. Every
 #: state-store instance pays a ~40-150 ms data-size-independent commit
@@ -60,18 +59,15 @@ from kinesis_app_spark.pinning import pin
 #: filesystem-bound), so a tiny test stream wants FEW shards; results
 #: never depend on the shard count (hash partitioning of exact
 #: aggregations/joins/state fns). At 100 TB size this like any shuffle:
-#: >= total cores (set $SPARK_GRAFT_STREAM_SHUFFLE, or pass
-#: shuffle_partitions explicitly).
-GATE_STREAM_SHUFFLE = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4"))
+#: >= total cores (pass shuffle_partitions explicitly).
+GATE_STREAM_SHUFFLE = 4
 
 #: Shard count for applyInPandasWithState gate entries: their per-key
 #: PYTHON work (hundreds of keys × a state fn call) scales with task
 #: parallelism, so the fixed per-store commit saving of fewer shards
 #: loses to the lost Python parallelism (A/B: ttl_sessions 7.7 s at 8
 #: shards vs 10.9 s at 4). JVM-state operators keep the smaller count.
-PYSTATE_STREAM_SHUFFLE = int(
-    os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PYSTATE", "8")
-)
+PYSTATE_STREAM_SHUFFLE = 8
 
 
 def streaming_dedup(
@@ -177,22 +173,17 @@ def run_to_memory(
     if shuffle_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
-        q = (
+        # a partially-populated memory table must FAIL the gate, not
+        # silently compare truncated results
+        drain(
             df.writeStream.outputMode(output_mode)
             .format("memory")
             .queryName(name)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
-            .start()
+            .start(),
+            f"streaming query {name}", timeout_s,
         )
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            # a partially-populated memory table must FAIL the gate, not
-            # silently compare truncated results
-            q.stop()
-            raise TimeoutError(
-                f"streaming query {name} did not finish within {timeout_s}s"
-            )
     finally:
         if shuffle_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -244,25 +235,23 @@ def foreachbatch_running_aggregate(
                     F.sum("n").alias("n"),
                 )
             )
-        state["acc"] = agg.transform(pin, eager=True)
+        # a correctness snapshot, not a perf pin: the accumulator must
+        # not point at earlier epochs' batch DataFrames, so it stays an
+        # eager localCheckpoint under every $SPARK_GRAFT_PIN strategy
+        state["acc"] = agg.localCheckpoint(eager=True)
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     if shuffle_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
-        q = (
+        drain(
             stream.writeStream.foreachBatch(merge)
             .outputMode("append")
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
-            .start()
+            .start(),
+            "foreachBatch aggregate", timeout_s,
         )
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            q.stop()
-            raise TimeoutError(
-                f"foreachBatch aggregate did not finish within {timeout_s}s"
-            )
     finally:
         if shuffle_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)

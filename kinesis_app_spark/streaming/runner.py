@@ -149,3 +149,14 @@ def run_stream(
     **kwargs,
 ) -> StreamingQuery:
     return StreamRunner(checkpoint_dir).run(df, **kwargs)
+
+
+def drain(query: StreamingQuery, what: str, timeout_s: int = 300) -> None:
+    """Wait for a bounded (``availableNow``) query to finish. A drain
+    that outlives ``timeout_s`` stops the query and raises
+    ``TimeoutError`` naming ``what`` — a stuck stream fails its caller
+    instead of hanging it (a query that FAILED re-raises its error, as
+    ``awaitTermination`` does)."""
+    if not query.awaitTermination(timeout_s):
+        query.stop()
+        raise TimeoutError(f"{what} did not finish within {timeout_s} s")

@@ -34,10 +34,7 @@ def test_env_knobs_are_a_known_set():
         for path in root.rglob("*.py")
         for name in re.findall(r"SPARK_GRAFT_([A-Z0-9_]+)", path.read_text())
     }
-    assert found == {
-        "CPUS", "ARROW_BATCH", "DRIVER_MEM", "PIN", "SCRATCH",
-        "STREAM_SHUFFLE", "STREAM_SHUFFLE_PYSTATE",
-    }
+    assert found == {"CPUS", "DRIVER_MEM", "PIN", "SCRATCH"}
 
 
 def test_scratch_dir_removed_at_exit(tmp_path):

@@ -714,6 +714,199 @@ def test_constraints_lifecycle_and_enforcement(spark, tmp_path):
     assert VT.vt_read(spark, table).filter("v < 0").count() == 1
 
 
+def _stale_merge(spark, table, base, v):
+    return VT.vt_merge(
+        spark, table,
+        spark.createDataFrame([(3, v, 0, "U")],
+                              "k long, v long, grp int, op string"),
+        keys=["k"], expected_version=base,
+    )
+
+
+def _stale_update(spark, table, base, v):
+    return VT.vt_update(
+        spark, table, [("k", "=", 3)], {"v": str(v)}, expected_version=base
+    )
+
+
+def _stale_delete(spark, table, base, v):
+    return VT.vt_delete(spark, table, [("k", "=", 3)], expected_version=base)
+
+
+_STALE_WRITERS = [
+    pytest.param(_stale_merge, id="merge"),
+    pytest.param(_stale_update, id="update"),
+    pytest.param(_stale_delete, id="delete"),
+]
+
+
+def _latest_constraints(table):
+    m = VT._read_manifest(table, VT.vt_latest_version(table))
+    return m.get("constraints") or {}
+
+
+@pytest.mark.parametrize("writer", _STALE_WRITERS)
+def test_writer_planned_before_add_constraint_conflicts(
+    spark, tmp_path, writer
+):
+    """A write planned at the version before an ADD CONSTRAINT neither
+    skips the new check nor commits the constraint away: it conflicts,
+    and the rebase (``vt_merge_retry``) enforces the constraint."""
+    table = str(tmp_path / "t")
+    _mk(spark, table, n=8)
+    VT.vt_add_constraint(spark, table, "v_nonneg", "v >= 0")
+    with pytest.raises(VT.VersionConflictError, match="metadata"):
+        writer(spark, table, 0, -5)
+    assert VT.vt_latest_version(table) == 1
+    assert _latest_constraints(table) == {"v_nonneg": "v >= 0"}
+    assert VT.vt_read(spark, table).filter("v < 0").count() == 0
+    with pytest.raises(ValueError, match="v_nonneg"):
+        VT.vt_merge_retry(
+            spark, table,
+            spark.createDataFrame([(3, -5, 0, "U")],
+                                  "k long, v long, grp int, op string"),
+            keys=["k"],
+        )
+
+
+@pytest.mark.parametrize("writer", _STALE_WRITERS)
+def test_writer_planned_before_drop_constraint_does_not_resurrect_it(
+    spark, tmp_path, writer
+):
+    table = str(tmp_path / "t")
+    _mk(spark, table, n=8)
+    VT.vt_add_constraint(spark, table, "v_nonneg", "v >= 0")  # v1
+    VT.vt_drop_constraint(table, "v_nonneg")  # v2
+    with pytest.raises(VT.VersionConflictError, match="metadata"):
+        writer(spark, table, 1, 42)
+    assert VT.vt_latest_version(table) == 2
+    assert _latest_constraints(table) == {}
+
+
+def test_txn_staged_before_add_constraint_aborts(spark, tmp_path):
+    from kinesis_app_spark.operators.txn import (
+        TxnAbortedError,
+        vt_transaction,
+    )
+
+    table = str(tmp_path / "t")
+    _mk(spark, table, n=8)
+    txn = vt_transaction(spark, str(tmp_path / "coord"))
+    txn.stage_merge(
+        table,
+        spark.createDataFrame([(3, -5, 0, "U")],
+                              "k long, v long, grp int, op string"),
+        keys=["k"],
+    )
+    VT.vt_add_constraint(spark, table, "v_nonneg", "v >= 0")
+    with pytest.raises(TxnAbortedError, match="metadata"):
+        txn.commit()
+    assert VT.vt_latest_version(table) == 1
+    assert _latest_constraints(table) == {"v_nonneg": "v >= 0"}
+    assert VT.vt_read(spark, table).filter("v < 0").count() == 0
+
+
+@pytest.mark.parametrize("created_by_sink", [False, True],
+                         ids=["existing_table", "sink_created_table"])
+def test_sink_append_after_mid_stream_add_constraint_raises(
+    spark, tmp_path, created_by_sink
+):
+    """The vt_table sink's epoch was planned against an unconstrained
+    table; a constraint added before its commit stops the epoch instead
+    of committing unchecked rows and dropping the constraint — also
+    when the sink created the table itself, and for every epoch after
+    the first."""
+    from kinesis_app_spark.sources import vt_writer as W
+
+    table = str(tmp_path / "t")
+    schema = "k long, v long, grp int"
+    n = 0 if created_by_sink else 4
+    if not created_by_sink:
+        _mk(spark, table, n=n)
+    conn = W._conn(
+        {"path": table}, spark.createDataFrame([], schema).schema
+    )
+    base = VT.vt_latest_version(table)
+    W._append_staged(conn, [W._stage_rows(conn, iter([(100, 1, 0)]))],
+                     batch_id=0)
+    msg = W._stage_rows(conn, iter([(101, -1, 0)]))
+    VT.vt_add_constraint(spark, table, "v_nonneg", "v >= 0")
+    with pytest.raises(VT.VersionConflictError, match="metadata"):
+        W._append_staged(conn, [msg], batch_id=1)
+    assert VT.vt_latest_version(table) == base + 2
+    assert _latest_constraints(table) == {"v_nonneg": "v >= 0"}
+    assert VT.vt_read(spark, table).count() == n + 1
+    assert VT.vt_read(spark, table).filter("v < 0").count() == 0
+
+
+def test_sink_created_table_append_after_mid_stream_rename_raises(
+    spark, tmp_path
+):
+    """A rename after the sink created the table stops the next epoch
+    instead of writing files under the stale column names."""
+    from kinesis_app_spark.sources import vt_writer as W
+
+    table = str(tmp_path / "t")
+    conn = W._conn(
+        {"path": table},
+        spark.createDataFrame([], "k long, v long").schema,
+    )
+    msg = W._stage_rows(conn, iter([(1, 10)]))
+    VT.vt_rename_column(table, "v", "w")
+    with pytest.raises(VT.VersionConflictError, match="metadata"):
+        W._append_staged(conn, [msg], batch_id=0)
+    assert VT.vt_latest_version(table) == 1
+    assert VT.vt_read(spark, table).count() == 0
+
+
+def test_add_constraint_revalidates_after_losing_a_race(
+    spark, tmp_path, monkeypatch
+):
+    """A violating merge that commits between ADD CONSTRAINT's
+    validation and its commit must not end up under the constraint."""
+    table = str(tmp_path / "t")
+    _mk(spark, table, n=4)
+    real_commit = VT._commit
+
+    def racing_commit(table_dir, version, manifest, cleanup_dir=None):
+        if manifest.get("operation") == "ADD_CONSTRAINT":
+            monkeypatch.setattr(VT, "_commit", real_commit)
+            _stale_merge(spark, table, None, -1)  # lands first
+        return real_commit(table_dir, version, manifest,
+                           cleanup_dir=cleanup_dir)
+
+    monkeypatch.setattr(VT, "_commit", racing_commit)
+    with pytest.raises(ValueError, match="existing data violates"):
+        VT.vt_add_constraint(spark, table, "v_nonneg", "v >= 0")
+    assert VT.vt_latest_version(table) == 1
+    assert _latest_constraints(table) == {}
+
+
+def test_table_metadata_survives_later_commits(spark, tmp_path):
+    """Type widening and constraints ride through data and layout
+    commits: every commit inherits the parent's table metadata."""
+    table = str(tmp_path / "t")
+    VT.vt_create(
+        spark.range(8).select(
+            F.col("id").alias("k"), F.col("id").cast("int").alias("v"),
+        ),
+        table,
+    )
+    VT.vt_widen_column(table, "v", "long")
+    VT.vt_add_constraint(spark, table, "v_nonneg", "v >= 0")
+    VT.vt_merge(
+        spark, table,
+        spark.createDataFrame([(3, 30, "U")], "k long, v long, op string"),
+        keys=["k"],
+    )
+    VT.vt_compact(spark, table, min_rows_per_file=1 << 20)
+    VT.vt_delete_dv(spark, table, [("k", "=", 5)])
+    VT.vt_optimize(spark, table, ["k"])
+    m = VT._read_manifest(table, VT.vt_latest_version(table))
+    assert m["type_widening"] == {"v": ["integer", "long"]}
+    assert m["constraints"] == {"v_nonneg": "v >= 0"}
+
+
 def test_add_constraint_validates_existing_data(spark, tmp_path):
     table = str(tmp_path / "t")
     _mk(spark, table, n=6)

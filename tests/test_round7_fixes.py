@@ -53,13 +53,11 @@ def test_sink_zombie_same_batchid_does_not_double_append(
     base_version = VT.vt_latest_version(table)
 
     # stage one parquet file the way a sink task would
+    base = VT._read_manifest(table, base_version)
     conn = {
         "path": table,
-        "schema_json": json.dumps(
-            VT._manifest_schema(
-                VT._read_manifest(table, base_version)
-            ).jsonValue()
-        ),
+        "schema_json": json.dumps(VT._manifest_schema(base).jsonValue()),
+        "meta": VT._table_meta(base),
     }
     msg = W._stage_rows(
         conn, iter([(100, 1000), (101, 1010)])

@@ -424,9 +424,16 @@ def test_foreachbatch_multi_sink_fanout_idempotent(spark, tmp_path):
         assert got == expected, f"replay duplicated rows in {sink}"
 
 
-def test_foreachbatch_running_aggregate_merges_across_epochs(spark, tmp_path):
+@pytest.mark.parametrize("pin_strategy", ["local", "none"])
+def test_foreachbatch_running_aggregate_merges_across_epochs(
+    spark, tmp_path, monkeypatch, pin_strategy
+):
+    """The cross-epoch accumulator is an eager snapshot whatever the
+    pin strategy: the result holds no plan over earlier batches."""
     from kinesis_app_spark.streaming.ops import foreachbatch_running_aggregate
     from kinesis_app_spark.streaming.sources import file_stream
+
+    monkeypatch.setenv("SPARK_GRAFT_PIN", pin_strategy)
 
     df = spark.createDataFrame(
         [(1, 10.0), (2, 5.0), (1, 2.5), (3, 1.0), (2, 0.5), (1, 4.0)],
@@ -445,3 +452,4 @@ def test_foreachbatch_running_aggregate_merges_across_epochs(spark, tmp_path):
         r["user_id"]: (float(r["total"]), r["n"]) for r in acc.collect()
     }
     assert got == {1: (16.5, 3), 2: (5.5, 2), 3: (1.0, 1)}
+    assert "Union" not in acc._jdf.queryExecution().analyzed().toString()
