@@ -19,7 +19,8 @@ executor-local blocks with NO replication: an executor loss makes them
 unrecoverable and fails the query, and eager pins run jobs at plan-
 construction time — acceptable on one box, not the 100 TB default.
 Deploy clusters with ``SPARK_GRAFT_PIN=reliable`` (replicated
-``checkpoint()``); see pinning.py for the full trade-off table.
+``checkpoint()`` into the checkpoint dir the caller sets on shared
+storage); see pinning.py for the full trade-off table.
 Convergence is detected with a count of changed labels, which also
 materializes the round.
 """

@@ -81,6 +81,8 @@ __all__ = [
 #: broken (abort) by any writer's barrier
 TXN_LEASE_SECONDS = 300.0
 
+#: attempts of the finalize's reserve loop, and polls (0.05 s apart,
+#: ``_wait_out``) a writer spends waiting out another transaction's lock
 _MAX_RESERVE_SPINS = 50
 
 #: finalize's own _commit calls must pass its barrier: the holder's
@@ -178,41 +180,53 @@ def _tip_visibility(table_dir: str, version: int) -> str:
     return "invisible"
 
 
-def _resolve_table(table_dir: str, wait: bool = False) -> None:
+def _wait_out(attempt) -> bool:
+    """Poll ``attempt()`` until it returns True, at most
+    ``_MAX_RESERVE_SPINS`` times 0.05 s apart (~2.5 s): the one wait for
+    another transaction's live lock. False when it never succeeded."""
+    for _spin in range(_MAX_RESERVE_SPINS):
+        if attempt():
+            return True
+        time.sleep(0.05)
+    return False
+
+
+def _resolve_table(table_dir: str) -> None:
     """The writer barrier: called by ``_commit`` before taking a slot.
-    Fast path: no lock file -> return. Otherwise resolve the holder —
-    roll a committed transaction forward, abort one whose lease
-    expired, or raise so the caller's optimistic spin retries."""
+    Fast path: no lock file -> return. Otherwise resolve the holder
+    (``_resolve_once``), waiting out a live lease — never broken —
+    and raising ``TableLockedError`` if it outlasts the wait."""
+    if os.path.exists(_lock_path(table_dir)) and not _wait_out(
+        lambda: _resolve_once(table_dir)
+    ):
+        raise VT.TableLockedError(
+            f"{table_dir} stayed locked by an in-flight transaction; "
+            "retry once it has finished"
+        )
+
+
+def _resolve_once(table_dir: str) -> bool:
+    """One look at the table's lock: True when there is none (or it is
+    this thread's own finalize, or it was resolved now), False while
+    another transaction holds a live lease."""
     lp = _lock_path(table_dir)
-    if not os.path.exists(lp):
-        return
-    if getattr(_local, "txn_id", None) is not None:
-        try:
-            with open(lp) as fh:
-                if json.load(fh).get("id") == _local.txn_id:
-                    return  # our own finalize: pass
-        except (OSError, ValueError):
-            return  # lock vanished: resolved concurrently
     try:
         with open(lp) as fh:
             info = json.load(fh)
     except (OSError, ValueError):
-        return  # lock vanished: resolved concurrently
+        return True  # no lock, or it vanished: resolved concurrently
+    own = getattr(_local, "txn_id", None)
+    if own is not None and info.get("id") == own:
+        return True  # our own finalize: pass
     decision = info.get("decision", "")
     state = _decision_state(decision)
     if state is None:
         try:
             age = time.time() - os.path.getmtime(lp)
         except OSError:
-            return
+            return True
         if age <= info.get("lease", TXN_LEASE_SECONDS):
-            if wait:
-                return  # live lease: the caller sleeps and retries —
-                # never break a healthy transaction's lock
-            raise VT.VersionConflictError(
-                f"{table_dir} is locked by in-flight transaction "
-                f"{info.get('id')}; retry shortly"
-            )
+            return False
         # lease EXPIRED: presume the finalizer dead and race it to an
         # ABORT decision — losing the race means it decided; proceed
         # per the decision either way
@@ -223,6 +237,7 @@ def _resolve_table(table_dir: str, wait: bool = False) -> None:
         _finish_committed(table_dir, txn_id)
     else:
         _rollback_table(table_dir, txn_id)
+    return True
 
 
 def _pending_versions(table_dir: str, txn_id: str) -> list[int]:
@@ -491,14 +506,9 @@ class VtTransaction:
             )
 
         self._add_staged({
+            **VT._staged(latest, meta, set(), data_dir, [], mk_manifest,
+                         lambda fe: False),
             "table_dir": table_dir,
-            "validated_to": latest,
-            "base_meta": meta,
-            "t_paths": set(),
-            "data_dir": data_dir,
-            "mk_manifest": mk_manifest,
-            "added_hits": lambda fe: False,
-            "op_name": "txn_append",
         })
         return new_version
 
@@ -599,20 +609,17 @@ class VtTransaction:
                 "lease": self.lease,
                 "ts": time.time(),
             }
-            for _spin in range(_MAX_RESERVE_SPINS):
-                _resolve_table(table_dir, wait=True)
-                # atomic create-with-content: a barrier must never
-                # observe a half-written (empty) lock and treat it as
-                # vanished
-                if not _atomic_create(_lock_path(table_dir), payload):
-                    time.sleep(0.05)
-                    continue
-                self._locked.append(table_dir)
-                break
-            else:
+            # atomic create-with-content: a barrier must never
+            # observe a half-written (empty) lock and treat it as
+            # vanished
+            if not _wait_out(
+                lambda: _resolve_once(table_dir)
+                and _atomic_create(_lock_path(table_dir), payload)
+            ):
                 raise TxnAbortedError(
                     f"txn {self.txn_id}: could not lock {table_dir}"
                 )
+            self._locked.append(table_dir)
 
     def _validate_and_reserve(self) -> dict[str, int]:
         """Steps 2+3: per table, re-run the optimistic-commit conflict

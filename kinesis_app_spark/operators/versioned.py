@@ -47,6 +47,7 @@ SURVEY.md §2.2's lakehouse gap oracle-checkably.
 from __future__ import annotations
 
 import datetime
+import functools
 import json
 import os
 import re
@@ -61,9 +62,11 @@ from pyspark.sql.types import (
     DateType,
     NumericType,
     StringType,
+    StructField,
     StructType,
     TimestampNTZType,
     TimestampType,
+    _parse_datatype_string,
 )
 
 from kinesis_app_spark.operators.cdc import apply_changes
@@ -82,14 +85,21 @@ _STATS_MAX_COLS = 32
 #: listing per commit — and reconstruction reads at most N manifests.
 _CHECKPOINT_EVERY = 10
 
-#: disjoint-commit fast-path retries before a writer declares
-#: starvation (each retry is driver-side metadata, never a re-executed
-#: join — the bound exists so pathological contention surfaces)
+#: commit attempts ``_commit_optimistic`` makes before a writer
+#: declares starvation (a retry is driver-side metadata or a cheap
+#: re-plan, never a re-executed join — the bound exists so
+#: pathological contention surfaces)
 _COMMIT_MAX_SPINS = 50
 
 
 class VersionConflictError(RuntimeError):
     """Another writer committed this version first: rebase and retry."""
+
+
+class TableLockedError(VersionConflictError):
+    """An in-flight multi-table transaction kept the table locked for
+    the whole wait of the commit barrier (operators/txn.py): nothing
+    was committed; retry once the transaction has finished."""
 
 
 class ProtocolError(RuntimeError):
@@ -868,8 +878,9 @@ def _commit(table_dir: str, version: int, manifest: dict,
         manifest["batch_ids"] = sorted(ids)
     # multi-table transaction barrier: while a table is locked by an
     # in-flight txn finalize, single-table commits must not slip a
-    # version between its validation and promotion; a decided or
-    # lease-expired lock is resolved in place (operators/txn.py).
+    # version between its validation and promotion — a live lock is
+    # waited out (TableLockedError after the wait), a decided or
+    # lease-expired one is resolved in place (operators/txn.py).
     # Fast path: one os.path.exists.
     from kinesis_app_spark.operators.txn import _resolve_table
 
@@ -963,8 +974,6 @@ def _phys_struct(schema: StructType, mapping: dict | None) -> StructType:
     replaced by their stable physical names."""
     if not mapping:
         return schema
-    from pyspark.sql.types import StructField
-
     return StructType([
         StructField(
             mapping.get(f.name, f.name), f.dataType, f.nullable, f.metadata
@@ -1438,93 +1447,100 @@ def vt_merge(
             return _file_hits_key_set(fe, pkey_cols)
         return _file_intersects(fe, chg_stats, pkeys)
 
-    return _stage_or_commit(
-        txn, table_dir, base, base_meta, t_paths, data_dir, parent_files,
-        _mk_manifest, _added_file_hits, "vt_merge",
-    )
+    return _stage_or_commit(txn, table_dir, "vt_merge", _staged(
+        base, base_meta, t_paths, data_dir, parent_files, _mk_manifest,
+        _added_file_hits,
+    ))
+
+
+def _staged(base: int, base_meta: dict, t_paths: set[str],
+            data_dir: str | None, parent_files: list[dict],
+            mk_manifest, added_hits) -> dict:
+    """A writer's commit, planned at ``base`` under ``base_meta``:
+    what ``_commit_optimistic`` and a transaction's finalize commit."""
+    return {
+        "validated_to": base,
+        "base_meta": base_meta,
+        "t_paths": t_paths,
+        "data_dir": data_dir,
+        "carried": [f for f in parent_files if f["path"] not in t_paths],
+        "mk_manifest": mk_manifest,
+        "added_hits": added_hits,
+    }
 
 
 def _stage_or_commit(
-    txn,
-    table_dir: str,
-    base: int,
-    base_meta: dict,
-    t_paths: set[str],
-    data_dir: str,
-    parent_files: list[dict],
-    mk_manifest,
-    added_hits,
-    op_name: str,
+    txn, table_dir: str, op_name: str, staged: dict, replan=None
 ) -> int:
-    """The tail of every data-writing operation planned at ``base``:
-    hand the staged pieces to ``txn``'s atomic finalize
-    (operators/txn.py), or commit them now through
+    """The tail of every data-writing operation: hand the ``_staged``
+    pieces to ``txn``'s atomic finalize (operators/txn.py, where a
+    conflict aborts the transaction), or commit them now through
     ``_commit_optimistic``. Returns the version taken (planned, under a
     transaction)."""
     if txn is not None:
-        txn._add_staged({
-            "table_dir": table_dir,
-            "validated_to": base,
-            "base_meta": base_meta,
-            "t_paths": t_paths,
-            "data_dir": data_dir,
-            "mk_manifest": mk_manifest,
-            "added_hits": added_hits,
-            "op_name": op_name,
-        })
-        return base + 1
-    carried = [f for f in parent_files if f["path"] not in t_paths]
-    return _commit_optimistic(
-        table_dir, base, base_meta, t_paths, data_dir, carried,
-        mk_manifest, added_hits, op_name,
-    )
+        txn._add_staged({**staged, "table_dir": table_dir})
+        return staged["validated_to"] + 1
+    return _commit_optimistic(table_dir, op_name, staged, replan)
 
 
 def _commit_optimistic(
-    table_dir: str,
-    base: int,
-    base_meta: dict,
-    t_paths: set[str],
-    data_dir: str,
-    carried: list[dict],
-    mk_manifest,
-    added_hits,
-    op_name: str,
+    table_dir: str, op_name: str, staged: dict, replan=None
 ) -> int:
-    """Delta-style optimistic commit: try the next version; on losing
-    the race, ``_first_conflict`` checks every intervening commit
-    against this writer's read set and table metadata. Disjoint writers
-    commit without re-executing — carried files are re-derived from the
-    winner's manifest (the winner removed none of OUR files, so they
-    are all still present); a conflict cleans up the staged files and
-    raises for the caller's rebase loop. Bounded spins: under a hostile
-    stream of disjoint commits the loop gives up after
-    ``_COMMIT_MAX_SPINS`` (cheap metadata retries, but starvation must
-    surface, not hang)."""
-    validated_to = base
-    new_version = base + 1
+    """The one loop that decides what a writer does after losing a
+    commit race (Delta-style optimistic concurrency). It commits
+    ``staged`` (a ``_staged`` dict) at the next version; after a lost
+    race, a winner holding this commit's ``batch_id`` (a replayed
+    epoch) ends it without committing; a winner ``_first_conflict``
+    finds disjoint is co-committed with (carried files re-derived, no
+    work re-run); a conflict removes the staged files and either
+    re-plans through ``replan(latest)`` (cheap, idempotent planning:
+    DDL, DELETE_DV; None = nothing left to commit) or raises for
+    ``vt_merge_retry``. A live transaction lock is not a race:
+    ``_commit``'s barrier waits it out, and its ``TableLockedError``
+    propagates at once. All attempts share ``_COMMIT_MAX_SPINS``, so
+    starvation surfaces instead of hanging."""
+
+    def drop_staged():
+        if staged["data_dir"]:
+            shutil.rmtree(staged["data_dir"], ignore_errors=True)
+
     for _spin in range(_COMMIT_MAX_SPINS):
+        version = staged["validated_to"] + 1
+        manifest = staged["mk_manifest"](staged["carried"], version)
         try:
-            _commit(table_dir, new_version, mk_manifest(carried, new_version))
-            return new_version
+            _commit(table_dir, version, manifest)
+            return version
+        except TableLockedError:
+            drop_staged()
+            raise
         except VersionConflictError:
-            latest = vt_latest_version(table_dir)
-            reason = _first_conflict(
-                table_dir, validated_to, latest, t_paths, added_hits,
-                base_meta,
-            )
-            if reason is not None:
-                shutil.rmtree(data_dir, ignore_errors=True)
-                raise VersionConflictError(
-                    f"{op_name} on {table_dir}: {reason}; rebase and retry"
-                ) from None
-            carried = [
+            pass
+        latest = vt_latest_version(table_dir)
+        if "batch_id" in manifest and manifest["batch_id"] in (
+            _committed_batch_ids_upto(table_dir, latest)
+        ):
+            drop_staged()
+            return latest
+        reason = _first_conflict(
+            table_dir, staged["validated_to"], latest, staged["t_paths"],
+            staged["added_hits"], staged["base_meta"],
+        )
+        if reason is None:
+            staged["carried"] = [
                 f for f in vt_files(table_dir, latest)
-                if f["path"] not in t_paths
+                if f["path"] not in staged["t_paths"]
             ]
-            validated_to = latest
-            new_version = latest + 1
-    shutil.rmtree(data_dir, ignore_errors=True)
+            staged["validated_to"] = latest
+            continue
+        drop_staged()
+        if replan is None:
+            raise VersionConflictError(
+                f"{op_name} on {table_dir}: {reason}; rebase and retry"
+            )
+        staged = replan(latest)
+        if staged is None:
+            return latest
+    drop_staged()
     raise VersionConflictError(
         f"{op_name} on {table_dir}: starved by {_COMMIT_MAX_SPINS} "
         "consecutive commit races; serialize writers"
@@ -1793,15 +1809,15 @@ def vt_optimize(
     # compact/cluster commit with the relaxed layout rules below. The
     # commit is a full file list: it replaces the whole snapshot.
     parent_files = vt_files(table_dir, base)
-    return _stage_or_commit(
-        txn, table_dir, base, base_meta,
-        {f["path"] for f in parent_files}, data_dir, parent_files,
+    return _stage_or_commit(txn, table_dir, "vt_optimize", _staged(
+        base, base_meta, {f["path"] for f in parent_files}, data_dir,
+        parent_files,
         lambda carried_now, version: _next_manifest(
             base_meta, "OPTIMIZE", version, carried_now, files, None,
             data_dir,
         ),
-        lambda fe: True, "vt_optimize",
-    )
+        lambda fe: True,
+    ))
 
 
 def vt_cluster_incremental(
@@ -1873,14 +1889,15 @@ def vt_cluster_incremental(
     # layout never conflicts with content: only a commit that removed
     # one of the debt files (the removed-read-file check) or changed the
     # table metadata forces a retry — the r6 co-commit rules
-    return _stage_or_commit(
-        txn, table_dir, base, base_meta, t_paths, data_dir, parent_files,
+    op_name = "vt_cluster_incremental"
+    return _stage_or_commit(txn, table_dir, op_name, _staged(
+        base, base_meta, t_paths, data_dir, parent_files,
         lambda carried_now, version: _next_manifest(
             base_meta, "CLUSTER", version, carried_now, new_files, t_paths,
             data_dir,
         ),
-        lambda fe: False, "vt_cluster_incremental",
-    )
+        lambda fe: False,
+    ))
 
 
 def vt_compact(
@@ -1940,14 +1957,14 @@ def vt_compact(
     # compaction reads only the small files: a concurrent commit ADDING
     # files co-commits (always-false test), one removing a compacted
     # file aborts (removed-read-file)
-    return _stage_or_commit(
-        txn, table_dir, base, base_meta, t_paths, data_dir, parent_files,
+    return _stage_or_commit(txn, table_dir, "vt_compact", _staged(
+        base, base_meta, t_paths, data_dir, parent_files,
         lambda carried_now, version: _next_manifest(
             base_meta, "COMPACT", version, carried_now, new_files, t_paths,
             data_dir,
         ),
-        lambda fe: False, "vt_compact",
-    )
+        lambda fe: False,
+    ))
 
 
 def _write_data_with_opts(
@@ -2928,15 +2945,15 @@ def _predicate_rewrite(
             None, data_dir, "vt_update",
         )
     base_meta = _table_meta(manifest)
-    return _stage_or_commit(
-        txn, table_dir, base, base_meta, t_paths, data_dir, parent_files,
+    op_name = f"vt_{operation.lower()}"
+    return _stage_or_commit(txn, table_dir, op_name, _staged(
+        base, base_meta, t_paths, data_dir, parent_files,
         lambda carried_now, version: _next_manifest(
             base_meta, operation, version, carried_now, new_files, t_paths,
             data_dir,
         ),
         lambda fe: _filter_may_match(fe, pfilters),
-        f"vt_{operation.lower()}",
-    )
+    ))
 
 
 def vt_delete(
@@ -2987,43 +3004,37 @@ def vt_delete_dv(
     shape). Positions already in a file's DV are excluded, so
     re-deleting is a no-op — which also makes the commit-race story
     simple: a lost race against a disjoint writer co-commits like a
-    merge (``_commit_optimistic``), and on a conflict the whole
-    operation safely RE-RUNS against the new latest (bounded spins),
-    because re-finding the rows excludes everything an earlier attempt
-    already recorded and a concurrent writer that rewrote a candidate
-    file materialized or carried its DV either way. Returns the new
-    version, or the current latest when nothing matched.
+    merge, and on a conflict ``_commit_optimistic`` RE-PLANS the delete
+    against the new latest (one rescan per conflict, inside the same
+    spin budget), because re-finding the rows excludes everything an
+    earlier attempt already recorded and a concurrent writer that
+    rewrote a candidate file materialized or carried its DV either way.
+    Returns the new version, or the current latest when nothing
+    matched.
 
     ``txn``: stage instead of committing — the CHEAP half of the
     atomic cross-table GDPR purge (the sidecar is written now, the
     metadata-only commit lands with the transaction; when nothing
     matches, the table is simply not part of the transaction)."""
-    if txn is not None:
-        return _delete_dv_once(spark, table_dir, filters, txn=txn)
-    for _spin in range(_COMMIT_MAX_SPINS):
-        try:
-            return _delete_dv_once(spark, table_dir, filters)
-        except VersionConflictError:
-            continue
-    raise VersionConflictError(
-        f"vt_delete_dv on {table_dir}: starved by {_COMMIT_MAX_SPINS} "
-        "consecutive commit races; serialize writers"
-    )
-
-
-def _delete_dv_once(
-    spark: SparkSession,
-    table_dir: str,
-    filters,
-    txn=None,
-) -> int:
     latest = vt_latest_version(table_dir)
     if latest < 0:
         raise FileNotFoundError(f"table {table_dir} does not exist")
-    manifest = _read_manifest(table_dir, latest)
+    plan = functools.partial(_plan_delete_dv, spark, table_dir, list(filters))
+    staged = plan(latest)
+    if staged is None:
+        return latest  # nothing matched: no commit
+    return _stage_or_commit(txn, table_dir, "vt_delete_dv", staged, plan)
+
+
+def _plan_delete_dv(
+    spark: SparkSession, table_dir: str, filters: list, version: int
+) -> dict | None:
+    """DELETE_DV's staged commit at ``version``: scan the candidate
+    files for matching rows not yet in their DV and write them as one
+    sidecar — or None when no new row matches."""
+    manifest = _read_manifest(table_dir, version)
     _check_protocol(manifest, table_dir, write=True)
-    parent_files = vt_files(table_dir, latest)
-    filters = list(filters)
+    parent_files = vt_files(table_dir, version)
     pred = _filters_to_column(filters)
     schema = _manifest_schema(manifest, table_dir)
     mapping = _col_mapping(manifest)
@@ -3032,7 +3043,7 @@ def _delete_dv_once(
         spark, parent_files, pfilters, _phys_struct(schema, mapping),
     )
     if not cand:
-        return latest
+        return None
     live = _to_logical(
         spark.read.schema(_phys_struct(schema, mapping))
         .parquet(*[f["path"] for f in cand])
@@ -3060,7 +3071,7 @@ def _delete_dv_once(
     }
     if not counts:
         shutil.rmtree(sidecar, ignore_errors=True)
-        return latest  # nothing matched: no commit
+        return None
     updated = []
     for f in cand:
         if f["path"] not in counts:
@@ -3073,14 +3084,14 @@ def _delete_dv_once(
     base_meta = _table_meta(manifest)
     # the sidecar is this operation's only on-disk artifact: a conflict
     # or an aborted transaction removes it as the staged data_dir (a
-    # retry re-finds the rows and writes a fresh one)
-    return _stage_or_commit(
-        txn, table_dir, latest, base_meta, t_paths, sidecar, parent_files,
-        lambda carried_now, version: _next_manifest(
-            base_meta, "DELETE_DV", version, carried_now, updated, t_paths,
+    # re-plan re-finds the rows and writes a fresh one)
+    return _staged(
+        version, base_meta, t_paths, sidecar, parent_files,
+        lambda carried_now, v: _next_manifest(
+            base_meta, "DELETE_DV", v, carried_now, updated, t_paths,
             manifest.get("data_dir"),
         ),
-        lambda fe: _filter_may_match(fe, pfilters), "vt_delete_dv",
+        lambda fe: _filter_may_match(fe, pfilters),
     )
 
 
@@ -3153,30 +3164,23 @@ def vt_widen_column(table_dir: str, col: str, new_type: str) -> int:
     readable at their old type (each manifest carries its own schema).
     Per-file min/max stats stay valid — widening is value-preserving,
     so numeric comparisons are unchanged. Pre-existing BLOOM entries
-    on the column are STRIPPED in the same commit: xxhash64 is
-    width-sensitive (an int hashes one 4-byte word, a long an 8-byte
-    word), so probes computed at the widened type would silently miss
-    narrow-width buckets — the exact silent-file-skip failure the
-    sessionless planner guards against; re-run ``vt_index_bloom`` to
-    rebuild at the new width. Narrowing and lossy changes refuse.
-    Stamps the sticky ``type_widening`` feature: a reader without this
-    code refuses loudly instead of mis-typing the scan."""
+    on the column are STRIPPED in the same commit
+    (``_schema_change_commit``'s retype rule); re-run
+    ``vt_index_bloom`` to rebuild at the new width. Narrowing and lossy
+    changes refuse. Stamps the sticky ``type_widening`` feature: a
+    reader without this code refuses loudly instead of mis-typing the
+    scan."""
     tgt = _TYPE_ALIASES.get(new_type.lower(), new_type.lower())
-    for _spin in range(_COMMIT_MAX_SPINS):
-        latest = vt_latest_version(table_dir)
-        if latest < 0:
-            raise FileNotFoundError(f"table {table_dir} does not exist")
-        manifest = _read_manifest(table_dir, latest)
-        _check_protocol(manifest, table_dir, write=True)
-        schema = _manifest_schema(manifest, table_dir)
-        parent_files = vt_files(table_dir, latest)
+
+    def change(meta: dict, _version: int) -> dict:
+        schema = StructType.fromJson(meta["schema"])
         if col not in schema.names:
             raise ValueError(
                 f"vt_widen_column: no column {col!r} in {schema.names}"
             )
         cur = schema[col].dataType.typeName()
         if cur == tgt:
-            return latest  # already at the requested type: no commit
+            return meta  # already at the requested type: no commit
         if tgt not in _WIDENINGS.get(cur, ()):
             raise ValueError(
                 f"vt_widen_column: {cur} -> {tgt} is not a lossless "
@@ -3184,78 +3188,47 @@ def vt_widen_column(table_dir: str, col: str, new_type: str) -> int:
                 f"{list(_WIDENINGS.get(cur, ()))}); narrowing or lossy "
                 "changes need a rewrite"
             )
-        from pyspark.sql.types import StructField, _parse_datatype_string
-
         new_dt = _parse_datatype_string(tgt)
         new_schema = StructType([
             StructField(f.name, new_dt if f.name == col else f.dataType,
                         f.nullable, f.metadata)
             for f in schema.fields
         ])
-        mapping = _col_mapping(manifest)
-        pcol = (mapping or {}).get(col, col)
-        # strip width-mismatched blooms on the widened physical column
-        touched = [
-            f for f in parent_files if (f.get("bloom") or {}).get(pcol)
-        ]
-        updated = []
-        for f in touched:
-            e = dict(f)
-            bloom = dict(e["bloom"])
-            bloom.pop(pcol, None)
-            e["bloom"] = bloom or None
-            if e["bloom"] is None:
-                e.pop("bloom")
-            updated.append(e)
-        t_paths = {f["path"] for f in touched}
-        carried = [
-            f for f in parent_files if f["path"] not in t_paths
-        ]
-        widened = dict(manifest.get("type_widening") or {})
+        pcol = (_col_mapping(meta) or {}).get(col, col)
+        widened = dict(meta.get("type_widening") or {})
         widened[pcol] = [
             *(widened.get(pcol) or [cur])[:1], tgt,
         ]  # remember the ORIGINAL narrow type and the latest wide one
-        new_version = latest + 1
-        meta = {
-            **_table_meta(manifest),
-            "schema": new_schema.jsonValue(),
-            "type_widening": widened,
-        }
-        try:
-            _commit(table_dir, new_version, _next_manifest(
-                meta, "WIDEN_COLUMN", new_version, carried, updated,
-                t_paths, manifest.get("data_dir"),
-            ))
-            return new_version
-        except VersionConflictError:
-            continue  # re-derive against the new latest
-    raise VersionConflictError(
-        f"vt_widen_column on {table_dir}: starved by "
-        f"{_COMMIT_MAX_SPINS} consecutive commit races"
-    )
+        return {**meta, "schema": new_schema.jsonValue(),
+                "type_widening": widened}
+
+    return _schema_change_commit(table_dir, "WIDEN_COLUMN", change)
 
 
 def _schema_change_commit(
     table_dir: str, op_name: str, change_fn
 ) -> int:
-    """Shared shape of metadata-only DDL (ADD/RENAME/DROP COLUMN,
-    ADD/DROP CONSTRAINT): derive the new table metadata from the
-    CURRENT latest's via ``change_fn(meta, latest) -> new_meta``
-    (``_table_meta`` dicts; ``latest`` is the version the commit lands
-    on, for a change that must check its data) and commit a version
-    that carries the SAME files — ``add``/``remove`` both empty, so the
-    commit payload is a few hundred bytes whatever the table size.
-    Losing a commit race re-derives from the new latest and retries,
-    bounded by ``_COMMIT_MAX_SPINS``."""
-    for _spin in range(_COMMIT_MAX_SPINS):
-        latest = vt_latest_version(table_dir)
-        if latest < 0:
-            raise FileNotFoundError(f"table {table_dir} does not exist")
-        manifest = _read_manifest(table_dir, latest)
+    """Shared shape of metadata-only DDL (ADD/RENAME/DROP COLUMN, WIDEN,
+    ADD/DROP CONSTRAINT): derive the new table metadata from a
+    version's via ``change_fn(meta, version) -> new_meta``
+    (``_table_meta`` dicts; ``version`` is the one the commit lands on,
+    for a change that must check its data; an unchanged ``meta``
+    commits nothing) and commit the SAME files — a few hundred bytes
+    whatever the table size. A retyped column's BLOOM entries are
+    dropped in the same commit (xxhash64 is width-sensitive: probes at
+    the new type would silently miss old-width buckets). A lost race
+    co-commits past a disjoint winner and re-plans past a conflicting
+    one; a change that adds a constraint counts every concurrently
+    added file as a conflict, so it re-validates after any write."""
+
+    def plan(version: int) -> dict | None:
+        manifest = _read_manifest(table_dir, version)
         _check_protocol(manifest, table_dir, write=True)
         _manifest_schema(manifest, table_dir)  # a schema-less tip raises
         meta = _table_meta(manifest)
-        new_meta = change_fn(meta, latest)
+        new_meta = _table_meta(change_fn(meta, version))
+        if new_meta == meta:
+            return None
         # Delta's guard: a constraint referencing a renamed/dropped
         # column would silently dangle — refuse until it is dropped.
         # Word-level match is conservative (may over-refuse, never
@@ -3271,20 +3244,46 @@ def _schema_change_commit(
                         f"by constraint {cname!r} ({sql}); drop the "
                         "constraint first"
                     )
-        new_version = latest + 1
-        try:
-            _commit(table_dir, new_version, _next_manifest(
-                new_meta, op_name, new_version,
-                vt_files(table_dir, latest), [], [],
+        def phys_types(m: dict) -> dict:
+            return {f.name: f.dataType for f in _phys_struct(
+                StructType.fromJson(m["schema"]), _col_mapping(m))}
+
+        old_t, new_t = phys_types(meta), phys_types(new_meta)
+        retyped = {p for p in old_t.keys() & new_t.keys()
+                   if old_t[p] != new_t[p]}
+
+        def stale_bloom(fe: dict) -> bool:
+            return bool(retyped & set(fe.get("bloom") or ()))
+
+        parent_files = vt_files(table_dir, version)
+        updated = []
+        for f in filter(stale_bloom, parent_files):
+            e = dict(f)
+            bloom = {c: b for c, b in e.pop("bloom").items()
+                     if c not in retyped}
+            if bloom:
+                e["bloom"] = bloom
+            updated.append(e)
+        t_paths = {f["path"] for f in updated}
+        adds_constraint = bool(
+            _table_constraints(new_meta).keys() - _table_constraints(meta)
+        )
+        return _staged(
+            version, meta, t_paths, None, parent_files,
+            lambda carried, v: _next_manifest(
+                new_meta, op_name, v, carried, updated, t_paths,
                 manifest.get("data_dir"),
-            ))
-            return new_version
-        except VersionConflictError:
-            continue  # re-derive against the new latest
-    raise VersionConflictError(
-        f"{op_name} on {table_dir}: starved by {_COMMIT_MAX_SPINS} "
-        "consecutive commit races; serialize writers"
-    )
+            ),
+            (lambda fe: True) if adds_constraint else stale_bloom,
+        )
+
+    latest = vt_latest_version(table_dir)
+    if latest < 0:
+        raise FileNotFoundError(f"table {table_dir} does not exist")
+    staged = plan(latest)
+    if staged is None:
+        return latest
+    return _commit_optimistic(table_dir, op_name, staged, plan)
 
 
 def vt_rename_column(table_dir: str, old: str, new: str) -> int:
@@ -3311,8 +3310,6 @@ def vt_rename_column(table_dir: str, old: str, new: str) -> int:
             raise ValueError(
                 f"vt_rename_column: column {new!r} already exists"
             )
-        from pyspark.sql.types import StructField
-
         new_schema = StructType([
             StructField(new if f.name == old else f.name,
                         f.dataType, f.nullable, f.metadata)
@@ -3375,7 +3372,6 @@ def vt_add_column(table_dir: str, col: str, dtype: str) -> int:
     new column gets a fresh physical name like any post-activation
     add. ``dtype`` is a DDL type string ("bigint", "decimal(12,2)",
     "array<string>", ...)."""
-    from pyspark.sql.types import StructField, _parse_datatype_string
 
     def change(meta: dict, _version: int) -> dict:
         schema = StructType.fromJson(meta["schema"])

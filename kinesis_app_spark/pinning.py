@@ -20,13 +20,15 @@ comes from ``$SPARK_GRAFT_PIN``:
 - ``reliable``: ``DataFrame.checkpoint(eager=...)`` — materializes to the
   (reliable, replicated at cluster scale) checkpoint directory and
   truncates lineage; survives executor loss. The 100 TB default posture.
-  A checkpoint dir is set lazily under the Hadoop default FS if the
-  caller has not configured one.
+  The checkpoint dir must be on storage every executor reaches: on a
+  cluster master the caller sets it (``setCheckpointDir``) and an unset
+  dir raises; on a ``local`` master a ``scratch_dir`` is set lazily
+  (removed when the process exits).
 - ``none``: no pin at all — full lineage everywhere. Used by plan-audit
   tests that must see through the pin, and as the escape hatch.
 
-Any other value (including the removed ``persist_disk``) falls back to
-``local``.
+Any other value (including the removed ``persist_disk``) raises
+``ValueError``.
 
 Semantics: a pin NEVER changes what a query computes — every strategy
 (including ``none``) yields the same rows. Pre-mutation SNAPSHOTS (a
@@ -42,12 +44,16 @@ import os
 
 from pyspark.sql import DataFrame
 
+from kinesis_app_spark.scratch import scratch_dir
+
 _VALID = ("local", "reliable", "none")
 
 
 def pin_strategy() -> str:
     s = os.environ.get("SPARK_GRAFT_PIN", "local")
-    return s if s in _VALID else "local"
+    if s not in _VALID:
+        raise ValueError(f"SPARK_GRAFT_PIN={s!r}: use one of {_VALID}")
+    return s
 
 
 def pin(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -58,11 +64,13 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
         return df
     if s == "reliable":
         sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():  # noqa: SLF001
-            import tempfile
-
-            sc.setCheckpointDir(
-                tempfile.mkdtemp(prefix="spark_reliable_ckpt_")
-            )
+        if sc.getCheckpointDir() is None:
+            if sc.master != "local" and not sc.master.startswith("local["):
+                raise RuntimeError(
+                    f"SPARK_GRAFT_PIN=reliable on master {sc.master!r}: "
+                    "call sparkContext.setCheckpointDir(...) with a "
+                    "path every executor reaches (HDFS/S3/NFS) first"
+                )
+            sc.setCheckpointDir(scratch_dir("spark_reliable_ckpt_"))
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)

@@ -42,35 +42,51 @@ def _rev():
 # =====================================================================
 
 def q1_pricing_summary(spark, sf_dir):
+    # money as TPC-H's DECIMAL(15,2) on both sides: exact sums that do
+    # not depend on the summation order (the scan split, so the core
+    # count); rounded, then back to DOUBLE for the exact float compare
+    q, price, disc, tax = (
+        F.col(c).cast("decimal(15,2)")
+        for c in ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+    )
+    rev = price * (1 - disc)
     l = _t(spark, sf_dir, "lineitem")
     return (
         l.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(_rev()), 2).alias("sum_disc_price"),
-            F.round(F.sum(_rev() * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
+            F.round(F.sum(q), 2).cast("double").alias("sum_qty"),
+            F.round(F.sum(price), 2).cast("double").alias("sum_base_price"),
+            F.round(F.sum(rev), 2).cast("double").alias("sum_disc_price"),
+            F.round(F.sum(rev * (1 + tax)), 2).cast("double").alias("sum_charge"),
+            F.round(F.avg(q), 4).cast("double").alias("avg_qty"),
+            F.round(F.avg(price), 4).cast("double").alias("avg_price"),
+            F.round(F.avg(disc), 4).cast("double").alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
     )
 
 
 Q1_SQL = """
+WITH l AS (
+    SELECT l_returnflag, l_linestatus,
+           CAST(l_quantity AS DECIMAL(15,2))      AS q,
+           CAST(l_extendedprice AS DECIMAL(15,2)) AS price,
+           CAST(l_discount AS DECIMAL(15,2))      AS disc,
+           CAST(l_tax AS DECIMAL(15,2))           AS tax
+    FROM lineitem
+    WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+)
 SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2)                                       AS sum_qty,
-       round(sum(l_extendedprice), 2)                                  AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2)               AS sum_disc_price,
-       round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-       round(avg(l_quantity), 4)                                       AS avg_qty,
-       round(avg(l_extendedprice), 4)                                  AS avg_price,
-       round(avg(l_discount), 4)                                       AS avg_disc,
+       CAST(round(sum(q), 2) AS DOUBLE)                                AS sum_qty,
+       CAST(round(sum(price), 2) AS DOUBLE)                            AS sum_base_price,
+       CAST(round(sum(price * (1 - disc)), 2) AS DOUBLE)               AS sum_disc_price,
+       CAST(round(sum(price * (1 - disc) * (1 + tax)), 2) AS DOUBLE)   AS sum_charge,
+       CAST(round(avg(q), 4) AS DOUBLE)                                AS avg_qty,
+       CAST(round(avg(price), 4) AS DOUBLE)                            AS avg_price,
+       CAST(round(avg(disc), 4) AS DOUBLE)                             AS avg_disc,
        count(*)                                                        AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+FROM l
 GROUP BY l_returnflag, l_linestatus
 """
 

@@ -80,7 +80,7 @@ because an append is pure file+metadata work:
   the query instead of slipping files under stale names or unchecked
   rows past it). Appends read no existing file, so any other lost race
   is disjoint: the loser re-checks the epoch ledger, re-derives the
-  carried set and re-commits (bounded spins).
+  carried set and re-commits (``_commit_optimistic``, bounded spins).
 - ``abort`` removes the epoch's staged files; task attempts that died
   before messaging leave orphans under ``_stage/`` — never referenced
   by any manifest, removed with the directory.
@@ -119,8 +119,6 @@ from pyspark.sql.types import StructType
 from kinesis_app_spark.operators import versioned as VT
 
 __all__ = ["VersionedTableDataSource", "register"]
-
-_APPEND_MAX_SPINS = 50
 
 
 class VtStageMsg(WriterCommitMessage):
@@ -264,10 +262,11 @@ def _pa_file_stats(path: str, schema: StructType) -> dict:
 
 def _append_staged(conn: dict, messages, batch_id: int | None) -> None:
     """Driver-phase second half (sessionless): promote staged files
-    into data/, stat them, and commit an incremental APPEND manifest —
-    ledger-skipped on epoch replay, refused when the table metadata
-    changed since plan time, spin-retried on any other commit race
-    (appends read nothing, so those are disjoint)."""
+    into data/, stat them, and commit an incremental APPEND manifest
+    through ``_commit_optimistic`` — ledger-skipped on epoch replay,
+    refused when the table metadata changed since plan time, retried on
+    any other commit race (appends read nothing, so those are
+    disjoint)."""
     table_dir = conn["path"]
     staged = [m.path for m in messages if m is not None and m.path]
     try:
@@ -297,47 +296,33 @@ def _append_staged(conn: dict, messages, batch_id: int | None) -> None:
         new_files.sort(key=lambda f: f["path"])
         _stamp_clustered_run(new_files, conn)
         # the epoch commits under the metadata its files were staged
-        # against: the plan-time snapshot, the same for every epoch
+        # against: the plan-time snapshot, the same for every epoch —
+        # checked here before the first attempt, and by the commit loop
+        # (``_first_conflict``) after every lost race
         base_meta = conn["meta"]
-        for _spin in range(_APPEND_MAX_SPINS):
-            latest_m = VT._read_manifest(table_dir, latest)
-            VT._check_protocol(latest_m, table_dir, write=True)
-            if VT._table_meta(latest_m) != base_meta:
-                shutil.rmtree(data_dir, ignore_errors=True)
-                raise VT.VersionConflictError(
-                    "vt_table: the table's metadata (schema, column "
-                    "mapping, constraints or type widening) changed "
-                    "while this write was staged; restart the write "
-                    "against the new table"
-                )
-            manifest = VT._next_manifest(
-                base_meta, "APPEND", new_version,
-                VT.vt_files(table_dir, latest), new_files, [], data_dir,
-                batch_id=None if batch_id is None else int(batch_id),
+        latest_m = VT._read_manifest(table_dir, latest)
+        VT._check_protocol(latest_m, table_dir, write=True)
+        if VT._table_meta(latest_m) != base_meta:
+            shutil.rmtree(data_dir, ignore_errors=True)
+            raise VT.VersionConflictError(
+                "vt_table: the table's metadata (schema, column "
+                "mapping, constraints or type widening) changed "
+                "while this write was staged; restart the write "
+                "against the new table"
             )
-            try:
-                VT._commit(table_dir, new_version, manifest)
-                return
-            except VT.VersionConflictError:
-                # re-check the epoch ledger AFTER every lost race: the
-                # winner may have been a concurrent committer of this
-                # SAME batchId (a zombie query racing its restarted
-                # replacement — the scenario Delta's txn-version check
-                # exists for); re-committing here would double-append
-                # the epoch. The promoted files are unreferenced by any
-                # manifest, so dropping the directory is safe.
-                if batch_id is not None and batch_id in (
-                    VT.vt_committed_batch_ids(table_dir)
-                ):
-                    shutil.rmtree(data_dir, ignore_errors=True)
-                    return
-                latest = VT.vt_latest_version(table_dir)
-                new_version = latest + 1
-        shutil.rmtree(data_dir, ignore_errors=True)
-        raise VT.VersionConflictError(
-            f"vt_table append on {table_dir}: starved by "
-            f"{_APPEND_MAX_SPINS} consecutive commit races"
-        )
+        # appends read no file and no added file can hit them; a lost
+        # race whose winner holds this batchId (a zombie query racing
+        # its restarted replacement) drops the promoted files instead
+        # of double-appending the epoch
+        VT._commit_optimistic(table_dir, "vt_table append", VT._staged(
+            latest, base_meta, set(), data_dir,
+            VT.vt_files(table_dir, latest),
+            lambda carried, v: VT._next_manifest(
+                base_meta, "APPEND", v, carried, new_files, [], data_dir,
+                batch_id=None if batch_id is None else int(batch_id),
+            ),
+            lambda fe: False,
+        ))
     finally:
         for p in staged:
             try:

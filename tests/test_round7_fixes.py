@@ -99,6 +99,44 @@ def test_sink_zombie_same_batchid_does_not_double_append(
     )
 
 
+def test_merge_sink_zombie_same_batchid_does_not_double_apply(
+    spark, tmp_path, monkeypatch
+):
+    """The foreachBatch MERGE sink gets the same ledger re-check: a
+    lost race whose winner already holds this epoch's batchId returns
+    without committing and drops the loser's staged files."""
+    table = str(tmp_path / "t")
+    _mk_table(spark, table, n=4)
+    base_version = VT.vt_latest_version(table)
+    real_commit = VT._commit
+    state = {"raced": False}
+
+    def racing_commit(table_dir, version, manifest, cleanup_dir=None):
+        if not state["raced"] and manifest.get("operation") == "MERGE":
+            state["raced"] = True
+            # zombie epoch: same batch_id, an empty file payload
+            zombie = {**manifest, "add": [], "remove": []}
+            zombie.pop("files", None)
+            real_commit(table_dir, version, zombie)
+        return real_commit(table_dir, version, manifest,
+                           cleanup_dir=cleanup_dir)
+
+    monkeypatch.setattr(VT, "_commit", racing_commit)
+    VT.vt_foreach_batch_merger(spark, table, keys=["k"])(
+        spark.createDataFrame([(1, -1, "U")], "k long, v long, op string"),
+        7,
+    )
+    monkeypatch.setattr(VT, "_commit", real_commit)
+
+    assert VT.vt_latest_version(table) == base_version + 1
+    assert VT.vt_committed_batch_ids(table) == {7}
+    assert VT.vt_read(spark, table).filter("v = -1").count() == 0
+    assert all(
+        d.startswith("v00000_")
+        for d in os.listdir(os.path.join(table, "data"))
+    )
+
+
 # ---------------------------------------------------------------------
 # vt_cdf: null-key rows under component sub-splitting (low)
 # ---------------------------------------------------------------------
@@ -190,7 +228,7 @@ def test_delete_dv_lost_race_removes_sidecar(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(VT, "_commit", losing_commit)
     with pytest.raises(VT.VersionConflictError):
-        VT._delete_dv_once(spark, table, [("k", "=", 3)])
+        VT.vt_delete_dv(spark, table, [("k", "=", 3)])
     monkeypatch.setattr(VT, "_commit", real_commit)
 
     dv_root = os.path.join(table, "_dv")

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 import duckdb
@@ -148,6 +149,70 @@ def test_pin_strategy_plan_shapes(spark, monkeypatch):
     p_none = plan(fn(spark, SF_DIR))
     assert "MapInPandas" in p_none
     assert "ExistingRDD" not in p_none
+
+
+class _FakeContext:
+    """The slice of SparkContext ``pin`` uses under ``reliable``."""
+
+    def __init__(self, master, checkpoint_dir=None):
+        self.master = master
+        self.checkpoint_dir = checkpoint_dir
+
+    def getCheckpointDir(self):  # noqa: N802 - SparkContext's name
+        return self.checkpoint_dir
+
+    def setCheckpointDir(self, path):  # noqa: N802
+        self.checkpoint_dir = path
+
+
+class _FakeFrame:
+    def __init__(self, sc):
+        self.sparkSession = type("S", (), {"sparkContext": sc})()
+        self.checkpointed = False
+
+    def checkpoint(self, eager=False):
+        self.checkpointed = True
+        return self
+
+
+def test_reliable_pin_on_local_master_uses_a_scratch_dir(
+    monkeypatch, tmp_path
+):
+    from kinesis_app_spark.pinning import pin
+
+    monkeypatch.setenv("SPARK_GRAFT_PIN", "reliable")
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    df = _FakeFrame(_FakeContext("local[4]"))
+    assert pin(df) is df and df.checkpointed
+    ckpt = df.sparkSession.sparkContext.checkpoint_dir
+    # a scratch_dir: under the scratch base, removed at process exit
+    assert os.path.dirname(ckpt) == str(tmp_path)
+    assert os.path.basename(ckpt).startswith("spark_reliable_ckpt_")
+
+
+def test_reliable_pin_on_cluster_master_needs_a_checkpoint_dir(
+    monkeypatch
+):
+    from kinesis_app_spark.pinning import pin
+
+    monkeypatch.setenv("SPARK_GRAFT_PIN", "reliable")
+    bare = _FakeFrame(_FakeContext("spark://master:7077"))
+    with pytest.raises(RuntimeError, match="setCheckpointDir"):
+        pin(bare)
+    assert not bare.checkpointed
+    shared = _FakeFrame(
+        _FakeContext("yarn", checkpoint_dir="hdfs:///ckpt")
+    )
+    assert pin(shared).checkpointed
+    assert shared.sparkSession.sparkContext.checkpoint_dir == "hdfs:///ckpt"
+
+
+def test_unknown_pin_strategy_raises(monkeypatch):
+    from kinesis_app_spark.pinning import pin_strategy
+
+    monkeypatch.setenv("SPARK_GRAFT_PIN", "persist_disk")
+    with pytest.raises(ValueError, match="persist_disk"):
+        pin_strategy()
 
 
 # ---------------------------------------------------------------------

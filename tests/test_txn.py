@@ -8,10 +8,12 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kinesis_app_spark.operators import txn as TX
 from kinesis_app_spark.operators import versioned as VT
@@ -181,6 +183,126 @@ def test_inflight_lock_blocks_writers_without_breaking_lease(
         os.remove(TX._lock_path(a))
     # lock gone: the same merge lands
     VT.vt_merge(spark, a, _chg(spark, 0, 5, 1), keys=["k"])
+
+
+def _mk_narrow(spark, path):
+    """A 4-row table whose ``v`` is an int, so every writer below —
+    the widen included — has something to commit."""
+    VT.vt_create(spark.range(4).select(
+        F.col("id").alias("k"), (F.col("id") * 10).cast("int").alias("v"),
+    ), path)
+
+
+def _hold_lock(table, coord):
+    """Plant another transaction's lock with a live 300 s lease."""
+    with open(TX._lock_path(table), "w") as fh:
+        json.dump({"id": "someoneelse", "lease": 300.0,
+                   "decision": os.path.join(coord, "x.decision"),
+                   "ts": time.time()}, fh)
+
+
+def _sink_append(spark, table):
+    from kinesis_app_spark.sources import vt_writer as W
+
+    conn = W._conn({"path": table}, StructType.fromJson(
+        VT._read_manifest(table, VT.vt_latest_version(table))["schema"]
+    ))
+    msg = W._stage_rows(conn, iter([(100, 1000)]))
+    W._append_staged(conn, [msg], None)
+
+
+_LOCKED_WRITERS = {
+    "merge": lambda spark, t: VT.vt_merge(
+        spark, t, spark.createDataFrame(
+            [(1, 11, "U")], "k long, v int, op string"
+        ), keys=["k"],
+    ),
+    "update": lambda spark, t: VT.vt_update(
+        spark, t, [("k", "=", 1)], {"v": "v + 1"}
+    ),
+    "delete_dv": lambda spark, t: VT.vt_delete_dv(
+        spark, t, [("k", "=", 3)]
+    ),
+    "add_constraint": lambda spark, t: VT.vt_add_constraint(
+        spark, t, "v_nonneg", "v >= 0"
+    ),
+    "widen_column": lambda spark, t: VT.vt_widen_column(t, "v", "long"),
+    "sink_append": _sink_append,
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_LOCKED_WRITERS))
+def test_live_lock_is_waited_out_not_spun_against(
+    spark, tmp_path, monkeypatch, writer
+):
+    """A transaction's live lock released while a writer's commit waits
+    at the barrier: the writer enters the barrier once, commits exactly
+    one version after the release, and nothing lands while the lock is
+    held."""
+    table = str(tmp_path / "t")
+    _mk_narrow(spark, table)
+    v0 = VT.vt_latest_version(table)
+    _hold_lock(table, str(tmp_path / "coord"))
+    seen = {"barrier_hits": 0, "tip_at_release": None}
+
+    def release():
+        seen["tip_at_release"] = VT.vt_latest_version(table)
+        os.remove(TX._lock_path(table))
+
+    timer = threading.Timer(0.5, release)
+
+    real_resolve = TX._resolve_table
+
+    def barrier(table_dir):
+        if os.path.exists(TX._lock_path(table_dir)):
+            seen["barrier_hits"] += 1
+            if seen["barrier_hits"] == 1:
+                timer.start()
+        return real_resolve(table_dir)
+
+    monkeypatch.setattr(TX, "_resolve_table", barrier)
+    _LOCKED_WRITERS[writer](spark, table)
+    timer.join(timeout=5)
+    assert not timer.is_alive()
+    assert seen["barrier_hits"] == 1
+    assert seen["tip_at_release"] == v0
+    assert VT.vt_latest_version(table) == v0 + 1
+
+
+@pytest.mark.parametrize("writer,planner", [
+    ("delete_dv", "_plan_delete_dv"),
+    ("add_constraint", "vt_read"),
+])
+def test_never_released_lock_fails_once_with_the_lock_error(
+    spark, tmp_path, monkeypatch, writer, planner
+):
+    """Under a lock that is never released, a re-planning writer scans
+    (or validates) once, waits out the barrier and raises the lock
+    error — not a starvation error after re-planning 50 times — and
+    leaves no staged files behind."""
+    table = str(tmp_path / "t")
+    _mk_narrow(spark, table)
+    v0 = VT.vt_latest_version(table)
+    _hold_lock(table, str(tmp_path / "coord"))
+    calls = []
+    real_plan = getattr(VT, planner)
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real_plan(*args, **kwargs)
+
+    monkeypatch.setattr(VT, planner, counting)
+    t0 = time.monotonic()
+    try:
+        with pytest.raises(VT.TableLockedError, match="locked"):
+            _LOCKED_WRITERS[writer](spark, table)
+    finally:
+        os.remove(TX._lock_path(table))
+    assert time.monotonic() - t0 >= 2.0  # the barrier waited it out
+    assert len(calls) == 1
+    assert VT.vt_latest_version(table) == v0
+    dv_root = os.path.join(table, "_dv")
+    assert not os.path.isdir(dv_root) or os.listdir(dv_root) == []
 
 
 def test_finalize_conflict_aborts_cleanly(spark, tmp_path):
