@@ -3,20 +3,21 @@ DataFrame operator (no table-format dependency).
 
 The reference's world is append-only streams; real pipelines also need to
 APPLY a change batch (upserts + deletes) onto a snapshot — Delta/Iceberg
-``MERGE INTO`` — and the relational core of that statement is expressible
-as one full-outer join:
+``MERGE INTO`` — and the relational core of that statement is an
+anti-join plus a union:
 
-    snapshot FULL OUTER JOIN changes ON key
-      match + op=U  -> take change row      (update)
-      match + op=D  -> drop                 (delete)
-      match + no-op -> keep snapshot row
-      no-match + U  -> take change row      (insert)
+    snapshot LEFT ANTI JOIN changes ON key   -- rows no change touches
+    UNION ALL
+    changes WHERE op IN ('U', 'I')           -- updates and inserts
 
-One shuffle per side on the key; at 100 TB the snapshot side is the big
-one and the change batch is typically small — AQE turns the join into a
-broadcast automatically, so applying a daily change-set costs one snapshot
-scan. Latest-change-wins within the batch is resolved first with a
-max-by window (the standard CDC compaction step).
+A delete ('D') removes its key through the anti-join and adds nothing.
+Null keys never match, so a null-keyed snapshot row is kept and a
+null-keyed upsert is inserted. The anti-join reads only the change
+batch's key columns, so a small batch is a broadcast hash join — the
+snapshot is scanned once, filtered and unioned, with no shuffle of
+either side (a full outer join, by contrast, can never be broadcast).
+Latest-change-wins within the batch is resolved first with a max-by
+window (the standard CDC compaction step).
 """
 
 from __future__ import annotations
@@ -63,37 +64,35 @@ def apply_changes(
     """Apply a change batch to a snapshot; returns the new snapshot.
 
     ``changes`` carries the snapshot's columns plus ``op_col`` with 'U'
-    (upsert), 'I' (insert — same column semantics as 'U'; accepted so a
-    CDC feed's insert rows never silently degrade), or 'D' (delete).
+    (upsert), 'I' (insert — same column semantics as 'U', so a CDC
+    feed's insert rows never silently degrade), or 'D' (delete). Any
+    other op, null included, fails the query that evaluates the result
+    — a bad op row never silently keeps, drops or nulls a row.
     With ``seq_col`` set, multiple changes per key compact to the
     highest sequence first (latest wins, ties broken by op ascending —
     'D' < 'I' < 'U' — so a same-seq delete wins deterministically).
-    Round-8 note: 'I' used to fall outside the contract and silently
-    took the SNAPSHOT side's values — null for a genuinely new key, a
-    hard-to-spot corruption for the one op code every CDC source emits.
+    Without it every 'U'/'I' row of a key is written.
     """
     keys = list(keys)
+    cols = keys + [c for c in snapshot.columns if c not in keys]
+    op = F.col(op_col)
+    bad_op = F.raise_error(F.concat(
+        F.lit(f"apply_changes: {op_col} must be one of U, I, D; got "),
+        F.coalesce(op.cast("string"), F.lit("null")),
+    ))
+    rows = changes.withColumn(
+        op_col, F.when(op.isin("U", "I", "D"), op).otherwise(bad_op)
+    )
     if seq_col is not None:
         w = Window.partitionBy(*keys).orderBy(
             F.desc(seq_col), F.asc(op_col)  # 'D' < 'U': delete wins ties
         )
-        changes = (
-            changes.withColumn("__rn", F.row_number().over(w))
+        rows = (
+            rows.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-    value_cols = [c for c in snapshot.columns if c not in keys]
-    s = snapshot.alias("s")
-    c = changes.alias("c")
-    joined = s.join(c, keys, "full_outer")
-    keep = F.col(f"c.{op_col}").isNull() | (F.col(f"c.{op_col}") != "D")
-    take_change = F.col(f"c.{op_col}").isin("U", "I")
-    return joined.filter(keep).select(
-        *[F.col(k) for k in keys],
-        *[
-            F.when(take_change, F.col(f"c.{v}"))
-            .otherwise(F.col(f"s.{v}"))
-            .alias(v)
-            for v in value_cols
-        ],
+    kept = snapshot.join(changes.select(*keys), keys, "left_anti")
+    return kept.select(*cols).unionByName(
+        rows.filter(F.col(op_col).isin("U", "I")).select(*cols)
     )

@@ -16,11 +16,12 @@ engine-expressible without it:
   ever rewritten in place, so any historical version stays readable
   (time travel);
 - a version is COMMITTED by creating ``<table>/_manifest/<NNNNN>.json``
-  with O_CREAT|O_EXCL — the same put-if-absent primitive Delta's
+  by hard-linking a fully written temp file (no reader sees it
+  half-written) — the same put-if-absent primitive Delta's
   commit protocol needs from its log store. Two writers racing to
   commit the same version: exactly one create succeeds, the loser gets
   ``VersionConflictError`` and must rebase (re-read, re-merge, retry);
-- MERGE is the engine's own ``cdc.apply_changes`` (full-outer-join
+- MERGE is the engine's own ``cdc.apply_changes`` (anti-join + union
   upsert/delete with latest-wins compaction) applied copy-on-write to
   ONLY the files whose per-file key ranges intersect the change
   batch's key range; every other file is carried forward BY REFERENCE
@@ -28,9 +29,10 @@ engine-expressible without it:
   the Delta/Iceberg write path, and the difference between an hourly
   merge writing a few touched files versus rewriting 100 TB.
 
-Scale notes: the pruned merge reads the change batch once (a tiny agg
-for its key range), rewrites only intersecting files through one
-key-shuffled full-outer join (AQE broadcasts small change batches),
+Scale notes: the pruned merge reads the change batch once (a bounded
+Arrow collect that also yields its key set), rewrites only intersecting
+files through an anti-join against the batch's keys (a broadcast, no
+shuffle, for a batch held on the driver),
 and the commit is O(1) metadata. Per-file stats are collected from the
 newly written files by one column-pruned scan (the job Delta does
 inline during its write) and also give ``vt_read`` the row count for
@@ -56,6 +58,7 @@ import time
 import uuid
 from collections.abc import Sequence
 
+from pyspark.errors import PySparkTypeError, UnsupportedOperationException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -609,9 +612,15 @@ def _normalize_path(p: str) -> str:
 
 
 def _write_data(df: DataFrame, table_dir: str, version: int) -> str:
+    """Write ``df`` as a new staged file set; a failed write (a bad
+    merge op, a task error) leaves no staged directory behind."""
     token = uuid.uuid4().hex[:8]
     data_dir = os.path.join(table_dir, "data", f"v{version:05d}_{token}")
-    df.write.parquet(data_dir)
+    try:
+        df.write.parquet(data_dir)
+    except BaseException:
+        shutil.rmtree(data_dir, ignore_errors=True)
+        raise
     return data_dir
 
 
@@ -721,44 +730,46 @@ def _write_files_with_stats(
     return data_dir, files
 
 
-#: key-SET pruning bound: up to this many distinct change keys are
-#: collected to the driver (bounded memory) and tested against each
-#: file's [min,max]; above it the merge falls back to the interval test
-#: (one global [min,max] per key column). The interval test degrades to
-#: a full rewrite when a batch touches both key extremes — the common
-#: shape of real CDC batches — so the key-set path is the default and
-#: the interval path the documented large-batch fallback.
+#: the change batch a merge holds on the driver: up to this many ROWS
+#: are collected once (bounded memory), re-wrapped as a local relation
+#: and give the key set each file's [min,max] is tested against; a
+#: larger batch falls back to the interval test (one global [min,max]
+#: per key column). The interval test degrades to a full rewrite when a
+#: batch touches both key extremes — the common shape of real CDC
+#: batches — so the key-set path is the default and the interval path
+#: the documented large-batch fallback.
 _PRUNE_MAX_KEYS = 100_000
 
 
-def _change_key_sets(
-    changes: DataFrame, keys: Sequence[str], max_keys: int = _PRUNE_MAX_KEYS
-) -> dict | None:
-    """The change batch's DISTINCT key values per stat-able key column
-    — Delta's key-level file pruning. Returns ``{"n": distinct-tuple
-    count, "cols": {col: (sorted values, has_null)}}``, or None when the
-    batch exceeds ``max_keys`` distinct tuples or no key column is
-    stat-able (callers then fall back to interval pruning). The
-    ``limit(max_keys + 1)`` bounds the driver collect BY CONSTRUCTION —
-    an oversized batch never materializes driver-side."""
-    scols = [k for k in keys if k in _stats_cols(changes.schema)]
-    if not scols:
-        return None
-    rows = changes.select(*scols).distinct().limit(max_keys + 1).collect()
-    if len(rows) > max_keys:
+def _local_change_batch(
+    spark: SparkSession, changes: DataFrame, keys: Sequence[str],
+    max_rows: int = _PRUNE_MAX_KEYS,
+) -> tuple[DataFrame, dict] | None:
+    """Read the change batch ONCE: collect it to the driver as Arrow
+    (``limit(max_rows + 1)`` bounds the collect by construction — one
+    job, no join) and re-wrap it as a local relation, so the anti-join's
+    broadcast key side and the written change rows read driver memory,
+    not the source again. Returns ``(local batch, key sets)`` — key sets
+    are Delta's key-level file pruning, ``{"n": row count, "cols": {col:
+    (sorted values, has_null)}}`` per stat-able key column — or None
+    when the batch holds more than ``max_rows`` rows or a type Arrow
+    cannot carry (callers then fall back to interval pruning over
+    ``changes`` itself)."""
+    try:
+        tbl = changes.limit(max_rows + 1).toArrow()
+    except (PySparkTypeError, UnsupportedOperationException):
+        return None  # raised from the schema, before any job runs
+    if tbl.num_rows > max_rows:
         return None
     cols = {}
-    for c in scols:
-        vals = []
-        has_null = False
-        for r in rows:
-            jv = _json_stat(r[c])
-            if jv is None:
-                has_null = has_null or r[c] is None
-            else:
-                vals.append(jv)
-        cols[c] = (sorted(set(vals)), has_null)
-    return {"n": len(rows), "cols": cols}
+    for c in (k for k in keys if k in _stats_cols(changes.schema)):
+        vals = tbl.column(c).to_pylist()
+        cols[c] = (
+            sorted({_json_stat(v) for v in vals if v is not None}),
+            None in vals,
+        )
+    local = spark.createDataFrame(tbl, schema=changes.schema)
+    return local, {"n": tbl.num_rows, "cols": cols}
 
 
 def _file_hits_key_set(file_entry: dict, key_cols: dict) -> bool:
@@ -882,7 +893,7 @@ def _commit(table_dir: str, version: int, manifest: dict,
     # waited out (TableLockedError after the wait), a decided or
     # lease-expired one is resolved in place (operators/txn.py).
     # Fast path: one os.path.exists.
-    from kinesis_app_spark.operators.txn import _resolve_table
+    from kinesis_app_spark.operators.txn import _atomic_create, _resolve_table
 
     try:
         _resolve_table(table_dir)
@@ -890,17 +901,12 @@ def _commit(table_dir: str, version: int, manifest: dict,
         if cleanup_dir:
             shutil.rmtree(cleanup_dir, ignore_errors=True)
         raise
-    path = _manifest_path(table_dir, version)
-    try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
+    if not _atomic_create(_manifest_path(table_dir, version), manifest):
         if cleanup_dir:
             shutil.rmtree(cleanup_dir, ignore_errors=True)
         raise VersionConflictError(
             f"version {version} of {table_dir} was committed concurrently"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        json.dump(manifest, fh)
+        )
     _advance_last_pointer(table_dir, version)
 
 
@@ -1296,11 +1302,20 @@ def vt_merge(
     the merge plans to take; the final number may shift if disjoint
     writers land before the transaction commits.
 
+    The change batch is evaluated ONCE: up to ``max_prune_keys`` ROWS
+    are collected to the driver as Arrow and re-wrapped as a local
+    relation, which yields the key set and feeds the write, so a small
+    merge is three Spark jobs: that collect, the broadcast of its keys
+    and one scan, anti-join and union write. A larger batch (or a type
+    Arrow cannot carry) keeps the source frame, is pruned by the coarser
+    global-interval test and is evaluated again by the write — the
+    documented fallback. Every ``op_col`` value must be
+    'U', 'I' or 'D' (``cdc.apply_changes``); any other, null included,
+    fails the merge before a version is committed.
+
     Reads the latest manifest, REWRITES ONLY the files whose per-file
-    key min/max contains some ACTUAL change-batch key (key-set pruning;
-    batches beyond ``max_prune_keys`` distinct keys use the coarser
-    global-interval test instead — the documented fallback). Every
-    other file is carried into the new manifest by reference —
+    key min/max contains some ACTUAL change-batch key (key-set pruning).
+    Every other file is carried into the new manifest by reference —
     byte-identical on disk — and the next version is committed. At 100
     TB this is the difference between an hourly merge writing a few
     files and a full-table rewrite per commit — including for the
@@ -1368,14 +1383,13 @@ def vt_merge(
         for f in extra:
             mapping[f.name] = f"col_{uuid.uuid4().hex[:8]}"
 
-    # file pruning (round 6: key-SET, not interval): collect the change
-    # batch's distinct keys (bounded by _PRUNE_MAX_KEYS) and keep a file
-    # only if some ACTUAL key falls inside its [min,max] — a batch
-    # touching both key extremes of a clustered table rewrites two
-    # files, where the round-5 interval test intersected every file and
-    # silently degraded to a full-snapshot rewrite. Oversized batches
-    # fall back to the interval test (one tiny agg). No data is read
-    # for the carried-forward set either way.
+    # file pruning (key-SET, not interval): keep a file only if some
+    # ACTUAL change key falls inside its [min,max] — a batch touching
+    # both key extremes of a clustered table rewrites two files, where
+    # an interval test intersects every file and degrades to a
+    # full-snapshot rewrite. Oversized batches fall back to the interval
+    # test (one tiny agg). No data is read for the carried-forward set
+    # either way.
     parent_files = vt_files(table_dir, base)
 
     # pruning statistics are computed over the (logical) change batch
@@ -1385,14 +1399,16 @@ def vt_merge(
         return mapping.get(c, c) if mapping else c
 
     pkeys = [_p(k) for k in keys]
-    key_sets = _change_key_sets(changes, keys, max_keys=max_prune_keys)
-    if key_sets is not None:
+    local = _local_change_batch(spark, changes, keys, max_prune_keys)
+    key_sets = None
+    if local is not None:
+        changes, key_sets = local
         pkey_cols = {_p(c): v for c, v in key_sets["cols"].items()}
         n_changes = int(key_sets["n"])
         touched = [
             f for f in parent_files if _file_hits_key_set(f, pkey_cols)
         ] if n_changes else []
-    else:  # > max_prune_keys distinct keys: interval fallback
+    else:  # > max_prune_keys rows: interval fallback
         n_changes, chg_stats = _change_key_stats(changes, keys)
         chg_stats = {_p(c): v for c, v in chg_stats.items()}
         touched = [
@@ -1407,9 +1423,9 @@ def vt_merge(
     )
     new_version = base + 1
     # metadata row bound: the merge output holds at most the touched
-    # files' live rows plus one insert per (distinct) change key — both
-    # known WITHOUT reading data, so provably-tiny merges (the per-epoch
-    # streaming shape) take the fused single-job write
+    # files' live rows plus one row per change — both known WITHOUT
+    # reading data, so provably-tiny merges (the per-epoch streaming
+    # shape) take the fused single-job write
     row_bound = _live_rows(touched) + n_changes
     data_dir, new_files = _write_files_with_stats(
         merged, table_dir, new_version, mapping, row_bound=row_bound
@@ -3521,6 +3537,10 @@ def vt_merge_retry(
     detection over intervening commits' file deltas), so a rebase here
     means the writers genuinely overlapped — the retry re-executes the
     join against the winner's rows, which is the only correct answer.
+    A ``TableLockedError`` is raised at once, after ONE merge: the
+    commit barrier has already waited the transaction lock out, nothing
+    about the data changed, and re-running the merge would only repeat
+    the same wait.
     Raises the final ``VersionConflictError`` after ``max_attempts`` —
     livelock under extreme contention is the caller's signal to
     serialize writers."""
@@ -3532,6 +3552,8 @@ def vt_merge_retry(
                 expected_version=vt_latest_version(table_dir),
                 **merge_kwargs,
             )
+        except TableLockedError:
+            raise
         except VersionConflictError as e:
             last_err = e
     raise last_err

@@ -86,8 +86,8 @@ def test_operators_tolerate_empty_inputs(spark):
 
 
 def test_apply_changes_plan_has_no_nested_loop(spark):
-    """The merge is a keyed full-outer join: hash/sort-merge only, never a
-    nested-loop (which would be quadratic in snapshot x changes)."""
+    """The merge is a keyed anti-join plus a union: hash/sort-merge only,
+    never a nested-loop (which would be quadratic in snapshot x changes)."""
     snap = spark.range(0, 10_000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )

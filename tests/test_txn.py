@@ -305,6 +305,36 @@ def test_never_released_lock_fails_once_with_the_lock_error(
     assert not os.path.isdir(dv_root) or os.listdir(dv_root) == []
 
 
+def test_merge_retry_raises_the_lock_error_after_one_merge(
+    spark, tmp_path, monkeypatch
+):
+    """Under a lock that is never released, ``vt_merge_retry`` runs the
+    merge once and raises ``TableLockedError``: the barrier already
+    waited the lock out, so re-running the join, the file writes and the
+    stats could only repeat the same wait."""
+    table = str(tmp_path / "t")
+    _mk_narrow(spark, table)
+    v0 = VT.vt_latest_version(table)
+    _hold_lock(table, str(tmp_path / "coord"))
+    calls = []
+    real_merge = VT.vt_merge
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real_merge(*args, **kwargs)
+
+    monkeypatch.setattr(VT, "vt_merge", counting)
+    chg = spark.createDataFrame([(1, 11, "U")], "k long, v int, op string")
+    try:
+        with pytest.raises(VT.TableLockedError, match="locked"):
+            VT.vt_merge_retry(spark, table, chg, keys=["k"])
+    finally:
+        os.remove(TX._lock_path(table))
+    assert len(calls) == 1
+    assert VT.vt_latest_version(table) == v0
+    assert len(os.listdir(os.path.join(table, "data"))) == 1
+
+
 def test_finalize_conflict_aborts_cleanly(spark, tmp_path):
     """An OVERLAPPING single-table commit that lands between staging
     and finalize must abort the transaction — and the interloper's
