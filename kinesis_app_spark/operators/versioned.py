@@ -19,8 +19,9 @@ engine-expressible without it:
   by hard-linking a fully written temp file (no reader sees it
   half-written) — the same put-if-absent primitive Delta's
   commit protocol needs from its log store. Two writers racing to
-  commit the same version: exactly one create succeeds, the loser gets
-  ``VersionConflictError`` and must rebase (re-read, re-merge, retry);
+  commit the same version: exactly one create succeeds, the loser
+  co-commits past a disjoint winner or re-plans against it
+  (``_commit_optimistic``, the one commit loop);
 - MERGE is the engine's own ``cdc.apply_changes`` (anti-join + union
   upsert/delete with latest-wins compaction) applied copy-on-write to
   ONLY the files whose per-file key ranges intersect the change
@@ -1320,9 +1321,10 @@ def vt_merge(
     TB this is the difference between an hourly merge writing a few
     files and a full-table rewrite per commit — including for the
     common CDC shape where one batch touches scattered keys across the
-    whole key domain. ``expected_version`` is the version
-    this writer based its changes on — the merge PLANS against that
-    snapshot, and commits through Delta-style conflict detection
+    whole key domain.
+
+    ``expected_version`` pins the version the merge first PLANS
+    against. Its commit goes through Delta-style conflict detection
     (round 6): if other commits landed in between, each intervening
     commit's file delta (``_commit_delta``) is checked against this
     merge's read set — compatible iff no intervening commit REMOVED a
@@ -1332,8 +1334,12 @@ def vt_merge(
     writers (the common multi-writer shape: different key ranges of the
     same table) then BOTH commit, the loser without re-executing its
     join — it re-derives its carried set from the winner's manifest and
-    takes the next version. Overlap raises ``VersionConflictError``
-    (the staged files are cleaned up) and ``vt_merge_retry`` rebases.
+    takes the next version. On overlap the staged files are removed and
+    the merge RE-PLANS at the latest version inside
+    ``_commit_optimistic`` (the driver-held batch is reused; the
+    over-bound path evaluates ``changes`` again, so batches must be
+    deterministic): overlapping merges commit the table the serial
+    order gives. Under ``txn`` an overlap still aborts at finalize.
 
     ``merge_schema=True`` is Delta's schema-evolution-on-MERGE: columns
     present in ``changes`` but not in the snapshot are ADDED (null for
@@ -1351,122 +1357,126 @@ def vt_merge(
     runs against the files already written, not by re-executing the
     plan.
     """
+    base = _plan_base(table_dir, expected_version)
+    # the once-per-call half: read the change batch (or its key
+    # intervals, over the row bound); every plan below reuses it
+    local = _local_change_batch(spark, changes, keys, max_prune_keys)
+    if local is not None:
+        changes, key_sets = local
+        n_changes = int(key_sets["n"])
+    else:  # > max_prune_keys rows: interval fallback
+        n_changes, chg_stats = _change_key_stats(changes, keys)
+
+    def plan(version: int) -> dict:
+        manifest = _read_manifest(table_dir, version)
+        _check_protocol(manifest, table_dir, write=True)
+        schema = _manifest_schema(manifest, table_dir)
+        reserved = {op_col, seq_col}
+        extra = [
+            f for f in changes.schema.fields
+            if f.name not in schema.names and f.name not in reserved
+        ]
+        if extra and not merge_schema:
+            raise ValueError(
+                f"vt_merge: changes carry new columns "
+                f"{[f.name for f in extra]}; pass merge_schema=True to "
+                "evolve the table schema (refusing to silently drop them)"
+            )
+        evolved = StructType(list(schema.fields) + list(extra))
+        mapping = _col_mapping(manifest)
+        if mapping is not None:
+            # columns added after mapping activation get FRESH physical
+            # names: re-adding a dropped column's logical name must
+            # never resurrect the old physical data still in the files
+            for f in extra:
+                mapping[f.name] = f"col_{uuid.uuid4().hex[:8]}"
+
+        # the change batch's key statistics are logical; per-file stats
+        # are PHYSICAL — translate through THIS version's mapping
+        def _p(c):
+            return mapping.get(c, c) if mapping else c
+
+        # file pruning (key-SET, not interval): keep a file only if some
+        # ACTUAL change key falls inside its [min,max] — a batch
+        # touching both key extremes of a clustered table rewrites two
+        # files, where an interval test intersects every file and
+        # degrades to a full-snapshot rewrite. The same test decides
+        # whether a concurrently ADDED file conflicts.
+        if not n_changes:
+            def hits(fe: dict) -> bool:
+                return False
+        elif local is not None:
+            pkey_cols = {_p(c): v for c, v in key_sets["cols"].items()}
+
+            def hits(fe: dict) -> bool:
+                return _file_hits_key_set(fe, pkey_cols)
+        else:
+            pstats = {_p(c): v for c, v in chg_stats.items()}
+            pkeys = [_p(k) for k in keys]
+
+            def hits(fe: dict) -> bool:
+                return _file_intersects(fe, pstats, pkeys)
+
+        parent_files = vt_files(table_dir, version)
+        touched = [f for f in parent_files if hits(f)]
+        t_paths = {f["path"] for f in touched}
+        snapshot = _read_snapshot_entries(spark, touched, evolved, mapping)
+        merged = apply_changes(
+            snapshot, changes, keys=keys, op_col=op_col, seq_col=seq_col
+        )
+        # metadata row bound: the merge output holds at most the touched
+        # files' live rows plus one row per change — both known WITHOUT
+        # reading data, so provably-tiny merges (the per-epoch streaming
+        # shape) take the fused single-job write
+        data_dir, new_files = _write_files_with_stats(
+            merged, table_dir, version + 1, mapping,
+            row_bound=_live_rows(touched) + n_changes,
+        )
+        # validate STORED constraints + the per-call CHECK from the
+        # files already written: the merge join ran exactly once (in the
+        # write); a violation unstages and aborts
+        _validate_written(
+            spark, new_files, evolved, mapping, _table_constraints(manifest),
+            check, data_dir, "vt_merge",
+        )
+        base_meta = _table_meta(manifest)
+        meta = {
+            **base_meta, "schema": evolved.jsonValue(),
+            "column_mapping": mapping,
+        }
+
+        def mk_manifest(carried_now: list[dict], v: int) -> dict:
+            # batch_id: the streaming epoch ledger — foreachBatch
+            # idempotence (Delta's txnAppId/txnVersion discipline): a
+            # replayed epoch finds its batch_id already committed, skips
+            return _next_manifest(
+                meta, "MERGE", v, carried_now, new_files, t_paths,
+                data_dir, batch_id=None if batch_id is None else int(batch_id),
+            )
+
+        return _staged(
+            version, base_meta, t_paths, data_dir, parent_files,
+            mk_manifest, hits,
+        )
+
+    return _stage_or_commit(txn, table_dir, "vt_merge", plan(base), plan)
+
+
+def _plan_base(table_dir: str, expected_version: int | None) -> int:
+    """The version a writer first plans against: ``expected_version``
+    when the caller pins one, else the latest. A missing table raises
+    ``FileNotFoundError``, a version past the latest
+    ``VersionConflictError``."""
     latest = vt_latest_version(table_dir)
     if latest < 0:
         raise FileNotFoundError(f"table {table_dir} does not exist")
-    base = latest if expected_version is None else expected_version
-    if base > latest:
+    if expected_version is None:
+        return latest
+    if expected_version > latest:
         raise VersionConflictError(
             f"expected version {expected_version}, table is at {latest}"
         )
-    manifest = _read_manifest(table_dir, base)
-    _check_protocol(manifest, table_dir, write=True)
-    schema = _manifest_schema(manifest, table_dir)
-
-    reserved = {op_col, seq_col}
-    extra = [
-        f for f in changes.schema.fields
-        if f.name not in schema.names and f.name not in reserved
-    ]
-    if extra and not merge_schema:
-        raise ValueError(
-            f"vt_merge: changes carry new columns "
-            f"{[f.name for f in extra]}; pass merge_schema=True to evolve "
-            "the table schema (refusing to silently drop them)"
-        )
-    evolved = StructType(list(schema.fields) + list(extra))
-    mapping = _col_mapping(manifest)
-    if mapping is not None:
-        # columns added after mapping activation get FRESH physical
-        # names: re-adding a dropped column's logical name must never
-        # resurrect the old physical data still sitting in the files
-        for f in extra:
-            mapping[f.name] = f"col_{uuid.uuid4().hex[:8]}"
-
-    # file pruning (key-SET, not interval): keep a file only if some
-    # ACTUAL change key falls inside its [min,max] — a batch touching
-    # both key extremes of a clustered table rewrites two files, where
-    # an interval test intersects every file and degrades to a
-    # full-snapshot rewrite. Oversized batches fall back to the interval
-    # test (one tiny agg). No data is read for the carried-forward set
-    # either way.
-    parent_files = vt_files(table_dir, base)
-
-    # pruning statistics are computed over the (logical) change batch
-    # but tested against PHYSICAL per-file stats — translate the column
-    # names once at this boundary
-    def _p(c):
-        return mapping.get(c, c) if mapping else c
-
-    pkeys = [_p(k) for k in keys]
-    local = _local_change_batch(spark, changes, keys, max_prune_keys)
-    key_sets = None
-    if local is not None:
-        changes, key_sets = local
-        pkey_cols = {_p(c): v for c, v in key_sets["cols"].items()}
-        n_changes = int(key_sets["n"])
-        touched = [
-            f for f in parent_files if _file_hits_key_set(f, pkey_cols)
-        ] if n_changes else []
-    else:  # > max_prune_keys rows: interval fallback
-        n_changes, chg_stats = _change_key_stats(changes, keys)
-        chg_stats = {_p(c): v for c, v in chg_stats.items()}
-        touched = [
-            f for f in parent_files
-            if _file_intersects(f, chg_stats, pkeys)
-        ] if n_changes else []
-    t_paths = {f["path"] for f in touched}
-    snapshot = _read_snapshot_entries(spark, touched, evolved, mapping)
-
-    merged = apply_changes(
-        snapshot, changes, keys=keys, op_col=op_col, seq_col=seq_col
-    )
-    new_version = base + 1
-    # metadata row bound: the merge output holds at most the touched
-    # files' live rows plus one row per change — both known WITHOUT
-    # reading data, so provably-tiny merges (the per-epoch streaming
-    # shape) take the fused single-job write
-    row_bound = _live_rows(touched) + n_changes
-    data_dir, new_files = _write_files_with_stats(
-        merged, table_dir, new_version, mapping, row_bound=row_bound
-    )
-    # validate STORED constraints + the per-call CHECK from the files
-    # already written: the merge join ran exactly once (in the write);
-    # a violation unstages and aborts (files are physical; the
-    # predicates speak logical)
-    constraints = _table_constraints(manifest)
-    _validate_written(
-        spark, new_files, evolved, mapping, constraints, check,
-        data_dir, "vt_merge",
-    )
-    base_meta = _table_meta(manifest)
-    meta = {
-        **base_meta, "schema": evolved.jsonValue(), "column_mapping": mapping,
-    }
-
-    def _mk_manifest(carried_now: list[dict], version: int) -> dict:
-        # batch_id: the streaming epoch ledger — foreachBatch idempotence
-        # (Delta's txnAppId/txnVersion discipline): a replayed epoch
-        # finds its batch_id already committed and skips
-        return _next_manifest(
-            meta, "MERGE", version, carried_now, new_files, t_paths,
-            data_dir, batch_id=None if batch_id is None else int(batch_id),
-        )
-
-    def _added_file_hits(fe: dict) -> bool:
-        """Could a concurrently ADDED file contain a row matching one of
-        this merge's change keys? Uses whichever pruning statistic this
-        merge computed (key set, else interval)."""
-        if not n_changes:
-            return False
-        if key_sets is not None:
-            return _file_hits_key_set(fe, pkey_cols)
-        return _file_intersects(fe, chg_stats, pkeys)
-
-    return _stage_or_commit(txn, table_dir, "vt_merge", _staged(
-        base, base_meta, t_paths, data_dir, parent_files, _mk_manifest,
-        _added_file_hits,
-    ))
+    return expected_version
 
 
 def _staged(base: int, base_meta: dict, t_paths: set[str],
@@ -1508,13 +1518,16 @@ def _commit_optimistic(
     race, a winner holding this commit's ``batch_id`` (a replayed
     epoch) ends it without committing; a winner ``_first_conflict``
     finds disjoint is co-committed with (carried files re-derived, no
-    work re-run); a conflict removes the staged files and either
-    re-plans through ``replan(latest)`` (cheap, idempotent planning:
-    DDL, DELETE_DV; None = nothing left to commit) or raises for
-    ``vt_merge_retry``. A live transaction lock is not a race:
-    ``_commit``'s barrier waits it out, and its ``TableLockedError``
-    propagates at once. All attempts share ``_COMMIT_MAX_SPINS``, so
-    starvation surfaces instead of hanging."""
+    work re-run); a conflict removes the staged files and re-plans
+    through ``replan(latest)`` — every data writer (merge, predicate
+    DML, DELETE_DV) and DDL passes one, so the commit lands what the
+    serial order gives (None = nothing left to commit). Without a
+    ``replan`` (OPTIMIZE, CLUSTER, COMPACT: maintenance its caller
+    re-runs) the conflict raises. A live transaction lock is not a
+    race: ``_commit``'s barrier waits it out, and its
+    ``TableLockedError`` propagates at once, with no re-plan. All
+    attempts share ``_COMMIT_MAX_SPINS``, so starvation surfaces
+    instead of hanging."""
 
     def drop_staged():
         if staged["data_dir"]:
@@ -1778,9 +1791,7 @@ def vt_optimize(
     clustering). Either way the per-file stats land in the manifest and
     old versions stay readable — OPTIMIZE is just another immutable
     file set."""
-    base = vt_latest_version(table_dir)
-    if base < 0:
-        raise FileNotFoundError(f"table {table_dir} does not exist")
+    base = _plan_base(table_dir, None)
     manifest = _read_manifest(table_dir, base)
     _check_protocol(manifest, table_dir, write=True)
     mapping = _col_mapping(manifest)
@@ -1857,13 +1868,12 @@ def vt_cluster_incremental(
 
     Commits through the shared disjoint-commit conflict resolution with
     an always-false added-file test (layout never conflicts with
-    content): concurrent merges on other files co-commit; only a commit
-    that removed one of the debt files forces a retry. Returns the new
-    version, or the current latest when there is no debt."""
-    latest = vt_latest_version(table_dir)
-    if latest < 0:
-        raise FileNotFoundError(f"table {table_dir} does not exist")
-    base = latest if expected_version is None else expected_version
+    content): concurrent merges on other files co-commit; a commit that
+    removed one of the debt files, or changed the table metadata, makes
+    it raise ``VersionConflictError`` (the caller re-runs it; there is
+    no re-plan). Returns the new version, or the current latest when
+    there is no debt."""
+    base = _plan_base(table_dir, expected_version)
     manifest = _read_manifest(table_dir, base)
     _check_protocol(manifest, table_dir, write=True)
     parent_files = vt_files(table_dir, base)
@@ -1872,7 +1882,7 @@ def vt_cluster_incremental(
     pcols = [(mapping or {}).get(c, c) for c in cols]
     debt = [f for f in parent_files if f.get("clustered") != pcols]
     if not debt:
-        return latest
+        return vt_latest_version(table_dir)
     t_paths = {f["path"] for f in debt}
     schema = _manifest_schema(manifest, table_dir)
     df = _read_snapshot_entries(spark, debt, schema, mapping)
@@ -1904,7 +1914,7 @@ def vt_cluster_incremental(
     base_meta = _table_meta(manifest)
     # layout never conflicts with content: only a commit that removed
     # one of the debt files (the removed-read-file check) or changed the
-    # table metadata forces a retry — the r6 co-commit rules
+    # table metadata conflicts — the r6 co-commit rules
     op_name = "vt_cluster_incremental"
     return _stage_or_commit(txn, table_dir, op_name, _staged(
         base, base_meta, t_paths, data_dir, parent_files,
@@ -1936,20 +1946,17 @@ def vt_compact(
     an always-false added-file test: a concurrent MERGE that added or
     rewrote OTHER files co-commits with the compaction (the compaction
     re-derives its carried set from the winner), and only a commit that
-    removed one of the small files being compacted forces a retry —
-    exactly Delta's OPTIMIZE-vs-writer concurrency story. Returns the
-    new version (or the current latest when <2 small files exist —
-    nothing to do, no commit)."""
-    latest = vt_latest_version(table_dir)
-    if latest < 0:
-        raise FileNotFoundError(f"table {table_dir} does not exist")
-    base = latest if expected_version is None else expected_version
+    removed one of the small files being compacted raises
+    ``VersionConflictError`` — exactly Delta's OPTIMIZE-vs-writer
+    concurrency story. Returns the new version (or the current latest
+    when <2 small files exist — nothing to do, no commit)."""
+    base = _plan_base(table_dir, expected_version)
     manifest = _read_manifest(table_dir, base)
     _check_protocol(manifest, table_dir, write=True)
     parent_files = vt_files(table_dir, base)
     small = [f for f in parent_files if f["n_rows"] < min_rows_per_file]
     if len(small) < 2:
-        return latest  # no debt to sweep
+        return vt_latest_version(table_dir)  # no debt to sweep
     mapping = _col_mapping(manifest)
     t_paths = {f["path"] for f in small}
     schema = _manifest_schema(manifest, table_dir)
@@ -2130,7 +2137,9 @@ def vt_foreach_batch_merger(
     txnAppId/txnVersion idempotence discipline on this layer, and the
     engine-side version of the reference's ack/checkpoint protocol
     (src/Kinesis/Coordination.hs:329-337: progress recorded durably so
-    redelivery cannot double-apply).
+    redelivery cannot double-apply). An OPTIMIZE, DML or other merge
+    that lands between an epoch's write and its commit makes the merge
+    re-plan (``vt_merge``), not fail the epoch.
 
     Usage: ``stream.writeStream.foreachBatch(vt_foreach_batch_merger(
     spark, table, keys=["k"], seq_col="seq"))``.
@@ -2925,52 +2934,50 @@ def _predicate_rewrite(
     with the matched key range, not the table. Commits through the same
     disjoint-commit conflict resolution as ``vt_merge`` (round 6): a
     racing DML whose predicate's file set is disjoint from the
-    intervening commits' deltas lands metadata-only; a winner-added
-    file the predicate could match forces the rebase. ``expected_
-    version`` pins the planning snapshot, like vt_merge."""
-    latest = vt_latest_version(table_dir)
-    if latest < 0:
-        raise FileNotFoundError(f"table {table_dir} does not exist")
-    base = latest if expected_version is None else expected_version
-    if base > latest:
-        raise VersionConflictError(
-            f"expected version {expected_version}, table is at {latest}"
-        )
-    manifest = _read_manifest(table_dir, base)
-    _check_protocol(manifest, table_dir, write=True)
+    intervening commits' deltas lands metadata-only; a conflicting one
+    (a winner removed a file it read, added a file the predicate could
+    match, or changed the table metadata) RE-PLANS at the latest
+    version inside ``_commit_optimistic`` and commits the serial-order
+    table. ``expected_version`` pins the first planning snapshot, like
+    vt_merge."""
+    base = _plan_base(table_dir, expected_version)
     filters = list(filters)
     pred = _filters_to_column(filters)
-    mapping = _col_mapping(manifest)
-    pfilters = _phys_filters(filters, mapping)
-    parent_files = vt_files(table_dir, base)
-    schema = _manifest_schema(manifest, table_dir)
-    touched = _prune_files(
-        spark, parent_files, pfilters, _phys_struct(schema, mapping)
-    )
-    t_paths = {f["path"] for f in touched}
-    snapshot = _read_snapshot_entries(spark, touched, schema, mapping)
-    rewritten = rewrite_fn(snapshot, pred)
-    data_dir, new_files = _write_files_with_stats(
-        rewritten, table_dir, base + 1, mapping
-    )
-    if operation == "UPDATE":
-        # an UPDATE can push rows outside a stored constraint; DELETE
-        # only keeps rows the previous commit already validated
-        _validate_written(
-            spark, new_files, schema, mapping, _table_constraints(manifest),
-            None, data_dir, "vt_update",
-        )
-    base_meta = _table_meta(manifest)
-    op_name = f"vt_{operation.lower()}"
-    return _stage_or_commit(txn, table_dir, op_name, _staged(
-        base, base_meta, t_paths, data_dir, parent_files,
-        lambda carried_now, version: _next_manifest(
-            base_meta, operation, version, carried_now, new_files, t_paths,
-            data_dir,
-        ),
-        lambda fe: _filter_may_match(fe, pfilters),
-    ))
 
+    def plan(version: int) -> dict:
+        manifest = _read_manifest(table_dir, version)
+        _check_protocol(manifest, table_dir, write=True)
+        mapping = _col_mapping(manifest)
+        pfilters = _phys_filters(filters, mapping)
+        parent_files = vt_files(table_dir, version)
+        schema = _manifest_schema(manifest, table_dir)
+        touched = _prune_files(
+            spark, parent_files, pfilters, _phys_struct(schema, mapping)
+        )
+        t_paths = {f["path"] for f in touched}
+        snapshot = _read_snapshot_entries(spark, touched, schema, mapping)
+        data_dir, new_files = _write_files_with_stats(
+            rewrite_fn(snapshot, pred), table_dir, version + 1, mapping
+        )
+        if operation == "UPDATE":
+            # an UPDATE can push rows outside a stored constraint; DELETE
+            # only keeps rows the previous commit already validated
+            _validate_written(
+                spark, new_files, schema, mapping,
+                _table_constraints(manifest), None, data_dir, "vt_update",
+            )
+        base_meta = _table_meta(manifest)
+        return _staged(
+            version, base_meta, t_paths, data_dir, parent_files,
+            lambda carried_now, v: _next_manifest(
+                base_meta, operation, v, carried_now, new_files, t_paths,
+                data_dir,
+            ),
+            lambda fe: _filter_may_match(fe, pfilters),
+        )
+
+    op_name = f"vt_{operation.lower()}"
+    return _stage_or_commit(txn, table_dir, op_name, plan(base), plan)
 
 def vt_delete(
     spark: SparkSession,
@@ -3032,9 +3039,7 @@ def vt_delete_dv(
     atomic cross-table GDPR purge (the sidecar is written now, the
     metadata-only commit lands with the transaction; when nothing
     matches, the table is simply not part of the transaction)."""
-    latest = vt_latest_version(table_dir)
-    if latest < 0:
-        raise FileNotFoundError(f"table {table_dir} does not exist")
+    latest = _plan_base(table_dir, None)
     plan = functools.partial(_plan_delete_dv, spark, table_dir, list(filters))
     staged = plan(latest)
     if staged is None:
@@ -3293,9 +3298,7 @@ def _schema_change_commit(
             (lambda fe: True) if adds_constraint else stale_bloom,
         )
 
-    latest = vt_latest_version(table_dir)
-    if latest < 0:
-        raise FileNotFoundError(f"table {table_dir} does not exist")
+    latest = _plan_base(table_dir, None)
     staged = plan(latest)
     if staged is None:
         return latest
@@ -3452,7 +3455,7 @@ def vt_add_constraint(spark: SparkSession, table_dir: str, name: str,
     commits metadata-only. Enforcement from then on is write-time:
     every merge/UPDATE validates its written rows, so steady-state cost
     is O(rows written), never O(table); a writer that planned before
-    this commit conflicts with it and rebases."""
+    this commit conflicts with it and re-plans under it."""
 
     def change(meta: dict, version: int) -> dict:
         cons = _table_constraints(meta)
@@ -3517,43 +3520,3 @@ def vt_first_version_at_or_after(table_dir: str, ts) -> int:
         "no version starts at or after it"
     )
 
-
-def vt_merge_retry(
-    spark: SparkSession,
-    table_dir: str,
-    changes: DataFrame,
-    keys: Sequence[str],
-    max_attempts: int = 5,
-    **merge_kwargs,
-) -> int:
-    """The rebase loop ``VersionConflictError`` demands: each attempt
-    re-reads the CURRENT latest version (so the merge is re-planned
-    against the winner's data — file pruning re-evaluates too) and
-    retries the commit. This is Delta's optimistic-concurrency retry
-    made explicit; deterministic change batches make the retry safe to
-    re-execute (the loser's staged files were already cleaned up by the
-    conflict path). Since round 6, DISJOINT races never reach this
-    loop: ``vt_merge`` itself resolves them metadata-only (conflict
-    detection over intervening commits' file deltas), so a rebase here
-    means the writers genuinely overlapped — the retry re-executes the
-    join against the winner's rows, which is the only correct answer.
-    A ``TableLockedError`` is raised at once, after ONE merge: the
-    commit barrier has already waited the transaction lock out, nothing
-    about the data changed, and re-running the merge would only repeat
-    the same wait.
-    Raises the final ``VersionConflictError`` after ``max_attempts`` —
-    livelock under extreme contention is the caller's signal to
-    serialize writers."""
-    last_err: VersionConflictError | None = None
-    for _ in range(max(1, max_attempts)):
-        try:
-            return vt_merge(
-                spark, table_dir, changes, keys=keys,
-                expected_version=vt_latest_version(table_dir),
-                **merge_kwargs,
-            )
-        except TableLockedError:
-            raise
-        except VersionConflictError as e:
-            last_err = e
-    raise last_err

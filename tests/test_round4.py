@@ -213,47 +213,48 @@ def _changes(spark, rows):
 
 
 def test_versioned_stale_writer_conflicts(spark, tmp_path):
-    """A writer that based its merge on version 0 must abort once
-    another commit moved the table to version 1 (read-set conflict)."""
-    import pytest
+    """A writer that based its merge on version 0 conflicts once another
+    commit moved the table to version 1 (read-set conflict): its staged
+    files go, and it re-plans at version 1 and commits on top of it."""
+    import glob
+    import os
 
     VT, table = _mk_vt(spark, tmp_path)
     VT.vt_merge(
         spark, table, _changes(spark, [(2, "B", "U")]), keys=["k"],
         expected_version=0,
     )
-    with pytest.raises(VT.VersionConflictError):
-        VT.vt_merge(
-            spark, table, _changes(spark, [(3, "C", "U")]), keys=["k"],
-            expected_version=0,  # stale: table is at 1 now
-        )
-    # rebase succeeds and sees the first writer's row
     v2 = VT.vt_merge(
         spark, table, _changes(spark, [(3, "C", "U")]), keys=["k"],
-        expected_version=1,
+        expected_version=0,  # stale: table is at 1 now
     )
     assert v2 == 2
+    # the re-plan saw the first writer's row
     rows = {r["k"]: r["v"] for r in VT.vt_read(spark, table).collect()}
     assert rows == {1: "a", 2: "B", 3: "C"}
+    # every data dir left belongs to a committed version
+    dirs = set(glob.glob(os.path.join(table, "data", "v*")))
+    assert dirs == {VT._read_manifest(table, v)["data_dir"] for v in range(3)}
 
 
 def test_versioned_commit_race_loses_atomically(spark, tmp_path):
     """The put-if-absent commit: if the next manifest appears between a
     writer's read and its commit, the commit must fail AND the loser's
-    orphaned data files must be cleaned up."""
+    orphaned data files must be cleaned up before it re-plans on top of
+    the winner."""
     import glob
     import json
     import os
-
-    import pytest
 
     VT, table = _mk_vt(spark, tmp_path)
     v0 = VT._read_manifest(table, 0)
     # interpose: another writer commits version 1 while ours is writing
     orig_write = VT._write_data
+    staged = []
 
     def racing_write(df, table_dir, version):
         data_dir = orig_write(df, table_dir, version)
+        staged.append(data_dir)
         if version == 1 and not os.path.exists(
             VT._manifest_path(table_dir, 1)
         ):
@@ -274,15 +275,20 @@ def test_versioned_commit_race_loses_atomically(spark, tmp_path):
 
     VT._write_data = racing_write
     try:
-        with pytest.raises(VT.VersionConflictError, match="removed file"):
-            VT.vt_merge(
-                spark, table, _changes(spark, [(1, "z", "U")]), keys=["k"]
-            )
+        v = VT.vt_merge(
+            spark, table, _changes(spark, [(1, "z", "U")]), keys=["k"]
+        )
     finally:
         VT._write_data = orig_write
-    # loser's data dir was rolled back: only v0's and the winner's remain
+    # the re-plan merged into the winner's (empty) snapshot
+    assert v == 2
+    rows = {r["k"]: r["v"] for r in VT.vt_read(spark, table).collect()}
+    assert rows == {1: "z"}
+    # loser's data dir was rolled back: only v0's, the winner's and the
+    # re-plan's remain
+    assert len(staged) == 2 and not os.path.exists(staged[0])
     dirs = glob.glob(os.path.join(table, "data", "v*"))
-    assert len(dirs) == 2, dirs
+    assert len(dirs) == 3 and staged[1] in dirs, dirs
 
 
 def test_versioned_time_travel_immutable(spark, tmp_path):

@@ -641,9 +641,11 @@ def test_vt_optimize_zorder_prunes_on_every_cluster_column(
     assert got == want
 
 
-def test_vt_merge_retry_rebases_past_a_concurrent_commit(spark, tmp_path):
-    """A writer losing the commit race retries against the winner's
-    version and lands on top of it — both changes survive."""
+def test_vt_merge_rebases_past_a_concurrent_commit(spark, tmp_path):
+    """A writer losing the commit race to a winner that removed the file
+    it read re-plans against the winner's version and lands on top of
+    it — both changes survive, and the losing attempt's staged files
+    are gone."""
     table = str(tmp_path / "vt")
     VT.vt_create(
         spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
@@ -651,14 +653,14 @@ def test_vt_merge_retry_rebases_past_a_concurrent_commit(spark, tmp_path):
         table,
     )
     orig_write = VT._write_data
-    interposed = {"done": False}
+    staged = []
 
     def racing_write(df, table_dir, version):
         data_dir = orig_write(df, table_dir, version)
-        if not interposed["done"]:
-            interposed["done"] = True
+        staged.append(data_dir)
+        if len(staged) == 1:
             # the winner lands version `version` first, with real files
-            win = VT._write_data(
+            win = orig_write(
                 spark.createDataFrame([(9, "w")], "k long, v string"),
                 table_dir, version,
             )
@@ -676,14 +678,17 @@ def test_vt_merge_retry_rebases_past_a_concurrent_commit(spark, tmp_path):
 
     VT._write_data = racing_write
     try:
-        v = VT.vt_merge_retry(
+        v = VT.vt_merge(
             spark, table,
             spark.createDataFrame([(2, "B", "U")], "k long, v string, op string"),
             keys=["k"],
         )
     finally:
         VT._write_data = orig_write
-    assert v == 2  # rebased onto the winner's v1
+    assert v == 2  # re-planned onto the winner's v1
     rows = {r["k"]: r["v"] for r in VT.vt_read(spark, table).collect()}
-    # the rebase saw the winner's snapshot ({9: w}) and merged on top
+    # the re-plan saw the winner's snapshot ({9: w}) and merged on top
     assert rows == {9: "w", 2: "B"}
+    assert len(staged) == 2
+    assert not os.path.exists(staged[0])  # the losing attempt's files
+    assert VT._read_manifest(table, 2)["data_dir"] == staged[1]

@@ -69,33 +69,31 @@ def test_disjoint_merges_both_commit_without_reexecution(spark, tmp_path):
 
 def test_overlapping_merges_conflict_and_clean_up(spark, tmp_path):
     """Writers whose key ranges land in the same file must NOT take the
-    fast path: the loser gets VersionConflictError and its staged data
-    files are removed."""
+    fast path: the loser's staged data files are removed and it
+    re-plans against the winner, committing the serial-order table."""
     table = _mk_clustered(spark, tmp_path)
     VT.vt_merge(
         spark, table, _chg(spark, [(5, "A", "U")]), keys=["k"],
         expected_version=0,
     )
     dirs_before = set(glob.glob(os.path.join(table, "data", "v*")))
-    with pytest.raises(VT.VersionConflictError):
-        VT.vt_merge(
-            spark, table, _chg(spark, [(6, "B", "U")]), keys=["k"],
-            expected_version=0,
-        )
-    assert set(glob.glob(os.path.join(table, "data", "v*"))) == dirs_before
-    # and the rebase loop still lands it
-    v2 = VT.vt_merge_retry(
-        spark, table, _chg(spark, [(6, "B", "U")]), keys=["k"]
+    v2 = VT.vt_merge(
+        spark, table, _chg(spark, [(6, "B", "U")]), keys=["k"],
+        expected_version=0,  # stale AND in the file the winner rewrote
     )
     assert v2 == 2
     rows = {r["k"]: r["v"] for r in VT.vt_read(spark, table).collect()}
-    assert rows[5] == "A" and rows[6] == "B"
+    assert rows[5] == "A" and rows[6] == "B" and len(rows) == 100
+    # exactly one new data dir: the re-plan's; the losing attempt's
+    # (planned at version 1) is gone
+    new_dirs = set(glob.glob(os.path.join(table, "data", "v*"))) - dirs_before
+    assert new_dirs == {VT._read_manifest(table, 2)["data_dir"]}
 
 
 def test_concurrent_schema_change_conflicts(spark, tmp_path):
-    """A concurrent commit that evolved the schema forces a rebase even
-    when the file sets are disjoint — the loser's staged files carry the
-    stale schema."""
+    """A concurrent commit that evolved the schema conflicts even when
+    the file sets are disjoint — the loser's staged files carry the
+    stale schema — so the loser re-plans under the evolved schema."""
     table = _mk_clustered(spark, tmp_path)
     wide = spark.createDataFrame(
         [(5, "A", "U", 1.5)], "k long, v string, op string, w double"
@@ -104,11 +102,22 @@ def test_concurrent_schema_change_conflicts(spark, tmp_path):
         spark, table, wide, keys=["k"], expected_version=0,
         merge_schema=True,
     )
-    with pytest.raises(VT.VersionConflictError):
-        VT.vt_merge(
-            spark, table, _chg(spark, [(95, "B", "U")]), keys=["k"],
-            expected_version=0,
-        )
+    # the loser evolves the same column from the stale base: its
+    # re-plan finds ``w`` already in the table and adds nothing
+    v = VT.vt_merge(
+        spark, table,
+        spark.createDataFrame(
+            [(95, "B", "U", 2.5)], "k long, v string, op string, w double"
+        ),
+        keys=["k"], expected_version=0, merge_schema=True,
+    )
+    assert v == 2
+    rows = {r["k"]: (r["v"], r["w"]) for r in VT.vt_read(spark, table).collect()}
+    assert rows[5] == ("A", 1.5) and rows[95] == ("B", 2.5)
+    assert rows[50] == ("v50", None) and len(rows) == 100
+    m2 = VT._read_manifest(table, 2)
+    assert [f["name"] for f in m2["schema"]["fields"]] == ["k", "v", "w"]
+    assert all("w" in f["stats"] for f in m2["add"])
 
 
 # ---------- per-file bloom buckets (secondary-key skipping) ----------
@@ -544,7 +553,8 @@ def test_disjoint_delete_then_merge_fast_path(spark, tmp_path):
 def test_predicate_dml_fast_path_and_conflict(spark, tmp_path):
     """Predicate DML rides the same conflict resolution: a stale-base
     DELETE whose predicate's file set is disjoint from the intervening
-    merge commits metadata-only; an overlapping UPDATE raises."""
+    merge commits metadata-only; an overlapping UPDATE re-plans and
+    commits the serial-order table."""
     table = _mk_clustered(spark, tmp_path)
     VT.vt_merge(
         spark, table, _chg(spark, [(95, "A", "U")]), keys=["k"],
@@ -556,17 +566,24 @@ def test_predicate_dml_fast_path_and_conflict(spark, tmp_path):
     assert v == 2
     rows = {r["k"]: r["v"] for r in VT.vt_read(spark, table).collect()}
     assert len(rows) == 90 and rows[95] == "A" and 5 not in rows
-    with pytest.raises(VT.VersionConflictError):
-        VT.vt_update(
-            spark, table, [("k", ">=", 90)], {"v": "'X'"},
-            expected_version=0,  # stale AND overlapping the merge's file
-        )
+    dirs_before = set(glob.glob(os.path.join(table, "data", "v*")))
+    v3 = VT.vt_update(
+        spark, table, [("k", ">=", 90)], {"v": "concat(v, 'X')"},
+        expected_version=0,  # stale AND overlapping the merge's file
+    )
+    assert v3 == 3
+    rows = {r["k"]: r["v"] for r in VT.vt_read(spark, table).collect()}
+    # the update saw the merge's row: serial order, not the v0 snapshot
+    assert rows[95] == "AX" and rows[90] == "v90X" and rows[89] == "v89"
+    assert len(rows) == 90
+    new_dirs = set(glob.glob(os.path.join(table, "data", "v*"))) - dirs_before
+    assert new_dirs == {VT._read_manifest(table, 3)["data_dir"]}
 
 
 def test_four_threaded_writers_all_commit(spark, tmp_path):
     """Four REAL concurrent writers (threads sharing the session) merge
-    disjoint key ranges through vt_merge_retry: every writer must land
-    (fast path or rebase), and the final state must equal sequential
+    disjoint key ranges through plain vt_merge: every writer must land
+    (fast path or re-plan), and the final state must equal sequential
     application — the multi-writer contract end to end."""
     from concurrent.futures import ThreadPoolExecutor
 
@@ -575,9 +592,8 @@ def test_four_threaded_writers_all_commit(spark, tmp_path):
 
     def write(args):
         k, tag = args
-        return VT.vt_merge_retry(
+        return VT.vt_merge(
             spark, table, _chg(spark, [(k, tag, "U")]), keys=["k"],
-            max_attempts=10,
         )
     with ThreadPoolExecutor(max_workers=4) as ex:
         versions = list(ex.map(write, ranges))
@@ -1166,7 +1182,7 @@ def test_threaded_disjoint_writers_race_for_real(spark, tmp_path):
 
     def writer(lo, label):
         try:
-            VT.vt_merge_retry(
+            VT.vt_merge(
                 spark, table,
                 _chg(spark, [(lo + i, label, "U") for i in range(5)]),
                 keys=["k"],

@@ -750,23 +750,25 @@ def test_writer_planned_before_add_constraint_conflicts(
     spark, tmp_path, writer
 ):
     """A write planned at the version before an ADD CONSTRAINT neither
-    skips the new check nor commits the constraint away: it conflicts,
-    and the rebase (``vt_merge_retry``) enforces the constraint."""
+    skips the new check nor commits the constraint away: it conflicts
+    and re-plans under the constraint. A violating merge or update then
+    aborts naming it, with nothing committed or staged; a delete writes
+    no new value and commits."""
     table = str(tmp_path / "t")
     _mk(spark, table, n=8)
     VT.vt_add_constraint(spark, table, "v_nonneg", "v >= 0")
-    with pytest.raises(VT.VersionConflictError, match="metadata"):
-        writer(spark, table, 0, -5)
-    assert VT.vt_latest_version(table) == 1
+    data_dir = os.path.join(table, "data")
+    dirs_before = sorted(os.listdir(data_dir))
+    if writer is _stale_delete:
+        assert writer(spark, table, 0, -5) == 2
+        assert VT.vt_read(spark, table).filter("k = 3").count() == 0
+    else:
+        with pytest.raises(ValueError, match="v_nonneg"):
+            writer(spark, table, 0, -5)
+        assert VT.vt_latest_version(table) == 1
+        assert sorted(os.listdir(data_dir)) == dirs_before
     assert _latest_constraints(table) == {"v_nonneg": "v >= 0"}
     assert VT.vt_read(spark, table).filter("v < 0").count() == 0
-    with pytest.raises(ValueError, match="v_nonneg"):
-        VT.vt_merge_retry(
-            spark, table,
-            spark.createDataFrame([(3, -5, 0, "U")],
-                                  "k long, v long, grp int, op string"),
-            keys=["k"],
-        )
 
 
 @pytest.mark.parametrize("writer", _STALE_WRITERS)
@@ -777,10 +779,11 @@ def test_writer_planned_before_drop_constraint_does_not_resurrect_it(
     _mk(spark, table, n=8)
     VT.vt_add_constraint(spark, table, "v_nonneg", "v >= 0")  # v1
     VT.vt_drop_constraint(table, "v_nonneg")  # v2
-    with pytest.raises(VT.VersionConflictError, match="metadata"):
-        writer(spark, table, 1, 42)
-    assert VT.vt_latest_version(table) == 2
+    assert writer(spark, table, 1, 42) == 3  # re-planned on top of v2
     assert _latest_constraints(table) == {}
+    rows = {r["k"]: r["v"] for r in VT.vt_read(spark, table).collect()}
+    assert rows.get(3) == (None if writer is _stale_delete else 42)
+    assert len(rows) == (7 if writer is _stale_delete else 8)
 
 
 def test_txn_staged_before_add_constraint_aborts(spark, tmp_path):

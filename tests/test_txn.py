@@ -305,29 +305,29 @@ def test_never_released_lock_fails_once_with_the_lock_error(
     assert not os.path.isdir(dv_root) or os.listdir(dv_root) == []
 
 
-def test_merge_retry_raises_the_lock_error_after_one_merge(
+def test_merge_raises_the_lock_error_after_one_plan(
     spark, tmp_path, monkeypatch
 ):
-    """Under a lock that is never released, ``vt_merge_retry`` runs the
-    merge once and raises ``TableLockedError``: the barrier already
-    waited the lock out, so re-running the join, the file writes and the
-    stats could only repeat the same wait."""
+    """Under a lock that is never released, ``vt_merge`` plans once
+    (one join, one file write) and raises ``TableLockedError``: the
+    barrier already waited the lock out, so re-planning could only
+    repeat the same wait. Nothing is committed or left staged."""
     table = str(tmp_path / "t")
     _mk_narrow(spark, table)
     v0 = VT.vt_latest_version(table)
     _hold_lock(table, str(tmp_path / "coord"))
     calls = []
-    real_merge = VT.vt_merge
+    real_write = VT._write_files_with_stats
 
     def counting(*args, **kwargs):
         calls.append(1)
-        return real_merge(*args, **kwargs)
+        return real_write(*args, **kwargs)
 
-    monkeypatch.setattr(VT, "vt_merge", counting)
+    monkeypatch.setattr(VT, "_write_files_with_stats", counting)
     chg = spark.createDataFrame([(1, 11, "U")], "k long, v int, op string")
     try:
         with pytest.raises(VT.TableLockedError, match="locked"):
-            VT.vt_merge_retry(spark, table, chg, keys=["k"])
+            VT.vt_merge(spark, table, chg, keys=["k"])
     finally:
         os.remove(TX._lock_path(table))
     assert len(calls) == 1
@@ -588,9 +588,9 @@ def test_rollback_never_deletes_a_foreign_manifest(spark, tmp_path):
     # the next writer's barrier resolves: aborts the dead txn, drops
     # the marker, KEEPS the foreign manifest. The writer planned
     # against the stale (stepped-back) tip, so its commit goes through
-    # the ordinary conflict detection — the rebase wrapper re-executes
-    # against the restored tip.
-    v2 = VT.vt_merge_retry(spark, a, _chg(spark, 5, 9, 23), keys=["k"])
+    # the ordinary conflict detection and, on overlap, re-plans against
+    # the restored tip.
+    v2 = VT.vt_merge(spark, a, _chg(spark, 5, 9, 23), keys=["k"])
     assert v2 == v + 1, "the foreign manifest must survive rollback"
     assert not os.path.exists(mk)
     assert VT.vt_read(spark, a).filter(F.col("v") == 21).count() == 5

@@ -6,6 +6,11 @@ frame and interval pruning (the over-bound path, forced here with
 ``max_prune_keys=1``). Both must give the result of the Python fold
 below, reject op codes other than U, I and D before anything commits,
 and a small merge must stay a fixed, small number of Spark jobs.
+
+A merge that loses its commit race to an overlapping writer re-plans at
+the latest version inside the one commit loop and commits the table the
+serial order gives; the last section pins that, and the planning-base
+rule it shares with predicate DML, CLUSTER and COMPACT.
 """
 
 from __future__ import annotations
@@ -14,6 +19,7 @@ import datetime
 import decimal
 import json
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -255,3 +261,180 @@ def test_commit_never_exposes_an_empty_manifest(spark, tmp_path, monkeypatch):
     assert VT.vt_merge(spark, t, chg, keys=["k"]) == 1
     assert visible == [False]
     assert VT._read_manifest(t, 1)["version"] == 1
+
+
+# ---------------------------------------------------------------------
+# a conflict re-plans inside the one commit loop
+# ---------------------------------------------------------------------
+
+
+def _interpose_once(monkeypatch, action):
+    """Run ``action(table_dir)`` right after the FIRST staged write,
+    between a writer's write and its commit; returns the list of staged
+    data dirs written, in order."""
+    staged = []
+    real = VT._write_data
+
+    def write(df, table_dir, version):
+        data_dir = real(df, table_dir, version)
+        staged.append(data_dir)
+        if len(staged) == 1:
+            action(table_dir)
+        return data_dir
+
+    monkeypatch.setattr(VT, "_write_data", write)
+    return staged
+
+
+def _unreferenced_dirs(t):
+    """Data dirs no committed manifest names: a staged dir left behind."""
+    named = {VT._read_manifest(t, v).get("data_dir")
+             for v in range(VT.vt_latest_version(t) + 1)}
+    root = os.path.join(t, "data")
+    return {os.path.join(root, d) for d in os.listdir(root)} - named
+
+
+def _chg_df(spark, changes):
+    return spark.createDataFrame(
+        [tuple(c.values()) for c in changes], "k long, v long, op string"
+    )
+
+
+def test_foreach_batch_epoch_survives_a_concurrent_optimize(
+    spark, tmp_path, monkeypatch
+):
+    """An OPTIMIZE landing between a foreachBatch epoch's write and its
+    commit removes every file the merge read: the epoch re-plans on top
+    of it and commits once, with its batch_id, the serial-order table."""
+    t = str(tmp_path / "t")
+    table = [{"k": k, "v": k} for k in range(40)]
+    _create(spark, t, "k long, v long", table, "k")
+    changes = [{"k": 3, "v": 33, "op": "U"}, {"k": 5, "v": 0, "op": "D"},
+               {"k": 50, "v": 500, "op": "I"}]
+    staged = _interpose_once(
+        monkeypatch, lambda td: VT.vt_optimize(spark, td, ["k"]))
+    merger = VT.vt_foreach_batch_merger(spark, t, keys=["k"])
+    merger(_chg_df(spark, changes), 7)
+    hist = VT.vt_history(spark, t).orderBy("version").collect()
+    assert [r["operation"] for r in hist] == ["CREATE", "OPTIMIZE", "MERGE"]
+    assert VT._read_manifest(t, 2)["batch_id"] == 7
+    assert VT.vt_committed_batch_ids(t) == {7}
+    assert _rows(VT.vt_read(spark, t).collect()) == _rows(
+        _fold(table, changes, ["k"]))
+    assert len(staged) == 2 and not os.path.exists(staged[0])
+    assert not _unreferenced_dirs(t)
+    merger(_chg_df(spark, changes), 7)  # a replayed epoch is skipped
+    assert VT.vt_latest_version(t) == 2
+
+
+def test_overlapping_threaded_merges_commit_in_serial_order(
+    spark, tmp_path, monkeypatch
+):
+    """Four threads merge batches that all rewrite key 1's file. Each
+    writes its first plan before any commits (a barrier), so three lose
+    the race and re-plan: all four commit, versions 1-4, and the table
+    is the fold of the batches in commit order."""
+    t = str(tmp_path / "t")
+    table = [{"k": k, "v": k} for k in range(20)]
+    _create(spark, t, "k long, v long", table, "k")
+    batches = [
+        [{"k": 1, "v": 100 + i, "op": "U"}, {"k": 2 + i, "v": 0, "op": "D"},
+         {"k": 30 + i, "v": i, "op": "I"}]
+        for i in range(4)
+    ]
+    barrier = threading.Barrier(4, timeout=120)
+    planned = set()
+    writes = []
+    real = VT._write_data
+
+    def write(df, table_dir, version):
+        data_dir = real(df, table_dir, version)
+        writes.append(data_dir)
+        me = threading.get_ident()
+        if me not in planned:
+            planned.add(me)
+            barrier.wait()
+        return data_dir
+
+    monkeypatch.setattr(VT, "_write_data", write)
+    got, errs = {}, []
+
+    def writer(i):
+        try:
+            got[i] = VT.vt_merge(spark, t, _chg_df(spark, batches[i]),
+                                 keys=["k"])
+        except Exception as e:  # noqa: BLE001
+            errs.append(e)
+
+    threads = [threading.Thread(target=writer, args=(i,)) for i in range(4)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(180)
+    assert not any(th.is_alive() for th in threads)
+    assert not errs, errs
+    assert sorted(got.values()) == [1, 2, 3, 4]
+    assert len(writes) >= 4 + 3  # every loser planned again
+    by_version = {v: i for i, v in got.items()}
+    want = table
+    for r in VT.vt_history(spark, t).orderBy("version").collect()[1:]:
+        assert r["operation"] == "MERGE"
+        want = _fold(want, batches[by_version[r["version"]]], ["k"])
+    assert _rows(VT.vt_read(spark, t).collect()) == _rows(want)
+    assert not _unreferenced_dirs(t)
+
+
+def test_replanned_local_merge_evaluates_its_batch_once(
+    spark, tmp_path, monkeypatch
+):
+    """A local-path merge that loses to an OPTIMIZE and re-plans reuses
+    the batch it holds on the driver: the source is evaluated once (an
+    accumulator in a pass-through UDF counts its rows)."""
+    t = str(tmp_path / "t")
+    VT.vt_create(spark.range(400).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v"),
+    ).repartitionByRange(4, "k"), t)
+    seen = spark.sparkContext.accumulator(0)
+
+    def through(v):
+        seen.add(1)
+        return v
+
+    changes = [{"k": k * 10, "v": k, "op": "U" if k % 4 else "D"}
+               for k in range(40)]
+    chg = _chg_df(spark, changes).withColumn("k", F.udf(through, "long")("k"))
+    staged = _interpose_once(
+        monkeypatch, lambda td: VT.vt_optimize(spark, td, ["k"]))
+    assert VT.vt_merge(spark, t, chg, keys=["k"]) == 2
+    assert len(staged) == 2  # planned, lost to the OPTIMIZE, re-planned
+    assert seen.value == 40
+    table = [{"k": k, "v": k * 2} for k in range(400)]
+    assert _rows(VT.vt_read(spark, t).collect()) == _rows(
+        _fold(table, changes, ["k"]))
+
+
+_PINNED_WRITERS = {
+    "merge": lambda spark, t, v: VT.vt_merge(
+        spark, t, _chg_df(spark, [{"k": 1, "v": 11, "op": "U"}]),
+        keys=["k"], expected_version=v),
+    "update": lambda spark, t, v: VT.vt_update(
+        spark, t, [("k", "=", 1)], {"v": "0"}, expected_version=v),
+    "cluster": lambda spark, t, v: VT.vt_cluster_incremental(
+        spark, t, ["k"], expected_version=v),
+    "compact": lambda spark, t, v: VT.vt_compact(
+        spark, t, expected_version=v),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_PINNED_WRITERS))
+def test_expected_version_past_the_latest_is_a_conflict(
+    spark, tmp_path, writer
+):
+    """Every writer that takes ``expected_version`` refuses one the
+    table has not reached, with ``VersionConflictError``."""
+    t = str(tmp_path / "t")
+    _create(spark, t, "k long, v long", [{"k": k, "v": k} for k in range(6)], "k")
+    with pytest.raises(VT.VersionConflictError,
+                       match="expected version 1, table is at 0"):
+        _PINNED_WRITERS[writer](spark, t, 1)
+    assert VT.vt_latest_version(t) == 0
