@@ -71,10 +71,20 @@ def apply_changes(
     With ``seq_col`` set, multiple changes per key compact to the
     highest sequence first (latest wins, ties broken by op ascending —
     'D' < 'I' < 'U' — so a same-seq delete wins deterministically).
-    Without it every 'U'/'I' row of a key is written.
+    Without it every 'U'/'I' row of a key is written. A change batch
+    lacking a snapshot column raises ``ValueError`` naming it, before
+    any job runs.
     """
     keys = list(keys)
     cols = keys + [c for c in snapshot.columns if c not in keys]
+    # case-insensitive, as Spark resolves column names by default
+    have = {c.lower() for c in changes.columns}
+    missing = [c for c in cols if c.lower() not in have]
+    if missing:
+        raise ValueError(
+            f"apply_changes: the change batch lacks table column(s) "
+            f"{missing}"
+        )
     op = F.col(op_col)
     bad_op = F.raise_error(F.concat(
         F.lit(f"apply_changes: {op_col} must be one of U, I, D; got "),

@@ -612,17 +612,41 @@ def _normalize_path(p: str) -> str:
     return p
 
 
-def _write_data(df: DataFrame, table_dir: str, version: int) -> str:
-    """Write ``df`` as a new staged file set; a failed write (a bad
-    merge op, a task error) leaves no staged directory behind."""
+def _write_data(df: DataFrame, table_dir: str, version: int,
+                max_records_per_file: int | None = None) -> str:
+    """Write ``df`` as a new staged file set — every table data file
+    this module writes goes through here; a failed write (a bad merge
+    op, a task error) leaves no staged directory behind."""
     token = uuid.uuid4().hex[:8]
     data_dir = os.path.join(table_dir, "data", f"v{version:05d}_{token}")
+    w = df.write
+    if max_records_per_file:
+        w = w.option("maxRecordsPerFile", int(max_records_per_file))
     try:
-        df.write.parquet(data_dir)
+        w.parquet(data_dir)
     except BaseException:
         shutil.rmtree(data_dir, ignore_errors=True)
         raise
     return data_dir
+
+
+def _stats_aggs(scols: Sequence[str]) -> list:
+    """The aggregates behind every stats value: the row count plus
+    min/max per column (``scols``) — evaluated grouped by file, as an
+    Observation, or over a change batch; ``_stats_of`` decodes them."""
+    aggs = [F.count(F.lit(1)).alias("__n")]
+    for c in scols:
+        aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
+    return aggs
+
+
+def _stats_of(r, scols: Sequence[str]) -> tuple[int, dict]:
+    """(row count, {col: [min, max]}) of one ``_stats_aggs`` result (a
+    Row or an Observation dict), values in their JSON-portable form."""
+    return int(r["__n"]), {
+        c: [_json_stat(r[f"__min_{c}"]), _json_stat(r[f"__max_{c}"])]
+        for c in scols
+    }
 
 
 def _collect_file_stats(
@@ -634,28 +658,19 @@ def _collect_file_stats(
     inline during its write, and what funds both merge-time file
     pruning and metadata-only row counts."""
     scols = _stats_cols(schema)
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for c in scols:
-        aggs.append(F.min(c).alias(f"__min_{c}"))
-        aggs.append(F.max(c).alias(f"__max_{c}"))
     rows = (
         spark.read.schema(schema)
         .parquet(data_dir)
         .groupBy(F.col("_metadata.file_path").alias("__p"))
-        .agg(*aggs)
+        .agg(*_stats_aggs(scols))
         .collect()
     )
-    files = [
-        {
-            "path": _normalize_path(r["__p"]),
-            "n_rows": int(r["__n"]),
-            "stats": {
-                c: [_json_stat(r[f"__min_{c}"]), _json_stat(r[f"__max_{c}"])]
-                for c in scols
-            },
-        }
-        for r in rows
-    ]
+    files = []
+    for r in rows:
+        n, stats = _stats_of(r, scols)
+        files.append(
+            {"path": _normalize_path(r["__p"]), "n_rows": n, "stats": stats}
+        )
     files.sort(key=lambda f: f["path"])
     return files
 
@@ -677,19 +692,15 @@ def _write_small_with_stats(
     measured ~0.3-0.5 s of pure fixed cost per tiny merge) disappears,
     and tiny merges stop fragmenting the table into per-partition
     shards. Stats values are identical to ``_collect_file_stats`` (same
-    min/max/count expressions, one file = global aggregates)."""
+    ``_stats_aggs``, one file = global aggregates)."""
     from pyspark.sql import Observation
 
     scols = _stats_cols(df.schema)
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for c in scols:
-        aggs.append(F.min(c).alias(f"__min_{c}"))
-        aggs.append(F.max(c).alias(f"__max_{c}"))
     obs = Observation()
-    data_dir = _write_data(df.coalesce(1).observe(obs, *aggs),
+    data_dir = _write_data(df.coalesce(1).observe(obs, *_stats_aggs(scols)),
                            table_dir, version)
-    got = obs.get
-    if not got["__n"]:  # empty write: drop the empty shell directory
+    n, stats = _stats_of(obs.get, scols)
+    if not n:  # empty write: drop the empty shell directory
         shutil.rmtree(data_dir, ignore_errors=True)
         return data_dir, []
     parts = sorted(
@@ -698,33 +709,31 @@ def _write_small_with_stats(
         if p.startswith("part-")
     )
     assert len(parts) == 1, parts  # coalesce(1): exactly one data file
-    files = [{
-        "path": _normalize_path(parts[0]),
-        "n_rows": int(got["__n"]),
-        "stats": {
-            c: [_json_stat(got[f"__min_{c}"]),
-                _json_stat(got[f"__max_{c}"])]
-            for c in scols
-        },
-    }]
-    return data_dir, files
+    return data_dir, [
+        {"path": _normalize_path(parts[0]), "n_rows": n, "stats": stats}
+    ]
 
 
 def _write_files_with_stats(
     df: DataFrame, table_dir: str, version: int,
     mapping: dict | None = None,
     row_bound: int | None = None,
+    max_records_per_file: int | None = None,
 ) -> tuple[str, list[dict]]:
     """Write ``df`` (LOGICAL names) as this version's new immutable
-    file set and collect its per-file manifest entries. Under an active
-    column ``mapping`` the files (and therefore the stats) carry the
-    stable physical names. ``row_bound`` — an upper bound on the row
-    count KNOWN FROM METADATA (touched-file live rows + change keys) —
-    routes provably-small writes through the fused single-job path."""
+    file set through ``_write_data`` and collect its per-file manifest
+    entries — the file-set writer of CREATE, MERGE, predicate DML, the
+    transaction append and the layout rewrites (OPTIMIZE, CLUSTER,
+    COMPACT). Under an active column ``mapping`` the files (and
+    therefore the stats) carry the stable physical names. ``row_bound``
+    — an upper bound on the row count KNOWN FROM METADATA (touched-file
+    live rows + change keys) — routes provably-small writes through the
+    fused single-job path; without it the write is parallel, split at
+    ``max_records_per_file`` rows per file when set."""
     df = _to_physical(df, mapping)
     if row_bound is not None and row_bound <= _SMALL_WRITE_ROWS:
         return _write_small_with_stats(df, table_dir, version)
-    data_dir = _write_data(df, table_dir, version)
+    data_dir = _write_data(df, table_dir, version, max_records_per_file)
     files = _collect_file_stats(df.sparkSession, data_dir, df.schema)
     if not files:  # empty write: drop the empty shell directory
         shutil.rmtree(data_dir, ignore_errors=True)
@@ -802,15 +811,7 @@ def _change_key_stats(changes: DataFrame, keys: Sequence[str]) -> tuple[int, dic
     that funds file pruning. Keys without stat-able types get no entry
     (pruning then touches every file: conservative)."""
     scols = [k for k in keys if k in _stats_cols(changes.schema)]
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for c in scols:
-        aggs.append(F.min(c).alias(f"__min_{c}"))
-        aggs.append(F.max(c).alias(f"__max_{c}"))
-    r = changes.agg(*aggs).collect()[0]
-    return int(r["__n"]), {
-        c: [_json_stat(r[f"__min_{c}"]), _json_stat(r[f"__max_{c}"])]
-        for c in scols
-    }
+    return _stats_of(changes.agg(*_stats_aggs(scols)).collect()[0], scols)
 
 
 def _file_intersects(file_entry: dict, chg_stats: dict,
@@ -1767,6 +1768,91 @@ def _zorder_key(
     return ranked.withColumn("__zorder", z), rcols
 
 
+def _cluster_rows(
+    df: DataFrame, cols: Sequence[str], zorder: bool, n_rows: int
+) -> DataFrame:
+    """``df`` arranged for a clustered rewrite: ordered by the Morton
+    key of ``cols`` (``zorder`` with more than one column) or range-
+    partitioned on them. sortWithinPartitions matters even with range
+    partitioning: AQE can coalesce a small range shuffle to fewer
+    partitions, and maxRecordsPerFile then chops each task's UNSORTED
+    stream into overlapping-range files — the local sort keeps every
+    emitted file a contiguous key span. ``n_rows`` (the live rows read)
+    sizes the string-column sample of the Z-order boundaries."""
+    if zorder and len(cols) > 1:
+        zdf, rcols = _zorder_key(df, cols, n_rows=n_rows)
+        return (
+            zdf.repartitionByRange(F.col("__zorder"))
+            .sortWithinPartitions(F.col("__zorder"))
+            .drop("__zorder", *rcols)
+        )
+    by = [F.col(c) for c in cols]
+    return df.repartitionByRange(*by).sortWithinPartitions(*by)
+
+
+def _rewrite_layout(
+    spark: SparkSession,
+    table_dir: str,
+    op_name: str,
+    operation: str,
+    expected_version: int | None,
+    txn,
+    pick,
+    arrange,
+    max_records_per_file: int | None,
+    cluster_cols: Sequence[str] | None = None,
+    full: bool = False,
+) -> int:
+    """The one body of OPTIMIZE, CLUSTER and COMPACT: commit the rows of
+    the files ``pick(parent_files, pcols)`` selects, unchanged, in the
+    layout ``arrange(df, picked)`` gives them (``pcols``: the PHYSICAL
+    ``cluster_cols``; a None pick means no debt — nothing is written or
+    committed and the latest version is returned). The rewrite goes
+    through ``_write_files_with_stats`` like every other writer, always
+    on the parallel path (a layout rewrite is as big as what it reads),
+    so a failed write leaves no staged dir. ``cluster_cols`` stamps
+    every new file ``clustered`` (physical names, stable across
+    renames), which lets ``vt_cluster_incremental`` tell clustered files
+    from the debt. Commits never re-plan: a conflict raises
+    ``VersionConflictError`` and the caller re-runs the maintenance.
+    ``full`` is OPTIMIZE's rule: a full file list, and ANY concurrently
+    added file conflicts (its rows would vanish from the rewrite);
+    otherwise layout never conflicts with content — only a commit that
+    removed a picked file or changed the table metadata does, so
+    disjoint writers co-commit."""
+    base = _plan_base(table_dir, expected_version)
+    manifest = _read_manifest(table_dir, base)
+    _check_protocol(manifest, table_dir, write=True)
+    mapping = _col_mapping(manifest)
+    pcols = None
+    if cluster_cols is not None:
+        pcols = [(mapping or {}).get(c, c) for c in cluster_cols]
+    parent_files = vt_files(table_dir, base)
+    picked = pick(parent_files, pcols)
+    if picked is None:
+        return vt_latest_version(table_dir)
+    df = _read_snapshot_entries(
+        spark, picked, _manifest_schema(manifest, table_dir), mapping
+    )
+    data_dir, files = _write_files_with_stats(
+        arrange(df, picked), table_dir, base + 1, mapping,
+        max_records_per_file=max_records_per_file,
+    )
+    if pcols is not None:
+        for f in files:
+            f["clustered"] = pcols
+    t_paths = {f["path"] for f in picked}
+    base_meta = _table_meta(manifest)
+    return _stage_or_commit(txn, table_dir, op_name, _staged(
+        base, base_meta, t_paths, data_dir, parent_files,
+        lambda carried_now, version: _next_manifest(
+            base_meta, operation, version, carried_now, files,
+            None if full else t_paths, data_dir,
+        ),
+        lambda fe: full,
+    ))
+
+
 def vt_optimize(
     spark: SparkSession,
     table_dir: str,
@@ -1790,61 +1876,19 @@ def vt_optimize(
     a strict subset of files after zorder, but not after plain range
     clustering). Either way the per-file stats land in the manifest and
     old versions stay readable — OPTIMIZE is just another immutable
-    file set."""
-    base = _plan_base(table_dir, None)
-    manifest = _read_manifest(table_dir, base)
-    _check_protocol(manifest, table_dir, write=True)
-    mapping = _col_mapping(manifest)
-    df = vt_read(spark, table_dir, base)
-    # sortWithinPartitions matters even with range partitioning: AQE can
-    # coalesce a small range shuffle to fewer partitions, and
-    # maxRecordsPerFile then chops each task's UNSORTED stream into
-    # overlapping-range files — the local sort keeps every emitted file
-    # a contiguous key span
-    if zorder and len(cluster_cols) > 1:
-        zdf, rcols = _zorder_key(
-            df, cluster_cols, n_rows=manifest.get("n_rows")
-        )
-        clustered = (
-            zdf.repartitionByRange(F.col("__zorder"))
-            .sortWithinPartitions(F.col("__zorder"))
-            .drop("__zorder", *rcols)
-        )
-    else:
-        clustered = df.repartitionByRange(
-            *[F.col(c) for c in cluster_cols]
-        ).sortWithinPartitions(*[F.col(c) for c in cluster_cols])
-    new_version = base + 1
-    token = uuid.uuid4().hex[:8]
-    data_dir = os.path.join(table_dir, "data", f"v{new_version:05d}_{token}")
-    _to_physical(clustered, mapping).write.option(
-        "maxRecordsPerFile", max_records_per_file
-    ).parquet(data_dir)
-    files = _collect_file_stats(
-        spark, data_dir, _phys_struct(df.schema, mapping)
-    )
-    pcols = [(mapping or {}).get(c, c) for c in cluster_cols]
-    for f in files:
-        # clustering provenance (PHYSICAL names — stable across
-        # renames): lets vt_cluster_incremental recognize already-
-        # clustered files and rewrite only the debt
-        f["clustered"] = pcols
-    base_meta = _table_meta(manifest)
-    # a full rewrite READS everything, so its read set is every base
-    # file and ANY concurrently added file conflicts (its rows would
-    # vanish from the rewrite) — the strictest rules in the family;
-    # compact/cluster commit with the relaxed layout rules below. The
-    # commit is a full file list: it replaces the whole snapshot.
-    parent_files = vt_files(table_dir, base)
-    return _stage_or_commit(txn, table_dir, "vt_optimize", _staged(
-        base, base_meta, {f["path"] for f in parent_files}, data_dir,
-        parent_files,
-        lambda carried_now, version: _next_manifest(
-            base_meta, "OPTIMIZE", version, carried_now, files, None,
-            data_dir,
+    file set.
+
+    The rewrite reads every file, so it has the strictest conflict
+    rules of the three layout rewrites (``_rewrite_layout``): ANY
+    concurrent commit makes it raise ``VersionConflictError``."""
+    return _rewrite_layout(
+        spark, table_dir, "vt_optimize", "OPTIMIZE", None, txn,
+        lambda files, _pcols: files,
+        lambda df, picked: _cluster_rows(
+            df, cluster_cols, zorder, _live_rows(picked)
         ),
-        lambda fe: True,
-    ))
+        max_records_per_file, cluster_cols, full=True,
+    )
 
 
 def vt_cluster_incremental(
@@ -1864,7 +1908,8 @@ def vt_cluster_incremental(
     clustered run. The table then holds a few clustered RUNS, each a
     set of disjoint key spans — a point lookup opens at most one file
     PER RUN (the LSM trade Databricks' liquid clustering makes), and a
-    periodic full ``vt_optimize`` collapses the runs to one.
+    periodic full ``vt_optimize`` collapses the runs to one. More than
+    one column always clusters by Z-order.
 
     Commits through the shared disjoint-commit conflict resolution with
     an always-false added-file test (layout never conflicts with
@@ -1873,57 +1918,17 @@ def vt_cluster_incremental(
     it raise ``VersionConflictError`` (the caller re-runs it; there is
     no re-plan). Returns the new version, or the current latest when
     there is no debt."""
-    base = _plan_base(table_dir, expected_version)
-    manifest = _read_manifest(table_dir, base)
-    _check_protocol(manifest, table_dir, write=True)
-    parent_files = vt_files(table_dir, base)
-    mapping = _col_mapping(manifest)
-    cols = list(cluster_cols)
-    pcols = [(mapping or {}).get(c, c) for c in cols]
-    debt = [f for f in parent_files if f.get("clustered") != pcols]
-    if not debt:
-        return vt_latest_version(table_dir)
-    t_paths = {f["path"] for f in debt}
-    schema = _manifest_schema(manifest, table_dir)
-    df = _read_snapshot_entries(spark, debt, schema, mapping)
-    if len(cols) > 1:
-        zdf, rcols = _zorder_key(
-            df, cols, n_rows=sum(f["n_rows"] for f in debt)
-        )
-        clustered = (
-            zdf.repartitionByRange(F.col("__zorder"))
-            .sortWithinPartitions(F.col("__zorder"))
-            .drop("__zorder", *rcols)
-        )
-    else:
-        clustered = df.repartitionByRange(
-            *[F.col(c) for c in cols]
-        ).sortWithinPartitions(*[F.col(c) for c in cols])
-    new_version = base + 1
-    data_dir = _write_data_with_opts(
-        _to_physical(clustered, mapping), table_dir, new_version,
-        max_records_per_file,
-    )
-    new_files = _collect_file_stats(
-        spark, data_dir, _phys_struct(schema, mapping)
-    )
-    if not new_files:
-        shutil.rmtree(data_dir, ignore_errors=True)
-    for f in new_files:
-        f["clustered"] = pcols
-    base_meta = _table_meta(manifest)
-    # layout never conflicts with content: only a commit that removed
-    # one of the debt files (the removed-read-file check) or changed the
-    # table metadata conflicts — the r6 co-commit rules
-    op_name = "vt_cluster_incremental"
-    return _stage_or_commit(txn, table_dir, op_name, _staged(
-        base, base_meta, t_paths, data_dir, parent_files,
-        lambda carried_now, version: _next_manifest(
-            base_meta, "CLUSTER", version, carried_now, new_files, t_paths,
-            data_dir,
+    return _rewrite_layout(
+        spark, table_dir, "vt_cluster_incremental", "CLUSTER",
+        expected_version, txn,
+        lambda files, pcols: [
+            f for f in files if f.get("clustered") != pcols
+        ] or None,
+        lambda df, debt: _cluster_rows(
+            df, cluster_cols, True, _live_rows(debt)
         ),
-        lambda fe: False,
-    ))
+        max_records_per_file, cluster_cols,
+    )
 
 
 def vt_compact(
@@ -1938,9 +1943,9 @@ def vt_compact(
     ONLY the files below ``min_rows_per_file`` into full-size files and
     carry every already-large file forward by reference — at 100 TB you
     never rewrite the whole table to fix the small-file debt a
-    streaming MERGE sink accretes; you sweep the tail. Unlike
-    ``vt_optimize`` (full clustered rewrite), compaction reads exactly
-    the small files, so its cost scales with the DEBT, not the table.
+    streaming MERGE sink accretes; you sweep the tail. Compaction reads
+    exactly the small files, so its cost scales with the DEBT, not the
+    table; the new files carry no ``clustered`` stamp.
 
     Commits through the shared disjoint-commit conflict resolution with
     an always-false added-file test: a concurrent MERGE that added or
@@ -1950,57 +1955,20 @@ def vt_compact(
     ``VersionConflictError`` — exactly Delta's OPTIMIZE-vs-writer
     concurrency story. Returns the new version (or the current latest
     when <2 small files exist — nothing to do, no commit)."""
-    base = _plan_base(table_dir, expected_version)
-    manifest = _read_manifest(table_dir, base)
-    _check_protocol(manifest, table_dir, write=True)
-    parent_files = vt_files(table_dir, base)
-    small = [f for f in parent_files if f["n_rows"] < min_rows_per_file]
-    if len(small) < 2:
-        return vt_latest_version(table_dir)  # no debt to sweep
-    mapping = _col_mapping(manifest)
-    t_paths = {f["path"] for f in small}
-    schema = _manifest_schema(manifest, table_dir)
-    n_small_rows = sum(f["n_rows"] for f in small)
     target = max(1, min_rows_per_file)
-    n_out = max(1, -(-n_small_rows // target))  # ceil
-    df = _read_snapshot_entries(
-        spark, small, schema, mapping
-    ).coalesce(n_out)
-    new_version = base + 1
-    data_dir = _write_data_with_opts(
-        _to_physical(df, mapping), table_dir, new_version,
-        max_records_per_file,
-    )
-    new_files = _collect_file_stats(
-        spark, data_dir, _phys_struct(schema, mapping)
-    )
-    if not new_files:
-        shutil.rmtree(data_dir, ignore_errors=True)
-    base_meta = _table_meta(manifest)
-    # compaction reads only the small files: a concurrent commit ADDING
-    # files co-commits (always-false test), one removing a compacted
-    # file aborts (removed-read-file)
-    return _stage_or_commit(txn, table_dir, "vt_compact", _staged(
-        base, base_meta, t_paths, data_dir, parent_files,
-        lambda carried_now, version: _next_manifest(
-            base_meta, "COMPACT", version, carried_now, new_files, t_paths,
-            data_dir,
-        ),
-        lambda fe: False,
-    ))
 
+    def pick(files, _pcols):
+        small = [f for f in files if f["n_rows"] < min_rows_per_file]
+        return small if len(small) >= 2 else None
 
-def _write_data_with_opts(
-    df: DataFrame, table_dir: str, version: int,
-    max_records_per_file: int | None,
-) -> str:
-    token = uuid.uuid4().hex[:8]
-    data_dir = os.path.join(table_dir, "data", f"v{version:05d}_{token}")
-    w = df.write
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", int(max_records_per_file))
-    w.parquet(data_dir)
-    return data_dir
+    def arrange(df, small):
+        n_out = -(-sum(f["n_rows"] for f in small) // target)  # ceil
+        return df.coalesce(max(1, n_out))
+
+    return _rewrite_layout(
+        spark, table_dir, "vt_compact", "COMPACT", expected_version, txn,
+        pick, arrange, max_records_per_file,
+    )
 
 
 def vt_changes(

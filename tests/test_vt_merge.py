@@ -10,7 +10,9 @@ and a small merge must stay a fixed, small number of Spark jobs.
 A merge that loses its commit race to an overlapping writer re-plans at
 the latest version inside the one commit loop and commits the table the
 serial order gives; the last section pins that, and the planning-base
-rule it shares with predicate DML, CLUSTER and COMPACT.
+rule it shares with predicate DML, CLUSTER and COMPACT. The tail checks
+that a change batch missing a table column, and a failed OPTIMIZE,
+CLUSTER or COMPACT write, commit nothing and leave no staged dir.
 """
 
 from __future__ import annotations
@@ -271,15 +273,24 @@ def test_commit_never_exposes_an_empty_manifest(spark, tmp_path, monkeypatch):
 def _interpose_once(monkeypatch, action):
     """Run ``action(table_dir)`` right after the FIRST staged write,
     between a writer's write and its commit; returns the list of staged
-    data dirs written, in order."""
+    data dirs written, in order. The writes ``action`` itself makes are
+    not counted."""
     staged = []
+    acting = False
     real = VT._write_data
 
-    def write(df, table_dir, version):
-        data_dir = real(df, table_dir, version)
+    def write(df, table_dir, version, *rest):
+        nonlocal acting
+        data_dir = real(df, table_dir, version, *rest)
+        if acting:
+            return data_dir
         staged.append(data_dir)
         if len(staged) == 1:
-            action(table_dir)
+            acting = True
+            try:
+                action(table_dir)
+            finally:
+                acting = False
         return data_dir
 
     monkeypatch.setattr(VT, "_write_data", write)
@@ -438,3 +449,61 @@ def test_expected_version_past_the_latest_is_a_conflict(
                        match="expected version 1, table is at 0"):
         _PINNED_WRITERS[writer](spark, t, 1)
     assert VT.vt_latest_version(t) == 0
+
+
+def test_change_batch_missing_a_table_column_is_a_clear_error(
+    spark, tmp_path, monkeypatch
+):
+    """A change batch without one of the table's columns fails with a
+    ValueError naming it, before any job writes: directly, and when a
+    merge re-plans over a ``merge_schema`` merge that added the column.
+    Nothing of the failed merge is committed or left staged."""
+    t = str(tmp_path / "t")
+    _create(spark, t, "k long, v long, w long",
+            [{"k": k, "v": k, "w": k} for k in range(6)], "k")
+    chg = _chg_df(spark, [{"k": 1, "v": 11, "op": "U"}])
+    with pytest.raises(ValueError, match=r"lacks table column\(s\) \['w'\]"):
+        VT.vt_merge(spark, t, chg, keys=["k"])
+    assert VT.vt_latest_version(t) == 0
+    assert not _unreferenced_dirs(t)
+
+    t2 = str(tmp_path / "t2")
+    _create(spark, t2, "k long, v long",
+            [{"k": k, "v": k} for k in range(6)], "k")
+    wide = spark.createDataFrame([(2, 22, 7, "U")],
+                                 "k long, v long, w long, op string")
+    staged = _interpose_once(monkeypatch, lambda td: VT.vt_merge(
+        spark, td, wide, keys=["k"], merge_schema=True))
+    with pytest.raises(ValueError, match=r"lacks table column\(s\) \['w'\]"):
+        VT.vt_merge(spark, t2, chg, keys=["k"])
+    assert len(staged) == 1 and not os.path.exists(staged[0])
+    assert VT.vt_latest_version(t2) == 1  # the schema-evolving merge only
+    assert not _unreferenced_dirs(t2)
+
+
+_MAINTENANCE = {
+    "optimize": lambda spark, t: VT.vt_optimize(spark, t, ["k"]),
+    "cluster": lambda spark, t: VT.vt_cluster_incremental(
+        spark, t, ["k", "v"]),
+    "compact": lambda spark, t: VT.vt_compact(spark, t),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_MAINTENANCE))
+def test_failed_maintenance_write_leaves_nothing_behind(
+    spark, tmp_path, monkeypatch, writer
+):
+    """OPTIMIZE, CLUSTER and COMPACT write through the one file-set
+    writer: when the write job fails, the Spark error propagates, no
+    version is committed and no staged dir is left under data/."""
+    t = str(tmp_path / "t")
+    _create(spark, t, "k long, v long",
+            [{"k": k, "v": k * 2} for k in range(40)], "k")
+    real = VT._to_physical
+    monkeypatch.setattr(VT, "_to_physical", lambda df, mapping: real(
+        df, mapping).withColumn("__boom", F.raise_error(
+            F.lit("maintenance write failed")).cast("long")))
+    with pytest.raises(Exception, match="maintenance write failed"):
+        _MAINTENANCE[writer](spark, t)
+    assert VT.vt_latest_version(t) == 0
+    assert not _unreferenced_dirs(t)
