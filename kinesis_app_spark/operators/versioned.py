@@ -1102,17 +1102,7 @@ def vt_fast_stats(
     ``format("vt_table")`` cannot be intercepted — route metadata
     aggregates here (or through ``vt_fast_stats_df`` for SQL
     composition) instead of scanning 100 TB through a Python worker."""
-    version = _resolve_pin(table_dir, version)
-    if version is None:
-        version = vt_latest_version(table_dir)
-        if version < 0:
-            raise FileNotFoundError(f"no committed version in {table_dir}")
-    m = _read_manifest(table_dir, version)
-    _check_protocol(m, table_dir)
-    if m.get("vacuumed"):
-        raise FileNotFoundError(
-            f"version {version} of {table_dir} was vacuumed"
-        )
+    version, m = _read_base(table_dir, version)
     files = vt_files(table_dir, version)
     mapping = _col_mapping(m) or {}
     dv_anywhere = any(f.get("dv") or f.get("n_dv") for f in files)
@@ -1249,21 +1239,13 @@ def _resolve_pin(table_dir: str, version) -> int | None:
     )
 
 
-def vt_read(
-    spark: SparkSession, table_dir: str, version: int | None = None,
-    timestamp=None,
-) -> DataFrame:
-    """Read the table — latest, ``VERSION AS OF`` when ``version`` is
-    given, or ``TIMESTAMP AS OF`` when ``timestamp`` (epoch float or
-    datetime) is given (resolved via ``vt_version_at_timestamp``).
-    ``version`` also accepts a ``txn_snapshot`` pin map ({table_dir:
-    version}) — the cross-table consistent-read shape: every reader in
-    the query passes the SAME map and each table resolves its own pin."""
+def _read_base(table_dir: str, version) -> tuple[int, dict]:
+    """The version and manifest a reader reads — the read-side twin of
+    ``_plan_base``: ``version`` (a ``txn_snapshot`` pin map resolves
+    to this table's pin), else the latest. A missing table or a
+    vacuumed version raises ``FileNotFoundError``, an unsupported
+    protocol ``ProtocolError``."""
     version = _resolve_pin(table_dir, version)
-    if timestamp is not None:
-        if version is not None:
-            raise ValueError("pass version OR timestamp, not both")
-        version = vt_version_at_timestamp(table_dir, timestamp)
     if version is None:
         version = vt_latest_version(table_dir)
         if version < 0:
@@ -1275,6 +1257,24 @@ def vt_read(
             f"version {version} of {table_dir} was vacuumed; earliest "
             "readable version is the oldest non-vacuumed manifest"
         )
+    return version, manifest
+
+
+def vt_read(
+    spark: SparkSession, table_dir: str, version: int | None = None,
+    timestamp=None,
+) -> DataFrame:
+    """Read the table — latest, ``VERSION AS OF`` when ``version`` is
+    given, or ``TIMESTAMP AS OF`` when ``timestamp`` (epoch float or
+    datetime) is given (resolved via ``vt_version_at_timestamp``).
+    ``version`` also accepts a ``txn_snapshot`` pin map ({table_dir:
+    version}) — the cross-table consistent-read shape: every reader in
+    the query passes the SAME map and each table resolves its own pin."""
+    if timestamp is not None:
+        if version is not None:
+            raise ValueError("pass version OR timestamp, not both")
+        version = vt_version_at_timestamp(table_dir, timestamp)
+    version, manifest = _read_base(table_dir, version)
     return _read_snapshot_entries(
         spark, vt_files(table_dir, version),
         _manifest_schema(manifest, table_dir), _col_mapping(manifest),
@@ -2129,71 +2129,6 @@ def vt_foreach_batch_merger(
     return apply_batch
 
 
-def vt_stream_changes(
-    spark: SparkSession,
-    table_dir: str,
-    keys: Sequence[str],
-    ledger_path: str,
-    apply_fn,
-    end_version: int | None = None,
-    max_versions: int | None = None,
-) -> list[int]:
-    """AvailableNow-style change-feed tail: the streaming consumer of
-    ``vt_changes``. Every committed version of the table is delivered to
-    ``apply_fn(changes_df, version)`` exactly once per ledger — version
-    0 as an all-``insert`` batch, each later version as its CDF against
-    the previous version (which under manifest v2 reads only the two
-    sides' EXCLUSIVE files, so tailing a pruned merge costs O(files
-    touched), not O(table)). Progress is recorded in ``ledger_path``
-    (atomic tmp+rename) AFTER ``apply_fn`` returns, so a crash between
-    apply and record redelivers exactly that one version on restart —
-    at-least-once at the version boundary, exactly-once end-to-end when
-    the sink is version-idempotent (``vt_foreach_batch_merger``'s
-    batch_id ledger with ``batch_id=version``, or a deterministic
-    overwrite). This is the production topology the CDF exists for:
-    downstream tables tail an upstream versioned table the way the
-    reference's consumer loop tails a shard
-    (/root/reference/src/Kinesis/Coordination.hs:100-107), with the
-    version ledger playing the checkpoint's role.
-
-    Returns the versions processed this run (empty when caught up).
-    ``end_version`` caps the tail (defaults to the current latest) —
-    the AvailableNow contract: process what exists, then return.
-    ``max_versions`` bounds one call's work (the maxFilesPerTrigger /
-    maxOffsetsPerTrigger analogue on this layer): a consumer restarted
-    behind a long history drains it across bounded calls instead of one
-    giant batch, each call exactly-once under the same ledger."""
-    try:
-        with open(ledger_path) as fh:
-            last = int(fh.read().strip())
-    except (OSError, ValueError):
-        last = -1
-    latest = vt_latest_version(table_dir)
-    if end_version is not None:
-        latest = min(latest, end_version)
-    if max_versions is not None:
-        latest = min(latest, last + max(1, int(max_versions)))
-    processed: list[int] = []
-    for v in range(last + 1, latest + 1):
-        if v == 0:
-            snap = vt_read(spark, table_dir, 0)
-            value_cols = [c for c in snap.columns if c not in keys]
-            changes = snap.select(
-                F.lit("insert").alias("_change_type"),
-                *keys,
-                *value_cols,
-            )
-        else:
-            changes = vt_changes(spark, table_dir, v - 1, v, keys)
-        apply_fn(changes, v)
-        tmp = f"{ledger_path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as fh:
-            fh.write(str(v))
-        os.replace(tmp, ledger_path)
-        processed.append(v)
-    return processed
-
-
 def _version_file_paths(table_dir: str, version: int) -> list[str]:
     return [f["path"] for f in vt_files(table_dir, version)]
 
@@ -2864,17 +2799,7 @@ def vt_scan(
     to ``vt_read(...).filter(...)`` (value-gated in the registry);
     pruning is a file-listing optimization, never a semantics change.
     ``version`` also accepts a ``txn_snapshot`` pin map."""
-    version = _resolve_pin(table_dir, version)
-    if version is None:
-        version = vt_latest_version(table_dir)
-        if version < 0:
-            raise FileNotFoundError(f"no committed version in {table_dir}")
-    manifest = _read_manifest(table_dir, version)
-    _check_protocol(manifest, table_dir)
-    if manifest.get("vacuumed"):
-        raise FileNotFoundError(
-            f"version {version} of {table_dir} was vacuumed"
-        )
+    version, manifest = _read_base(table_dir, version)
     filters = list(filters)
     files = vt_files(table_dir, version)
     schema = _manifest_schema(manifest, table_dir)

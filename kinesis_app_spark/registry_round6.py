@@ -1,12 +1,14 @@
 """Round-6 registry entries: the change-feed STREAMING source — a
 downstream aggregate table that TAILS an upstream versioned table's CDF
-version by version (operators/versioned.py:vt_stream_changes) and is
-maintained incrementally, never recomputed. This is the production
-topology the lakehouse layer exists for: ingestion MERGEs land on the
-upstream table, and every downstream rollup follows by applying each
-version's delta — the reference's consumer loop
+version by version (a ``format("vt_cdf")`` readStream drained through
+``sources/vt_cdf.py:foreach_version``) and is maintained incrementally,
+never recomputed. This is the production topology the lakehouse layer
+exists for: ingestion MERGEs land on the upstream table, and every
+downstream rollup follows by applying each version's delta — the
+reference's consumer loop
 (/root/reference/src/Kinesis/Coordination.hs:100-107) re-expressed over
-table versions, with the version ledger playing the checkpoint's role.
+table versions, with Spark's stream checkpoint as the only progress
+record.
 
 The oracle recomputes the final rollup from raw orders with the DML
 history replayed arithmetically — streamed-incremental == batch-
@@ -22,6 +24,7 @@ from pyspark.sql import functions as F
 from kinesis_app_spark.scratch import scratch_dir
 from kinesis_app_spark.registry_round4 import _fresh_marker, _table_sig
 from kinesis_app_spark.registry_util import QuerySpec, table as _t
+from kinesis_app_spark.sources import vt_cdf as CDF
 from kinesis_app_spark.streaming.runner import drain
 
 _VT6_ROOT = "/tmp/kinesis_versioned"
@@ -38,9 +41,12 @@ def vt_cdf_rollup_applier(spark, downstream_dir: str, group_col: str,
     downstream table are read (semi-join against the delta's keys), so
     the maintenance cost scales with the delta, never the rollup; the
     upstream version number doubles as the merge's batch_id, making a
-    redelivered version (crash between apply and ledger advance) a
-    no-op — the exactly-once composition vt_stream_changes documents.
-    Decimal accumulation keeps subtract-then-add exact."""
+    redelivered version (an epoch replayed after a crash before the
+    stream checkpoint advanced) a no-op — exactly once end to end.
+    Under ``foreach_version`` the id is the upstream version; passed
+    straight to ``foreachBatch`` it is the epoch id, and the same
+    ledger check makes a replayed epoch a no-op. Decimal accumulation
+    keeps subtract-then-add exact."""
     from kinesis_app_spark.operators import versioned as VT
 
     def apply(changes, version):
@@ -84,6 +90,24 @@ def vt_cdf_rollup_applier(spark, downstream_dir: str, group_col: str,
     return apply
 
 
+def _drain_cdf(spark, table_dir: str, keys: str, fn, ckpt: str,
+               what: str) -> None:
+    """Drain every version of ``table_dir``'s change feed not yet in
+    the checkpoint ``ckpt`` into the foreachBatch ``fn`` (one
+    availableNow run; ``drain`` raises if it times out)."""
+    CDF.register(spark)
+    drain(
+        spark.readStream.format("vt_cdf")
+        .option("path", table_dir).option("keys", keys)
+        .load()
+        .writeStream.foreachBatch(fn)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start(),
+        what,
+    )
+
+
 def _cdf_stream_tables(spark, sf_dir) -> str:
     """Build (once per sf_dir) the upstream 4-version orders table and
     tail it into the downstream rollup:
@@ -93,8 +117,9 @@ def _cdf_stream_tables(spark, sf_dir) -> str:
       upstream v2 MERGE  = o_totalprice += 50 WHERE o_custkey % 10 = 0
       upstream v3 MERGE  = delete WHERE o_orderkey % 7 = 0
 
-    then vt_stream_changes delivers v0..v3 to the rollup applier.
-    Returns the downstream table dir."""
+    then one availableNow drain of the upstream's ``vt_cdf`` stream
+    delivers v0..v3 to the rollup applier, one downstream merge per
+    version (``foreach_version``). Returns the downstream table dir."""
     import shutil
 
     from kinesis_app_spark.operators import versioned as VT
@@ -142,12 +167,12 @@ def _cdf_stream_tables(spark, sf_dir) -> str:
         ),
         down,
     )
-    VT.vt_stream_changes(
-        spark, up, keys=["o_orderkey"],
-        ledger_path=os.path.join(down, "_cdf_ledger"),
-        apply_fn=vt_cdf_rollup_applier(
+    _drain_cdf(
+        spark, up, "o_orderkey",
+        CDF.foreach_version(vt_cdf_rollup_applier(
             spark, down, "o_orderstatus", "o_totalprice"
-        ),
+        )),
+        os.path.join(down, "_ckpt"), "versioned_cdf_stream_agg drain",
     )
     with open(marker, "w") as fh:
         fh.write(sig)
@@ -159,8 +184,8 @@ def versioned_cdf_stream_agg(spark, sf_dir):
     table (orders count + price mass per status) maintained ONLY by
     tailing the upstream versioned table's CDF across four versions —
     create, late-arriving insert batch, price update, GDPR-style delete
-    — one delta merge per version, never a recompute
-    (vt_stream_changes + vt_cdf_rollup_applier; restart-mid-stream
+    — one delta merge per version, never a recompute (the vt_cdf
+    stream + foreach_version + vt_cdf_rollup_applier; restart-mid-stream
     exactly-once is pinned in tests/test_round6.py). The oracle
     recomputes the same rollup from raw orders with the version
     history's effects applied arithmetically: streamed == recomputed is
@@ -206,9 +231,7 @@ def versioned_cdf_source_batch(spark, sf_dir):
     price bump, v3's deletes carrying the bumped preimage — so one row
     mis-labeled, dropped, duplicated, or carrying the wrong image value
     hash-mismatches."""
-    from kinesis_app_spark.sources import vt_cdf as SRC
-
-    SRC.register(spark)
+    CDF.register(spark)
     _cdf_stream_tables(spark, sf_dir)  # ensures the upstream is built
     tag = os.path.basename(sf_dir.rstrip("/")) or "root"
     up = os.path.join(_VT6_ROOT, f"orders_cdfsrc_{tag}")
@@ -250,22 +273,21 @@ ORDER BY "_commit_version", "_change_type", o_orderkey
 
 
 def versioned_cdf_readstream_agg(spark, sf_dir):
-    """The vt_cdf STREAMING reader end to end: the downstream rollup is
-    maintained by a genuine ``readStream.format("vt_cdf")`` query —
-    Spark's offset log (versions ARE the offsets) replaces the hand
-    ledger of versioned_cdf_stream_agg — draining the same 4-version
-    upstream through foreachBatch into one signed delta merge
-    (insert/postimage add, delete/preimage subtract), idempotent under
-    epoch replay via the downstream table's batch-id ledger. Same oracle
-    as the ledger twin: streamed-incremental == batch-recompute, so a
+    """The vt_cdf STREAMING reader end to end, epoch at a time: the
+    downstream rollup is maintained by a ``readStream.format("vt_cdf")``
+    query whose foreachBatch is ``vt_cdf_rollup_applier`` itself — the
+    whole availableNow epoch (the same 4-version upstream) becomes ONE
+    signed delta merge (insert/postimage add, delete/preimage subtract)
+    with the epoch id as its batch_id, where versioned_cdf_stream_agg
+    splits the epoch into one merge per version. Idempotent under epoch
+    replay via the downstream table's batch-id ledger. Same oracle as
+    its per-version twin: streamed-incremental == batch-recompute, so a
     dropped/duplicated version or a mis-signed image shifts a count or a
     price mass and hash-mismatches."""
     import shutil
 
     from kinesis_app_spark.operators import versioned as VT
-    from kinesis_app_spark.sources import vt_cdf as SRC
 
-    SRC.register(spark)
     _cdf_stream_tables(spark, sf_dir)  # ensures the upstream is built
     tag = os.path.basename(sf_dir.rstrip("/")) or "root"
     up = os.path.join(_VT6_ROOT, f"orders_cdfsrc_{tag}")
@@ -283,53 +305,13 @@ def versioned_cdf_readstream_agg(spark, sf_dir):
             ),
             down,
         )
-
-        def apply_batch(changes, batch_id):
-            if batch_id in VT.vt_committed_batch_ids(down):
-                return  # replayed epoch: already applied
-            sgn = F.when(
-                F.col("_change_type").isin("insert", "update_postimage"),
-                F.lit(1),
-            ).otherwise(F.lit(-1))
-            delta = changes.groupBy("o_orderstatus").agg(
-                F.sum(sgn).alias("__n_delta"),
-                F.sum(
-                    sgn.cast("decimal(30,8)")
-                    * F.col("o_totalprice").cast("decimal(30,8)")
-                ).alias("__p_delta"),
-            )
-            cur = VT.vt_read(spark, down).join(
-                F.broadcast(delta.select("o_orderstatus")),
-                "o_orderstatus", "left_semi",
-            )
-            merged = cur.join(delta, "o_orderstatus", "full_outer").select(
-                "o_orderstatus",
-                (F.coalesce(F.col("n_orders"), F.lit(0))
-                 + F.coalesce(F.col("__n_delta"), F.lit(0)))
-                .alias("n_orders"),
-                (F.coalesce(F.col("price_sum"),
-                            F.lit(0).cast("decimal(30,8)"))
-                 + F.coalesce(F.col("__p_delta"),
-                              F.lit(0).cast("decimal(30,8)")))
-                .cast("decimal(30,8)").alias("price_sum"),
-            )
-            ops = merged.withColumn(
-                "op", F.when(F.col("n_orders") <= 0, F.lit("D"))
-                .otherwise(F.lit("U"))
-            )
-            VT.vt_merge(spark, down, ops, keys=["o_orderstatus"],
-                        batch_id=batch_id)
-
         # a timed-out drain raises before the marker: no stale cache
-        drain(
-            spark.readStream.format("vt_cdf")
-            .option("path", up).option("keys", "o_orderkey")
-            .load()
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", os.path.join(down, "_ckpt"))
-            .trigger(availableNow=True)
-            .start(),
-            "versioned_cdf_readstream_agg drain",
+        _drain_cdf(
+            spark, up, "o_orderkey",
+            vt_cdf_rollup_applier(
+                spark, down, "o_orderstatus", "o_totalprice"
+            ),
+            os.path.join(down, "_ckpt"), "versioned_cdf_readstream_agg drain",
         )
         with open(marker, "w") as fh:
             fh.write(sig)
@@ -728,8 +710,8 @@ def vt_cdf_join_delta_applier(spark, view_dir: str):
     contributes exactly the revenue difference). Only AFFECTED custkeys
     of the view are read (semi-join), revenue terms are decimal so
     subtract-then-add is exact, and the step index doubles as the
-    merge's batch_id (a redelivered step is a no-op — the
-    vt_stream_changes exactly-once composition on two ledgers)."""
+    merge's batch_id (a redelivered step is a no-op — the same
+    batch-id ledger check as vt_cdf_rollup_applier)."""
     from kinesis_app_spark.operators import versioned as VT
 
     rev = (
@@ -922,7 +904,11 @@ def vt_cdf_index_applier(spark, index_dir: str, id_col: str = "doc_id"):
     new text. This closes the compliance loop END TO END: a GDPR DELETE
     lands on the lakehouse table as a normal DML commit, and the index
     follows by tailing the change feed — nobody has to remember to also
-    call the index's erase. Version 0 (all-insert) builds the index."""
+    call the index's erase. Version 0 (all-insert) builds the index, so
+    the feed must reach it one version at a time, in order: drain the
+    ``vt_cdf`` stream through ``foreach_version``. A version with no
+    change rows never reaches the applier, so a caller whose v0 may be
+    empty creates the index empty first."""
     from kinesis_app_spark.operators import dedupindex as DI
 
     def apply(changes, version):
@@ -947,9 +933,10 @@ def dedup_index_cdf_maintenance(spark, sf_dir):
     table (v0 CREATE = u in [0.3, 0.65), v1 MERGE = insert u >= 0.65,
     v2 MERGE-delete = the GDPR cohort doc_id % 11 = 0), and the persisted
     near-dup index is maintained ONLY by tailing that table's change
-    feed (vt_stream_changes + vt_cdf_index_applier) — inserts become
+    feed (the vt_cdf stream drained through foreach_version into
+    vt_cdf_index_applier) — the index is built at v0, inserts become
     index appends, the DELETE becomes file-targeted index erasure,
-    exactly once per version. The screen that follows must equal a
+    once per version in version order. The screen that follows must equal a
     screen against an index built in one shot over the FINAL corpus
     (same per-doc probe rows either way), so the entry rides
     DEDUP_INDEX_ERASURE_SQL unchanged: the oracle replays the screen
@@ -969,8 +956,9 @@ def dedup_index_cdf_maintenance(spark, sf_dir):
     def build(d):
         import shutil
 
-        up = d + "_upstream"
-        shutil.rmtree(up, ignore_errors=True)
+        up, ckpt = d + "_upstream", d + "_ckpt"
+        for stale in (up, ckpt):
+            shutil.rmtree(stale, ignore_errors=True)
         u = _md5_u("doc_id")
         corpus = docs.select("doc_id", "text")
         VT.vt_create(
@@ -983,10 +971,13 @@ def dedup_index_cdf_maintenance(spark, sf_dir):
             .withColumn("op", F.lit("D"))
         )
         VT.vt_merge(spark, up, gdpr, keys=["doc_id"])
-        VT.vt_stream_changes(
-            spark, up, keys=["doc_id"],
-            ledger_path=os.path.join(d, "_cdf_ledger"),
-            apply_fn=vt_cdf_index_applier(spark, d),
+        # an empty corpus delivers no rows at all: the index starts
+        # empty, and a non-empty v0 replaces it
+        DI.dedup_index_build(corpus.limit(0), d)
+        _drain_cdf(
+            spark, up, "doc_id",
+            CDF.foreach_version(vt_cdf_index_applier(spark, d)),
+            ckpt, "dedup_index_cdf_maintenance drain",
         )
 
     idx = _ensure_built(
@@ -1023,11 +1014,9 @@ def pipeline_kinesis_lakehouse_rollup(spark, sf_dir):
     import shutil
 
     from kinesis_app_spark.operators import versioned as VT
-    from kinesis_app_spark.sources import vt_cdf as CDF
     from kinesis_app_spark.sources.fake_kinesis import register as reg_fk
 
     reg_fk(spark)
-    CDF.register(spark)
     # all four dirs are fresh-per-call run state under one scratch dir
     # (deleted in the teardown below): never /tmp-cached
     run = scratch_dir("pkl_")
@@ -1073,18 +1062,11 @@ def pipeline_kinesis_lakehouse_rollup(spark, sf_dir):
         ingest_wave(150)   # upstream v1: seqs 0..149 per shard
         ingest_wave(250)   # upstream v2: the stream GREW; resume
         #                    delivers only 150..249 from the checkpoint
-        drain(
-            spark.readStream.format("vt_cdf")
-            .option("path", up).option("keys", "shard,seq")
-            .load()
-            .writeStream.foreachBatch(
-                vt_cdf_rollup_applier(spark, _mk_rollup(spark, down),
-                                      "usr", "seq")
-            )
-            .option("checkpointLocation", ckpt2)
-            .trigger(availableNow=True)
-            .start(),
-            "pipeline CDF drain",
+        _drain_cdf(
+            spark, up, "shard,seq",
+            vt_cdf_rollup_applier(spark, _mk_rollup(spark, down),
+                                  "usr", "seq"),
+            ckpt2, "pipeline CDF drain",
         )
         return (
             VT.vt_read(spark, down)

@@ -57,6 +57,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from kinesis_app_spark.operators import versioned as VT
+from kinesis_app_spark.sources.vt_cdf import foreach_version
 
 __all__ = ["TwoStreamJoinCoordinator"]
 
@@ -115,28 +116,24 @@ class TwoStreamJoinCoordinator:
         return os.path.join(self.spool_dir, side, f"v{version:05d}")
 
     def _stage(self, side: str, batch_df: DataFrame) -> None:
-        """Stage one micro-batch's rows per contained version. Atomic
-        dir swap: a version directory either holds the complete delta
-        or does not exist — a crash mid-stage redelivers the batch and
-        re-stages identical content (manifests are immutable)."""
-        versions = [
-            int(r["_commit_version"])
-            for r in batch_df.select("_commit_version").distinct()
-            .collect()
-        ]
-        for v in sorted(versions):
+        """Stage one micro-batch's rows per contained version
+        (``foreach_version`` splits it). Atomic dir swap: a version
+        directory either holds the complete delta or does not exist — a
+        crash mid-stage redelivers the batch and re-stages identical
+        content (manifests are immutable)."""
+
+        def put(rows: DataFrame, v: int) -> None:
             final = self._spool_path(side, v)
             if os.path.isdir(final):
-                continue  # redelivery: identical content already staged
+                return  # redelivery: identical content already staged
             tmp = f"{final}.tmp.{uuid.uuid4().hex[:8]}"
-            (
-                batch_df.filter(batch_df["_commit_version"] == v)
-                .write.mode("overwrite").parquet(tmp)
-            )
+            rows.write.mode("overwrite").parquet(tmp)
             try:
                 os.rename(tmp, final)
             except OSError:
                 shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+
+        foreach_version(put)(batch_df, None)
 
     def foreach_batch(self, side: str):
         if side not in ("a", "b"):

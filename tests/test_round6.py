@@ -312,28 +312,6 @@ def test_vt_compact_co_commits_with_disjoint_merge(spark, tmp_path):
         )
 
 
-def test_stream_changes_max_versions_bounds_each_call(spark, tmp_path):
-    """max_versions drains a long history across bounded calls — the
-    maxOffsetsPerTrigger analogue on the CDF layer."""
-    from kinesis_app_spark.registry_round6 import vt_cdf_rollup_applier
-
-    up = _mk_upstream(spark, tmp_path)
-    down = _mk_downstream(spark, tmp_path)
-    ledger = str(tmp_path / "ledger")
-    applier = vt_cdf_rollup_applier(spark, down, "g", "x")
-    seen = []
-    while True:
-        got = VT.vt_stream_changes(
-            spark, up, ["k"], ledger, applier, max_versions=1
-        )
-        if not got:
-            break
-        assert len(got) == 1
-        seen += got
-    assert seen == [0, 1, 2]
-    assert _read_rollup(spark, down) == _expect_rollup(spark, up)
-
-
 # ---------- file-targeted dedup-index erasure (round-6 task 5) ----------
 
 def _docs6(spark, n=120):
@@ -479,60 +457,85 @@ def _read_rollup(spark, down):
     }
 
 
+def _tail(spark, up, ckpt, apply_fn, keys="k"):
+    """One availableNow drain of ``up``'s vt_cdf stream into
+    ``foreach_version(apply_fn)`` from the checkpoint ``ckpt``."""
+    from kinesis_app_spark.registry_round6 import _drain_cdf
+    from kinesis_app_spark.sources.vt_cdf import foreach_version
+
+    _drain_cdf(spark, up, keys, foreach_version(apply_fn), ckpt, "cdf tail")
+
+
 def test_stream_changes_tails_every_version_once(spark, tmp_path):
-    """vt_stream_changes delivers v0 (all-insert) then each CDF batch,
-    records progress, and a second run finds nothing new."""
+    """The vt_cdf stream, split by foreach_version, delivers v0
+    (all-insert) then each CDF batch in order; the stream checkpoint
+    records progress, so a second drain delivers nothing and a new
+    upstream commit arrives alone."""
     from kinesis_app_spark.registry_round6 import vt_cdf_rollup_applier
 
     up = _mk_upstream(spark, tmp_path)
     down = _mk_downstream(spark, tmp_path)
-    ledger = str(tmp_path / "ledger")
+    ckpt = str(tmp_path / "ckpt")
     applier = vt_cdf_rollup_applier(spark, down, "g", "x")
-    assert VT.vt_stream_changes(spark, up, ["k"], ledger, applier) == [
-        0, 1, 2,
-    ]
+    seen = []
+
+    def recording(changes, version):
+        seen.append(version)
+        applier(changes, version)
+
+    _tail(spark, up, ckpt, recording)
+    assert seen == [0, 1, 2]
     assert _read_rollup(spark, down) == _expect_rollup(spark, up)
     # caught up: nothing redelivered
-    assert VT.vt_stream_changes(spark, up, ["k"], ledger, applier) == []
+    _tail(spark, up, ckpt, recording)
+    assert seen == [0, 1, 2]
     # new upstream commit: exactly the new version arrives
-    from pyspark.sql import functions as F
-
     VT.vt_merge(
         spark, up,
         spark.createDataFrame([(1, "a", 99.0, "U")],
                               "k long, g string, x double, op string"),
         keys=["k"],
     )
-    assert VT.vt_stream_changes(spark, up, ["k"], ledger, applier) == [3]
+    _tail(spark, up, ckpt, recording)
+    assert seen == [0, 1, 2, 3]
     assert _read_rollup(spark, down) == _expect_rollup(spark, up)
 
 
 def test_stream_changes_restart_mid_stream_exactly_once(spark, tmp_path):
-    """Crash BETWEEN apply and ledger advance (the at-least-once
-    window): the restart redelivers that one version, and the sink's
-    batch_id ledger makes the redelivery a no-op — downstream equals
-    the batch recompute, each version merged exactly once."""
+    """A crash INSIDE the epoch, after v1 merged downstream but before
+    the stream checkpoint committed: the restart replays the whole
+    epoch, the downstream batch_id ledger skips v0 and v1, and v2
+    applies — each upstream version merged exactly once."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
     from kinesis_app_spark.registry_round6 import vt_cdf_rollup_applier
 
     up = _mk_upstream(spark, tmp_path)
     down = _mk_downstream(spark, tmp_path)
-    ledger = str(tmp_path / "ledger")
+    ckpt = str(tmp_path / "ckpt")
     applier = vt_cdf_rollup_applier(spark, down, "g", "x")
 
     def crashing(changes, version):
         applier(changes, version)
         if version == 1:
-            raise RuntimeError("simulated crash before ledger advance")
+            raise RuntimeError("simulated crash before the epoch commit")
 
-    with pytest.raises(RuntimeError):
-        VT.vt_stream_changes(spark, up, ["k"], ledger, crashing)
-    with open(ledger) as fh:
-        assert int(fh.read()) == 0  # v1 applied but not recorded
-    # restart: v1 is redelivered (skipped via batch_id), v2 applied
-    assert VT.vt_stream_changes(spark, up, ["k"], ledger, applier) == [1, 2]
+    with pytest.raises(StreamingQueryException, match="simulated crash"):
+        _tail(spark, up, ckpt, crashing)
+    assert VT.vt_committed_batch_ids(down) == {0, 1}
+    # restart: the epoch is redelivered whole; v0/v1 skip via batch_id
+    seen = []
+
+    def recording(changes, version):
+        seen.append(version)
+        applier(changes, version)
+
+    _tail(spark, up, ckpt, recording)
+    assert seen == [0, 1, 2]
     assert _read_rollup(spark, down) == _expect_rollup(spark, up)
     # each upstream version committed exactly one downstream merge
     assert VT.vt_committed_batch_ids(down) == {0, 1, 2}
+    assert VT.vt_latest_version(down) == 3
 
 
 def test_disjoint_delete_then_merge_fast_path(spark, tmp_path):
@@ -1107,11 +1110,8 @@ def test_dv_revocation_propagates_to_index_via_cdf(spark, tmp_path):
     )
     VT.vt_create(docs, corpus_dir)
     VT.vt_delete_dv(spark, corpus_dir, [("doc_id", "in", [3, 11])])
-    ledger = str(tmp_path / "ledger")
-    VT.vt_stream_changes(
-        spark, corpus_dir, keys=["doc_id"], ledger_path=ledger,
-        apply_fn=vt_cdf_index_applier(spark, idx),
-    )
+    _tail(spark, corpus_dir, str(tmp_path / "ckpt"),
+          vt_cdf_index_applier(spark, idx), keys="doc_id")
     # the revoked ids are gone from every probe table
     fp = spark.read.parquet(os.path.join(idx, "fingerprints.parquet"))
     assert fp.filter(F.col("id").isin(3, 11)).count() == 0

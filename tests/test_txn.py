@@ -499,25 +499,33 @@ def test_second_txn_never_breaks_a_live_lease(spark, tmp_path):
 
 
 def test_cdf_tail_sees_txn_versions_only_after_decision(spark, tmp_path):
-    """The change-feed tail (vt_stream_changes) respects transactional
-    visibility: an undecided reservation delivers nothing; the moment
-    the decision commits, exactly that version arrives, once."""
+    """The change-feed tail (the vt_cdf stream through foreach_version)
+    respects transactional visibility: an undecided reservation delivers
+    nothing; the moment the decision commits, exactly that version
+    arrives, once."""
+    from kinesis_app_spark.registry_round6 import _drain_cdf
+    from kinesis_app_spark.sources.vt_cdf import foreach_version
+
     a, b, _dfa, _dfb = _mk_pair(spark, tmp_path)
     coord = str(tmp_path / "coord")
-    ledger = str(tmp_path / "ledger")
+    ckpt = str(tmp_path / "ckpt")
     seen: list[int] = []
 
     def apply_fn(changes, version):
         seen.append(version)
         changes.count()
 
-    VT.vt_stream_changes(spark, a, ["k"], ledger, apply_fn)
+    def tail():
+        _drain_cdf(spark, a, "k", foreach_version(apply_fn), ckpt,
+                   "txn cdf tail")
+
+    tail()
     pre = list(seen)
     txn, reserved = _stage_and_reserve(spark, a, b, coord, lease=60.0)
-    VT.vt_stream_changes(spark, a, ["k"], ledger, apply_fn)
+    tail()
     assert seen == pre, "undecided reservation must deliver nothing"
     assert TX._write_decision(txn.decision_path, "committed")
-    VT.vt_stream_changes(spark, a, ["k"], ledger, apply_fn)
+    tail()
     assert seen == pre + [reserved[a]], (
         "the decided version must arrive exactly once"
     )
