@@ -115,9 +115,10 @@ def main() -> int:
     }
     # STEADY-STATE median (round 8): pass 1 excluded whenever later
     # passes exist — the versioned_* entries build their fixture tables
-    # behind _DONE markers on the first shot (multi-second table builds,
-    # merges, bloom indexing), so the pass-1 number measures the BUILD,
-    # not the query; steady medians measure what reruns actually cost
+    # through scratch.cached_build on the first shot after any data or
+    # code change (multi-second table builds, merges, bloom indexing),
+    # so a cold pass-1 number measures the BUILD, not the query; steady
+    # medians measure what reruns actually cost
     q_steady = {
         n: _agg(ts[1:] if len(ts) > 1 else ts,
                 lambda s: s[len(s) // 2])

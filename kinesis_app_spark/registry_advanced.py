@@ -28,7 +28,6 @@ from __future__ import annotations
 import math
 import os
 import shutil
-import tempfile
 import uuid
 
 import pandas as pd
@@ -68,10 +67,10 @@ def _multi_file_stream(spark, dfs, schema, cache_key):
     cache_key = f"{cache_key}|{schema.simpleString()}"
     src = _SRC_CACHE.get(cache_key)
     if src is None:
-        src = tempfile.mkdtemp(prefix="streamn_src_")
+        src = scratch_dir("streamn_src_")
         dfs[0].coalesce(1).write.mode("overwrite").parquet(src)
         for i, df in enumerate(dfs[1:], start=1):
-            tmp = tempfile.mkdtemp(prefix="streamn_tmp_")
+            tmp = scratch_dir("streamn_tmp_")
             df.coalesce(1).write.mode("overwrite").parquet(tmp)
             part = next(
                 p for p in sorted(os.listdir(tmp)) if p.endswith(".parquet")

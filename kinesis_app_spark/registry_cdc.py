@@ -201,7 +201,6 @@ def streaming_cdc_apply(spark, sf_dir):
     deployment the versioned-parquet target becomes a Delta/Iceberg
     MERGE INTO and versioning comes from the table format's log."""
     import os
-    import tempfile
 
     from kinesis_app_spark.streaming.sources import file_stream
 

@@ -19,14 +19,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from kinesis_app_spark.registry_round4 import (
-    DEDUP_INDEX_SCREEN_SQL,
-    _ensure_built,
-    _index_dir,
-    _md5_u,
-    _table_sig,
-)
+from kinesis_app_spark.registry_round4 import DEDUP_INDEX_SCREEN_SQL, _md5_u
 from kinesis_app_spark.registry_util import QuerySpec, table as _t
+from kinesis_app_spark.scratch import cached_build
 
 #: erasure predicate over CORPUS doc ids, mirrored in the oracle SQL
 _ERASE_DOC_PRED = "doc_id % 11 = 0"
@@ -60,11 +55,7 @@ def dedup_index_compacted_screen(spark, sf_dir):
             DI.dedup_index_add(spark, d, part_b)
         DI.dedup_index_optimize(spark, d)
 
-    idx = _ensure_built(
-        build,
-        _index_dir("dedup_opt", sf_dir),
-        _table_sig(sf_dir, "documents"),
-    )
+    idx = cached_build("dedup_opt", sf_dir, ["documents"], build)
     batch = docs.filter(_md5_u("doc_id") < F.lit(0.3))
     return DI.dedup_index_screen(spark, idx, batch, threshold=0.5).orderBy(
         "doc_id"
@@ -95,11 +86,7 @@ def dedup_index_erasure_screen(spark, sf_dir):
             spark, d, corpus.filter(_ERASE_DOC_PRED).select("doc_id")
         )
 
-    idx = _ensure_built(
-        build,
-        _index_dir("dedup_rm", sf_dir),
-        _table_sig(sf_dir, "documents"),
-    )
+    idx = cached_build("dedup_rm", sf_dir, ["documents"], build)
     batch = docs.filter(_md5_u("doc_id") < F.lit(0.3))
     return DI.dedup_index_screen(spark, idx, batch, threshold=0.5).orderBy(
         "doc_id"
@@ -142,11 +129,7 @@ def knn_ivf_compacted(spark, sf_dir):
             VI.ivf_append(odds, d)
         VI.ivf_optimize(spark, d)
 
-    idx = _ensure_built(
-        build,
-        _index_dir("ivf_opt", sf_dir),
-        _table_sig(sf_dir, "embeddings"),
-    )
+    idx = cached_build("ivf_opt", sf_dir, ["embeddings"], build)
     queries = emb.filter(F.col("vec_id") < 10)
     return VI.ivf_query(spark, idx, queries, k=5, nprobe=16).withColumn(
         "rank", F.col("rank").cast("int")
@@ -173,11 +156,7 @@ def knn_ivf_erased(spark, sf_dir):
         VI.ivf_build(emb, d, n_centroids=16)
         VI.ivf_remove(spark, d, emb.filter(_ERASE_VEC_PRED).select("vec_id"))
 
-    idx = _ensure_built(
-        build,
-        _index_dir("ivf_rm", sf_dir),
-        _table_sig(sf_dir, "embeddings"),
-    )
+    idx = cached_build("ivf_rm", sf_dir, ["embeddings"], build)
     queries = emb.filter(F.col("vec_id") < 10)
     return VI.ivf_query(spark, idx, queries, k=5, nprobe=16).withColumn(
         "rank", F.col("rank").cast("int")
@@ -220,7 +199,6 @@ def _bind_knn_oracle() -> None:
 # versioned-table predicate DML + stats-pruned scan (round 5)
 # =====================================================================
 
-_VT5_ROOT = "/tmp/kinesis_versioned"
 _DML_DELETE_BELOW = 600     # DELETE WHERE o_orderkey <= 600
 _DML_UPDATE_ABOVE = 1000    # UPDATE ... WHERE o_orderkey > 1000
 
@@ -236,41 +214,28 @@ def _vt_dml_table(spark, sf_dir) -> str:
       v3 UPDATE   = o_totalprice += 100.0 WHERE o_orderkey > 1000
                     (file-pruned likewise)
     """
-    import os
-    import shutil
-
     from kinesis_app_spark.operators import versioned as VT
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT5_ROOT, f"orders_dml_{tag}")
-    marker = os.path.join(table_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    from kinesis_app_spark.registry_round4 import _fresh_marker
+    def build(table_dir):
+        o = _t(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+            "o_orderdate", "o_orderpriority",
+        )
+        VT.vt_create(o, table_dir)
+        VT.vt_optimize(
+            spark, table_dir, cluster_cols=["o_orderkey"],
+            max_records_per_file=256,
+        )
+        VT.vt_delete(
+            spark, table_dir, [("o_orderkey", "<=", _DML_DELETE_BELOW)]
+        )
+        VT.vt_update(
+            spark, table_dir,
+            [("o_orderkey", ">", _DML_UPDATE_ABOVE)],
+            {"o_totalprice": "o_totalprice + 100.0"},
+        )
 
-    if _fresh_marker(marker, sig):
-        return table_dir
-    if os.path.isdir(table_dir):
-        shutil.rmtree(table_dir)
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority",
-    )
-    VT.vt_create(o, table_dir)
-    VT.vt_optimize(
-        spark, table_dir, cluster_cols=["o_orderkey"],
-        max_records_per_file=256,
-    )
-    VT.vt_delete(
-        spark, table_dir, [("o_orderkey", "<=", _DML_DELETE_BELOW)]
-    )
-    VT.vt_update(
-        spark, table_dir,
-        [("o_orderkey", ">", _DML_UPDATE_ABOVE)],
-        {"o_totalprice": "o_totalprice + 100.0"},
-    )
-    with open(marker, "w") as fh:
-        fh.write(sig)
-    return table_dir
+    return cached_build("orders_dml", sf_dir, ["orders"], build)
 
 
 #: SQL replay of the DELETE + UPDATE applied to raw orders
@@ -359,11 +324,7 @@ def knn_pq_maintained(spark, sf_dir):
         VI.pq_remove(spark, d, emb.filter(_ERASE_VEC_PRED).select("vec_id"))
         VI.pq_optimize(spark, d)
 
-    idx = _ensure_built(
-        build,
-        _index_dir("pq_mnt", sf_dir),
-        _table_sig(sf_dir, "embeddings"),
-    )
+    idx = cached_build("pq_mnt", sf_dir, ["embeddings"], build)
     queries = emb.filter(F.col("vec_id") < 10)
     return VI.pq_query(
         spark, idx, queries, k=5, rerank_factor=16
@@ -381,19 +342,9 @@ def versioned_zorder_scan(spark, sf_dir):
     The entry value-gates the row contract: a two-dimensional range
     vt_scan over the z-ordered table must equal the raw-orders SQL
     replay exactly — clustering is layout, never semantics."""
-    import os
-    import shutil
-
     from kinesis_app_spark.operators import versioned as VT
-    from kinesis_app_spark.registry_round4 import _fresh_marker
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT5_ROOT, f"orders_z_{tag}")
-    marker = os.path.join(table_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
+    def build(table_dir):
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
         )
@@ -403,8 +354,8 @@ def versioned_zorder_scan(spark, sf_dir):
             cluster_cols=["o_custkey", "o_totalprice"],
             max_records_per_file=256, zorder=True,
         )
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    table_dir = cached_build("orders_z", sf_dir, ["orders"], build)
     return VT.vt_scan(
         spark, table_dir,
         [
@@ -476,27 +427,16 @@ def versioned_clone_restore_read(spark, sf_dir):
     oracle as versioned_time_travel_v1, arrived at through clone +
     restore instead of VERSION AS OF, which is exactly the
     zero-copy-fork contract."""
-    import os
-    import shutil
-
     from kinesis_app_spark.operators import versioned as VT
-    from kinesis_app_spark.registry_round4 import (
-        _fresh_marker,
-        _vt_orders_table,
-    )
+    from kinesis_app_spark.registry_round4 import _vt_orders_table
 
     src_table = _vt_orders_table(spark, sf_dir)
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    clone_dir = os.path.join(_VT5_ROOT, f"orders_clone_{tag}")
-    marker = os.path.join(clone_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(clone_dir):
-            shutil.rmtree(clone_dir)
+
+    def build(clone_dir):
         VT.vt_clone(src_table, clone_dir)
         VT.vt_restore(spark, clone_dir, 1)
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    clone_dir = cached_build("orders_clone", sf_dir, ["orders"], build)
     return VT.vt_read(spark, clone_dir).orderBy("o_orderkey")
 
 

@@ -21,13 +21,10 @@ import os
 
 from pyspark.sql import functions as F
 
-from kinesis_app_spark.scratch import scratch_dir
-from kinesis_app_spark.registry_round4 import _fresh_marker, _table_sig
+from kinesis_app_spark.scratch import cached_build, scratch_dir
 from kinesis_app_spark.registry_util import QuerySpec, table as _t
 from kinesis_app_spark.sources import vt_cdf as CDF
 from kinesis_app_spark.streaming.runner import drain
-
-_VT6_ROOT = "/tmp/kinesis_versioned"
 
 
 def vt_cdf_rollup_applier(spark, downstream_dir: str, group_col: str,
@@ -108,7 +105,7 @@ def _drain_cdf(spark, table_dir: str, keys: str, fn, ckpt: str,
     )
 
 
-def _cdf_stream_tables(spark, sf_dir) -> str:
+def _cdf_stream_tables(spark, sf_dir) -> tuple[str, str]:
     """Build (once per sf_dir) the upstream 4-version orders table and
     tail it into the downstream rollup:
 
@@ -119,64 +116,53 @@ def _cdf_stream_tables(spark, sf_dir) -> str:
 
     then one availableNow drain of the upstream's ``vt_cdf`` stream
     delivers v0..v3 to the rollup applier, one downstream merge per
-    version (``foreach_version``). Returns the downstream table dir."""
-    import shutil
-
+    version (``foreach_version``). Returns the (upstream, downstream)
+    table dirs, both in one cache entry."""
     from kinesis_app_spark.operators import versioned as VT
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    up = os.path.join(_VT6_ROOT, f"orders_cdfsrc_{tag}")
-    down = os.path.join(_VT6_ROOT, f"orders_cdfagg_{tag}")
-    marker = os.path.join(down, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    # the marker lives on the downstream but vouches for BOTH dirs (the
-    # vt_cdf entries read the upstream directly): a manually-cleared
-    # upstream must invalidate it
-    if _fresh_marker(marker, sig) and os.path.isdir(
-        os.path.join(up, "_manifest")
-    ):
-        return down
-    for d in (up, down):
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-    )
-    VT.vt_create(o.filter(F.col("o_orderkey") % 3 != 0), up)
-    VT.vt_merge(
-        spark, up,
-        o.filter(F.col("o_orderkey") % 3 == 0).withColumn("op", F.lit("U")),
-        keys=["o_orderkey"],
-    )
-    VT.vt_merge(
-        spark, up,
-        o.filter(F.col("o_custkey") % 10 == 0)
-        .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(50.0))
-        .withColumn("op", F.lit("U")),
-        keys=["o_orderkey"],
-    )
-    VT.vt_merge(
-        spark, up,
-        o.filter(F.col("o_orderkey") % 7 == 0).withColumn("op", F.lit("D")),
-        keys=["o_orderkey"],
-    )
-    VT.vt_create(
-        spark.createDataFrame(
-            [],
-            "o_orderstatus string, n_orders long, price_sum decimal(30,8)",
-        ),
-        down,
-    )
-    _drain_cdf(
-        spark, up, "o_orderkey",
-        CDF.foreach_version(vt_cdf_rollup_applier(
-            spark, down, "o_orderstatus", "o_totalprice"
-        )),
-        os.path.join(down, "_ckpt"), "versioned_cdf_stream_agg drain",
-    )
-    with open(marker, "w") as fh:
-        fh.write(sig)
-    return down
+    def build(root):
+        up, down = os.path.join(root, "up"), os.path.join(root, "down")
+        o = _t(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
+        )
+        VT.vt_create(o.filter(F.col("o_orderkey") % 3 != 0), up)
+        VT.vt_merge(
+            spark, up,
+            o.filter(F.col("o_orderkey") % 3 == 0)
+            .withColumn("op", F.lit("U")),
+            keys=["o_orderkey"],
+        )
+        VT.vt_merge(
+            spark, up,
+            o.filter(F.col("o_custkey") % 10 == 0)
+            .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(50.0))
+            .withColumn("op", F.lit("U")),
+            keys=["o_orderkey"],
+        )
+        VT.vt_merge(
+            spark, up,
+            o.filter(F.col("o_orderkey") % 7 == 0)
+            .withColumn("op", F.lit("D")),
+            keys=["o_orderkey"],
+        )
+        VT.vt_create(
+            spark.createDataFrame(
+                [],
+                "o_orderstatus string, n_orders long, "
+                "price_sum decimal(30,8)",
+            ),
+            down,
+        )
+        _drain_cdf(
+            spark, up, "o_orderkey",
+            CDF.foreach_version(vt_cdf_rollup_applier(
+                spark, down, "o_orderstatus", "o_totalprice"
+            )),
+            os.path.join(down, "_ckpt"), "versioned_cdf_stream_agg drain",
+        )
+
+    root = cached_build("orders_cdf", sf_dir, ["orders"], build)
+    return os.path.join(root, "up"), os.path.join(root, "down")
 
 
 def versioned_cdf_stream_agg(spark, sf_dir):
@@ -193,7 +179,7 @@ def versioned_cdf_stream_agg(spark, sf_dir):
     shift a count or a price mass and hash-mismatch."""
     from kinesis_app_spark.operators import versioned as VT
 
-    down = _cdf_stream_tables(spark, sf_dir)
+    _, down = _cdf_stream_tables(spark, sf_dir)
     return (
         VT.vt_read(spark, down)
         .select(
@@ -232,9 +218,7 @@ def versioned_cdf_source_batch(spark, sf_dir):
     mis-labeled, dropped, duplicated, or carrying the wrong image value
     hash-mismatches."""
     CDF.register(spark)
-    _cdf_stream_tables(spark, sf_dir)  # ensures the upstream is built
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    up = os.path.join(_VT6_ROOT, f"orders_cdfsrc_{tag}")
+    up, _ = _cdf_stream_tables(spark, sf_dir)
     return (
         spark.read.format("vt_cdf")
         .option("path", up).option("keys", "o_orderkey")
@@ -284,19 +268,11 @@ def versioned_cdf_readstream_agg(spark, sf_dir):
     its per-version twin: streamed-incremental == batch-recompute, so a
     dropped/duplicated version or a mis-signed image shifts a count or a
     price mass and hash-mismatches."""
-    import shutil
-
     from kinesis_app_spark.operators import versioned as VT
 
-    _cdf_stream_tables(spark, sf_dir)  # ensures the upstream is built
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    up = os.path.join(_VT6_ROOT, f"orders_cdfsrc_{tag}")
-    down = os.path.join(_VT6_ROOT, f"orders_cdfrs_{tag}")
-    marker = os.path.join(down, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(down):
-            shutil.rmtree(down)
+    up, _ = _cdf_stream_tables(spark, sf_dir)
+
+    def build(down):
         VT.vt_create(
             spark.createDataFrame(
                 [],
@@ -313,8 +289,8 @@ def versioned_cdf_readstream_agg(spark, sf_dir):
             ),
             os.path.join(down, "_ckpt"), "versioned_cdf_readstream_agg drain",
         )
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    down = cached_build("orders_cdfrs", sf_dir, ["orders"], build)
     return (
         VT.vt_read(spark, down)
         .select(
@@ -343,18 +319,9 @@ def versioned_disjoint_writers(spark, sf_dir):
     orders: if either writer's commit were lost, double-applied, or B
     resurrected a file A rewrote, a price mass would shift and the
     hash would mismatch."""
-    import shutil
-
     from kinesis_app_spark.operators import versioned as VT
-    from kinesis_app_spark.registry_round4 import _fresh_marker
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT6_ROOT, f"orders_race_{tag}")
-    marker = os.path.join(table_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
+    def build(table_dir):
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -383,8 +350,8 @@ def versioned_disjoint_writers(spark, sf_dir):
             keys=["o_orderkey"], expected_version=base,
         )
         assert v_b == 3, v_b
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    table_dir = cached_build("orders_race", sf_dir, ["orders"], build)
     return VT.vt_read(spark, table_dir).orderBy("o_orderkey")
 
 
@@ -410,18 +377,9 @@ def versioned_compact_read(spark, sf_dir):
     Reading the compacted table must equal the raw-orders replay of the
     one UPDATE — compaction is layout, never semantics; a row lost or
     doubled by the sweep would hash-mismatch."""
-    import shutil
-
     from kinesis_app_spark.operators import versioned as VT
-    from kinesis_app_spark.registry_round4 import _fresh_marker
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT6_ROOT, f"orders_compact_{tag}")
-    marker = os.path.join(table_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
+    def build(table_dir):
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -437,8 +395,8 @@ def versioned_compact_read(spark, sf_dir):
         after = len(VT.vt_files(table_dir, VT.vt_latest_version(table_dir)))
         # an empty table has no debt to sweep (compaction no-ops)
         assert after < before or before <= 1, (before, after)
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    table_dir = cached_build("orders_compact", sf_dir, ["orders"], build)
     return VT.vt_read(spark, table_dir).orderBy("o_orderkey")
 
 
@@ -462,18 +420,9 @@ def versioned_cluster_incremental(spark, sf_dir):
     pinned in tests/test_round6.py). Reading the re-clustered table must
     equal the raw-orders replay of the one MERGE — clustering is
     layout, never semantics."""
-    import shutil
-
     from kinesis_app_spark.operators import versioned as VT
-    from kinesis_app_spark.registry_round4 import _fresh_marker
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT6_ROOT, f"orders_liquid_{tag}")
-    marker = os.path.join(table_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
+    def build(table_dir):
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -498,8 +447,8 @@ def versioned_cluster_incremental(spark, sf_dir):
         assert all(
             f.get("clustered") == ["o_orderkey"] for f in files
         ), "debt survived the incremental clustering"
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    table_dir = cached_build("orders_liquid", sf_dir, ["orders"], build)
     return VT.vt_scan(
         spark, table_dir, [("o_orderkey", ">=", 0)]
     ).orderBy("o_orderkey")
@@ -516,18 +465,10 @@ def versioned_delete_vectors(spark, sf_dir):
     materialization, and VACUUM sweep are pinned in
     tests/test_round6.py + tests/test_vt_cdf_source.py."""
     import glob
-    import shutil
 
     from kinesis_app_spark.operators import versioned as VT
-    from kinesis_app_spark.registry_round4 import _fresh_marker
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT6_ROOT, f"orders_dv_{tag}")
-    marker = os.path.join(table_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
+    def build(table_dir):
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -542,8 +483,8 @@ def versioned_delete_vectors(spark, sf_dir):
         assert sorted(glob.glob(pat, recursive=True)) == before, (
             "DV delete must not touch data files"
         )
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    table_dir = cached_build("orders_dv", sf_dir, ["orders"], build)
     return VT.vt_read(spark, table_dir).orderBy("o_orderkey")
 
 
@@ -557,20 +498,12 @@ def versioned_sink_append(spark, sf_dir):
     writers' JSON form, pruning would drop or keep the wrong files and
     the hash would mismatch. Epoch idempotence and streaming appends
     are pinned in tests/test_vt_writer.py."""
-    import shutil
-
     from kinesis_app_spark.operators import versioned as VT
-    from kinesis_app_spark.registry_round4 import _fresh_marker
     from kinesis_app_spark.sources import vt_writer as W
 
     W.register(spark)
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT6_ROOT, f"orders_sink_{tag}")
-    marker = os.path.join(table_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
+
+    def build(table_dir):
         (
             _t(spark, sf_dir, "orders")
             .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -578,8 +511,8 @@ def versioned_sink_append(spark, sf_dir):
             .write.format("vt_table")
             .option("path", table_dir).mode("append").save()
         )
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    table_dir = cached_build("orders_sink", sf_dir, ["orders"], build)
     return VT.vt_scan(
         spark, table_dir,
         [("o_orderkey", ">=", 500), ("o_orderkey", "<", 2500)],
@@ -611,6 +544,25 @@ ORDER BY o_orderkey
 """
 
 
+def _vt_bloom_table(spark, sf_dir) -> str:
+    """Build (once per sf_dir) the o_orderkey-clustered orders table
+    with a bloom index on o_custkey."""
+    from kinesis_app_spark.operators import versioned as VT
+
+    def build(table_dir):
+        o = _t(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey", "o_totalprice"
+        )
+        VT.vt_create(o, table_dir)
+        VT.vt_optimize(
+            spark, table_dir, cluster_cols=["o_orderkey"],
+            max_records_per_file=256,
+        )
+        VT.vt_index_bloom(spark, table_dir, ["o_custkey"])
+
+    return cached_build("orders_bloom", sf_dir, ["orders"], build)
+
+
 def versioned_bloom_scan(spark, sf_dir):
     """Secondary-key point lookup through the manifest's per-file BLOOM
     buckets: the table is clustered on o_orderkey (so every file spans
@@ -623,31 +575,10 @@ def versioned_bloom_scan(spark, sf_dir):
     — only files lacking a bloom are read on re-run). The oracle is the
     plain filter replay over raw orders: bloom pruning is a file-listing
     optimization and must never change a row."""
-    import shutil
-
     from kinesis_app_spark.operators import versioned as VT
-    from kinesis_app_spark.registry_round4 import _fresh_marker
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT6_ROOT, f"orders_bloom_{tag}")
-    marker = os.path.join(table_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
-        o = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        VT.vt_create(o, table_dir)
-        VT.vt_optimize(
-            spark, table_dir, cluster_cols=["o_orderkey"],
-            max_records_per_file=256,
-        )
-        VT.vt_index_bloom(spark, table_dir, ["o_custkey"])
-        with open(marker, "w") as fh:
-            fh.write(sig)
     return VT.vt_scan(
-        spark, table_dir, [("o_custkey", "=", 42)]
+        spark, _vt_bloom_table(spark, sf_dir), [("o_custkey", "=", 42)]
     ).orderBy("o_orderkey")
 
 
@@ -665,16 +596,14 @@ def versioned_in_list_scan(spark, sf_dir):
     orderkey-clustered table prunes through the bloom bitmaps (a file
     opens only if ANY listed literal's bit is set; min/max stats prune
     nothing here because every file spans the full custkey range).
-    Shares the bloom table versioned_bloom_scan builds. The oracle is
+    Shares the bloom table _vt_bloom_table builds. The oracle is
     the plain IN filter replay over raw orders — pruning must never
     change a row."""
     from kinesis_app_spark.operators import versioned as VT
 
-    versioned_bloom_scan(spark, sf_dir)  # ensures the indexed table
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT6_ROOT, f"orders_bloom_{tag}")
     return VT.vt_scan(
-        spark, table_dir, [("o_custkey", "in", [42, 77, 913])]
+        spark, _vt_bloom_table(spark, sf_dir),
+        [("o_custkey", "in", [42, 77, 913])],
     ).orderBy("o_orderkey")
 
 
@@ -773,22 +702,14 @@ def versioned_cdf_join_view(spark, sf_dir):
     recomputed. The oracle joins the FINAL table states from raw data:
     any dropped/double-applied commit, wrong join state, or mis-signed
     image shifts a count or a revenue mass and hash-mismatches."""
-    import shutil
+    from pyspark.sql import Window
 
     from kinesis_app_spark.operators import versioned as VT
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    a_dir = os.path.join(_VT6_ROOT, f"orders_jv_{tag}")
-    b_dir = os.path.join(_VT6_ROOT, f"lineitem_jv_{tag}")
-    view = os.path.join(_VT6_ROOT, f"joinview_{tag}")
-    marker = os.path.join(view, "_DONE")
-    sig = _table_sig(sf_dir, "orders") + _table_sig(sf_dir, "lineitem")
-    if not _fresh_marker(marker, sig):
-        for d in (a_dir, b_dir, view):
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-        from pyspark.sql import Window
-
+    def build(root):
+        a_dir, b_dir, view = (
+            os.path.join(root, d) for d in ("orders", "lineitem", "view")
+        )
         o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
         # (l_orderkey, l_linenumber) is NOT unique in the synthetic
         # lineitem — add a deterministic within-key disambiguator so the
@@ -864,12 +785,10 @@ def versioned_cdf_join_view(spark, sf_dir):
                 )
                 other = VT.vt_read(spark, a_dir, other_v)
             applier(changes, other, side, step)
-        with open(marker, "w") as fh:
-            fh.write(sig)
-    from kinesis_app_spark.operators import versioned as VT2
 
+    root = cached_build("joinview", sf_dir, ["orders", "lineitem"], build)
     return (
-        VT2.vt_read(spark, view)
+        VT.vt_read(spark, os.path.join(root, "view"))
         .filter(F.col("n_items") > 0)
         .select(
             "o_custkey",
@@ -945,20 +864,14 @@ def dedup_index_cdf_maintenance(spark, sf_dir):
     probe table, a verdict would shift and the hash would mismatch."""
     from kinesis_app_spark.operators import dedupindex as DI
     from kinesis_app_spark.operators import versioned as VT
-    from kinesis_app_spark.registry_round4 import (
-        _ensure_built,
-        _index_dir,
-        _md5_u,
-    )
+    from kinesis_app_spark.registry_round4 import _md5_u
 
     docs = _t(spark, sf_dir, "documents")
 
-    def build(d):
-        import shutil
-
-        up, ckpt = d + "_upstream", d + "_ckpt"
-        for stale in (up, ckpt):
-            shutil.rmtree(stale, ignore_errors=True)
+    def build(root):
+        up, ckpt, d = (
+            os.path.join(root, n) for n in ("upstream", "ckpt", "index")
+        )
         u = _md5_u("doc_id")
         corpus = docs.select("doc_id", "text")
         VT.vt_create(
@@ -980,11 +893,8 @@ def dedup_index_cdf_maintenance(spark, sf_dir):
             ckpt, "dedup_index_cdf_maintenance drain",
         )
 
-    idx = _ensure_built(
-        build,
-        _index_dir("dedup_cdf", sf_dir),
-        _table_sig(sf_dir, "documents"),
-    )
+    root = cached_build("dedup_cdf", sf_dir, ["documents"], build)
+    idx = os.path.join(root, "index")
     batch = docs.filter(_md5_u("doc_id") < F.lit(0.3))
     return DI.dedup_index_screen(spark, idx, batch, threshold=0.5).orderBy(
         "doc_id"
@@ -1018,7 +928,7 @@ def pipeline_kinesis_lakehouse_rollup(spark, sf_dir):
 
     reg_fk(spark)
     # all four dirs are fresh-per-call run state under one scratch dir
-    # (deleted in the teardown below): never /tmp-cached
+    # (deleted in the teardown below): never cached
     run = scratch_dir("pkl_")
     up = os.path.join(run, "up")
     down = os.path.join(run, "down")

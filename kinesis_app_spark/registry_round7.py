@@ -13,12 +13,9 @@ import os
 
 from pyspark.sql import functions as F
 
-from kinesis_app_spark.scratch import scratch_dir
-from kinesis_app_spark.registry_round4 import _fresh_marker, _table_sig
+from kinesis_app_spark.scratch import cached_build, scratch_dir
 from kinesis_app_spark.registry_util import QuerySpec, table as _t
 from kinesis_app_spark.streaming.runner import drain
-
-_VT7_ROOT = "/tmp/kinesis_versioned7"
 
 
 def versioned_column_mapping(spark, sf_dir):
@@ -39,17 +36,10 @@ def versioned_column_mapping(spark, sf_dir):
     resurrected the dropped column, or mis-bound logical names to
     physical data would shift values and hash-mismatch."""
     import glob
-    import shutil
 
     from kinesis_app_spark.operators import versioned as VT
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT7_ROOT, f"orders_colmap_{tag}")
-    marker = os.path.join(table_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
+    def build(table_dir):
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -101,8 +91,8 @@ def versioned_column_mapping(spark, sf_dir):
         assert n_files < 2 or 0 < len(removed) < n_files, (
             "post-rename merge must stay file-pruned"
         )
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    table_dir = cached_build("orders_colmap", sf_dir, ["orders"], build)
     return VT.vt_read(spark, table_dir).orderBy("o_orderkey")
 
 
@@ -117,19 +107,12 @@ def versioned_table_source_read(spark, sf_dir):
     snapshot under the pre-rename schema. A reader that ignored DV
     sidecars (resurrecting deleted rows), misapplied the mapping, or
     dropped a file from the manifest plan would hash-mismatch."""
-    import shutil
-
     from kinesis_app_spark.operators import versioned as VT
     from kinesis_app_spark.sources import vt_writer as W
 
     W.register(spark)
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT7_ROOT, f"orders_src_{tag}")
-    marker = os.path.join(table_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
+
+    def build(table_dir):
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -156,8 +139,8 @@ def versioned_table_source_read(spark, sf_dir):
         )
         assert old.columns == ["o_orderkey", "o_custkey", "o_totalprice"]
         assert old.count() == n0, "versionAsOf must predate the DV delete"
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    table_dir = cached_build("orders_src", sf_dir, ["orders"], build)
     return (
         spark.read.format("vt_table")
         .option("path", table_dir)
@@ -190,7 +173,6 @@ def versioned_source_pushdown(spark, sf_dir):
     that let pruning drop a matching file, or let the row filters
     renumber DV positions, shifts rows and hash-mismatches)."""
     import json as _json
-    import shutil
 
     from kinesis_app_spark.operators import versioned as VT
     from kinesis_app_spark.sources import vt_writer as W
@@ -199,13 +181,8 @@ def versioned_source_pushdown(spark, sf_dir):
     )
 
     W.register(spark)
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT7_ROOT, f"orders_push_{tag}")
-    marker = os.path.join(table_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
+
+    def build(table_dir):
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -244,8 +221,8 @@ def versioned_source_pushdown(spark, sf_dir):
             "relation reuse after a filtered query lost rows — "
             "readInfo cache poisoning is back"
         )
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    table_dir = cached_build("orders_push", sf_dir, ["orders"], build)
     n_files = len(VT.vt_files(table_dir, VT.vt_latest_version(table_dir)))
     rng = _json.dumps([["o_orderkey", ">=", 300],
                        ["o_orderkey", "<", 900]])
@@ -315,24 +292,16 @@ def versioned_metadata_aggregates(spark, sf_dir):
     The oracle recomputes all five aggregates from raw data — a stale
     n_dv, an unmaterialized DV, or min/max read from a pruned bound
     rather than the data would shift a value and hash-mismatch."""
-    import shutil
-
     from kinesis_app_spark.operators import versioned as VT
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT7_ROOT, f"orders_fast_{tag}")
-    marker = os.path.join(table_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
+    def build(table_dir):
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
         VT.vt_create(o, table_dir)
         VT.vt_delete_dv(spark, table_dir, [("o_custkey", "in", [11, 23])])
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    table_dir = cached_build("orders_fast", sf_dir, ["orders"], build)
     files = VT.vt_files(table_dir, VT.vt_latest_version(table_dir))
     pre = VT.vt_fast_stats(
         table_dir, ["o_orderkey", "o_totalprice"]
@@ -381,21 +350,13 @@ def versioned_multi_table_txn(spark, sf_dir):
     transaction's arithmetic over raw orders: a torn commit (one table
     landed, the other not), a leaked aborted row, or a double-applied
     merge shifts sums and hash-mismatches."""
-    import shutil
-
     from kinesis_app_spark.operators import versioned as VT
     from kinesis_app_spark.operators.txn import vt_transaction
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    a_dir = os.path.join(_VT7_ROOT, f"orders_txn_a_{tag}")
-    b_dir = os.path.join(_VT7_ROOT, f"orders_txn_b_{tag}")
-    coord = os.path.join(_VT7_ROOT, f"txn_coord_{tag}")
-    marker = os.path.join(a_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        for d in (a_dir, b_dir, coord):
-            if os.path.isdir(d):
-                shutil.rmtree(d)
+    def build(root):
+        a_dir, b_dir, coord = (
+            os.path.join(root, n) for n in ("a", "b", "coord")
+        )
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -445,8 +406,9 @@ def versioned_multi_table_txn(spark, sf_dir):
         assert VT.vt_latest_version(b_dir) == vb + 1, (
             "aborted txn must not advance B (and no version gap)"
         )
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    root = cached_build("orders_txn", sf_dir, ["orders"], build)
+    a_dir, b_dir = (os.path.join(root, n) for n in ("a", "b"))
     return (
         VT.vt_read(spark, a_dir)
         .unionAll(VT.vt_read(spark, b_dir))
@@ -493,16 +455,10 @@ def pipeline_txn_fact_rollup(spark, sf_dir):
         vt_foreach_batch_txn_merger,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    fact = os.path.join(_VT7_ROOT, f"txnp_fact_{tag}")
-    rollup = os.path.join(_VT7_ROOT, f"txnp_rollup_{tag}")
-    coord = os.path.join(_VT7_ROOT, f"txnp_coord_{tag}")
-    marker = os.path.join(fact, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        for d in (fact, rollup, coord):
-            if os.path.isdir(d):
-                shutil.rmtree(d)
+    def build(root):
+        fact, rollup, coord = (
+            os.path.join(root, n) for n in ("fact", "rollup", "coord")
+        )
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey",
             F.col("o_totalprice").cast("decimal(18,2)")
@@ -573,10 +529,10 @@ def pipeline_txn_fact_rollup(spark, sf_dir):
                 == VT.vt_committed_batch_ids(rollup)), (
             "atomic epochs: both ledgers must carry the same batch ids"
         )
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    root = cached_build("txn_pipeline", sf_dir, ["orders"], build)
     return (
-        VT.vt_read(spark, rollup)
+        VT.vt_read(spark, os.path.join(root, "rollup"))
         .select(
             "o_custkey", "n_orders",
             # the ACCUMULATION is exact decimal; the final cast is one
@@ -613,20 +569,14 @@ def versioned_cdf_pushdown_tail(spark, sf_dir):
     before/after pairing, or a leaked first-band row all
     hash-mismatch."""
     import json as _json
-    import shutil
 
     from kinesis_app_spark.operators import versioned as VT
     from kinesis_app_spark.sources import vt_cdf as CDF
     from kinesis_app_spark.sources.vt_cdf import VersionedCdfBatchReader
 
     CDF.register(spark)
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT7_ROOT, f"orders_cdfpush_{tag}")
-    marker = os.path.join(table_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
+
+    def build(table_dir):
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -648,8 +598,8 @@ def versioned_cdf_pushdown_tail(spark, sf_dir):
                 .withColumn("op", F.lit("U"))
             )
             VT.vt_merge(spark, table_dir, chg, keys=["o_orderkey"])
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    table_dir = cached_build("orders_cdfpush", sf_dir, ["orders"], build)
     # planning-layer proof: the key filter prunes the band-1 component
     kf = _json.dumps([["o_orderkey", ">=", 700]])
     opts = {"path": table_dir, "keys": "o_orderkey",
@@ -728,19 +678,12 @@ def versioned_two_stream_join_view(spark, sf_dir):
     from kinesis_app_spark.streaming.ivm import TwoStreamJoinCoordinator
 
     CDF.register(spark)
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    a_dir = os.path.join(_VT7_ROOT, f"orders_2s_{tag}")
-    b_dir = os.path.join(_VT7_ROOT, f"lineitem_2s_{tag}")
-    view = os.path.join(_VT7_ROOT, f"joinview_2s_{tag}")
-    spool = os.path.join(_VT7_ROOT, f"spool_2s_{tag}")
-    ck_a = os.path.join(_VT7_ROOT, f"ck_a_2s_{tag}")
-    ck_b = os.path.join(_VT7_ROOT, f"ck_b_2s_{tag}")
-    marker = os.path.join(view, "_DONE")
-    sig = _table_sig(sf_dir, "orders") + _table_sig(sf_dir, "lineitem")
-    if not _fresh_marker(marker, sig):
-        for d in (a_dir, b_dir, view, spool, ck_a, ck_b):
-            if os.path.isdir(d):
-                shutil.rmtree(d)
+
+    def build(root):
+        a_dir, b_dir, view, spool, ck_a, ck_b = (
+            os.path.join(root, n)
+            for n in ("orders", "lineitem", "view", "spool", "ck_a", "ck_b")
+        )
         from pyspark.sql import Window
 
         o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -766,16 +709,14 @@ def versioned_two_stream_join_view(spark, sf_dir):
         coord = TwoStreamJoinCoordinator(
             spark, a_dir, b_dir, view, spool,
             vt_cdf_join_delta_applier(spark, view),
+            {"a": "o_orderkey", "b": "l_orderkey,l_linenumber,l_rn"},
         )
 
         def run_streams() -> None:
-            for side, d, keys in (
-                ("a", a_dir, "o_orderkey"),
-                ("b", b_dir, "l_orderkey,l_linenumber,l_rn"),
-            ):
+            for side, d in (("a", a_dir), ("b", b_dir)):
                 q = (
                     spark.readStream.format("vt_cdf")
-                    .option("path", d).option("keys", keys)
+                    .option("path", d).option("keys", coord.keys[side])
                     .load()
                     .writeStream.foreachBatch(coord.foreach_batch(side))
                     .option(
@@ -826,10 +767,10 @@ def versioned_two_stream_join_view(spark, sf_dir):
             "both streams drained: the coordinator must be caught up"
         )
         shutil.rmtree(spool, ignore_errors=True)
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    root = cached_build("joinview_2s", sf_dir, ["orders", "lineitem"], build)
     return (
-        VT.vt_read(spark, view)
+        VT.vt_read(spark, os.path.join(root, "view"))
         .filter(F.col("n_items") > 0)
         .select(
             "o_custkey",
@@ -848,17 +789,9 @@ def versioned_check_constraints(spark, sf_dir):
     unstaged, then land a conforming merge. The oracle replays the
     conforming arithmetic only — if the violating wave had leaked rows
     or a version, totals and counts would shift and hash-mismatch."""
-    import shutil
-
     from kinesis_app_spark.operators import versioned as VT
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT7_ROOT, f"orders_chk_{tag}")
-    marker = os.path.join(table_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
+    def build(table_dir):
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
         )
@@ -891,8 +824,8 @@ def versioned_check_constraints(spark, sf_dir):
             .withColumn("op", F.lit("U"))
         )
         VT.vt_merge(spark, table_dir, good, keys=["o_orderkey"])
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    table_dir = cached_build("orders_chk", sf_dir, ["orders"], build)
     return VT.vt_read(spark, table_dir).orderBy("o_orderkey")
 
 
@@ -912,14 +845,9 @@ def versioned_table_stream_tail(spark, sf_dir):
     from kinesis_app_spark.sources import vt_writer as W
 
     W.register(spark)
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT7_ROOT, f"orders_tail_{tag}")
-    marker = os.path.join(table_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
+
+    def build(table_dir):
         VT.vt_create(o.filter(F.col("o_orderkey") % 3 == 0), table_dir)
         (
             o.filter(F.col("o_orderkey") % 3 == 1)
@@ -932,8 +860,8 @@ def versioned_table_stream_tail(spark, sf_dir):
             .write.format("vt_table").mode("append")
             .option("path", table_dir).save()
         )
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    table_dir = cached_build("orders_tail", sf_dir, ["orders"], build)
     run = scratch_dir("vtt_")
     out_dir = os.path.join(run, "out")
     ckpt = os.path.join(run, "ck")

@@ -15,10 +15,8 @@ import os
 
 from pyspark.sql import functions as F
 
-from kinesis_app_spark.registry_round4 import _fresh_marker, _table_sig
 from kinesis_app_spark.registry_util import QuerySpec, table as _t
-
-_VT8_ROOT = "/tmp/kinesis_versioned8"
+from kinesis_app_spark.scratch import cached_build, scratch_dir
 
 
 def versioned_pushdown_timestamp_bloom(spark, sf_dir):
@@ -40,7 +38,6 @@ def versioned_pushdown_timestamp_bloom(spark, sf_dir):
     replay — a twin that hashed any wall-clock guess would prune the
     files holding the probed events and hash-mismatch the oracle."""
     import json as _json
-    import shutil
 
     from kinesis_app_spark.operators import versioned as VT
     from kinesis_app_spark.sources import vt_writer as W
@@ -49,13 +46,8 @@ def versioned_pushdown_timestamp_bloom(spark, sf_dir):
     )
 
     W.register(spark)
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT8_ROOT, f"events_tsbloom_{tag}")
-    marker = os.path.join(table_dir, "_DONE")
-    sig = _table_sig(sf_dir, "events")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
+
+    def build(table_dir):
         e = _t(spark, sf_dir, "events").select(
             "event_id", "ts", "user_id", "value"
         )
@@ -69,8 +61,8 @@ def versioned_pushdown_timestamp_bloom(spark, sf_dir):
             max_records_per_file=1024,
         )
         VT.vt_index_bloom(spark, table_dir, ["ts"])
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    table_dir = cached_build("events_tsbloom", sf_dir, ["events"], build)
 
     # two deterministic probe instants (bounded 2-row collect)
     probes = [
@@ -148,20 +140,14 @@ def versioned_cdf_composite_key_pruning(spark, sf_dir):
     arithmetically, so a pruned-away matching component or a broken
     pairing hash-mismatches."""
     import json as _json
-    import shutil
 
     from kinesis_app_spark.operators import versioned as VT
     from kinesis_app_spark.sources import vt_cdf as CDF
     from kinesis_app_spark.sources.vt_cdf import VersionedCdfBatchReader
 
     CDF.register(spark)
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT8_ROOT, f"orders_ck_{tag}")
-    marker = os.path.join(table_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
+
+    def build(table_dir):
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -184,8 +170,8 @@ def versioned_cdf_composite_key_pruning(spark, sf_dir):
             )
             VT.vt_merge(spark, table_dir, chg,
                         keys=["o_custkey", "o_orderkey"])
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    table_dir = cached_build("orders_ck", sf_dir, ["orders"], build)
     kf = _json.dumps([["o_orderkey", ">=", 700]])
     opts = {"path": table_dir, "keys": "o_custkey,o_orderkey",
             "startingversion": "2"}
@@ -233,7 +219,6 @@ def versioned_txn_snapshot_read(spark, sf_dir):
     returned; the oracle replays the three bump waves arithmetically
     over nation, so a lost wave, a doubled wave, or a fact/rollup skew
     all hash-mismatch."""
-    import shutil
     import threading
 
     from kinesis_app_spark.operators import versioned as VT
@@ -241,13 +226,11 @@ def versioned_txn_snapshot_read(spark, sf_dir):
         txn_snapshot, vt_transaction,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    root = os.path.join(_VT8_ROOT, f"snap_{tag}")
+    # the race is the point: rebuild fresh every call
+    root = scratch_dir("vt_snap_")
     fact = os.path.join(root, "fact")
     roll = os.path.join(root, "rollup")
     coord = os.path.join(root, "coord")
-    # the race is the point: rebuild fresh every call
-    shutil.rmtree(root, ignore_errors=True)
     n = _t(spark, sf_dir, "nation").select(
         "n_nationkey", "n_regionkey",
         (F.col("n_nationkey") * 100 + 7).cast("long").alias("value"),
@@ -367,7 +350,6 @@ def versioned_type_widening(spark, sf_dir):
     narrow schema hash-mismatches."""
     import glob as _glob
     import json as _json
-    import shutil
 
     from kinesis_app_spark.operators import versioned as VT
     from kinesis_app_spark.sources import vt_writer as W
@@ -376,13 +358,8 @@ def versioned_type_widening(spark, sf_dir):
     )
 
     W.register(spark)
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT8_ROOT, f"orders_widen_{tag}")
-    marker = os.path.join(table_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
+
+    def build(table_dir):
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey",
             F.col("o_custkey").cast("int").alias("o_custkey"),
@@ -413,8 +390,8 @@ def versioned_type_widening(spark, sf_dir):
             .withColumn("op", F.lit("U"))
         )
         VT.vt_merge(spark, table_dir, chg, keys=["o_orderkey"])     # v3
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    table_dir = cached_build("orders_widen", sf_dir, ["orders"], build)
     # pushdown still prunes through the widened schema
     n_files = len(VT.vt_files(table_dir, VT.vt_latest_version(table_dir)))
     planned = len(VersionedTableBatchReader({
@@ -463,20 +440,11 @@ def versioned_txn_maintenance(spark, sf_dir):
     compacted table byte-for-byte — a compaction that dropped or
     duplicated rows, or a merge that leaked before the decision, both
     hash-mismatch."""
-    import shutil
-
     from kinesis_app_spark.operators import versioned as VT
     from kinesis_app_spark.operators.txn import vt_transaction
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    root = os.path.join(_VT8_ROOT, f"maint_{tag}")
-    fact = os.path.join(root, "fact")
-    side = os.path.join(root, "side")
-    marker = os.path.join(root, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(root):
-            shutil.rmtree(root)
+    def build(root):
+        fact, side = os.path.join(root, "fact"), os.path.join(root, "side")
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -490,7 +458,7 @@ def versioned_txn_maintenance(spark, sf_dir):
             .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(6.5))
             .withColumn("op", F.lit("U"))
         )
-        with vt_transaction(spark, root + "_coord") as txn:
+        with vt_transaction(spark, os.path.join(root, "coord")) as txn:
             txn.stage_merge(fact, chg, keys=["o_orderkey"])
             txn.stage_compact(side, min_rows_per_file=1 << 30)
             assert VT.vt_latest_version(fact) == 0, "txn leaked early"
@@ -506,8 +474,9 @@ def versioned_txn_maintenance(spark, sf_dir):
             assert len(VT.vt_files(side, vs)) < max(2, n_side), (
                 "compaction must shrink the small-file tail"
             )
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    root = cached_build("txn_maint", sf_dir, ["orders"], build)
+    fact, side = os.path.join(root, "fact"), os.path.join(root, "side")
     f = VT.vt_read(spark, fact).select(
         "o_orderkey",
         F.col("o_totalprice").cast("double").alias("merged_price"),
@@ -543,17 +512,9 @@ def versioned_fast_stats_df(spark, sf_dir):
     a file's extremes, mixed up a column mapping, or miscounted
     through an append would hash-mismatch. The fixture appends twice
     so the stats span three commits' file sets."""
-    import shutil
-
     from kinesis_app_spark.operators import versioned as VT
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "root"
-    table_dir = os.path.join(_VT8_ROOT, f"orders_fsdf_{tag}")
-    marker = os.path.join(table_dir, "_DONE")
-    sig = _table_sig(sf_dir, "orders")
-    if not _fresh_marker(marker, sig):
-        if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
+    def build(table_dir):
         o = _t(spark, sf_dir, "orders").select(
             "o_orderkey",
             F.col("o_totalprice").cast("double").alias("price"),
@@ -566,8 +527,8 @@ def versioned_fast_stats_df(spark, sf_dir):
                 o.filter(third == part).withColumn("op", F.lit("U")),
                 keys=["o_orderkey"],
             )
-        with open(marker, "w") as fh:
-            fh.write(sig)
+
+    table_dir = cached_build("orders_fsdf", sf_dir, ["orders"], build)
     return VT.vt_fast_stats_df(
         spark, table_dir, ["o_orderkey", "price"]
     )

@@ -293,12 +293,10 @@ def kinesis_fault_retry_counts(spark, sf_dir):
     in tests/test_round3.py's subprocess test, and the *epoch-level*
     retry (streaming restart from checkpoint across the injected failure)
     in the same file."""
-    import tempfile
-
     from kinesis_app_spark.sources.fake_kinesis import register
 
     register(spark)
-    mdir = tempfile.mkdtemp(prefix="kinesis_fault_markers_")
+    mdir = scratch_dir("kinesis_fault_markers_")
 
     def build():
         df = (
@@ -385,8 +383,6 @@ def kinesis_reshard_stream_counts(spark, sf_dir):
     tests/test_fake_kinesis.py's exactly-once-across-restart test this
     closes the reference's resharding hole end-to-end — batch view,
     streaming view, and restart semantics all checked."""
-    import tempfile
-
     from kinesis_app_spark.sources.fake_kinesis import register
     from kinesis_app_spark.streaming.ops import run_to_memory
 
@@ -422,8 +418,6 @@ def kinesis_stream_counts(spark, sf_dir):
     resharding for this reader are covered in tests/test_fake_kinesis.py;
     here the complete streaming read path is value-checked against the
     analytical oracle."""
-    import tempfile
-
     from kinesis_app_spark.sources.fake_kinesis import register
     from kinesis_app_spark.streaming.ops import run_to_memory
 

@@ -11,8 +11,6 @@ lands CSV/JSON and the engine must read it back byte-faithfully.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from kinesis_app_spark.scratch import scratch_dir
@@ -22,7 +20,7 @@ from kinesis_app_spark.sources.batch import read_csv, read_json
 
 def csv_roundtrip_orders(spark, sf_dir):
     orders = _t(spark, sf_dir, "orders")
-    path = tempfile.mkdtemp(prefix="csv_rt_")
+    path = scratch_dir("csv_rt_")
     orders.write.mode("overwrite").option("header", True).option(
         "timestampFormat", _TS_MICROS
     ).csv(path)
@@ -53,7 +51,7 @@ _TS_MICROS = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 
 def json_roundtrip_events(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
-    path = tempfile.mkdtemp(prefix="json_rt_")
+    path = scratch_dir("json_rt_")
     ev.write.mode("overwrite").option("timestampFormat", _TS_MICROS).json(path)
     back = read_json(spark, path, ev.schema, timestampFormat=_TS_MICROS)
     return back.groupBy("event_type").agg(
@@ -84,7 +82,7 @@ def partitioned_write_pruned_read(spark, sf_dir):
     for the other types — the difference between reading 2/5 and 5/5 of a
     100 TB table; asserted in tests/test_sources_sinks.py)."""
     ev = _t(spark, sf_dir, "events")
-    path = tempfile.mkdtemp(prefix="part_rt_")
+    path = scratch_dir("part_rt_")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
     # explicit schema: no inference pass over footers, and an empty write
     # (zero partition directories) still reads back as a valid empty table
@@ -121,7 +119,7 @@ def schema_evolution_read(spark, sf_dir):
     merged schema explicitly once known. The oracle reconstructs the
     same batches from the original table with a CASE on the batch split."""
     o = _t(spark, sf_dir, "orders")
-    path = tempfile.mkdtemp(prefix="schema_evo_")
+    path = scratch_dir("schema_evo_")
     o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
     ).write.mode("overwrite").parquet(path + "/b1")
@@ -171,7 +169,7 @@ def parquet_compaction_orders(spark, sf_dir):
     compaction would leave every file spanning the full key range.
     The returned aggregate proves row identity through the rewrite."""
     o = _t(spark, sf_dir, "orders")
-    path = tempfile.mkdtemp(prefix="compact_")
+    path = scratch_dir("compact_")
     o.repartition(64).write.mode("overwrite").parquet(path + "/small")
     small = spark.read.parquet(path + "/small")
     (
@@ -217,7 +215,7 @@ def json_dlq_ingest(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    path = tempfile.mkdtemp(prefix="dlq_")
+    path = scratch_dir("dlq_")
     lines = ev.select(
         F.when(
             F.col("event_id") % 13 == 0,
@@ -278,10 +276,8 @@ def orc_roundtrip_lineitem(spark, sf_dir):
 
     Scale: columnar→columnar rewrite is scan+write with no shuffle
     (snappy ORC stripes, predicate-pushdown-capable on read)."""
-    import tempfile
-
     li = _t(spark, sf_dir, "lineitem")
-    path = tempfile.mkdtemp(prefix="orc_rt_")
+    path = scratch_dir("orc_rt_")
     li.write.mode("overwrite").orc(path)
     back = spark.read.schema(li.schema).orc(path)
     return back.groupBy("l_returnflag", "l_linestatus").agg(
@@ -318,11 +314,10 @@ def binaryfile_ingest_media(spark, sf_dir):
     carries (path, length, content); header parsing touches 8 bytes per
     row. The anti-pattern would be collecting files driver-side."""
     import os
-    import tempfile
 
     from kinesis_app_spark.operators.multimodal import png_bytes
 
-    d = tempfile.mkdtemp(prefix="binfiles_")
+    d = scratch_dir("binfiles_")
     for i in range(200):
         with open(os.path.join(d, f"img_{i:05d}.png"), "wb") as fh:
             fh.write(png_bytes(1 + i % 64, 1 + i % 48, seed=i))
@@ -366,7 +361,7 @@ def textfile_roundtrip_docs(spark, sf_dir):
     100 TB corpus parallelizes by byte range with no footer metadata at
     all; the parse is regexp-free split_part, fully in codegen."""
     d = _t(spark, sf_dir, "documents")
-    path = tempfile.mkdtemp(prefix="text_rt_")
+    path = scratch_dir("text_rt_")
     d.select(
         F.concat_ws(
             "\t",
@@ -425,7 +420,7 @@ def dynamic_partition_overwrite(spark, sf_dir):
         .cast("double")
         .alias("value_sum"),
     )
-    path = tempfile.mkdtemp(prefix="dyn_part_")
+    path = scratch_dir("dyn_part_")
     daily.write.mode("overwrite").partitionBy("day").parquet(path)
 
     days = [r.day for r in daily.select("day").distinct().orderBy("day").limit(2).collect()]
@@ -481,7 +476,7 @@ def corrupt_file_tolerant_read(spark, sf_dir):
     import os
 
     ev = _t(spark, sf_dir, "events").select("event_type", "value")
-    path = tempfile.mkdtemp(prefix="corrupt_rt_")
+    path = scratch_dir("corrupt_rt_")
     ev.coalesce(2).write.mode("overwrite").parquet(path)
     with open(os.path.join(path, "part-corrupt.parquet"), "wb") as fh:
         fh.write(b"PAR1 this is not a parquet file \x00\x01\x02" * 100)
@@ -525,7 +520,7 @@ def nested_glob_ingest(spark, sf_dir):
     import os
 
     ev = _t(spark, sf_dir, "events").select("event_type", "value", "ts")
-    root = tempfile.mkdtemp(prefix="nested_glob_")
+    root = scratch_dir("nested_glob_")
     days = ev.select(
         F.date_format("ts", "yyyy-MM-dd").alias("day"), "event_type", "value"
     )
@@ -769,8 +764,6 @@ def kinesis_boto_partitioned_counts(spark, sf_dir):
     batch snapshot entry, so the identical arithmetic oracle gates the
     whole plan-partition-read-commit loop; restart/exactly-once and
     LATEST-start are covered in tests/test_kinesis_partitioned.py."""
-    import tempfile
-
     from kinesis_app_spark.sources.kinesis_boto import register
     from kinesis_app_spark.streaming.ops import run_to_memory
 
@@ -784,6 +777,10 @@ def kinesis_boto_partitioned_counts(spark, sf_dir):
         .option("region", "us-east-1")
         .option("accessKeyId", "testing")
         .option("secretAccessKey", "testing")
+        # the in-process moto rig shares this clock: with the default
+        # 2 s lag, a stream seeded just before (this entry runs first)
+        # would plan its one batch before the records and read nothing
+        .option("planningLagSeconds", "0")
         .load()
     )
     parsed = stream.select(
@@ -828,10 +825,8 @@ def metadata_provenance_columns(spark, sf_dir):
     arithmetic (row_number over the id order). Reading happens on the
     raw file (no layout normalization): row_index is a PHYSICAL-file
     coordinate and that is the point."""
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="prov_")
+    out = scratch_dir("prov_")
     (
         docs.select("doc_id")
         .coalesce(1)

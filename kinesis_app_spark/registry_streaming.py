@@ -15,8 +15,6 @@ stream-stream join output equals the batch interval join.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -77,7 +75,7 @@ def _mk_stream(
         )
     src = _SRC_CACHE.get(cache_key) if cache_key else None
     if src is None:
-        src = tempfile.mkdtemp(prefix="stream_src_")
+        src = scratch_dir("stream_src_")
         out = df
         for _ in range(copies - 1):
             out = out.unionByName(df)
@@ -302,7 +300,6 @@ def streaming_left_outer_interval_join(spark, sf_dir):
     all real state deterministically. Result must equal the batch left
     join."""
     import datetime as dt
-    import tempfile
 
     from kinesis_app_spark.streaming.ops import run_to_memory
     from kinesis_app_spark.streaming.sources import file_stream
@@ -410,7 +407,6 @@ def streaming_full_outer_interval_join(spark, sf_dir):
     arrive (sentinel second batch closes all real state). Equals the batch
     full join."""
     import datetime as dt
-    import tempfile
 
     from kinesis_app_spark.streaming.ops import run_to_memory
     from kinesis_app_spark.streaming.sources import file_stream
@@ -477,7 +473,6 @@ def streaming_session_windows(spark, sf_dir):
     so append mode finalizes and emits them all. Result must equal the
     batch session computation (the oracle)."""
     import datetime as dt
-    import tempfile
 
     from kinesis_app_spark.streaming.ops import run_to_memory
     from kinesis_app_spark.streaming.sources import file_stream
@@ -705,8 +700,6 @@ def streaming_union_sources(spark, sf_dir):
     sees one unified stream — the standard consolidation topology when a
     deployment splits ingestion. Counts must equal the batch aggregate
     over the whole table."""
-    import tempfile
-
     ev = (
         _t(spark, sf_dir, "events")
         .filter(F.col("event_id") < 20000)
@@ -753,7 +746,6 @@ def streaming_dedup_then_window(spark, sf_dir):
     equal the batch counts over DISTINCT events. Sentinel discipline as
     in the session-window entry."""
     import datetime as dt
-    import tempfile
 
     ev = (
         _t(spark, sf_dir, "events")
@@ -807,7 +799,6 @@ def streaming_chained_windows(spark, sf_dir):
     Counts are integers — nothing float crosses the chained aggregation.
     """
     import datetime as dt
-    import tempfile
 
     ev = (
         _t(spark, sf_dir, "events")
@@ -908,7 +899,6 @@ def streaming_dynamic_gap_sessions(spark, sf_dir):
     gaps-and-islands computation with the merge-on-boundary-tie rule
     (events exactly gap apart merge — pinned by test)."""
     import datetime as dt
-    import tempfile
 
     ev = (
         _t(spark, sf_dir, "events")

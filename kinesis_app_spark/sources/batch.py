@@ -60,10 +60,10 @@ def _normalized_path(spark: SparkSession, sf_dir: str, name: str) -> str:
     if rows / max(groups, 1) <= _MAX_ROWS_PER_GROUP:
         _LAYOUT_CACHE[key] = path
         return path
-    import tempfile
+    from kinesis_app_spark.scratch import scratch_dir
 
     par = spark.sparkContext.defaultParallelism
-    out = tempfile.mkdtemp(prefix=f"layout_{name}_")
+    out = scratch_dir(f"layout_{name}_")
     spark.read.parquet(path).repartition(par).write.mode(
         "overwrite"
     ).parquet(out)

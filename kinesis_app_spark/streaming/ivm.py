@@ -57,7 +57,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from kinesis_app_spark.operators import versioned as VT
-from kinesis_app_spark.sources.vt_cdf import foreach_version
+from kinesis_app_spark.sources import vt_cdf as CDF
 
 __all__ = ["TwoStreamJoinCoordinator"]
 
@@ -87,7 +87,8 @@ class TwoStreamJoinCoordinator:
     join-view maintenance loop::
 
         coord = TwoStreamJoinCoordinator(spark, a_dir, b_dir, view_dir,
-                                         spool_dir, apply_delta)
+                                         spool_dir, apply_delta,
+                                         {"a": "...", "b": "..."})
         qa = (spark.readStream.format("vt_cdf").option("path", a_dir)
               .option("keys", "...").load()
               .writeStream.foreachBatch(coord.foreach_batch("a"))
@@ -99,13 +100,17 @@ class TwoStreamJoinCoordinator:
     ``apply_delta(delta_df, other_snapshot, side, batch_id)`` performs
     one signed-delta merge into the view and MUST commit with the given
     ``batch_id`` (``vt_merge(..., batch_id=batch_id)``) — that ledger
-    entry is what makes redelivery a no-op.
+    entry is what makes redelivery a no-op. ``keys`` maps each side to
+    the ``keys`` option its stream reads with.
     """
 
     def __init__(self, spark: SparkSession, a_dir: str, b_dir: str,
-                 view_dir: str, spool_dir: str, apply_delta):
+                 view_dir: str, spool_dir: str, apply_delta,
+                 keys: dict[str, str]):
+        CDF.register(spark)
         self.spark = spark
         self.dirs = {"a": a_dir, "b": b_dir}
+        self.keys = keys
         self.view_dir = view_dir
         self.spool_dir = spool_dir
         self.apply_delta = apply_delta
@@ -133,7 +138,7 @@ class TwoStreamJoinCoordinator:
             except OSError:
                 shutil.rmtree(tmp, ignore_errors=True)  # lost the race
 
-        foreach_version(put)(batch_df, None)
+        CDF.foreach_version(put)(batch_df, None)
 
     def foreach_batch(self, side: str):
         if side not in ("a", "b"):
@@ -170,14 +175,33 @@ class TwoStreamJoinCoordinator:
             return self.spark.createDataFrame([], schema)
         return VT.vt_read(self.spark, self.dirs[other], max(vs))
 
+    def _delivers_nothing(self, side: str, version: int) -> bool:
+        """True when the version has no change rows — OPTIMIZE, CLUSTER,
+        COMPACT, a bloom index, constraint DDL, a MERGE of an empty
+        batch — so its stream will never stage it: the stream's own
+        planner finds no exclusive file, or its slices read no row. A
+        pure function of the immutable manifests, identical in every
+        process."""
+        opts = {"path": self.dirs[side], "keys": self.keys[side]}
+        path, keys, _, schema_json, mapping = CDF._common_opts(opts)
+        if not CDF._plan_version(path, version, keys, schema_json,
+                                 mapping):
+            return True
+        return self.spark.read.format("vt_cdf").options(
+            startingVersion=str(version), endVersion=str(version), **opts
+        ).load().limit(1).count() == 0
+
     def drain(self) -> list[int]:
         """Apply every staged commit whose turn has come, in the
         deterministic global order; stop at the first version not yet
         staged (its stream has not delivered it — applying anything
-        past it would change the serialization). Returns the batch_ids
-        applied by this call. Safe to call from both foreachBatch
-        callbacks and after restarts: the ledger makes it idempotent,
-        and the order is a pure function of the manifest logs."""
+        past it would change the serialization). A version with no
+        change rows is staged as an empty spool dir (``mkdir`` is
+        atomic, so it is decided once) and skipped. Returns the
+        batch_ids applied by this call. Safe to call from both
+        foreachBatch callbacks and after restarts: the ledger makes it
+        idempotent, and the order is a pure function of the manifest
+        logs."""
         applied = self._applied()
         done: list[int] = []
         for _t, d, v, side in _global_order(self.dirs["a"],
@@ -187,7 +211,11 @@ class TwoStreamJoinCoordinator:
                 continue
             spool = self._spool_path(side, v)
             if not os.path.isdir(spool):
-                break  # wait for the owning stream to deliver it
+                if not self._delivers_nothing(side, v):
+                    break  # wait for the owning stream to deliver it
+                os.makedirs(spool, exist_ok=True)
+            if not os.listdir(spool):
+                continue  # an empty delta: the view is unchanged
             delta = self.spark.read.parquet(spool)
             other = self._other_snapshot(side, applied)
             self.apply_delta(delta, other, side, bid)

@@ -16,7 +16,7 @@ unit tests instead.
 from __future__ import annotations
 
 import os
-import tempfile
+import shutil
 
 import pytest
 
@@ -50,15 +50,18 @@ BATCH = [
 
 
 @pytest.fixture(scope="module")
-def empty_sf_dir(spark):
-    """Schema-true zero-row copies of every table."""
-    d = tempfile.mkdtemp(prefix="empty_sf_")
+def empty_sf_dir(spark, tmp_path_factory):
+    """Schema-true zero-row copies of every table. Removed at teardown:
+    the next run's first cache build then evicts the entries built from
+    them (scratch.cached_build drops entries whose input dir is gone)."""
+    d = str(tmp_path_factory.mktemp("empty_sf_"))
     for t in TABLES:
         df = spark.read.parquet(os.path.join(SF_DIR, f"{t}.parquet"))
         df.limit(0).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(d, f"{t}.parquet")
         )
-    return d
+    yield d
+    shutil.rmtree(d)
 
 
 @pytest.mark.parametrize("name", BATCH)
@@ -79,12 +82,13 @@ def test_dynamic_overwrite_touches_only_replayed_partitions(spark):
     from kinesis_app_spark.registry_sources import (
         dynamic_partition_overwrite,
     )
-    import tempfile as _tf
+    from kinesis_app_spark.scratch import scratch_base
 
-    # reuse the entry but intercept the written path via tmpdir prefix
-    before = set(glob.glob(_tf.gettempdir() + "/dyn_part_*"))
+    # reuse the entry but intercept the written path via its dir prefix
+    pattern = os.path.join(scratch_base(), "dyn_part_*")
+    before = set(glob.glob(pattern))
     dynamic_partition_overwrite(spark, SF_DIR).collect()
-    created = set(glob.glob(_tf.gettempdir() + "/dyn_part_*")) - before
+    created = set(glob.glob(pattern)) - before
     assert len(created) == 1
     root = created.pop()
     days = sorted(
@@ -92,8 +96,6 @@ def test_dynamic_overwrite_touches_only_replayed_partitions(spark):
     )
     assert len(days) > 2
     replayed = days[:2]  # entry replays the two earliest days
-    import os
-
     for d in days:
         files = sorted(glob.glob(d + "/*.parquet"))
         assert files

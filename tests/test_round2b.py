@@ -67,16 +67,14 @@ def test_embedding_covariance_no_pair_shuffle(spark, monkeypatch):
     assert "Generate explode" not in plan, plan
 
 
-def test_kmeans_assign_raises_without_centroids(spark):
+def test_kmeans_assign_raises_without_centroids(spark, tmp_path_factory):
     from kinesis_app_spark.registry_mlprep import kmeans_assign_embeddings
 
     empty = (
         spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
         .filter(F.col("vec_id") < 0)
     )
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="kmeans_empty_")
+    d = str(tmp_path_factory.mktemp("kmeans_empty_"))
     empty.write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
     with pytest.raises(ValueError, match="no seed centroids"):
         kmeans_assign_embeddings(spark, d)
@@ -119,15 +117,13 @@ def test_skyline_has_no_moving_start_frame(spark):
     assert "unboundedfollowing$()" not in plan.lower().replace(" ", ""), plan
 
 
-def test_gopher_repetition_short_doc_safe(spark):
+def test_gopher_repetition_short_doc_safe(spark, tmp_path_factory):
     """One- and two-token documents must produce zero-gram rows, not a
     slice/sequence crash (the ADVICE.md word_shingles class of bug)."""
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    d = tempfile.mkdtemp(prefix="short_docs_")
+    d = str(tmp_path_factory.mktemp("short_docs_"))
     tbl = pa.table(
         {
             "doc_id": pa.array([0, 1, 2], type=pa.int64()),

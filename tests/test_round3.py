@@ -309,7 +309,7 @@ def test_streaming_fault_then_restart_exactly_once(spark, tmp_path):
     assert got.select("shardId", "sequenceNumber").distinct().count() == 200
 
 
-def test_task_retry_exactly_once_subprocess():
+def test_task_retry_exactly_once_subprocess(tmp_path_factory):
     """TASK-level retry proper: local[4,2] enables maxFailures=2, so one
     action succeeds end-to-end across the injected first-attempt failure —
     the task re-attempt reads the marker and completes. Runs in a
@@ -317,10 +317,9 @@ def test_task_retry_exactly_once_subprocess():
     creation (the session-wide local[32] context can't retry tasks)."""
     import subprocess
     import sys
-    import tempfile
     import textwrap
 
-    mdir = tempfile.mkdtemp(prefix="kinesis_retry_markers_")
+    mdir = str(tmp_path_factory.mktemp("kinesis_retry_markers_"))
     script = textwrap.dedent(
         """
         import sys
@@ -897,7 +896,7 @@ def test_cascaded_rollup_equals_direct(spark):
     assert got == direct
 
 
-def test_grouped_ols_recovers_perfect_line(spark):
+def test_grouped_ols_recovers_perfect_line(spark, tmp_path_factory):
     import datetime as dt
 
     from kinesis_app_spark.operators.rankstats import values_at_ranks  # noqa: F401
@@ -919,9 +918,7 @@ def test_grouped_ols_recovers_perfect_line(spark):
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string",
     )
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="ols_fixture_")
+    d = str(tmp_path_factory.mktemp("ols_fixture_"))
     df.write.mode("overwrite").parquet(f"{d}/events.parquet")
     got = {
         r["user_id"]: r
@@ -973,11 +970,12 @@ def test_prefix_filter_rejects_unknown_order(spark):
         ).collect()
 
 
-def test_kaplan_meier_pre_signup_purchaser_is_censored(spark):
+def test_kaplan_meier_pre_signup_purchaser_is_censored(
+    spark, tmp_path_factory
+):
     """A user whose only purchases PRECEDE their signup must appear in
     the risk set as censored, not vanish (row-filter regression)."""
     import datetime as dt
-    import tempfile
 
     from kinesis_app_spark.registry_round3 import kaplan_meier_conversion
 
@@ -997,7 +995,7 @@ def test_kaplan_meier_pre_signup_purchaser_is_censored(spark):
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string",
     )
-    d = tempfile.mkdtemp(prefix="km_fixture_")
+    d = str(tmp_path_factory.mktemp("km_fixture_"))
     df.write.mode("overwrite").parquet(f"{d}/events.parquet")
     out = kaplan_meier_conversion(spark, d).collect()
     total = out[0]["n_risk"]

@@ -5,7 +5,8 @@ fixtures (the cross-engine value gate covers the real tables)."""
 from __future__ import annotations
 
 import datetime as dt
-import tempfile
+
+import pytest
 
 from kinesis_app_spark.registry_round3b import (
     mann_whitney_events,
@@ -20,36 +21,44 @@ EVENTS_SCHEMA = (
 )
 
 
-def _events_dir(spark, rows) -> str:
-    d = tempfile.mkdtemp(prefix="r3b_fixture_")
-    spark.createDataFrame(rows, EVENTS_SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(f"{d}/events.parquet")
-    return d
+@pytest.fixture
+def events_dir(spark, tmp_path_factory):
+    def make(rows) -> str:
+        d = str(tmp_path_factory.mktemp("r3b_fixture_"))
+        spark.createDataFrame(rows, EVENTS_SCHEMA).write.mode(
+            "overwrite"
+        ).parquet(f"{d}/events.parquet")
+        return d
+
+    return make
 
 
-def _trade_dir(spark, lineitem_rows, part_rows) -> str:
-    d = tempfile.mkdtemp(prefix="r3b_trade_")
-    spark.createDataFrame(
-        lineitem_rows,
-        "l_orderkey long, l_partkey long, l_suppkey long, "
-        "l_linenumber int, l_quantity double, l_extendedprice double, "
-        "l_discount double, l_tax double, l_returnflag string, "
-        "l_linestatus string, l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(f"{d}/lineitem.parquet")
-    spark.createDataFrame(
-        part_rows,
-        "p_partkey long, p_name string, p_brand string, p_type string, "
-        "p_size int, p_retailprice double",
-    ).write.mode("overwrite").parquet(f"{d}/part.parquet")
-    return d
+@pytest.fixture
+def trade_dir(spark, tmp_path_factory):
+    def make(lineitem_rows, part_rows) -> str:
+        d = str(tmp_path_factory.mktemp("r3b_trade_"))
+        spark.createDataFrame(
+            lineitem_rows,
+            "l_orderkey long, l_partkey long, l_suppkey long, "
+            "l_linenumber int, l_quantity double, l_extendedprice double, "
+            "l_discount double, l_tax double, l_returnflag string, "
+            "l_linestatus string, l_shipdate timestamp",
+        ).write.mode("overwrite").parquet(f"{d}/lineitem.parquet")
+        spark.createDataFrame(
+            part_rows,
+            "p_partkey long, p_name string, p_brand string, p_type string, "
+            "p_size int, p_retailprice double",
+        ).write.mode("overwrite").parquet(f"{d}/part.parquet")
+        return d
+
+    return make
 
 
 # ---------------------------------------------------------------------
 # weighted quantiles
 # ---------------------------------------------------------------------
 
-def test_weighted_quantiles_left_continuous_inverse_cdf(spark):
+def test_weighted_quantiles_left_continuous_inverse_cdf(spark, trade_dir):
     """W = 1+1+2 = 4: wp25 is the first price with cw >= 1 (10), wp50
     needs cw >= 2 (20), wp75 needs cw >= 3 (30 — the weight-2 price
     carries both remaining quarters)."""
@@ -60,14 +69,14 @@ def test_weighted_quantiles_left_continuous_inverse_cdf(spark):
         (3, 1, 1, 1, 2.0, 30.0, 0.0, 0.0, "N", "O", t),
     ]
     pt = [(1, "p", "B1", "t", 1, 1.0)]
-    got = weighted_quantiles_brands(spark, _trade_dir(spark, li, pt)).collect()
+    got = weighted_quantiles_brands(spark, trade_dir(li, pt)).collect()
     assert len(got) == 1
     r = got[0]
     assert (r["p_brand"], r["w_total"]) == ("B1", 4)
     assert (r["wp25"], r["wp50"], r["wp75"]) == (10.0, 20.0, 30.0)
 
 
-def test_weighted_quantiles_duplicate_prices_merge(spark):
+def test_weighted_quantiles_duplicate_prices_merge(spark, trade_dir):
     """Equal prices merge their weights BEFORE the cumulative walk, so
     the quantile never splits a price level (and ties can't make the
     pick order-dependent): three rows at price 10 (total w 3 of 4)
@@ -80,7 +89,7 @@ def test_weighted_quantiles_duplicate_prices_merge(spark):
         (4, 1, 1, 1, 1.0, 99.0, 0.0, 0.0, "N", "O", t),
     ]
     pt = [(1, "p", "B1", "t", 1, 1.0)]
-    r = weighted_quantiles_brands(spark, _trade_dir(spark, li, pt)).collect()[0]
+    r = weighted_quantiles_brands(spark, trade_dir(li, pt)).collect()[0]
     assert (r["wp25"], r["wp50"], r["wp75"]) == (10.0, 10.0, 10.0)
 
 
@@ -88,7 +97,7 @@ def test_weighted_quantiles_duplicate_prices_merge(spark):
 # linear interpolation
 # ---------------------------------------------------------------------
 
-def test_interpolate_linear_fills_interior_gap(spark):
+def test_interpolate_linear_fills_interior_gap(spark, events_dir):
     """Observed day1=10, day4=40 -> day2=20, day3=30, flagged
     interpolated; observed days keep their mean and flag 0."""
     t0 = dt.datetime(2024, 1, 1)
@@ -100,7 +109,7 @@ def test_interpolate_linear_fills_interior_gap(spark):
     got = {
         r["day"].day: r
         for r in timeseries_interpolate_linear(
-            spark, _events_dir(spark, rows)
+            spark, events_dir(rows)
         ).collect()
     }
     assert len(got) == 4
@@ -111,14 +120,14 @@ def test_interpolate_linear_fills_interior_gap(spark):
     assert got[4]["value"] == 40.0 and got[4]["interpolated"] == 0
 
 
-def test_interpolate_linear_edges_extend_flat(spark):
+def test_interpolate_linear_edges_extend_flat(spark, events_dir):
     """A gap with no earlier observation takes the next value; the
     spine is bounded by observed days so trailing gaps can't occur —
     single-day series degenerates to itself."""
     t0 = dt.datetime(2024, 1, 5)
     rows = [(1, t0, 1, "view", 7.0, "{}")]
     got = timeseries_interpolate_linear(
-        spark, _events_dir(spark, rows)
+        spark, events_dir(rows)
     ).collect()
     assert len(got) == 1
     assert got[0]["value"] == 7.0 and got[0]["interpolated"] == 0
@@ -128,7 +137,7 @@ def test_interpolate_linear_edges_extend_flat(spark):
 # Mann-Whitney U
 # ---------------------------------------------------------------------
 
-def test_mann_whitney_matches_direct_rank_computation(spark):
+def test_mann_whitney_matches_direct_rank_computation(spark, events_dir):
     """Fixture with ties across AND within groups; expected values from
     the textbook average-rank formula computed inline."""
     t0 = dt.datetime(2024, 1, 1)
@@ -142,7 +151,7 @@ def test_mann_whitney_matches_direct_rank_computation(spark):
     ] + [
         (200, t0, 3, "view", 999.0, "{}")  # other types excluded
     ]
-    r = mann_whitney_events(spark, _events_dir(spark, rows)).collect()[0]
+    r = mann_whitney_events(spark, events_dir(rows)).collect()[0]
 
     # textbook: average ranks over the pooled sample
     pooled = sorted(clicks + purchases)
@@ -171,7 +180,7 @@ def test_mann_whitney_matches_direct_rank_computation(spark):
 # Theil-Sen
 # ---------------------------------------------------------------------
 
-def test_theil_sen_ignores_outlier_ols_cannot(spark):
+def test_theil_sen_ignores_outlier_ols_cannot(spark, events_dir):
     """y = 3/day + 7 with one wild outlier: the median of pairwise
     slopes stays exactly 3.0/day (most pairs avoid the outlier)."""
     t0 = dt.datetime(2024, 1, 1)
@@ -180,7 +189,7 @@ def test_theil_sen_ignores_outlier_ols_cannot(spark):
         for i in range(6)
     ]
     rows.append((6, t0 + dt.timedelta(days=6), 1, "view", 1000.0, "{}"))
-    r = theil_sen_trends(spark, _events_dir(spark, rows)).collect()[0]
+    r = theil_sen_trends(spark, events_dir(rows)).collect()[0]
     assert r["n_events"] == 7
     assert r["slope_per_day"] == 3.0
     # intercept = median(v - 3*t_days) over the 7 points; 6 exact
@@ -189,7 +198,7 @@ def test_theil_sen_ignores_outlier_ols_cannot(spark):
     assert abs(r["intercept"] - round(7.0 - 3.0 * t_days0, 4)) < 1e-6
 
 
-def test_theil_sen_small_users_excluded_large_truncated(spark):
+def test_theil_sen_small_users_excluded_large_truncated(spark, events_dir):
     """Users below 3 events drop out; a user beyond the 40-event cap is
     truncated to the FIRST 40 in time order, not excluded."""
     t0 = dt.datetime(2024, 1, 1)
@@ -203,7 +212,7 @@ def test_theil_sen_small_users_excluded_large_truncated(spark):
     ]
     got = {
         r["user_id"]: r
-        for r in theil_sen_trends(spark, _events_dir(spark, rows)).collect()
+        for r in theil_sen_trends(spark, events_dir(rows)).collect()
     }
     assert 1 not in got
     assert got[2]["n_events"] == 40
@@ -214,7 +223,7 @@ def test_theil_sen_small_users_excluded_large_truncated(spark):
 # STL decomposition / EWMA
 # ---------------------------------------------------------------------
 
-def test_stl_pure_weekly_pattern_interior_residual_zero(spark):
+def test_stl_pure_weekly_pattern_interior_residual_zero(spark, events_dir):
     """28 days of a pure period-7 signal: for interior days the 7-day
     centered MA is the constant weekly mean, the seasonal term recovers
     the dow offset, and the residual vanishes."""
@@ -226,7 +235,7 @@ def test_stl_pure_weekly_pattern_interior_residual_zero(spark):
         (i, t0 + dt.timedelta(days=i), 1, "view", weekly[i % 7], "{}")
         for i in range(28)
     ]
-    got = stl_decompose_daily(spark, _events_dir(spark, rows)).collect()
+    got = stl_decompose_daily(spark, events_dir(rows)).collect()
     assert len(got) == 28
 
     # independent reimplementation of the textbook definition
@@ -255,7 +264,7 @@ def test_stl_pure_weekly_pattern_interior_residual_zero(spark):
         assert abs(r["trend"] - mean) < 1e-3
 
 
-def test_ewma_matches_recursive_reference(spark):
+def test_ewma_matches_recursive_reference(spark, events_dir):
     from kinesis_app_spark.registry_round3b import ewma_daily_trend
 
     t0 = dt.datetime(2024, 1, 1)
@@ -264,7 +273,7 @@ def test_ewma_matches_recursive_reference(spark):
         (i, t0 + dt.timedelta(days=i), 1, "view", xs[i], "{}")
         for i in range(len(xs))
     ]
-    got = ewma_daily_trend(spark, _events_dir(spark, rows)).collect()
+    got = ewma_daily_trend(spark, events_dir(rows)).collect()
     s = xs[0]
     want = [s]
     for x in xs[1:]:
@@ -280,13 +289,13 @@ def test_ewma_matches_recursive_reference(spark):
 # token drift
 # ---------------------------------------------------------------------
 
-def test_token_drift_smoothed_probabilities(spark):
+def test_token_drift_smoothed_probabilities(spark, tmp_path_factory):
     """Hand-checkable two-doc corpus: vocab {aa,bb,cc} (V=3), 4 tokens
     per cohort, Laplace +1 -> p = (n+1)/7; bb and cc are exact mirror
     images across the cohorts."""
     from kinesis_app_spark.registry_round3b import token_drift_sources
 
-    d = tempfile.mkdtemp(prefix="r3b_docs_")
+    d = str(tmp_path_factory.mktemp("r3b_docs_"))
     spark.createDataFrame(
         [
             (1, "aa aa bb bb", "en", "src1", 11),
@@ -309,7 +318,7 @@ def test_token_drift_smoothed_probabilities(spark):
 # binary segmentation / ABC classification
 # ---------------------------------------------------------------------
 
-def test_binseg_finds_level_shift(spark):
+def test_binseg_finds_level_shift(spark, events_dir):
     """Mean 10 for days 0-9, mean 30 for days 10-19: the best split is
     the last day of the low segment (t = 10 -> day 10 in 1-based spine,
     i.e. 2024-01-10), with segment means 10 and 30."""
@@ -320,7 +329,7 @@ def test_binseg_finds_level_shift(spark):
     for i in range(20):
         v = 10.0 if i < 10 else 30.0
         rows.append((i, t0 + dt.timedelta(days=i), 1, "view", v, "{}"))
-    r = binary_segmentation_split(spark, _events_dir(spark, rows)).collect()[0]
+    r = binary_segmentation_split(spark, events_dir(rows)).collect()[0]
     assert r["split_day"] == dt.datetime(2024, 1, 10)
     assert r["left_mean"] == 10.0
     assert r["right_mean"] == 30.0
@@ -328,7 +337,7 @@ def test_binseg_finds_level_shift(spark):
     assert abs(r["bss"] - 2000.0) < 1e-3
 
 
-def test_abc_classes_on_pareto_fixture(spark):
+def test_abc_classes_on_pareto_fixture(spark, trade_dir):
     """One whale part (80 units of revenue), one mid (15), eight tiny
     (about 5 total): whale -> A, mid -> B, tail -> C; cum_share ends at
     1.0 and rids are dense from 1."""
@@ -345,7 +354,7 @@ def test_abc_classes_on_pareto_fixture(spark):
         ok += 1
         li.append((ok, pk, 1, 1, 1.0, amt, 0.0, 0.0, "N", "O", t))
     pt = [(pk, "p", "B", "t", 1, 1.0) for pk in amounts]
-    d = _trade_dir(spark, li, pt)
+    d = trade_dir(li, pt)
     rows = abc_classification_parts(spark, d).collect()
     assert [r["rid"] for r in rows] == list(range(1, 11))
     by_pk = {r["l_partkey"]: r for r in rows}
@@ -361,12 +370,12 @@ def test_abc_classes_on_pareto_fixture(spark):
 # Zipf fit / vocabulary growth
 # ---------------------------------------------------------------------
 
-def test_zipf_exact_power_law_recovers_slope(spark):
+def test_zipf_exact_power_law_recovers_slope(spark, tmp_path_factory):
     """freq(rank) = 1024 * rank^-1 exactly (ranks 1..8, counts 1024/r
     rounded to powers of two so ln is exact-ish): slope -> -1, r2 -> 1."""
     from kinesis_app_spark.registry_round3b import zipf_fit_tokens
 
-    d = tempfile.mkdtemp(prefix="r3b_zipf_")
+    d = str(tmp_path_factory.mktemp("r3b_zipf_"))
     # token t_r appears 2^(8-r) times => freq halves as rank doubles:
     # ln(freq) = ln(256) - ln(2)*r is linear in r, NOT in ln(r) —
     # instead build freq = 840/r exactly (840 divisible by 1..8)
@@ -443,13 +452,13 @@ def test_snm_contains_every_hash_block_true_pair(spark):
 # PCA power iteration
 # ---------------------------------------------------------------------
 
-def test_pca_recovers_dominant_axis(spark):
+def test_pca_recovers_dominant_axis(spark, tmp_path_factory):
     """Variance concentrated on axis 3 (values ±10) with tiny
     deterministic noise elsewhere: the top component must align with
     e3 (|loading| ~ 1), eigenvalue ~ var(x3) = 100, unit norm."""
     from kinesis_app_spark.registry_analytics3 import pca_power_iteration
 
-    d = tempfile.mkdtemp(prefix="r3b_pca_")
+    d = str(tmp_path_factory.mktemp("r3b_pca_"))
     rows = []
     dim = 8
     for i in range(200):
@@ -480,13 +489,13 @@ def test_pca_recovers_dominant_axis(spark):
     assert abs(var - got[0]["eigenvalue"]) < 0.5
 
 
-def test_pca_top2_deflation_finds_second_axis(spark):
+def test_pca_top2_deflation_finds_second_axis(spark, tmp_path_factory):
     """Variance on axis 3 (+-10) and an independent +-4 signal on axis
     5: deflation must yield component 1 ~ e3 (eig ~ 100) and component
     2 ~ e5 (eig ~ 16), mutually orthogonal."""
     from kinesis_app_spark.registry_analytics3 import pca_top2_deflation
 
-    d = tempfile.mkdtemp(prefix="r3b_pca2_")
+    d = str(tmp_path_factory.mktemp("r3b_pca2_"))
     rows = []
     dim = 8
     for i in range(400):
@@ -508,7 +517,7 @@ def test_pca_top2_deflation_finds_second_axis(spark):
     assert abs(dot) < 1e-3
 
 
-def test_streaming_twap_closes_segment_across_batches(spark):
+def test_streaming_twap_closes_segment_across_batches(spark, tmp_path_factory):
     """A holding segment that SPANS two micro-batches must be closed
     with the full duration: events (t=0h, v=10) in file 1 and (t=3h,
     v=40), (t=4h, v=99) in file 2 (mtime-staggered, one file per
@@ -520,8 +529,8 @@ def test_streaming_twap_closes_segment_across_batches(spark):
     from kinesis_app_spark.streaming.sources import file_stream
 
     t0 = dt.datetime(2024, 1, 1)
-    src = tempfile.mkdtemp(prefix="r3b_twapstream_")
-    ckpt = tempfile.mkdtemp(prefix="r3b_twapckpt_")
+    src = str(tmp_path_factory.mktemp("r3b_twapstream_"))
+    ckpt = str(tmp_path_factory.mktemp("r3b_twapckpt_"))
     df1 = spark.createDataFrame(
         [(1, t0, 1, 10.0)], "user_id long, ts timestamp, event_id long, value double"
     )
@@ -535,7 +544,7 @@ def test_streaming_twap_closes_segment_across_batches(spark):
     df1.coalesce(1).write.mode("overwrite").parquet(src)
     # second file with a LATER mtime so maxFilesPerTrigger=1 consumes
     # it in a second micro-batch
-    d2 = tempfile.mkdtemp(prefix="r3b_twapf2_")
+    d2 = str(tmp_path_factory.mktemp("r3b_twapf2_"))
     df2.coalesce(1).write.mode("overwrite").parquet(d2)
     part2 = [f for f in os.listdir(d2) if f.endswith(".parquet")][0]
     dst = os.path.join(src, "part-batch2.parquet")
@@ -562,7 +571,7 @@ def test_streaming_twap_closes_segment_across_batches(spark):
     assert first["n_segments"] == 0 and first["twap"] is None
 
 
-def test_seasonal_naive_backtest_perfect_weekly_signal(spark):
+def test_seasonal_naive_backtest_perfect_weekly_signal(spark, events_dir):
     """A pure period-7 signal forecasts itself perfectly: MAE = RMSE =
     MAPE = 0 over the 21 scored days."""
     from kinesis_app_spark.registry_round3b import seasonal_naive_backtest
@@ -573,19 +582,19 @@ def test_seasonal_naive_backtest_perfect_weekly_signal(spark):
         (i, t0 + dt.timedelta(days=i), 1, "view", weekly[i % 7], "{}")
         for i in range(28)
     ]
-    r = seasonal_naive_backtest(spark, _events_dir(spark, rows)).collect()[0]
+    r = seasonal_naive_backtest(spark, events_dir(rows)).collect()[0]
     assert r["n_days"] == 21
     assert r["mae"] == 0.0 and r["rmse"] == 0.0 and r["mape_pct"] == 0.0
 
 
-def test_dedup_histogram_counts_of_counts(spark):
+def test_dedup_histogram_counts_of_counts(spark, tmp_path_factory):
     """3 copies of A, 2 of B, 1 of C: sizes {3:1, 2:1, 1:1}, removable
     3 of 6 rows."""
     from kinesis_app_spark.registry_round3b import (
         dedup_cluster_size_histogram,
     )
 
-    d = tempfile.mkdtemp(prefix="r3b_dhist_")
+    d = str(tmp_path_factory.mktemp("r3b_dhist_"))
     docs = (
         [(i, "text A", "en", "src1", 6) for i in range(3)]
         + [(10 + i, "text B", "en", "src1", 6) for i in range(2)]
@@ -602,7 +611,7 @@ def test_dedup_histogram_counts_of_counts(spark):
     assert abs(sum(r["removable_share"] for r in got.values()) - 0.5) < 1e-6
 
 
-def test_sequence_entropy_scripted_vs_diverse(spark):
+def test_sequence_entropy_scripted_vs_diverse(spark, events_dir):
     """User 1 repeats the same bigram (entropy 0); user 2 alternates
     between two bigrams uniformly (entropy ln 2, normalized 1)."""
     import math
@@ -621,7 +630,7 @@ def test_sequence_entropy_scripted_vs_diverse(spark):
     ]
     got = {
         r["user_id"]: r
-        for r in sequence_entropy_users(spark, _events_dir(spark, rows)).collect()
+        for r in sequence_entropy_users(spark, events_dir(rows)).collect()
     }
     assert got[1]["entropy"] == 0.0 and got[1]["entropy_norm"] is None
     assert got[2]["n_bigrams"] == 4 and got[2]["n_distinct"] == 2
@@ -629,7 +638,7 @@ def test_sequence_entropy_scripted_vs_diverse(spark):
     assert got[2]["entropy_norm"] == 1.0
 
 
-def test_retention_fit_recovers_exponential_decay(spark):
+def test_retention_fit_recovers_exponential_decay(spark, events_dir):
     """Synthetic cohort where exactly half the remaining users return
     each subsequent week: weekly multiplier -> 0.5, half-life 1 week."""
     from kinesis_app_spark.registry_round3b import retention_curve_fit
@@ -649,13 +658,13 @@ def test_retention_fit_recovers_exponential_decay(spark):
     # anchor user keeping the observation window open to week 3
     eid += 1
     rows.append((eid, t0 + dt.timedelta(weeks=3), 99, "view", 1.0, "{}"))
-    r = retention_curve_fit(spark, _events_dir(spark, rows)).collect()[0]
+    r = retention_curve_fit(spark, events_dir(rows)).collect()[0]
     assert r["n_points"] == 3
     assert abs(r["weekly_retention_multiplier"] - 0.5) < 0.02
     assert abs(r["half_life_weeks"] - 1.0) < 0.05
 
 
-def test_markov_eval_learns_deterministic_chain(spark):
+def test_markov_eval_learns_deterministic_chain(spark, events_dir):
     """Train: click is ALWAYS followed by view. Test window repeats the
     pattern -> accuracy 1.0 for prev=click; an antecedent whose test
     continuation flips gets 0."""
@@ -680,7 +689,7 @@ def test_markov_eval_learns_deterministic_chain(spark):
         rows.append((eid, t2 + dt.timedelta(minutes=i), 1, typ, 1.0, "{}"))
     got = {
         r["prev_type"]: r
-        for r in markov_next_event_eval(spark, _events_dir(spark, rows)).collect()
+        for r in markov_next_event_eval(spark, events_dir(rows)).collect()
     }
     assert got["click"]["predicted"] == "view"
     assert got["click"]["accuracy"] == 1.0
@@ -691,7 +700,7 @@ def test_markov_eval_learns_deterministic_chain(spark):
     assert got["view"]["accuracy"] == 0.333333
 
 
-def test_harmonic_regression_recovers_sine(spark):
+def test_harmonic_regression_recovers_sine(spark, events_dir):
     """v_t = 20 + 5 sin(2pi t/7): amplitude -> 5, level -> 20, R^2 -> 1
     (regressors quantized identically, so recovery is near-exact)."""
     import math
@@ -704,7 +713,7 @@ def test_harmonic_regression_recovers_sine(spark):
         t = i + 1  # row_number is 1-based
         v = 20.0 + 5.0 * math.sin(2 * math.pi * t / 7.0)
         rows.append((i, t0 + dt.timedelta(days=i), 1, "view", v, "{}"))
-    r = harmonic_regression_daily(spark, _events_dir(spark, rows)).collect()[0]
+    r = harmonic_regression_daily(spark, events_dir(rows)).collect()[0]
     assert r["n_days"] == 28
     assert abs(r["mean_level"] - 20.0) < 1e-3
     assert abs(r["amplitude"] - 5.0) < 1e-3
@@ -713,7 +722,7 @@ def test_harmonic_regression_recovers_sine(spark):
     assert abs(r["peak_phase_days"]) < 1e-2
 
 
-def test_jaccard_calibration_bimodal_fixture(spark):
+def test_jaccard_calibration_bimodal_fixture(spark, tmp_path_factory):
     """Two exact near-dup docs (J ~ 1) and unrelated docs sharing one
     shingle (low J): the histogram must show mass in a top bin and a
     bottom bin, with pairs_at_or_above monotone non-increasing."""
@@ -721,7 +730,7 @@ def test_jaccard_calibration_bimodal_fixture(spark):
         jaccard_threshold_calibration,
     )
 
-    d = tempfile.mkdtemp(prefix="r3b_jcal_")
+    d = str(tmp_path_factory.mktemp("r3b_jcal_"))
     docs = [
         (1, "alpha beta gamma delta epsilon zeta", "en", "src1", 30),
         (2, "alpha beta gamma delta epsilon eta", "en", "src1", 30),
@@ -744,7 +753,7 @@ def test_jaccard_calibration_bimodal_fixture(spark):
     assert above[-1] == sum(r["n_pairs"] for r in rows)
 
 
-def test_streaming_kmv_merges_sketches_across_batches(spark):
+def test_streaming_kmv_merges_sketches_across_batches(spark, tmp_path_factory):
     """Users split across two micro-batches with overlap: the merged
     KMV state must equal the single-batch sketch over the union — the
     mergeability property that makes the sketch streamable."""
@@ -756,8 +765,8 @@ def test_streaming_kmv_merges_sketches_across_batches(spark):
     )
     from kinesis_app_spark.streaming.sources import file_stream
 
-    src = tempfile.mkdtemp(prefix="r3b_kmvstream_")
-    ckpt = tempfile.mkdtemp(prefix="r3b_kmvckpt_")
+    src = str(tmp_path_factory.mktemp("r3b_kmvstream_"))
+    ckpt = str(tmp_path_factory.mktemp("r3b_kmvckpt_"))
     schema = "event_type string, user_id long"
     df1 = spark.createDataFrame(
         [("click", u) for u in range(0, 60)], schema
@@ -766,7 +775,7 @@ def test_streaming_kmv_merges_sketches_across_batches(spark):
         [("click", u) for u in range(40, 120)], schema  # overlaps 40-59
     )
     df1.coalesce(1).write.mode("overwrite").parquet(src)
-    d2 = tempfile.mkdtemp(prefix="r3b_kmvf2_")
+    d2 = str(tmp_path_factory.mktemp("r3b_kmvf2_"))
     df2.coalesce(1).write.mode("overwrite").parquet(d2)
     part2 = [f for f in os.listdir(d2) if f.endswith(".parquet")][0]
     dst = os.path.join(src, "part-batch2.parquet")
@@ -801,7 +810,7 @@ def test_streaming_kmv_merges_sketches_across_batches(spark):
     assert abs(rows[1]["est"] - 120) / 120 < 0.35  # sketch-grade accuracy
 
 
-def test_bootstrap_ci_brackets_true_mean(spark):
+def test_bootstrap_ci_brackets_true_mean(spark, events_dir):
     """On a fixture with a known mean, the 95% Poisson-bootstrap CI
     must bracket the point estimate and shrink around it; the
     procedure is deterministic, so rerunning yields identical bounds."""
@@ -814,7 +823,7 @@ def test_bootstrap_ci_brackets_true_mean(spark):
         (i, t0 + dt.timedelta(minutes=i), 1, "purchase", 10.0 + (i % 5), "{}")
         for i in range(200)
     ]
-    d = _events_dir(spark, rows)
+    d = events_dir(rows)
     r1 = bootstrap_ci_purchase_mean(spark, d).collect()[0]
     r2 = bootstrap_ci_purchase_mean(spark, d).collect()[0]
     assert r1 == r2  # deterministic
@@ -825,7 +834,7 @@ def test_bootstrap_ci_brackets_true_mean(spark):
     assert r1["ci_hi"] - r1["ci_lo"] < 1.0
 
 
-def test_twap_weights_by_holding_duration(spark):
+def test_twap_weights_by_holding_duration(spark, events_dir):
     """Value 10 held for 3 hours then 40 held for 1 hour: twap =
     (10*3 + 40*1) / 4 = 17.5 — the plain mean (25) would be wrong."""
     from kinesis_app_spark.registry_round3b import time_weighted_avg_users
@@ -836,7 +845,7 @@ def test_twap_weights_by_holding_duration(spark):
         (2, t0 + dt.timedelta(hours=3), 1, "view", 40.0, "{}"),
         (3, t0 + dt.timedelta(hours=4), 1, "view", 99.0, "{}"),  # no hold
     ]
-    r = time_weighted_avg_users(spark, _events_dir(spark, rows)).collect()[0]
+    r = time_weighted_avg_users(spark, events_dir(rows)).collect()[0]
     assert r["n_segments"] == 2
     assert r["total_us"] == 4 * 3600 * 1_000_000
     assert r["twap"] == 17.5
@@ -846,12 +855,14 @@ def test_twap_weights_by_holding_duration(spark):
 # Kendall tau-b
 # ---------------------------------------------------------------------
 
-def test_kendall_tau_perfect_concordance_and_inversion(spark):
+def test_kendall_tau_perfect_concordance_and_inversion(
+    spark, tmp_path_factory
+):
     """Nation A: balance and order count rise together -> tau_b = 1;
     nation B: perfectly inverted -> tau_b = -1."""
     from kinesis_app_spark.registry_round3b import kendall_tau_nations
 
-    d = tempfile.mkdtemp(prefix="r3b_kt_")
+    d = str(tmp_path_factory.mktemp("r3b_kt_"))
     t = dt.datetime(2024, 1, 1)
     spark.createDataFrame(
         [(0, "A", 0), (1, "B", 0)],
@@ -889,7 +900,9 @@ def test_kendall_tau_perfect_concordance_and_inversion(spark):
     assert got["B"]["discordant"] == 3
 
 
-def test_streaming_twap_resumes_from_state_store(spark, tmp_path):
+def test_streaming_twap_resumes_from_state_store(
+    spark, tmp_path, tmp_path_factory
+):
     """The open holding segment survives a QUERY RESTART: run on file 1,
     stop, append file 2, rerun on the same checkpoint — the segment
     opened before the restart closes with the full duration, equal to
@@ -952,7 +965,7 @@ def test_streaming_twap_resumes_from_state_store(spark, tmp_path):
     assert twap == 26.0
 
     # equals the batch operator over the full event set
-    d = tempfile.mkdtemp(prefix="r3b_twap_all_")
+    d = str(tmp_path_factory.mktemp("r3b_twap_all_"))
     spark.createDataFrame(
         [
             (1, t0, 1, "view", 10.0, "{}"),
@@ -969,14 +982,16 @@ def test_streaming_twap_resumes_from_state_store(spark, tmp_path):
     )
 
 
-def test_cross_source_matrix_separates_within_and_cross(spark):
+def test_cross_source_matrix_separates_within_and_cross(
+    spark, tmp_path_factory
+):
     """Near-identical docs within src1 and a mirror across src1/src2:
     both cells appear, labeled within/cross correctly."""
     from kinesis_app_spark.registry_round3b import (
         cross_source_duplication_matrix,
     )
 
-    d = tempfile.mkdtemp(prefix="r3b_xsrc_")
+    d = str(tmp_path_factory.mktemp("r3b_xsrc_"))
     base = "alpha beta gamma delta epsilon zeta eta theta"
     docs = [
         (1, base, "en", "src1", 40),
@@ -998,7 +1013,9 @@ def test_cross_source_matrix_separates_within_and_cross(spark):
     assert ("src3", "src3") not in rows  # no duplicates -> no cell
 
 
-def test_streaming_entropy_counts_boundary_bigram_once(spark):
+def test_streaming_entropy_counts_boundary_bigram_once(
+    spark, events_dir, tmp_path_factory
+):
     """A bigram spanning two micro-batches (last event of file 1 ->
     first event of file 2) must be counted exactly once: final counts
     equal the batch operator over the full sequence."""
@@ -1011,8 +1028,8 @@ def test_streaming_entropy_counts_boundary_bigram_once(spark):
     )
     from kinesis_app_spark.streaming.sources import file_stream
 
-    src = tempfile.mkdtemp(prefix="r3b_entstream_")
-    ckpt = tempfile.mkdtemp(prefix="r3b_entckpt_")
+    src = str(tmp_path_factory.mktemp("r3b_entstream_"))
+    ckpt = str(tmp_path_factory.mktemp("r3b_entckpt_"))
     t0 = dt.datetime(2024, 1, 1)
     schema = "user_id long, ts timestamp, event_id long, event_type string"
     seq1 = ["click", "view", "click"]
@@ -1029,7 +1046,7 @@ def test_streaming_entropy_counts_boundary_bigram_once(spark):
         schema,
     )
     df1.coalesce(1).write.mode("overwrite").parquet(src)
-    d2 = tempfile.mkdtemp(prefix="r3b_entf2_")
+    d2 = str(tmp_path_factory.mktemp("r3b_entf2_"))
     df2.coalesce(1).write.mode("overwrite").parquet(d2)
     part2 = [f for f in os.listdir(d2) if f.endswith(".parquet")][0]
     dst = os.path.join(src, "part-batch2.parquet")
@@ -1059,7 +1076,7 @@ def test_streaming_entropy_counts_boundary_bigram_once(spark):
         (10 + i, t0 + dt.timedelta(minutes=10 + i), 1, s, 1.0, "{}")
         for i, s in enumerate(seq2)
     ]
-    b = sequence_entropy_users(spark, _events_dir(spark, rows)).collect()[0]
+    b = sequence_entropy_users(spark, events_dir(rows)).collect()[0]
     assert (b["n_bigrams"], b["n_distinct"]) == (5, 2)
     assert b["entropy"] == final["entropy"]
     assert b["entropy_norm"] == final["entropy_norm"]

@@ -6,8 +6,8 @@ from __future__ import annotations
 
 import datetime as dt
 import math
-import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 EVENTS_SCHEMA = (
@@ -16,15 +16,19 @@ EVENTS_SCHEMA = (
 )
 
 
-def _events_dir(spark, rows) -> str:
-    d = tempfile.mkdtemp(prefix="r4_fixture_")
-    spark.createDataFrame(rows, EVENTS_SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(f"{d}/events.parquet")
-    return d
+@pytest.fixture
+def events_dir(spark, tmp_path_factory):
+    def make(rows) -> str:
+        d = str(tmp_path_factory.mktemp("r4_fixture_"))
+        spark.createDataFrame(rows, EVENTS_SCHEMA).write.mode(
+            "overwrite"
+        ).parquet(f"{d}/events.parquet")
+        return d
+
+    return make
 
 
-def test_streaming_twap_drops_single_event_user(spark):
+def test_streaming_twap_drops_single_event_user(spark, events_dir):
     """A user with exactly ONE event has no closed holding segment: the
     batch twin and TWAP_SQL drop it (dur_us IS NOT NULL), so the
     streaming entry must not emit its (n_segments=0, twap NULL) state
@@ -35,8 +39,7 @@ def test_streaming_twap_drops_single_event_user(spark):
     )
 
     t0 = dt.datetime(2024, 1, 1)
-    d = _events_dir(
-        spark,
+    d = events_dir(
         [
             (1, t0, 1, "view", 10.0, "{}"),
             (2, t0 + dt.timedelta(hours=3), 1, "view", 40.0, "{}"),
@@ -58,7 +61,7 @@ def test_streaming_twap_drops_single_event_user(spark):
     assert s["twap"] == 17.5
 
 
-def test_markov_eval_unseen_antecedent_scores_zero(spark):
+def test_markov_eval_unseen_antecedent_scores_zero(spark, events_dir):
     """A prev_type that only appears AFTER the temporal split has no
     trained prediction: predicted is NULL and every comparison is NULL
     — n_correct must be 0 (the oracle's CASE ... ELSE 0), not NULL
@@ -81,7 +84,7 @@ def test_markov_eval_unseen_antecedent_scores_zero(spark):
         (5, after, 2, "purchase", 1.0, "{}"),
         (6, after + dt.timedelta(minutes=1), 2, "view", 1.0, "{}"),
     ]
-    d = _events_dir(spark, rows)
+    d = events_dir(rows)
     got = {r["prev_type"]: r for r in markov_next_event_eval(spark, d).collect()}
     r = got["purchase"]
     assert r["predicted"] is None
@@ -120,7 +123,7 @@ def test_running_twap_negative_half_boundary_rounding(spark, tmp_path):
     assert r["twap"] == -0.002
 
 
-def test_sequence_entropy_quantized_terms_match_closed_form(spark):
+def test_sequence_entropy_quantized_terms_match_closed_form(spark, events_dir):
     """Entropy built from 1e-6-quantized c*ln(c) integer terms: user
     with bigrams a>b x3, b>a x2 -> H = ln(5) - (q(3ln3)+q(2ln2))/1e6/5,
     computed identically in the operator and by hand."""
@@ -132,7 +135,7 @@ def test_sequence_entropy_quantized_terms_match_closed_form(spark):
         (i + 1, t0 + dt.timedelta(minutes=i), 1, t, 1.0, "{}")
         for i, t in enumerate(types)
     ]
-    d = _events_dir(spark, rows)
+    d = events_dir(rows)
     r = sequence_entropy_users(spark, d).collect()[0]
     q = lambda x: math.floor(x * 1e6 + 0.5)  # noqa: E731
     clogc_u6 = q(3 * math.log(3)) + q(2 * math.log(2))

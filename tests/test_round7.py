@@ -533,7 +533,7 @@ def test_two_stream_coordinator_orders_waits_and_dedups(spark, tmp_path):
         )
 
     coord = TwoStreamJoinCoordinator(spark, a, b, view, spool,
-                                     apply_delta)
+                                     apply_delta, {"a": "k", "b": "k"})
 
     def cdf(table, v):
         return (

@@ -4,7 +4,6 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 import duckdb
 import pyarrow as pa
@@ -19,10 +18,10 @@ from kinesis_app_spark.oracle import compare
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _write_embeddings(rows) -> str:
+def _write_embeddings(rows, tmp_path_factory) -> str:
     """Write (vec_id, embedding, label) rows as ONE parquet file (the
     testdata layout both engines read)."""
-    d = tempfile.mkdtemp(prefix="r9_emb_")
+    d = str(tmp_path_factory.mktemp("r9_emb_"))
     table = pa.table(
         {
             "vec_id": pa.array([r[0] for r in rows], pa.int64()),
@@ -36,7 +35,7 @@ def _write_embeddings(rows) -> str:
     return d
 
 
-def _hostile_embeddings_dir() -> str:
+def _hostile_embeddings_dir(tmp_path_factory) -> str:
     """A corpus with a NULL embedding and a zero-length embedding mixed
     into real vectors — the advice-r8 latent divergence inputs."""
     dim = 6
@@ -47,12 +46,12 @@ def _hostile_embeddings_dir() -> str:
         rows.append((i, v, i % 2))
     rows.append((100, None, 0))  # NULL embedding
     rows.append((101, [], 1))  # zero-length embedding
-    return _write_embeddings(rows)
+    return _write_embeddings(rows, tmp_path_factory)
 
 
 @pytest.fixture(scope="module")
-def hostile_dir():
-    return _hostile_embeddings_dir()
+def hostile_dir(tmp_path_factory):
+    return _hostile_embeddings_dir(tmp_path_factory)
 
 
 def _conn(d: str) -> duckdb.DuckDBPyConnection:
